@@ -214,12 +214,15 @@ def _verify_pairs_staged(
         frank = np.searchsorted(vocab, flat)
         rep_of = np.repeat(np.arange(len(reps), dtype=np.int64), np.diff(indptr))
         keys_b = rep_of * v + frank
-        return reps, indptr, sigmat, mind, mflat, frank, keys_b, v
+        # v rides as an int64 array: an all-ndarray artifact is mapped
+        # host-shared, a Python int would force private per-worker builds
+        return reps, indptr, sigmat, mind, mflat, frank, keys_b, np.array([v])
 
     def verify(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        reps, indptr, sigmat, mind, mflat, frank, keys_b, v = load_staged(
+        reps, indptr, sigmat, mind, mflat, frank, keys_b, v_arr = load_staged(
             staged, build
         )
+        v = int(v_arr[0])
         n_keys = len(keys_b)
 
         def chunk_out(ra: np.ndarray, rb: np.ndarray) -> pd.DataFrame:

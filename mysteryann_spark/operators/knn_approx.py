@@ -258,12 +258,12 @@ def ivf_knn_join(
         """(qids, qmat, uniq_cids, bounds, flat_rows): the inverted probe
         index as three flat arrays (cid j's query rows are
         flat_rows[bounds[j]:bounds[j+1]]) rather than a dict — a pure
-        tuple-of-ndarrays artifact is host-shareable under
-        SPARK_GRAFT_SHARED_STAGE (sources/staging.py), which matters
-        here: qmat alone is ~2.6 GB at the 10^7 full-training scale.
-        With the probe GEMM done distributed at staging time, this build
-        is read + two sorts — cheap enough that the one worker per host
-        that pays it no longer serializes the stage."""
+        tuple-of-ndarrays artifact is built once per host and mapped by
+        every worker (sources/staging.py), which matters here: qmat
+        alone is ~2.6 GB at the 10^7 full-training scale. With the
+        probe GEMM done distributed at staging time, this build is read
+        + two sorts — cheap enough that the one worker per host that
+        pays it no longer serializes the stage."""
         import pyarrow.fs as pafs
         import pyarrow.parquet as pq
 

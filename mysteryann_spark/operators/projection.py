@@ -292,67 +292,71 @@ def build_roargraph(
     stage_thread = threading.Thread(target=_stage_base, name="stage-base")
     stage_thread.start()
 
-    # --- phase 0: kNN of every training query into the base set
-    # (the table the reference loads as learn_base_knn_, :2622-2639)
-    if knn_df is not None:
-        knn = knn_df
-    elif phase0 == "exact":
-        knn = knn_join_arrays(
-            queries_df, base_df, params.M_sq, metric,
-            base_id=base_id, vec_col=vec_col,
+    # both threads are joined on every exit path: a phase 0-3 failure
+    # must not leave their jobs running behind the raised error
+    try:
+        # --- phase 0: kNN of every training query into the base set
+        # (the table the reference loads as learn_base_knn_, :2622-2639)
+        if knn_df is not None:
+            knn = knn_df
+        elif phase0 == "exact":
+            knn = knn_join_arrays(
+                queries_df, base_df, params.M_sq, metric,
+                base_id=base_id, vec_col=vec_col,
+            )
+        elif phase0 == "ivf":
+            from mysteryann_spark.operators.knn_approx import ivf_knn_join_arrays
+
+            knn = ivf_knn_join_arrays(
+                queries_df, base_df, params.M_sq, metric,
+                base_id=base_id, vec_col=vec_col, **(phase0_opts or {}),
+            )
+        else:
+            raise ValueError(f"unknown phase0 mode {phase0!r} (exact|ivf)")
+
+        # one staged copy of the base serves all three prune calls (the
+        # pools shuffle bare id pairs and the kernels look vectors up here);
+        # written concurrently with phase 0 above
+        stage_thread.join()
+        if "err" in stage_box:
+            raise stage_box["err"]
+        staged_base = stage_box["path"]
+
+        # --- phase 1: target = 1-NN; rest of the list -> target's pool
+        tgt = F.element_at("nn", 1)
+        phase1_cands = (
+            knn.select(tgt.alias("node"), F.explode(F.slice("nn", 2, params.M_sq)).alias("cand_id"))
+            .where(F.col("cand_id") != F.col("node"))
         )
-    elif phase0 == "ivf":
-        from mysteryann_spark.operators.knn_approx import ivf_knn_join_arrays
+        adj1 = prune_candidates(phase1_cands, base_df, params.M_pjbp, metric,
+                                base_id=base_id, vec_col=vec_col,
+                                staged_base=staged_base)
+        # checkpoint BEFORE _prune_merged: it references its input twice
+        # (forward + reversed edges), and Spark does not reuse the shuffle
+        # under the mapInPandas subtree across the two branches — without
+        # the cut, phase 0 + phase 1 execute twice in one query (measured at
+        # 10^7: two full probe/score map stages, 2x the candidate shuffle on
+        # disk — ~40 GB of duplicate shuffle was the run's disk ceiling).
+        # adj1 itself is ~n x M_pjbp ids: two orders lighter than its lineage.
+        adj1 = adj1.localCheckpoint()
 
-        knn = ivf_knn_join_arrays(
-            queries_df, base_df, params.M_sq, metric,
-            base_id=base_id, vec_col=vec_col, **(phase0_opts or {}),
-        )
-    else:
-        raise ValueError(f"unknown phase0 mode {phase0!r} (exact|ivf)")
-
-    # one staged copy of the base serves all three prune calls (the
-    # pools shuffle bare id pairs and the kernels look vectors up here);
-    # written concurrently with phase 0 above
-    stage_thread.join()
-    if "err" in stage_box:
-        raise stage_box["err"]
-    staged_base = stage_box["path"]
-
-    # --- phase 1: target = 1-NN; rest of the list -> target's pool
-    tgt = F.element_at("nn", 1)
-    phase1_cands = (
-        knn.select(tgt.alias("node"), F.explode(F.slice("nn", 2, params.M_sq)).alias("cand_id"))
-        .where(F.col("cand_id") != F.col("node"))
-    )
-    adj1 = prune_candidates(phase1_cands, base_df, params.M_pjbp, metric,
-                            base_id=base_id, vec_col=vec_col,
-                            staged_base=staged_base)
-    # checkpoint BEFORE _prune_merged: it references its input twice
-    # (forward + reversed edges), and Spark does not reuse the shuffle
-    # under the mapInPandas subtree across the two branches — without
-    # the cut, phase 0 + phase 1 execute twice in one query (measured at
-    # 10^7: two full probe/score map stages, 2x the candidate shuffle on
-    # disk — ~40 GB of duplicate shuffle was the run's disk ceiling).
-    # adj1 itself is ~n x M_pjbp ids: two orders lighter than its lineage.
-    adj1 = adj1.localCheckpoint()
-
-    # --- phases 2+3: reverse edges + re-prune overfull nodes
-    adj3 = _prune_merged(_edges(adj1), base_df, params.M_pjbp, metric,
-                         staged_base=staged_base)
-    # ONE staged parquet write both cuts adj3's lineage (phase 4 + the
-    # merged prune reference it; un-cut, phases 0-3 would re-execute) and
-    # IS the phase-4 search's staged adjacency — previously adj3
-    # materialized twice per build (a localCheckpoint job plus a separate
-    # stage_parquet job of identical content). Values are unchanged:
-    # parquet round-trips the exact (node, nbrs) longs, and every
-    # consumer joins/aggregates by id, not row order.
-    adj3_path = stage_parquet(adj3)
-    adj3 = base_df.sparkSession.read.schema(
-        "node bigint, nbrs array<bigint>"
-    ).parquet(adj3_path)
-
-    ep_thread.join()
+        # --- phases 2+3: reverse edges + re-prune overfull nodes
+        adj3 = _prune_merged(_edges(adj1), base_df, params.M_pjbp, metric,
+                             staged_base=staged_base)
+        # ONE staged parquet write both cuts adj3's lineage (phase 4 + the
+        # merged prune reference it; un-cut, phases 0-3 would re-execute) and
+        # IS the phase-4 search's staged adjacency — previously adj3
+        # materialized twice per build (a localCheckpoint job plus a separate
+        # stage_parquet job of identical content). Values are unchanged:
+        # parquet round-trips the exact (node, nbrs) longs, and every
+        # consumer joins/aggregates by id, not row order.
+        adj3_path = stage_parquet(adj3)
+        adj3 = base_df.sparkSession.read.schema(
+            "node bigint, nbrs array<bigint>"
+        ).parquet(adj3_path)
+    finally:
+        stage_thread.join()
+        ep_thread.join()
     ep = ep_box["ep"]
 
     # --- phase 4: connectivity enhancement — beam-search the projection

@@ -7,11 +7,18 @@ reference's single-node regime, but the driver is the one node that
 cannot scale: a 10^8-row base would round-trip through driver memory.
 
 Staging replaces the round-trip with storage: the artifact tables are
-written ONCE as Parquet by a distributed Spark job, and each Python
-worker process lazily reads them back with pyarrow on first use and
-caches the built artifact (workers are reused across tasks, so the cost
-amortizes across the whole query stream). This is the Spark ML model
-pattern: artifacts live on shared storage, not in the driver heap.
+written ONCE as Parquet by a distributed Spark job (``stage_parquet``),
+and Python workers build their in-memory form lazily on first use
+(``load_staged``). This is the Spark ML model pattern: artifacts live
+on shared storage, not in the driver heap.
+
+A built artifact that is a tuple of ndarrays is built once per HOST,
+not once per worker: the first worker to need it writes it as flat
+``.npy`` files to node-local scratch (``SPARK_LOCAL_DIRS``) and every
+worker maps those files read-only, so the page cache holds one copy.
+A per-key ``flock`` serializes build and load — the kernel releases it
+when a builder dies, so there is no liveness protocol to maintain.
+Each worker also keeps a small LRU of the artifacts it has mapped.
 
 Locally the temp dir is process-shared; on a cluster callers pass
 ``storage_dir`` on cluster-visible storage (HDFS/S3) — the same contract
@@ -20,10 +27,14 @@ every Spark ML writer has.
 
 from __future__ import annotations
 
+import fcntl
+import json
 import os
+import shutil
 import tempfile
 import uuid
 from collections import OrderedDict
+from contextlib import contextmanager
 from typing import Callable
 
 import numpy as np
@@ -41,46 +52,15 @@ _CACHE: "OrderedDict[str, object]" = OrderedDict()
 _CACHE_MAX = int(os.environ.get("SPARK_GRAFT_WORKER_CACHE", "8"))
 
 
-def _shared_enabled() -> bool:
-    """SPARK_GRAFT_SHARED_STAGE=1 opts a run into HOST-shared staged
-    artifacts: the first worker to need an artifact materializes it once
-    as flat ``.npy`` files on node-local scratch and every worker (this
-    one included) maps them read-only (``np.load(mmap_mode="r")``), so
-    the OS page cache holds ONE copy per host instead of one anonymous
-    copy per worker process. At 10^7 x 64-d the private-copy regime is
-    ~2.6 GB x n_workers just for the base matrix — 16 workers of that
-    (plus the phase-0 query matrix) global-OOM-killed the 10M rehearsal;
-    shared, the host pays ~2.6 GB total. On a cluster this is the
-    standard per-node artifact cache (executors on one node share
-    local scratch); default off to keep the correctness-scale entries
-    bit-identical to the long-tested private path."""
-    return os.environ.get("SPARK_GRAFT_SHARED_STAGE") == "1"
-
-
-# how often the winner's background thread touches the heartbeat file,
-# and how stale the heartbeat may be before waiters declare the winner
-# dead and contend to take over the build (one at a time — never a herd)
-_HEARTBEAT_S = float(os.environ.get("SPARK_GRAFT_SHARED_HEARTBEAT_S", "5"))
-_STALE_S = float(os.environ.get("SPARK_GRAFT_SHARED_STALE_S", "60"))
-
-# consecutive winner failures tolerated before the key falls back to
-# NOSHARE (private builds): transient failures (OOM, FS blip) get a
-# bounded serial retry via lock takeover; a deterministically failing
-# build must not be retried by every waiter until Spark exhausts task
-# retries (0.5 s poll + takeover churn with no bound)
-_MAX_SHARED_FAILURES = int(os.environ.get("SPARK_GRAFT_SHARED_MAX_FAILURES", "3"))
-
 # scratch budget for host-shared generations: each maintenance-chain step
-# publishes a fresh mysteryann-shared-* npy set (~5 GB at 10^7 x 64-d),
-# and before r8 every superseded generation stayed on scratch until a
-# manual /tmp clean (SCALE.md). Publish-time GC now (a) unlinks the
-# generation BEFORE the one just superseded (lineage PREV links — the
-# immediate prior is kept for readers mid-open; already-mapped readers
-# are unaffected by unlink, POSIX keeps their pages), and (b) applies
-# this host-wide LRU cap so chains RETIRED wholesale (compaction starts
-# a new lineage; the old chain's tail would otherwise linger forever)
-# age out as later publishes land. Deleting a still-wanted artifact is
-# a rebuild, never a wrong answer (_peek misses rebuild from parquet).
+# publishes a fresh mysteryann-shared-* npy set (~5 GB at 10^7 x 64-d).
+# Publish-time GC (a) unlinks the generation BEFORE the one just
+# superseded (lineage PREV links — the immediate prior is kept for
+# readers mid-open; already-mapped readers are unaffected by unlink,
+# POSIX keeps their pages), and (b) applies this host-wide LRU cap so
+# chains RETIRED wholesale (compaction starts a new lineage; the old
+# chain's tail would otherwise linger) age out as later publishes land.
+# Deleting a still-wanted artifact is a rebuild, never a wrong answer.
 _MAX_GENERATIONS = int(os.environ.get("SPARK_GRAFT_SHARED_MAX_GENERATIONS", "8"))
 
 # winner-process lineage: artifact key -> the prior-prefix key it was
@@ -88,128 +68,97 @@ _MAX_GENERATIONS = int(os.environ.get("SPARK_GRAFT_SHARED_MAX_GENERATIONS", "8")
 # consumed by _gc_scratch right after the publish)
 _LINEAGE: dict[str, str] = {}
 
-
-def _async_publish_enabled() -> bool:
-    """SPARK_GRAFT_ASYNC_PUBLISH=1 moves the winner's O(n) sequential npy
-    publish off the batch critical path (see _shared_build): at 10^8 x
-    64-d the patched base matrix is ~25.6 GB, and a blocking write gates
-    every maintenance batch on the winner's disk bandwidth. Default off:
-    the blocking form hands even the winner the mapped copy, the lowest
-    steady-state residency, which is right whenever the write is small
-    relative to the batch."""
-    return os.environ.get("SPARK_GRAFT_ASYNC_PUBLISH") == "1"
+_SHARED_PREFIX = "mysteryann-shared-"
 
 
-def staging_mode() -> dict[str, bool]:
-    """Public view of the run's staging configuration — what the scale
-    tools print so an A/B's two runs are distinguishable on the page.
-    Stable API: tools should read this, not the underscore helpers."""
-    return {
-        "shared_stage": _shared_enabled(),
-        "async_publish": _async_publish_enabled(),
-    }
+def _shared_root() -> str:
+    """Host scratch for shared artifacts: the first ``SPARK_LOCAL_DIRS``
+    entry. Spark hands every Python worker its per-application
+    ``blockmgr-*`` dir there and deletes it on ``spark.stop()``, so the
+    store lives exactly as long as the application — a reused key such
+    as ``ivfpqlists|<persisted path>`` cannot serve an earlier session's
+    artifact after that path is overwritten. Driver-side calls and tests
+    without the variable fall back to the temp dir."""
+    local = os.environ.get("SPARK_LOCAL_DIRS")
+    return local.split(",")[0] if local else tempfile.gettempdir()
 
 
 def _shared_dir(key: str) -> str:
     import hashlib
 
+    root = _shared_root()
+    os.makedirs(root, exist_ok=True)
     digest = hashlib.sha1(key.encode()).hexdigest()[:20]
-    return os.path.join(tempfile.gettempdir(), f"mysteryann-shared-{digest}")
+    return os.path.join(root, _SHARED_PREFIX + digest)
 
 
-def _publish_token(fname: str) -> str:
-    """Builder token of a publish-set member: ``a{i}-{token}.npy`` or
-    ``MANIFEST.{token}.tmp``. Legacy un-tokened names (``a0.npy``) fall
-    back to the filename itself — a one-file group, aged individually."""
-    if fname.endswith(".npy"):
-        stem = fname[: -len(".npy")]
-        return stem.rsplit("-", 1)[-1]
-    if fname.startswith("MANIFEST.") and fname.endswith(".tmp"):
-        return fname[len("MANIFEST.") : -len(".tmp")]
-    return fname
+@contextmanager
+def _locked(d: str, flags: int = fcntl.LOCK_EX):
+    """Hold the ``flock`` of artifact dir ``d`` (its sibling ``.lock``
+    file) for the body; yields False, unlocked, when ``LOCK_NB`` was asked
+    and another process holds it. The kernel drops the lock when its
+    holder dies, so a killed builder never strands the key. After
+    locking, the path must still name the inode we locked: the GC
+    unlinks the lock file of a generation it removes, and a lock on an
+    unlinked inode guards nothing — retry on the path's current file."""
+    lock = d + ".lock"
+    while True:
+        fd = os.open(lock, os.O_RDWR | os.O_CREAT, 0o644)
+        try:
+            try:
+                fcntl.flock(fd, flags)
+            except BlockingIOError:
+                yield False
+                return
+            try:
+                current = os.stat(lock).st_ino == os.fstat(fd).st_ino
+            except FileNotFoundError:
+                current = False
+            if current:
+                yield True
+                return
+        finally:
+            os.close(fd)
 
 
 def _shared_save(d: str, obj: tuple) -> None:
-    """Winner side: write each array under a builder-unique token, then
-    publish a manifest NAMING those files, last and atomically (tmp +
-    rename). Readers only ever see a complete, self-consistent set —
-    even if a presumed-dead winner was actually alive and two builders
-    raced, each writes its own token files and whichever manifest lands
-    last points at an intact set.
-
-    After the manifest lands, token sets it does NOT name are unlinked —
-    but only sets whose NEWEST member is older than the stale threshold:
-    superseded same-key publishes otherwise accumulate forever inside one
-    dir (measured r10: four racing 7.4 GB sets = 30 GB in a single key
-    dir, ENOSPC at 10^7 maintenance scale), while a concurrent racer's
-    IN-FLIGHT files must survive the prune — deleting them lands that
-    racer's manifest pointing at nothing (measured r10 under async
-    publish + takeover: a broken manifest spun every waiter in the
-    manifest-exists loop — the reader side now also self-heals, see
-    _shared_build). Aging PER FILE was the r10 ADVICE hazard: a multi-GB
-    sequential publish takes minutes, so a slow racer's EARLIEST file
-    ages past the cutoff mid-write; grouping by token and aging the set
-    by its newest member keeps any actively-writing set fresh (the file
-    currently being written has a current mtime). Readers mid-open on a
-    pruned set are unaffected (POSIX unlink); a reader holding the old
-    manifest gets OSError and _shared_build re-reads the fresh one."""
-    import json
-    import time as _time
-
-    token = uuid.uuid4().hex[:12]
-    os.makedirs(d, exist_ok=True)
-    names = []
+    """Write each array as ``a{i}.npy``, then the manifest LAST — a dir
+    without a readable manifest is never loaded. Any earlier content is
+    unlinked first, never overwritten: a reader that still maps an old
+    file keeps its pages (POSIX unlink), where truncating it in place
+    would fault that reader."""
+    shutil.rmtree(d, ignore_errors=True)
+    os.makedirs(d)
     for i, a in enumerate(obj):
-        name = f"a{i}-{token}.npy"
-        np.save(os.path.join(d, name), np.ascontiguousarray(a))
-        names.append(name)
-    tmp = os.path.join(d, f"MANIFEST.{token}.tmp")
-    with open(tmp, "w") as f:
-        json.dump({"files": names}, f)
-    os.replace(tmp, os.path.join(d, "MANIFEST.json"))
-    keep = set(names)
-    cutoff = _time.time() - _STALE_S
-    groups: dict[str, list[str]] = {}
-    newest: dict[str, float] = {}
-    for f in os.listdir(d):
-        if f in keep:
-            continue
-        if (f.startswith("a") and f.endswith(".npy")) or (
-            f.startswith("MANIFEST.") and f.endswith(".tmp")
-        ):
-            p = os.path.join(d, f)
-            try:
-                mt = os.path.getmtime(p)
-            except OSError:
-                continue
-            tok = _publish_token(f)
-            groups.setdefault(tok, []).append(p)
-            newest[tok] = max(newest.get(tok, 0.0), mt)
-    for tok, paths in groups.items():
-        if newest[tok] >= cutoff:
-            continue
-        for p in paths:
-            try:
-                os.unlink(p)
-            except OSError:
-                pass
+        np.save(os.path.join(d, f"a{i}.npy"), a)
+    with open(os.path.join(d, "MANIFEST.json"), "w") as f:
+        json.dump({"n": len(obj)}, f)
 
 
 def _shared_load(d: str) -> tuple:
-    import json
-
+    """Map a published artifact read-only. The arrays are plain ndarray
+    views over the maps: ``np.memmap`` itself wraps every index and ufunc
+    result in Python, which the beam-search loop would pay per hop."""
     with open(os.path.join(d, "MANIFEST.json")) as f:
-        meta = json.load(f)
-    # legacy manifests ({"n": k}) name files a{i}.npy
-    names = meta.get("files") or [f"a{i}.npy" for i in range(meta["n"])]
+        n = json.load(f)["n"]
     out = tuple(
-        np.load(os.path.join(d, name), mmap_mode="r") for name in names
+        np.load(os.path.join(d, f"a{i}.npy"), mmap_mode="r").view(np.ndarray)
+        for i in range(n)
     )
+    os.utime(d)  # refresh LRU recency so _gc_scratch spares live dirs
+    return out
+
+
+def _remove_generation(p: str) -> None:
+    """Unlink generation dir ``p`` and its lock file, unless a process
+    holds its lock (a build or a load in flight): then skip it."""
     try:
-        os.utime(d)  # refresh LRU recency so _gc_scratch spares live dirs
+        with _locked(p, fcntl.LOCK_EX | fcntl.LOCK_NB) as got:
+            if got:
+                shutil.rmtree(p, ignore_errors=True)
+                os.unlink(p + ".lock")
     except OSError:
         pass
-    return out
 
 
 def _gc_scratch(key: str, d: str) -> None:
@@ -224,42 +173,34 @@ def _gc_scratch(key: str, d: str) -> None:
     * host LRU cap: every other manifest-bearing shared dir beyond
       ``_MAX_GENERATIONS`` (oldest mtime first) is removed — the path
       by which chains retired WHOLESALE (compaction, index drop) age
-      out. Dirs with a live lockdir (build in progress) are never
-      touched; neither are the new artifact and its PREV."""
-    import shutil
-
+      out. The new artifact and its PREV are never touched, nor is any
+      dir whose lock is held (``_remove_generation``)."""
     prev_key = _LINEAGE.pop(key, None)
     d_prev = _shared_dir(prev_key) if prev_key else None
     try:
         if d_prev:
             with open(os.path.join(d, "PREV"), "w") as f:
                 f.write(d_prev)
-            gp = None
-            pf = os.path.join(d_prev, "PREV")
-            if os.path.exists(pf):
-                with open(pf) as f:
+            try:
+                with open(os.path.join(d_prev, "PREV")) as f:
                     gp = f.read().strip()
+            except OSError:
+                gp = None
             if (
                 gp
                 and gp not in (d, d_prev)
-                and os.path.basename(gp).startswith("mysteryann-shared-")
-                and os.path.isdir(gp)
+                and os.path.basename(gp).startswith(_SHARED_PREFIX)
             ):
-                shutil.rmtree(gp, ignore_errors=True)
-                shutil.rmtree(gp + ".lock", ignore_errors=True)
-        root = tempfile.gettempdir()
+                _remove_generation(gp)
+        root = os.path.dirname(d)
         gens = []
         for name in os.listdir(root):
-            if not name.startswith("mysteryann-shared-") or name.endswith(".lock"):
-                continue
             p = os.path.join(root, name)
-            if p in (d, d_prev) or not os.path.isdir(p):
+            if not name.startswith(_SHARED_PREFIX) or p in (d, d_prev):
                 continue
             # only PUBLISHED generations are eligible: a dir without a
-            # manifest is a build in progress (winner holds the lockdir)
-            # or small failure residue — never touch either. A dir WITH
-            # a manifest is complete; its lockdir is success residue
-            # (winners don't remove it), removed along with the dir.
+            # manifest is a build in progress, a NOSHARE marker or
+            # failure residue
             if not os.path.exists(os.path.join(p, "MANIFEST.json")):
                 continue
             try:
@@ -269,335 +210,56 @@ def _gc_scratch(key: str, d: str) -> None:
         keep = max(0, _MAX_GENERATIONS - (2 if d_prev else 1))
         doomed = sorted(gens)[:-keep] if keep else sorted(gens)
         for _, p in doomed:
-            shutil.rmtree(p, ignore_errors=True)
-            shutil.rmtree(p + ".lock", ignore_errors=True)
+            _remove_generation(p)
     except OSError:
         pass
 
 
-def _heartbeat_stale(hb: str) -> bool:
-    """True when the winner's heartbeat is old enough that the winner is
-    presumed dead (killed worker / dead JVM).
-
-    A MISSING heartbeat is judged by the LOCKDIR's age instead of being
-    presumed dead outright: between a winner's mkdir(lock) and its beat
-    thread's first write there is a scheduling window, and waiters that
-    treated it as stale rmtree'd the fresh winner's lock and adopted the
-    build — cascading under load into concurrent winners (measured r10:
-    24 workers hitting a new key at batch start produced FOUR parallel
-    7.4 GB private builds of the same artifact, 4x host residency and
-    30 GB of scratch, exactly the herd shared staging exists to kill).
-    A lockdir younger than _STALE_S is a live acquire; one older with
-    still no heartbeat is a winner that died pre-beat — genuinely
-    stale."""
-    import time as _time
-
-    try:
-        return (_time.time() - os.path.getmtime(hb)) > _STALE_S
-    except OSError:
-        try:
-            return (
-                _time.time() - os.path.getmtime(os.path.dirname(hb))
-            ) > _STALE_S
-        except OSError:
-            return True
+def _shareable(obj: object) -> bool:
+    return (
+        isinstance(obj, tuple)
+        and bool(obj)
+        and all(isinstance(a, np.ndarray) and a.dtype != object for a in obj)
+    )
 
 
 def _shared_build(key: str, build: Callable[[], object]) -> object:
-    """Build-once-per-host: one worker wins the lockdir and materializes,
-    the rest wait for the manifest and mmap. Artifacts that are not a
-    tuple of ndarrays (e.g. a None empty-input marker) stay private —
-    the winner leaves a NOSHARE marker so waiters stop waiting.
+    """Build-once-per-host. Every worker takes the key's lock: the first
+    finds no manifest, builds, publishes and maps its own publish; the
+    rest block in the kernel until it is done, then map the same files,
+    so the OS page cache holds ONE copy per host instead of one private
+    copy per worker (at 10^7 x 64-d the private regime was ~2.6 GB x
+    n_workers for the base matrix alone). A builder that raises or dies
+    releases the lock with no marker left behind: the next caller
+    retries the build once, and Spark's task retries bound the rest.
 
-    Liveness, not timeouts: the winner touches a heartbeat file from a
-    daemon thread for the whole build, and waiters wait on the MANIFEST
-    for as long as that heartbeat stays fresh. A fixed waiter deadline
-    with a private-build fallback is a scale hazard, measured the hard
-    way: under CPU contention a 10^7-row artifact build overran the old
-    30-minute deadline, at which point all 15 waiting workers fell back
-    to PRIVATE ~6 GB builds in the same second — the thundering herd
-    global-OOM-killed the run (dmesg: 16 workers at 6-7 GB anon each).
-    Now a waiter that sees a stale heartbeat contends to TAKE OVER the
-    lock — exactly one succeeds and rebuilds; nobody builds privately
-    unless the artifact is marked NOSHARE."""
-    import shutil
-    import threading
-    import time as _time
-
+    Artifacts that are not a tuple of non-object ndarrays (e.g. a None
+    empty-input marker) cannot be mapped: the first builder leaves a
+    NOSHARE marker and every caller builds privately, outside the lock,
+    so such builds never queue behind each other."""
     d = _shared_dir(key)
-    manifest = os.path.join(d, "MANIFEST.json")
-    noshare = os.path.join(d, "NOSHARE")
-    lock = d + ".lock"
-    hb = os.path.join(lock, "HEARTBEAT")
-
-    def _acquire() -> bool:
-        try:
-            os.mkdir(lock)
-        except FileExistsError:
-            return False
-        # seed the heartbeat synchronously: shortens the no-heartbeat
-        # window the beat thread leaves (waiters judge that window by
-        # the lockdir's age — see _heartbeat_stale)
-        try:
-            with open(hb, "w") as f:
-                f.write(str(os.getpid()))
-        except OSError:
-            pass
-        return True
-
-    def _record_failure() -> None:
-        # FAILED-<n> marker (writes serialized by the lock, so the count
-        # is race-free); after _MAX_SHARED_FAILURES consecutive winner
-        # failures the build is presumed deterministic -> NOSHARE. Also
-        # drop this attempt's GC lineage: a later retry may take the
-        # FULL-rebuild path, and a stale PREV recorded from the failed
-        # attempt could unlink a prior generation the new artifact was
-        # never patched from (breaking keep-one-prior for its readers).
-        _LINEAGE.pop(key, None)
-        try:
-            os.makedirs(d, exist_ok=True)
-            n_failed = 1 + sum(
-                1 for f in os.listdir(d) if f.startswith("FAILED-")
-            )
-            with open(os.path.join(d, f"FAILED-{n_failed}"), "w"):
-                pass
-            if n_failed >= _MAX_SHARED_FAILURES:
-                with open(noshare, "w"):
-                    pass
-        except OSError:
-            pass
-
-    def _manifest_ident():
-        # identity of the manifest INSTANCE (atomic-rename publishes give
-        # each a fresh inode) — the heal below may only delete the
-        # instance it actually observed broken
-        try:
-            st = os.stat(manifest)
-            return (st.st_ino, st.st_mtime_ns, st.st_size)
-        except OSError:
-            return None
-
-    def _provably_broken(ident) -> bool:
-        # True only when the SAME manifest instance names a file that is
-        # genuinely ABSENT (or the JSON itself is unreadable — atomic
-        # renames make that a real corpse, not a torn write). A named
-        # file that exists but momentarily fails to read (fs hiccup,
-        # stat storm on slow NFS) is NOT proof — unlinking a healthy
-        # generation forces a redundant multi-GB rebuild (r10 ADVICE).
-        import json
-
-        if _manifest_ident() != ident:
-            return False  # a new publish landed — re-read it instead
-        try:
-            with open(manifest) as f:
-                meta = json.load(f)
-            names = meta.get("files") or [f"a{i}.npy" for i in range(meta["n"])]
-        except (OSError, ValueError, KeyError):
-            return True
-        for name in names:
-            try:
-                os.stat(os.path.join(d, name))
-            except FileNotFoundError:
-                return True
-            except OSError:
-                pass
-        return False
-
-    broken_reads = 0
-    broken_ident = None
-    broken_since = 0.0
-    while True:
-        if os.path.exists(manifest):
-            ident = _manifest_ident()
+    try:
+        with _locked(d):
             try:
                 return _shared_load(d)
-            except OSError:
-                # the host-wide LRU GC spans ALL shared dirs across keys:
-                # a concurrent publish can rmtree this dir between the
-                # manifest-exists check and np.load. Loop back to the
-                # acquire/wait state and REBUILD — a GC'd generation must
-                # never surface as a task failure (local mode runs with
-                # task retries = 1).
-                #
-                # BOUNDED: a manifest that PERSISTENTLY names missing
-                # files (a racing publish pruned them, or a partial
-                # rmtree) would otherwise spin every waiter here forever
-                # — nobody reaches the acquire path while the manifest
-                # exists (measured r10: the async-publish takeover race
-                # hung a 10^7 maintenance batch for 28 min). After ~5 s
-                # of consecutive misses against the SAME manifest
-                # instance, unlink it and contend to rebuild — but only
-                # when provably broken (a named file ABSENT), or as a
-                # liveness escape when the same instance keeps failing
-                # past the stale threshold (unreadable-but-present
-                # files). A manifest REPLACED mid-count restarts the
-                # count: deleting a publish that landed between the
-                # failed read and the unlink discards a healthy
-                # multi-GB set (r10 ADVICE).
-                now = _time.time()
-                if ident is None or ident != broken_ident:
-                    broken_ident = ident
-                    broken_since = now
-                    broken_reads = 0
-                broken_reads += 1
-                if broken_reads >= 25:
-                    if _provably_broken(ident) or (
-                        now - broken_since > _STALE_S
-                    ):
-                        if _manifest_ident() == ident:
-                            try:
-                                os.unlink(manifest)
-                            except OSError:
-                                pass
-                        broken_ident = None
-                    broken_reads = 0
-                _time.sleep(0.2)
-                continue
-        broken_reads = 0
-        broken_ident = None
-        if os.path.exists(noshare):
-            return build()
-        won = _acquire()
-        if not won and _heartbeat_stale(hb):
-            # presumed-dead winner: capture the lockdir EXCLUSIVELY
-            # before destroying it. rmtree of the live path raced a
-            # concurrent takeover — waiter A judges the old lock stale,
-            # waiter B adopts and mkdirs a FRESH lock, then A's rmtree
-            # deletes B's lock and A acquires too: two winners, two
-            # concurrent multi-GB builds (r10 ADVICE). os.rename is
-            # atomic — exactly one waiter owns the corpse; the rest see
-            # ENOENT and loop back to waiting. The corpse is RE-JUDGED
-            # after capture (rename preserves the dir's own mtime and
-            # its HEARTBEAT): a waiter that stalled between judging the
-            # OLD lock stale and renaming may have captured a takeover's
-            # FRESH lock — restore it instead of destroying a live
-            # winner's liveness signal.
-            dead = lock + ".dead-" + uuid.uuid4().hex[:8]
-            try:
-                os.rename(lock, dead)
-            except OSError:
-                pass
-            else:
-                if not _heartbeat_stale(os.path.join(dead, "HEARTBEAT")):
-                    try:
-                        os.rename(dead, lock)
-                    except OSError:
-                        # yet another waiter re-acquired meanwhile; the
-                        # displaced fresh winner finishes headless (its
-                        # publish still lands) — drop the corpse
-                        shutil.rmtree(dead, ignore_errors=True)
-                else:
-                    shutil.rmtree(dead, ignore_errors=True)
-                    won = _acquire()
-        if not won:
-            _time.sleep(0.5)
-            continue
-
-        # winner: publish liveness from a daemon thread so waiters can
-        # distinguish "slow build under contention" from "dead builder"
-        stop = threading.Event()
-
-        def _beat() -> None:
-            while not stop.is_set():
-                try:
-                    with open(hb, "w") as f:
-                        f.write(str(os.getpid()))
-                except OSError:
-                    pass
-                stop.wait(_HEARTBEAT_S)
-
-        t = threading.Thread(target=_beat, daemon=True)
-        t.start()
-        handed_off = False
-        try:
-            obj = build()
-            if (
-                isinstance(obj, tuple)
-                and obj
-                and all(
-                    isinstance(a, np.ndarray) and a.dtype != object for a in obj
-                )
-            ):
-                if _async_publish_enabled():
-                    # SPARK_GRAFT_ASYNC_PUBLISH=1: the O(n) sequential
-                    # npy write comes OFF the batch critical path — the
-                    # winner starts its own task work immediately on the
-                    # private copy while a background thread publishes
-                    # for everyone else (heartbeat keeps feeding waiters
-                    # until the manifest lands; a publish crash goes
-                    # stale and the takeover path rebuilds). Cost: the
-                    # winner's worker caches the anon copy instead of
-                    # the map until its LRU evicts it — one transient
-                    # private copy per host, the same peak the blocking
-                    # write already had while saving.
-                    def _publish() -> None:
-                        # a publish crash must hit the SAME FAILED-n
-                        # bound as a blocking-path crash: a deterministic
-                        # failure (ENOSPC on a 25 GB write is the real
-                        # one) otherwise loops forever — every waiter
-                        # takes over, rebuilds, crashes in publish, goes
-                        # stale, repeat. Marker + lock release let the
-                        # next waiter retry, NOSHARE caps the churn.
-                        try:
-                            _shared_save(d, obj)
-                            _gc_scratch(key, d)
-                        except BaseException:
-                            _record_failure()
-                            shutil.rmtree(lock, ignore_errors=True)
-                        finally:
-                            stop.set()
-
-                    pub = threading.Thread(target=_publish, daemon=True)
-                    pub.start()
-                    handed_off = True  # heartbeat now owned by _publish
-                    return obj
-                _shared_save(d, obj)
-                # map the just-published set back; a concurrent same-key
-                # publish may have pruned this token set (a save slower
-                # than _STALE_S ages past even the newest-member gate) or
-                # a cross-key LRU GC removed the dir — re-land a fresh
-                # token set and retry instead of surfacing a task failure
-                # (r10 ADVICE). The private copy is dropped only once the
-                # mapped one is in hand.
-                out = None
-                for _ in range(3):
-                    try:
-                        out = _shared_load(d)
-                        break
-                    except OSError:
-                        _shared_save(d, obj)
-                if out is None:
+            except (OSError, ValueError, KeyError):
+                pass  # not published yet (or damaged): build it
+            if not os.path.exists(os.path.join(d, "NOSHARE")):
+                obj = build()
+                if _shareable(obj):
+                    _shared_save(d, obj)
                     out = _shared_load(d)
-                del obj  # drop the private copy; hand back the mapped one
-                _gc_scratch(key, d)
-                return out
-            os.makedirs(d, exist_ok=True)
-            with open(noshare, "w"):
-                pass
-            _LINEAGE.pop(key, None)
-            return obj
-        except BaseException:
-            # a FAILED build must not strand waiters, but it must not
-            # poison the host either: a permanent NOSHARE after one
-            # transient failure (OOM, FS blip) would route every later
-            # worker to private multi-GB builds — recreating exactly the
-            # n_workers× residency regime shared staging exists to kill.
-            # Instead record the failure (FAILED-<n> marker — writes are
-            # serialized by the lock, so the count is race-free) and
-            # RELEASE the lock: the stale heartbeat lets the next waiter
-            # take over and retry. After _MAX_SHARED_FAILURES consecutive
-            # winner failures the build is presumed deterministic and the
-            # key falls back to NOSHARE, bounding the takeover/retry
-            # churn instead of looping until Spark exhausts task retries.
-            stop.set()
-            t.join(timeout=2)
-            _record_failure()
-            shutil.rmtree(lock, ignore_errors=True)
-            raise
-        finally:
-            if not handed_off:
-                stop.set()
-                t.join(timeout=2)
+                    _gc_scratch(key, d)
+                    return out
+                os.makedirs(d, exist_ok=True)
+                with open(os.path.join(d, "NOSHARE"), "w"):
+                    pass
+                return obj
+    finally:
+        # a failed or unshareable build must not leave a lineage link
+        # for a later, possibly full, rebuild of this key
+        _LINEAGE.pop(key, None)
+    return build()
 
 
 _STAGE_ROOT: str | None = None
@@ -819,9 +481,10 @@ def staged_matrix(
 
 
 def load_staged(key: str, build: Callable[[], object]) -> object:
-    """Executor-side: build an artifact's in-memory form once per worker
-    process. ``build`` reads the staged Parquet itself (``read_staged``);
-    ``key`` is usually the staged path (or a composite of several).
+    """Executor-side: an artifact's in-memory form, built once per host
+    (``_shared_build``) and cached per worker process. ``build`` reads the
+    staged Parquet itself (``read_staged``); ``key`` is usually the staged
+    path (or a composite of several).
 
     Eviction happens BEFORE the build: at rehearsal scale one artifact is
     multiple GB, and building the new matrix while the evictee still sat
@@ -831,27 +494,29 @@ def load_staged(key: str, build: Callable[[], object]) -> object:
     if obj is None:
         while _CACHE and len(_CACHE) >= _CACHE_MAX:
             _CACHE.popitem(last=False)
-        obj = _shared_build(key, build) if _shared_enabled() else build()
+        obj = _shared_build(key, build)
         _CACHE[key] = obj
     return obj
 
 
 def _peek_artifact(key: str):
     """Return an ALREADY-BUILT artifact for ``key`` without triggering a
-    build: the worker's LRU first, then (shared mode) the host-shared
-    manifest. The incremental-patch path probes prior chain prefixes with
-    this — a miss means 'rebuild from parquet', never 'wait'."""
+    build: the worker's LRU first, then the host-shared store. The
+    incremental-patch path probes prior chain prefixes with this — a miss
+    means 'rebuild from parquet'. It only waits on the key's lock when
+    the key is already published (a GC or a load may hold it briefly);
+    prefixes are strictly shorter keys, so the wait cannot cycle."""
     obj = _CACHE.get(key)
     if obj is not None:
         return obj
-    if _shared_enabled():
-        d = _shared_dir(key)
-        if os.path.exists(os.path.join(d, "MANIFEST.json")):
-            try:
-                return _shared_load(d)
-            except Exception:
-                return None
-    return None
+    d = _shared_dir(key)
+    if not os.path.exists(os.path.join(d, "MANIFEST.json")):
+        return None
+    with _locked(d):
+        try:
+            return _shared_load(d)
+        except (OSError, ValueError, KeyError):
+            return None
 
 
 def _seg_offsets(lengths: np.ndarray) -> np.ndarray:
@@ -962,9 +627,9 @@ def load_staged_matrix(
     worker's LRU, or the host-shared store), only the suffix deltas are
     read from parquet and PATCHED in — O(n) memcpy + O(|delta|) parquet
     instead of re-reading the whole chain. This is the maintenance-loop
-    payoff: per-batch artifact refresh cost follows the batch, and in
-    shared mode the winner publishes the patched npy in seconds (a
-    sequential O(n) write) instead of minutes of full parquet decode.
+    payoff: per-batch artifact refresh cost follows the batch, and the
+    winner publishes the patched npy in seconds (a sequential O(n)
+    write) instead of minutes of full parquet decode.
     Falls back to the full ``staged_matrix`` read when no prefix exists."""
     key = _matrix_key(paths, id_col, vec_col)
 
@@ -974,8 +639,7 @@ def load_staged_matrix(
             prior = _peek_artifact(prior_key)
             if prior is None:
                 continue
-            if _shared_enabled():
-                _LINEAGE[key] = prior_key  # publish-time GC lineage
+            _LINEAGE[key] = prior_key  # publish-time GC lineage
             ids, mat = prior
             d_ids, d_mat = staged_matrix(paths[cut:], id_col, vec_col)
             ids2, mat2, _ = _patch_matrix(ids, mat, d_ids, d_mat.astype(mat.dtype, copy=False))
@@ -1035,10 +699,9 @@ def load_staged_graph(
         if best is None:
             return _full()
         bi, ai, (ids, bmat, indptr, indices) = best
-        if _shared_enabled():
-            _LINEAGE[key] = _graph_key(  # publish-time GC lineage
-                base_paths[:bi], adj_paths[:ai], base_id, vec_col
-            )
+        _LINEAGE[key] = _graph_key(  # publish-time GC lineage
+            base_paths[:bi], adj_paths[:ai], base_id, vec_col
+        )
         if bi < len(base_paths):
             d_ids, d_mat = staged_matrix(base_paths[bi:], base_id, vec_col)
             ids2, bmat2, old_dest = _patch_matrix(

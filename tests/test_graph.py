@@ -1282,3 +1282,25 @@ def test_precomputed_knn_df_build_matches_inline_phase0(spark, emb):
     assert ep1 == ep2
     assert inline.exceptAll(fed).count() == 0
     assert fed.exceptAll(inline).count() == 0
+
+
+def test_build_joins_threads_when_phase0_raises(spark, emb, monkeypatch):
+    """The medoid and staged-base threads start before phase 0; when
+    phase 0 raises, both are joined before the error propagates instead
+    of leaving their Spark jobs running behind it."""
+    import threading
+
+    from mysteryann_spark.operators import projection
+
+    def boom(*args, **kwargs):
+        raise RuntimeError("phase 0 failed")
+
+    monkeypatch.setattr(projection, "knn_join_arrays", boom)
+    q = emb.where("vec_id < 50").select(F.col("vec_id").alias("qid"), "embedding")
+    with pytest.raises(RuntimeError, match="phase 0 failed"):
+        projection.build_roargraph(emb, q, PARAMS)
+    alive = [
+        t.name for t in threading.enumerate()
+        if t.name in ("medoid", "stage-base") and t.is_alive()
+    ]
+    assert alive == []

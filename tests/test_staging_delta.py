@@ -194,11 +194,14 @@ def test_patch_matrix_and_csr_vs_dict_reference():
         assert np.array_equal(ix2, ref_ix)
 
 
-def test_incremental_graph_artifact_matches_cold_rebuild(spark, emb, built):
+def test_incremental_graph_artifact_matches_cold_rebuild(
+    spark, emb, built, tmp_path, monkeypatch
+):
     """Deterministic coverage of load_staged_graph's PATCH branch: build
     the prefix artifact in this process (warming the module LRU), then
     load the extended chain — the prefix must be found and patched, and
-    the result must be bit-identical to a cold full rebuild."""
+    the result must be bit-identical to a cold full rebuild (an empty
+    host-shared store, so the cold load cannot map the patched publish)."""
     import numpy as np
 
     from mysteryann_spark.sources import staging
@@ -216,6 +219,7 @@ def test_incremental_graph_artifact_matches_cold_rebuild(spark, emb, built):
     )
     a1 = stage_parquet(delta)
 
+    monkeypatch.setenv("SPARK_LOCAL_DIRS", str(tmp_path / "warm"))
     staging._CACHE.clear()
     prefix = load_staged_graph([b0], [a0], "vec_id", "embedding")
     key = staging._graph_key([b0], [a0], "vec_id", "embedding")
@@ -223,6 +227,7 @@ def test_incremental_graph_artifact_matches_cold_rebuild(spark, emb, built):
     patched = load_staged_graph([b0, b1], [a0, a1], "vec_id", "embedding")
 
     staging._CACHE.clear()
+    monkeypatch.setenv("SPARK_LOCAL_DIRS", str(tmp_path / "cold"))
     cold = load_staged_graph([b0, b1], [a0, a1], "vec_id", "embedding")
     for got, want in zip(patched, cold):
         assert np.array_equal(np.asarray(got), np.asarray(want))
@@ -230,7 +235,9 @@ def test_incremental_graph_artifact_matches_cold_rebuild(spark, emb, built):
     assert len(patched[0]) == len(prefix[0]) + 15
 
 
-def test_incremental_matrix_artifact_matches_cold_rebuild(spark, emb):
+def test_incremental_matrix_artifact_matches_cold_rebuild(
+    spark, emb, tmp_path, monkeypatch
+):
     import numpy as np
 
     from mysteryann_spark.sources import staging
@@ -242,10 +249,12 @@ def test_incremental_matrix_artifact_matches_cold_rebuild(spark, emb):
     )
     b1 = stage_parquet(override)
 
+    monkeypatch.setenv("SPARK_LOCAL_DIRS", str(tmp_path / "warm"))
     staging._CACHE.clear()
     load_staged_matrix([b0], "vec_id", "embedding")
     patched = load_staged_matrix([b0, b1], "vec_id", "embedding")
     staging._CACHE.clear()
+    monkeypatch.setenv("SPARK_LOCAL_DIRS", str(tmp_path / "cold"))
     cold = load_staged_matrix([b0, b1], "vec_id", "embedding")
     assert np.array_equal(patched[0], cold[0])
     assert np.array_equal(patched[1], cold[1])

@@ -1,18 +1,19 @@
-"""Round-12 optimization measurement harness.
+"""Optimization measurement harness.
 
 Captures, for every bench query (bench.py's headline set plus the graph
 build/search legs), the formatted physical plan into
-``plans/r13/<query>_<tag>.txt`` and a noop-sink timing (guide §1.4: the
+``plans/<round>/<query>_<tag>.txt`` and a noop-sink timing (guide §1.4: the
 noop sink computes every column; bench.py's contractual ``.count()``
 timing stays the comparison number — this harness exists to ISOLATE the
 computation for optimization work, not to replace the bench).
 
 Usage:
-    python tools/profile_r13.py <tag> [query ...]
+    python tools/profile_bench.py <round> <tag> [query ...]
 
-``tag`` is the plans/r13 suffix (before/after). With no query names, runs
-the full bench set. Timings print one JSON line to stdout (min of
-$SPARK_GRAFT_BENCH_SHOTS shots, default 2).
+``round`` names the plans subdirectory and labels the jobs and the JSON
+line (e.g. r14); ``tag`` is the plan-file suffix (before/after). With no
+query names, runs the full bench set. Timings print one JSON line to
+stdout (min of $SPARK_GRAFT_BENCH_SHOTS shots, default 2).
 """
 
 from __future__ import annotations
@@ -23,10 +24,10 @@ import re
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-PLANS_DIR = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r13")
 
 BENCH_QUERIES = [
     "flagship_revenue_by_nation",
@@ -46,9 +47,12 @@ BENCH_QUERIES = [
 
 
 def main() -> None:
-    tag = sys.argv[1] if len(sys.argv) > 1 else "before"
-    only = set(sys.argv[2:])
-    os.makedirs(PLANS_DIR, exist_ok=True)
+    if len(sys.argv) < 3:
+        sys.exit("usage: python tools/profile_bench.py <round> <tag> [query ...]")
+    rnd, tag = sys.argv[1], sys.argv[2]
+    only = set(sys.argv[3:])
+    plans_dir = os.path.join(REPO, "plans", rnd)
+    os.makedirs(plans_dir, exist_ok=True)
 
     from pyspark.sql import functions as F
 
@@ -59,7 +63,7 @@ def main() -> None:
     from mysteryann_spark.session import get_spark
     from mysteryann_spark.sources.tables import load_table
 
-    spark = get_spark(app_name="mysteryann-profile-r13")
+    spark = get_spark(app_name=f"mysteryann-profile-{rnd}")
     sc = spark.sparkContext
     registry = all_queries()
     n_shots = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_SHOTS", "2")))
@@ -80,13 +84,13 @@ def main() -> None:
         ts = []
         df = None
         for i in range(n_shots):
-            sc.setJobDescription(f"r13:{name}:shot{i}")
+            sc.setJobDescription(f"{rnd}:{name}:shot{i}")
             t0 = time.time()
             df = mk_df()
             action(df)
             ts.append(round(time.time() - t0, 3))
             sc.setJobDescription(None)
-        with open(os.path.join(PLANS_DIR, f"{name}_{tag}.txt"), "w") as f:
+        with open(os.path.join(plans_dir, f"{name}_{tag}.txt"), "w") as f:
             f.write(plan_of(df))
         timings[name] = min(ts)
         shots[name] = ts
@@ -164,7 +168,7 @@ def main() -> None:
     print(
         json.dumps(
             {
-                "metric": "r13_profile",
+                "metric": f"{rnd}_profile",
                 "tag": tag,
                 "value": round(sum(timings.values()), 3),
                 "unit": "sec",

@@ -23,13 +23,11 @@ per step), the adjacency stages as a [full, delta...] chain handed to
 insert as ``staged_adj`` (batch k writes only its changed rows), and
 the worker/host index artifacts PATCH the prior chain prefix instead of
 rebuilding from all parquet (staging.load_staged_graph /
-load_staged_matrix — in shared mode the per-batch publish is one
-sequential O(n)-bytes npy write, seconds, not the minutes-long full
-parquet decode that was the measured 557 s floor of r6). Each shared
-chain step leaves its predecessor's npy set on scratch (~2×n×dim×4 B
-per step at fp32) — long chains on one host should GC prior
-mysteryann-shared-* dirs between batches or lower
-SPARK_GRAFT_ADJ_COMPACT.
+load_staged_matrix — the per-batch publish is one sequential
+O(n)-bytes npy write, seconds, not the minutes-long full parquet decode
+that was the measured 557 s floor of r6). Publish-time GC keeps one
+prior generation per chain on scratch (~2×n×dim×4 B per step at fp32)
+plus an LRU cap of SPARK_GRAFT_SHARED_MAX_GENERATIONS.
 
 Run:  python tools/scale_maintain.py [N] [BATCH] [N_BATCHES]
       (defaults 10_000_000, 10_000, 3; one JSON line per stage —
@@ -110,10 +108,6 @@ def main() -> None:
         f"_w{int(os.environ.get('SCALE_BUILD_WIDTH', 4))}_p0ivf"
         + ("" if n_centers == 256 else f"_c{n_centers}")
     )
-
-    from mysteryann_spark.sources.staging import staging_mode
-
-    print(json.dumps({"stage": "mode", **staging_mode()}), flush=True)
 
     base = synth_range(spark, 0, n, n_centers, parts=64).cache()
     base.count()
