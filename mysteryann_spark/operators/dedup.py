@@ -147,6 +147,52 @@ def _band_buckets(sigmat: np.ndarray, bands: int, rows_per_band: int) -> np.ndar
     return out.view(np.int64)
 
 
+# Row cap of each doc-pair frame the MinHash verify kernel emits: a rep
+# pair expands to |members_a| x |members_b| doc pairs, so two 10^5-member
+# boilerplate groups alone would otherwise be one 10^10-row allocation.
+_PAIR_ROWS = 1 << 20
+
+
+def _expand_member_pairs(
+    ka: np.ndarray,
+    kb: np.ndarray,
+    est: np.ndarray,
+    jac: np.ndarray,
+    mind: np.ndarray,
+    mflat: np.ndarray,
+    cap: int = _PAIR_ROWS,
+) -> Iterator[pd.DataFrame]:
+    """Expand rep pairs ``(ka[i], kb[i])`` (indices into the CSR member
+    lists ``mind``/``mflat``) to their members_a x members_b doc pairs,
+    yielded in frames of at most ``cap`` rows. Frames are slices of the
+    global output row range: ``cnt.cumsum()`` maps each output row back
+    to its rep pair, so one pair's expansion may span several frames and
+    no frame grows with the member-group sizes. Member sets of distinct
+    reps are disjoint, so x != y always and min/max is the id_a < id_b
+    orientation. Rows come out in rep-pair order, members_a-major."""
+    la = mind[ka + 1] - mind[ka]
+    lb = mind[kb + 1] - mind[kb]
+    cnt = la * lb
+    ends = np.cumsum(cnt)
+    starts = ends - cnt
+    total = int(ends[-1]) if len(ends) else 0
+    for g0 in range(0, total, cap):
+        g = np.arange(g0, min(g0 + cap, total), dtype=np.int64)
+        pidx = np.searchsorted(ends, g, side="right")
+        off = g - starts[pidx]
+        lb_p = lb[pidx]
+        x = mflat[mind[ka[pidx]] + off // lb_p]
+        y = mflat[mind[kb[pidx]] + off % lb_p]
+        yield pd.DataFrame(
+            {
+                "id_a": np.minimum(x, y),
+                "id_b": np.maximum(x, y),
+                "est_jaccard": est[pidx],
+                "jaccard": jac[pidx],
+            }
+        )
+
+
 def _verify_pairs_staged(
     cand: DataFrame, staged: str, num_perm: int, threshold: float, seed: int
 ) -> DataFrame:
@@ -182,6 +228,8 @@ def _verify_pairs_staged(
     the caller's separate JVM leg.
     """
     from mysteryann_spark.sources.staging import load_staged, table_ragged
+
+    pair_rows = _PAIR_ROWS  # read driver-side; the kernel closure carries it
 
     def build():
         import pyarrow.parquet as pq
@@ -225,7 +273,7 @@ def _verify_pairs_staged(
         v = int(v_arr[0])
         n_keys = len(keys_b)
 
-        def chunk_out(ra: np.ndarray, rb: np.ndarray) -> pd.DataFrame:
+        def chunk_out(ra: np.ndarray, rb: np.ndarray) -> Iterator[pd.DataFrame]:
             n = len(ra)
             ia = np.searchsorted(reps, ra)
             ib = np.searchsorted(reps, rb)
@@ -284,28 +332,10 @@ def _verify_pairs_staged(
             # values that were then thrown away for >98% of pairs
             ka, kb = ia[keep], ib[keep]
             est = (sigmat[ka] == sigmat[kb]).mean(axis=1)
-            jk = jac[keep]
             # expand each surviving rep pair to its members_a x members_b
-            # doc pairs (vectorized cross product over the CSR member
-            # lists; member sets of distinct reps are disjoint, so x != y
-            # always and min/max is the id_a < id_b orientation)
-            la = mind[ka + 1] - mind[ka]
-            lb = mind[kb + 1] - mind[kb]
-            cnt = la * lb
-            total = int(cnt.sum())
-            pidx = np.repeat(np.arange(len(ka), dtype=np.int64), cnt)
-            ends = np.cumsum(cnt)
-            off = np.arange(total, dtype=np.int64) - np.repeat(ends - cnt, cnt)
-            lb_p = lb[pidx]
-            x = mflat[mind[ka][pidx] + (off // np.maximum(lb_p, 1))]
-            y = mflat[mind[kb][pidx] + (off % np.maximum(lb_p, 1))]
-            return pd.DataFrame(
-                {
-                    "id_a": np.minimum(x, y),
-                    "id_b": np.maximum(x, y),
-                    "est_jaccard": np.repeat(est, cnt),
-                    "jaccard": np.repeat(jk, cnt),
-                }
+            # doc pairs in frames of at most pair_rows rows
+            yield from _expand_member_pairs(
+                ka, kb, est, jac[keep], mind, mflat, pair_rows
             )
 
         # Accumulate Arrow batches into bounded chunks before grouping:
@@ -329,11 +359,11 @@ def _verify_pairs_staged(
                 ra = np.concatenate([p["rep_a"].to_numpy() for p in acc])
                 rb = np.concatenate([p["rep_b"].to_numpy() for p in acc])
                 acc, acc_rows = [], 0
-                yield chunk_out(ra, rb)
+                yield from chunk_out(ra, rb)
         if acc:
             ra = np.concatenate([p["rep_a"].to_numpy() for p in acc])
             rb = np.concatenate([p["rep_b"].to_numpy() for p in acc])
-            yield chunk_out(ra, rb)
+            yield from chunk_out(ra, rb)
 
     # The caller repartitions the pair set explicitly (see
     # minhash_lsh_pairs) so the kernel chains into the dedup stage with

@@ -28,12 +28,20 @@ groupBy(dst) shuffle — lock-free by construction:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from typing import Iterator
+
+import numpy as np
+import pandas as pd
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mysteryann_spark.operators.knn import knn_join_arrays, medoid
 from mysteryann_spark.operators.prune import prune_candidates
 from mysteryann_spark.params import IndexParams
+from mysteryann_spark.sources.staging import table_csr
+
+# rows per frame the single-task BFS emits (bounds each Arrow batch)
+_EMIT_ROWS = 1 << 20
 
 
 def _edges(adj: DataFrame) -> DataFrame:
@@ -55,29 +63,119 @@ def _prune_merged(
     return prune_candidates(merged, base_df, m, metric, staged_base=staged_base)
 
 
-def reachable_from(adj_df: DataFrame, ep: int) -> DataFrame:
-    """Distributed BFS over ``(node, nbrs)`` adjacency from ``ep``:
-    returns the set of reachable nodes as a ``(node)`` DataFrame.
+def _reached_mask(tbl, ep: int) -> tuple[np.ndarray, np.ndarray]:
+    """Frontier BFS from ``ep`` over an Arrow ``(node, nbrs)`` table:
+    returns (sorted ids, reached mask). The CSR spans the union of node
+    ids, neighbour ids and ``ep``, so a neighbour without a row of its
+    own is reached (it just has no out-edges) and an ``ep`` without a row
+    reaches only itself. Null ``nbrs`` lists have no edges."""
+    import pyarrow.compute as pc
 
-    One frontier-expansion join per round; round count = graph distance
-    from the entry point (tens for beam-search graphs). Each round's
-    frontier is localCheckpointed so lineage stays flat — the same
-    regime as the distributed beam search."""
+    nodes = tbl["node"].to_numpy().astype(np.int64)
+    edged = tbl.filter(pc.is_valid(tbl["nbrs"]))
+    flat = pc.list_flatten(edged["nbrs"]).to_numpy().astype(np.int64)
+    ids = np.union1d(np.union1d(nodes, flat), np.array([ep], dtype=np.int64))
+    indptr, indices = table_csr(edged, ids)
+    seen = np.zeros(len(ids), dtype=bool)
+    frontier = np.searchsorted(ids, [ep])
+    seen[frontier] = True
+    while len(frontier):
+        lo, lens = indptr[frontier], np.diff(indptr)[frontier]
+        ends = np.cumsum(lens)
+        pos = np.arange(int(ends[-1]), dtype=np.int64) - np.repeat(ends - lens - lo, lens)
+        nxt = np.unique(indices[pos])
+        frontier = nxt[~seen[nxt]]
+        seen[frontier] = True
+    return ids, seen
+
+
+def _reach_marks(adj_df: DataFrame, ep: int) -> DataFrame:
+    """``(node, reached)``: every id reached from ``ep`` (True), plus one
+    row per adjacency row whose node is not reached (False). One staged
+    write of the adjacency, then ONE single-partition task runs the
+    whole BFS (``_reached_mask``) over it."""
+    from mysteryann_spark.sources.staging import read_staged, stage_parquet
+
+    path = stage_parquet(adj_df.select("node", "nbrs"))
+    ep = int(ep)
+
+    def bfs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for _ in batches:  # the one-row driver frame only triggers the task
+            pass
+        tbl = read_staged(path)
+        ids, seen = _reached_mask(tbl, ep)
+        nodes = tbl["node"].to_numpy().astype(np.int64)
+        missed = nodes[~seen[np.searchsorted(ids, nodes)]]
+        for vals, flag in ((ids[seen], True), (missed, False)):
+            for s in range(0, len(vals), _EMIT_ROWS):
+                yield pd.DataFrame({"node": vals[s : s + _EMIT_ROWS], "reached": flag})
+
     spark = adj_df.sparkSession
-    reached = spark.createDataFrame([(int(ep),)], "node bigint").localCheckpoint(eager=True)
-    frontier = reached
-    while True:
-        nxt = (
-            adj_df.join(frontier, "node", "left_semi")
-            .select(F.explode("nbrs").alias("node"))
-            .distinct()
-            .join(reached, "node", "left_anti")
-            .localCheckpoint(eager=True)
-        )
-        if not nxt.take(1):
-            return reached
-        reached = reached.unionByName(nxt).localCheckpoint(eager=True)
-        frontier = nxt
+    return spark.range(0, 1, 1, 1).mapInPandas(bfs, "node bigint, reached boolean")
+
+
+def reachable_from(adj_df: DataFrame, ep: int) -> DataFrame:
+    """The ``(node)`` set reachable from ``ep`` over a ``(node, nbrs)``
+    adjacency. Neighbour ids without a row count as reached; an ``ep``
+    with no row yields ``{ep}``.
+
+    Job shape is fixed, whatever the graph's diameter: one distributed
+    staged write of the adjacency, then each action on the result runs
+    the whole BFS as ONE task (``_reached_mask``, a vectorized numpy
+    frontier loop). That task holds the whole-graph CSR — the same
+    artifact every phase-4 search worker already loads
+    (``staging.load_staged_graph``), so it adds no new memory ceiling."""
+    return _reach_marks(adj_df, ep).where("reached").select("node")
+
+
+def _assign_bridges(
+    u: np.ndarray,
+    r: np.ndarray,
+    dist: np.ndarray,
+    rank: np.ndarray,
+    rounds: int,
+    cap: int,
+) -> tuple[np.ndarray, np.ndarray]:
+    """Capacity-capped bridge assignment over candidate rows ``(u, r,
+    dist, rank)`` by deferred acceptance; returns the ``(u, r)`` bridges.
+
+    Each round, every unassigned ``u`` proposes to its best-ranked host
+    that still has capacity, and each host accepts its proposals ordered
+    by (dist, u) up to its remaining capacity; at most ``rounds`` rounds,
+    stopping early once a round assigns nothing or no ``u`` is left.
+    Fallback: a node whose every candidate host is full bridges anyway —
+    reachability beats the cap — but SPREAD across its candidate list
+    (the row with ``rank == 1 + u mod n_cand``) instead of
+    re-concentrating on everyone's shared 1-NN, so residual hub degree
+    is bounded by ~n_leftover / n_cand + cap, not n_leftover."""
+    order = np.lexsort((rank, u))
+    u, r, dist, rank = u[order], r[order], dist[order], rank[order]
+    uids, u_ix = np.unique(u, return_inverse=True)
+    hosts, h_ix = np.unique(r, return_inverse=True)
+    open_u = np.ones(len(uids), dtype=bool)
+    load = np.zeros(len(hosts), dtype=np.int64)
+    taken = []
+    for _ in range(rounds):
+        live = np.flatnonzero(open_u[u_ix] & (load[h_ix] < cap))
+        # rows are (u, rank)-sorted: each open u's first live row is its
+        # best-ranked host with capacity left
+        prop = live[np.unique(u_ix[live], return_index=True)[1]]
+        prop = prop[np.lexsort((u[prop], dist[prop], h_ix[prop]))]
+        ph = h_ix[prop]
+        slot = np.arange(len(ph)) - np.searchsorted(ph, ph)  # rank within host
+        take = prop[slot < cap - load[ph]]
+        if not len(take):
+            break  # no capacity anywhere among remaining candidates
+        np.add.at(load, h_ix[take], 1)
+        open_u[u_ix[take]] = False
+        taken.append(take)
+        if not open_u.any():
+            break
+    n_cand = np.zeros(len(uids), dtype=np.int64)
+    np.maximum.at(n_cand, u_ix, rank)
+    fallback = np.flatnonzero(open_u[u_ix] & (rank == 1 + np.mod(u, n_cand[u_ix])))
+    rows = np.concatenate(taken + [fallback])
+    return u[rows], r[rows]
 
 
 def repair_reachability(
@@ -98,26 +196,36 @@ def repair_reachability(
     Clustered data can leave the projection graph with components the
     medoid-seeded build never bridges (training queries' kNN lists stay
     in-cluster), and an unreachable node can NEVER be returned by a
-    search. Repair: (1) distributed BFS marks the reached set; (2) each
-    unreached node finds its ``bridge_candidates`` nearest reached nodes
-    (a filtered kNN join — cost |unreached| x |reached| GEMM, zero when
-    the audit passes); (3) bridges are assigned CAPACITY-CAPPED — at most
+    search. Repair: (1) BFS marks the reached set; (2) each unreached
+    node finds its ``bridge_candidates`` nearest reached nodes (a
+    filtered kNN join — cost |unreached| x |reached| GEMM, zero when the
+    audit passes); (3) bridges are assigned CAPACITY-CAPPED — at most
     ``max_bridges_per_host`` per reached host, filled closest-first
-    across candidate ranks, with an uncapped nearest-host fallback so the
-    guarantee never fails. The cap exists because the naive 1-NN
-    assignment funnels a whole under-covered region through the single
-    boundary node nearest it (the 300k scale rehearsal produced a
-    12,491-degree hub that both stalled searches — every beam expansion
-    touching it scans 12k neighbors — and over-concentrated entry into
-    the region); (4) add the bridge edges r->u and u->r by array_union —
-    append-only, no re-prune, so no existing edge is evicted and the
-    guarantee can't un-make itself. Returns (repaired adjacency,
-    n_unreached_before).
+    across candidate ranks, with an uncapped spread fallback so the
+    guarantee never fails (``_assign_bridges``). The cap exists because
+    the naive 1-NN assignment funnels a whole under-covered region
+    through the single boundary node nearest it (the 300k scale
+    rehearsal produced a 12,491-degree hub that both stalled searches —
+    every beam expansion touching it scans 12k neighbors — and
+    over-concentrated entry into the region); (4) add the bridge edges
+    r->u and u->r by array_union — append-only, no re-prune, so no
+    existing edge is evicted and the guarantee can't un-make itself.
+    Returns (repaired adjacency, n_unreached_before).
+
+    Job shape is fixed — it grows with neither the graph's diameter nor
+    the number of acceptance rounds: a staged write of the adjacency,
+    ONE single-partition BFS task (checkpointed) and its unreached
+    count; then, only when nodes are unreached, the bridge kNN join and
+    ONE single-partition assignment task (checkpointed). Memory bounds:
+    the BFS task holds the whole-graph CSR (what every phase-4 search
+    worker already loads) and the assignment task holds the
+    |unreached| x ``bridge_candidates`` candidate rows.
     """
     from mysteryann_spark.operators.knn import knn_join
 
-    reached = reachable_from(adj_df, ep)
-    unreached = adj_df.select("node").join(reached, "node", "left_anti")
+    marks = _reach_marks(adj_df, ep).localCheckpoint(eager=True)
+    reached = marks.where("reached").select("node")
+    unreached = marks.where(~F.col("reached")).select("node")
     n_unreached = unreached.count()
     if n_unreached == 0:
         return adj_df, 0
@@ -142,61 +250,23 @@ def repair_reachability(
         query_id="qid", base_id=base_id, vec_col=vec_col,
     ).select(
         F.col("qid").alias("u"), F.col("nn_id").alias("r"), "dist", "rank"
-    ).localCheckpoint(eager=True)
-
-    # Capacity-capped assignment by deferred acceptance: each round,
-    # every still-unassigned node proposes to its best-ranked host that
-    # has capacity left, and each host accepts its closest proposals up
-    # to remaining capacity. Deterministic (ordered by dist, then u);
-    # each round is a handful of tiny jobs over |unreached| rows, and a
-    # round either assigns nodes or exhausts capacity, so the loop is
-    # bounded by the candidate width.
-    assigned = None  # (u, r)
-    load = None  # (r, n_taken)
-    remaining = cand.select("u").distinct().localCheckpoint(eager=True)
-    for _ in range(bridge_candidates):
-        offers = cand.join(remaining, "u", "left_semi")
-        if load is not None:
-            offers = offers.join(load, "r", "left_outer").withColumn(
-                "cap_left",
-                F.lit(max_bridges_per_host) - F.coalesce(F.col("n_taken"), F.lit(0)),
-            )
-        else:
-            offers = offers.withColumn("cap_left", F.lit(max_bridges_per_host))
-        offers = offers.where(F.col("cap_left") > 0)
-        w_u = Window.partitionBy("u").orderBy(F.col("rank").asc())
-        proposals = offers.withColumn("rn", F.row_number().over(w_u)).where(
-            F.col("rn") == 1
-        )
-        w_host = Window.partitionBy("r").orderBy(F.col("dist").asc(), F.col("u").asc())
-        take = (
-            proposals.withColumn("slot", F.row_number().over(w_host))
-            .where(F.col("slot") <= F.col("cap_left"))
-            .select("u", "r")
-            .localCheckpoint(eager=True)
-        )
-        if not take.take(1):
-            break  # no capacity anywhere among remaining candidates
-        assigned = take if assigned is None else assigned.unionByName(take)
-        load = assigned.groupBy("r").agg(F.count("*").alias("n_taken"))
-        remaining = remaining.join(take.select("u"), "u", "left_anti").localCheckpoint(
-            eager=True
-        )
-        if not remaining.take(1):
-            break
-    # fallback: nodes whose every candidate host is full bridge anyway —
-    # reachability beats the cap — but SPREAD across each node's
-    # candidate list (pick rank 1 + u mod n_candidates) instead of
-    # re-concentrating on everyone's shared 1-NN: residual hub degree is
-    # bounded by ~n_leftover / bridge_candidates + cap, not n_leftover.
-    max_rank = Window.partitionBy("u")
-    leftover = (
-        cand.join(remaining, "u", "left_semi")
-        .withColumn("n_cand", F.max("rank").over(max_rank))
-        .where(F.col("rank") == F.lit(1) + F.pmod(F.col("u"), F.col("n_cand")))
-        .select("u", "r")
     )
-    bridges = leftover if assigned is None else assigned.unionByName(leftover)
+
+    def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        frames = list(batches)
+        if not frames:
+            return
+        pdf = pd.concat(frames, ignore_index=True)
+        bu, br = _assign_bridges(
+            pdf["u"].to_numpy(np.int64), pdf["r"].to_numpy(np.int64),
+            pdf["dist"].to_numpy(np.float64), pdf["rank"].to_numpy(np.int64),
+            bridge_candidates, max_bridges_per_host,
+        )
+        yield pd.DataFrame({"u": bu, "r": br})
+
+    bridges = (
+        cand.coalesce(1).mapInPandas(assign, "u bigint, r bigint").localCheckpoint(eager=True)
+    )
 
     new_edges = bridges.select(F.col("r").alias("node"), F.col("u").alias("nbr")).unionByName(
         bridges.select(F.col("u").alias("node"), F.col("r").alias("nbr"))
@@ -404,10 +474,11 @@ def build_roargraph(
         staged_base=staged_base,
     )
     if ensure_reachable:
-        # post-build connectivity audit + repair (BFS rounds = graph
-        # distance from the medoid; bridge kNN only when components
-        # exist). Opt-in: testdata graphs are connected (test-asserted),
-        # and the audit costs real wall-clock on every build.
+        # post-build connectivity audit + repair (a fixed handful of jobs:
+        # one-task BFS; bridge kNN + one-task assignment only when
+        # components exist). Opt-in: testdata graphs are connected
+        # (test-asserted), and the audit costs real wall-clock on every
+        # build.
         merged, _ = repair_reachability(
             base_df, merged.localCheckpoint(), ep, metric,
             base_id=base_id, vec_col=vec_col,

@@ -11,6 +11,31 @@ import os
 from pyspark.sql import SparkSession
 
 
+# Ceiling of the host-derived driver-memory default (the former fixed default).
+_DRIVER_MEM_CAP_MB = 24 * 1024
+
+
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """``spark.driver.memory`` default derived from the host: half of
+    ``MemTotal`` (local mode runs every task inside the driver JVM, and
+    the Python workers need the other half), at least 1g and at most
+    24g. A fixed 24g on a smaller host lets the heap outgrow physical
+    memory, so the kernel OOM-kills the process instead of Spark raising
+    a legible error. Falls back to 24g when ``meminfo`` is unreadable
+    (non-Linux hosts). ``SPARK_DRIVER_MEM`` overrides it in ``get_spark``."""
+    try:
+        with open(meminfo) as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    total_mb = int(line.split()[1]) // 1024  # reported in kB
+                    break
+            else:
+                raise ValueError("no MemTotal line")
+    except (OSError, ValueError, IndexError):
+        return f"{_DRIVER_MEM_CAP_MB}m"
+    return f"{min(_DRIVER_MEM_CAP_MB, max(1024, total_mb // 2))}m"
+
+
 def get_spark(
     app_name: str = "mysteryann-spark",
     shuffle_partitions: int | None = None,
@@ -47,7 +72,7 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory())
         .config("spark.executorEnv.OMP_NUM_THREADS", "1")
         .config("spark.executorEnv.OPENBLAS_NUM_THREADS", "1")
         .config("spark.executorEnv.MKL_NUM_THREADS", "1")

@@ -904,6 +904,173 @@ def test_repair_bridges_are_capacity_capped(spark):
     assert max(added2.values()) <= 8, added2  # ~n_b/n_hosts + cap, not n_b
 
 
+def _python_bfs(rows, ep):
+    """Plain-Python reference BFS over (node, nbrs) rows; neighbour ids
+    without a row are reached but have no out-edges."""
+    out = {}
+    for node, nbrs in rows:
+        out.setdefault(node, []).extend(nbrs or [])
+    seen, frontier = {ep}, [ep]
+    while frontier:
+        frontier = [v for u in frontier for v in out.get(u, []) if v not in seen]
+        seen.update(frontier)
+    return seen
+
+
+def test_reachable_from_matches_python_bfs(spark):
+    """The single-task BFS reaches exactly what a plain BFS does on
+    random graphs with self-loops, empty neighbour lists, dangling
+    neighbour ids (no row of their own) and an entry point with no row."""
+    import numpy as np
+
+    from mysteryann_spark.operators.projection import reachable_from
+
+    rng = np.random.default_rng(11)
+    for n in (30, 60, 120):
+        rows = []
+        for i in range(n):
+            deg = int(rng.integers(0, 4))  # 0 -> empty list
+            nbrs = [int(v) for v in rng.integers(0, n + 10, deg)]  # >= n dangle
+            if rng.random() < 0.1:
+                nbrs.append(i)  # self-loop
+            rows.append((i, nbrs))
+        adj = spark.createDataFrame(rows, "node bigint, nbrs array<bigint>")
+        assert any(not nb for _, nb in rows)
+        for ep in (0, int(rng.integers(0, n)), n + 100):
+            got = [r["node"] for r in reachable_from(adj, ep).collect()]
+            assert len(got) == len(set(got))
+            assert set(got) == _python_bfs(rows, ep), (n, ep)
+
+
+def _bridges_reference(rows, rounds, cap):
+    """Pure-Python deferred acceptance over (u, r, dist, rank) candidate
+    rows: each round every unassigned u proposes to its best-ranked host
+    with capacity left, each host accepts by (dist, u) up to its capacity
+    left; at most ``rounds`` rounds. Leftovers take the row with
+    rank == 1 + u mod n_cand. Returns (sorted bridges, n_fallback)."""
+    by_u = {}
+    for row in rows:
+        by_u.setdefault(row[0], []).append(row)
+    for cands in by_u.values():
+        cands.sort(key=lambda t: t[3])
+    load, remaining, out = {}, set(by_u), []
+    for _ in range(rounds):
+        offers = {}
+        for u in remaining:
+            for row in by_u[u]:
+                if load.get(row[1], 0) < cap:
+                    offers.setdefault(row[1], []).append(row)
+                    break
+        took = []
+        for r, props in offers.items():
+            props.sort(key=lambda t: (t[2], t[0]))
+            took += props[: cap - load.get(r, 0)]
+        if not took:
+            break
+        for u, r, _, _ in took:
+            load[r] = load.get(r, 0) + 1
+            remaining.discard(u)
+            out.append((u, r))
+        if not remaining:
+            break
+    fallback = [
+        (u, r)
+        for u in remaining
+        for (_, r, _, rank) in by_u[u]
+        if rank == 1 + u % max(t[3] for t in by_u[u])
+    ]
+    return sorted(out + fallback), len(fallback)
+
+
+def test_bridge_assignment_matches_deferred_acceptance_reference():
+    """The one-pass numpy bridge assignment equals a plain-Python
+    deferred-acceptance reference on random candidate tables whose
+    distances tie on purpose (so hosts break ties by u), in both the
+    capped regime (every node placed under the cap) and the fallback
+    regime (capacity runs out)."""
+    import numpy as np
+
+    from mysteryann_spark.operators.projection import _assign_bridges
+
+    rng = np.random.default_rng(5)
+    regimes = {"capped": 0, "fallback": 0}
+    for trial in range(60):
+        n_u, n_h, k = int(rng.integers(5, 80)), int(rng.integers(3, 12)), int(rng.integers(1, 5))
+        k = min(k, n_h)
+        # odd trials: scarce capacity; even: about twice what is needed
+        cap = int(rng.integers(1, 4)) if trial % 2 else 2 * -(-n_u // n_h)
+        us = rng.choice(np.arange(1000, 3000), n_u, replace=False)
+        rows = []
+        for u in us:
+            hosts = rng.choice(n_h, k, replace=False)
+            dists = rng.integers(0, 3, k) / 2.0  # few values: many ties
+            order = np.lexsort((hosts, dists))  # knn_join's (dist, id) ranks
+            rows += [
+                (int(u), int(hosts[j]), float(dists[j]), rank)
+                for rank, j in enumerate(order, start=1)
+            ]
+        rounds = k if trial % 3 else 1
+        want, n_fallback = _bridges_reference(rows, rounds, cap)
+        regimes["fallback" if n_fallback else "capped"] += 1
+        perm = rng.permutation(len(rows))  # input row order must not matter
+        cols = [np.array([rows[i][c] for i in perm]) for c in range(4)]
+        bu, br = _assign_bridges(
+            cols[0].astype(np.int64), cols[1].astype(np.int64),
+            cols[2].astype(np.float64), cols[3].astype(np.int64), rounds, cap,
+        )
+        assert sorted(zip(bu.tolist(), br.tolist())) == want, trial
+    assert min(regimes.values()) >= 10, regimes
+
+
+def test_repair_job_count_independent_of_diameter(spark):
+    """Reachability repair runs a fixed number of Spark jobs: a ring of
+    diameter ~10 and one of diameter ~200, each with an unreached
+    island, cost the same job count. A per-round BFS or assignment loop
+    would scale the second with its diameter."""
+    import numpy as np
+
+    from mysteryann_spark.operators.projection import (
+        reachable_from,
+        repair_reachability,
+    )
+
+    sc = spark.sparkContext
+    n_island = 5
+
+    def repair_jobs(n_ring: int) -> int:
+        # directed ring 0 -> 1 -> ... -> n_ring-1 -> 0 from ep = 0 (BFS
+        # depth n_ring - 1) plus an island ring no ring node links to
+        rng = np.random.default_rng(n_ring)
+        n = n_ring + n_island
+        vecs = np.concatenate(
+            [rng.standard_normal((n_ring, 4)), rng.standard_normal((n_island, 4)) + 8.0]
+        )
+        base = spark.createDataFrame(
+            [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
+            "vec_id bigint, embedding array<double>",
+        )
+        rows = [(i, [(i + 1) % n_ring]) for i in range(n_ring)] + [
+            (n_ring + j, [n_ring + (j + 1) % n_island]) for j in range(n_island)
+        ]
+        adj = spark.createDataFrame(rows, "node bigint, nbrs array<bigint>").localCheckpoint()
+        group = f"repair-job-guard-{n_ring}"
+        sc.setJobGroup(group, "repair job-count guard")
+        try:
+            repaired, n_unreached = repair_reachability(base, adj, 0, "l2")
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        # the status tracker is fed by the asynchronous listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        assert n_unreached == n_island
+        assert reachable_from(repaired, 0).count() == n
+        return n_jobs
+
+    near, far = repair_jobs(11), repair_jobs(201)
+    assert near == far, (near, far)
+    assert near <= 16, near
+
+
 def test_distributed_search_frontier_batched_width(spark, emb, index):
     """expand_width > 1 (the frontier-batched multi-hop round) must stay
     recall-equivalent to strict best-first while doing the same-or-more
@@ -981,6 +1148,48 @@ def test_ivf_phase0_build_deterministic(spark, emb):
         spark, emb, PARAMS, phase0="ivf", phase0_opts=IVF_PHASE0_OPTS
     )
     assert a1.exceptAll(a2).count() == 0 and a2.exceptAll(a1).count() == 0
+
+
+def test_delete_with_ensure_reachable_bridges_orphaned_component(spark):
+    """Deleting the only nodes that link a component to the entry point
+    orphans it (splicing finds no surviving out-neighbour to link
+    through); ``ensure_reachable=True`` must bridge it back, leaving
+    every survivor reachable with exactly one adjacency row each."""
+    import numpy as np
+
+    from mysteryann_spark.operators.projection import delete_from_roargraph
+
+    rng = np.random.default_rng(8)
+    n_a, n_b = 10, 10
+    # A: ring 0..9 around ep = 0; links 9 -> 10 -> 11 -> 12 (the only
+    # path into B); B: ring 12..21 far away
+    vecs = np.concatenate(
+        [rng.standard_normal((n_a, 4)), rng.standard_normal((2, 4)) + 4.0,
+         rng.standard_normal((n_b, 4)) + 8.0]
+    )
+    base = spark.createDataFrame(
+        [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
+        "vec_id bigint, embedding array<double>",
+    )
+    rows = [(i, [(i + 1) % n_a, (i - 1) % n_a]) for i in range(n_a)]
+    rows[n_a - 1] = (n_a - 1, [0, n_a - 2, 10])
+    rows += [(10, [11, 9]), (11, [12, 10])]
+    rows += [(12 + j, [12 + (j + 1) % n_b, 12 + (j - 1) % n_b]) for j in range(n_b)]
+    adj = spark.createDataFrame(rows, "node bigint, nbrs array<bigint>")
+    dels = spark.createDataFrame([(10,), (11,)], "vec_id bigint")
+    survivors = set(range(n_a)) | set(range(12, 12 + n_b))
+
+    def reached(df, ep):
+        return _python_bfs([(r["node"], r["nbrs"]) for r in df.collect()], ep)
+
+    _, plain, ep = delete_from_roargraph(base, adj, 0, dels, PARAMS)
+    assert ep == 0
+    assert not survivors <= reached(plain, ep), "fixture must orphan B"
+
+    _, fixed, ep = delete_from_roargraph(base, adj, 0, dels, PARAMS, ensure_reachable=True)
+    nodes = [r["node"] for r in fixed.collect()]
+    assert sorted(nodes) == sorted(survivors)
+    assert survivors <= reached(fixed, ep)
 
 
 def test_delete_from_roargraph_splices_and_respects_cap(spark, emb, index):

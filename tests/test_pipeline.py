@@ -63,6 +63,61 @@ def test_lsh_grouping_pairs_equal_all_pairs_and_no_cartesian(spark, docs):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
+def test_minhash_member_pair_expansion_is_row_capped():
+    """Two 10^3-member duplicate groups expand to their full 10^6 doc
+    pairs, in frames of at most the row cap, with the same pair set and
+    values as a one-shot cross product."""
+    import numpy as np
+    import pandas as pd
+
+    from mysteryann_spark.operators.dedup import _PAIR_ROWS, _expand_member_pairs
+
+    rng = np.random.default_rng(2)
+    # reps 0 and 1: 1,000 members each; rep 2: 3 members; rep 3: none
+    mflat = rng.permutation(2003).astype(np.int64)
+    mind = np.array([0, 1000, 2000, 2003, 2003], dtype=np.int64)
+    ka, kb = np.array([0, 3, 2]), np.array([1, 0, 1])
+    est, jac = np.array([0.9, 0.7, 0.85]), np.array([0.95, 0.75, 0.8])
+
+    def cross(i):
+        x, y = np.meshgrid(mflat[mind[ka[i]]:mind[ka[i] + 1]],
+                           mflat[mind[kb[i]]:mind[kb[i] + 1]], indexing="ij")
+        x, y = x.ravel(), y.ravel()
+        return pd.DataFrame({"id_a": np.minimum(x, y), "id_b": np.maximum(x, y),
+                             "est_jaccard": est[i], "jaccard": jac[i]})
+
+    want = pd.concat([cross(i) for i in range(len(ka))], ignore_index=True)
+    assert len(want) == 1000 * 1000 + 3 * 1000
+    for cap in (300_000, 7, _PAIR_ROWS):
+        if cap == 7:  # tiny cap: only a slice of the expansion, for speed
+            frames = list(_expand_member_pairs(ka[2:], kb[2:], est[2:], jac[2:], mind, mflat, cap))
+            expect = want.iloc[-3000:].reset_index(drop=True)
+        else:
+            frames = list(_expand_member_pairs(ka, kb, est, jac, mind, mflat, cap))
+            expect = want
+        assert max(len(f) for f in frames) <= cap
+        assert len(frames) == -(-len(expect) // cap)
+        got = pd.concat(frames, ignore_index=True)
+        pd.testing.assert_frame_equal(got, expect, check_dtype=False)
+        assert (got["id_a"] < got["id_b"]).all()
+
+
+def test_minhash_pairs_independent_of_frame_cap(spark, docs, monkeypatch):
+    """The verify kernel's doc-pair output does not depend on how its
+    expansion is cut into frames."""
+    from mysteryann_spark.operators import dedup
+
+    def pairs():
+        return sorted(
+            tuple(r) for r in minhash_lsh_pairs(docs, num_perm=32, bands=8, threshold=0.5).collect()
+        )
+
+    full = pairs()
+    assert any(j < 1.0 for *_, j in full)  # some pairs come from the kernel
+    monkeypatch.setattr(dedup, "_PAIR_ROWS", 1)
+    assert pairs() == full
+
+
 def test_minhash_broadcastable_paths_agree(spark, docs):
     """assume_broadcastable=True (staged-Arrow, splitmix64 banding) and
     =False (SQL joins, xxhash64 banding) draw candidate buckets from
