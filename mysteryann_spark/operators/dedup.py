@@ -403,13 +403,19 @@ def minhash_lsh_pairs(
     trades completeness for a hard bound on candidate fan-out, so it is
     off by default and the registry entry runs exact.
 
-    ``assume_broadcastable`` (default True) places broadcast hints on the
-    per-rep side tables (banded reps, signature/token payloads, member
-    lists) — the right plan while distinct token sets fit executor RAM
-    (~10^7 reps). Hints bypass ``autoBroadcastJoinThreshold``, so beyond
-    that scale pass False and the SAME plan runs every one of those
-    joins as a shuffled equi-join instead of OOMing (mirrors the
-    ``bucket_cap`` opt-in pattern).
+    ``assume_broadcastable`` (default True) selects the plan for when
+    distinct token sets fit executor RAM (~10^7 reps): the per-rep table
+    is staged once with numpy signatures and band buckets, the bucket
+    self-join's build side is broadcast, and a staged-Arrow kernel
+    verifies candidate pairs and expands them to doc pairs (no member
+    joins). ``False`` runs a DIFFERENT plan for beyond that scale, with
+    no broadcast hints (they bypass ``autoBroadcastJoinThreshold``):
+    Catalyst xxhash64 signatures and banding over a checkpointed per-rep
+    table, then a SQL verify (``array_intersect`` per pair over shuffled
+    joins of the per-rep payloads) and member joins back to doc pairs.
+    The two plans band with different hash families, so candidates and
+    ``est_jaccard`` differ; verified pairs carry the same exact
+    ``jaccard`` (tests/test_pipeline.py).
     """
     maybe_bc = F.broadcast if assume_broadcastable else (lambda df: df)
     rows_per_band = num_perm // bands

@@ -688,6 +688,11 @@ def delete_from_roargraph(
     (``staging.read_staged_multi``); incompatible with
     ``ensure_reachable`` (repair touches arbitrary rows).
     """
+    if return_delta and ensure_reachable:
+        raise ValueError(
+            "return_delta cannot be combined with ensure_reachable: "
+            "reachability repair changes rows outside the touched set"
+        )
     dels = delete_df.select(F.col(base_id).alias("del_id")).distinct()
     survivors = base_df.join(
         dels, base_df[base_id] == dels["del_id"], "left_anti"
@@ -749,12 +754,7 @@ def delete_from_roargraph(
         # tombstone makes the deleted node unreachable (nothing links to
         # it after the splice), which is CSR-equivalent to dropping the
         # row. ensure_reachable callers must not use the delta (repair
-        # may touch arbitrary rows); enforced here.
-        if ensure_reachable:
-            raise ValueError(
-                "return_delta cannot be combined with ensure_reachable: "
-                "reachability repair changes rows outside the touched set"
-            )
+        # may touch arbitrary rows); rejected on entry.
         touched_rows = touched.join(merged, "node", "left").select(
             "node",
             F.coalesce("nbrs", F.array().cast("array<bigint>")).alias("nbrs"),

@@ -11,10 +11,12 @@ each Python worker (sources/staging.py; no driver collect round-trip);
 queries stream through ``mapInPandas`` and run the lockstep beam loop in
 numpy (per-round distance computation is one vectorized kernel call over
 every live query's neighbor batch — the Arrow/numpy stand-in for the AVX
-loop + prefetch). Per-query visited tracking is a plain set — the
-executor-local replacement for the epoch visited-array pool
-(visited_list_pool.h), which exists only to amortize allocation across
-OS threads.
+loop + prefetch). Per-query visited tracking is an LSM of sorted
+(query, row) keys (``_VisitedLSM``) — the lockstep replacement for the
+epoch visited-array pool (visited_list_pool.h). ``SearchBipartiteGraph``
+(src/index_bipartite.cpp:282-356) runs through the same kernel: it
+differs only in its seeds (random base rows) and in walking two CSR
+hops (base -> query node -> base) per expansion.
 
 Scale: this path assumes the index fits in executor memory — the same
 assumption the single-node reference makes for its whole lifetime. The
@@ -28,7 +30,7 @@ bit-parity-tested against this path in tests/test_graph.py.
 from __future__ import annotations
 
 from bisect import insort
-from typing import Iterator
+from typing import Callable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -47,9 +49,7 @@ from mysteryann_spark.sources.staging import (
     load_staged,
     load_staged_graph,
     read_staged,
-    read_staged_multi,
     stage_parquet,
-    staged_matrix,
     table_csr,
     table_matrix,
 )
@@ -303,38 +303,45 @@ def _merge_pools(
 
 def _beam_search_batch(
     qmat: np.ndarray,
-    ep_row: int,
+    seed_rows: list[list[int]],
     indptr: np.ndarray,
     indices: np.ndarray,
     bmat: np.ndarray,
     l_search: int,
     metric: str,
-    exclude_rows: np.ndarray,
+    exclude_rows: np.ndarray | None = None,
     expand_width: int = 1,
-    return_arrays: bool = False,
-) -> tuple[list[list[tuple[float, int]]], np.ndarray, np.ndarray]:
-    """Vectorized lockstep rendering of ``_beam_search_batch_ref`` —
-    bit-identical state evolution (pools ordered by the same (dist, row)
-    total order, same visited-first-occurrence semantics, same cmps/hops
-    counters; parity-gated in tests/test_graph.py), with the per-round
-    per-query Python bookkeeping that dominated small-batch throughput
-    (pool scans, per-neighbor set ops, insort) replaced by whole-batch
-    numpy:
+    n_hops: int = 1,
+) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    """Vectorized lockstep rendering of both scalar loops:
+    ``_beam_search_batch_ref`` (projection graph: ``seed_rows`` is
+    ``[[ep]] * n_q``) and ``_beam_search_bipartite_batch_ref`` (random
+    base-row seeds, ``n_hops=2``: one expansion walks base -> query node
+    -> base). State evolution is bit-identical to each — same (dist, row)
+    pool order, visited-first-occurrence semantics and cmps/hops counters
+    (parity-gated in tests/test_graph.py) — with the per-round per-query
+    Python bookkeeping (pool scans, per-neighbor set ops, insort) replaced
+    by whole-batch numpy:
 
+    * seeds are de-duplicated per query by first occurrence and merged
+      into empty pools; their scoring is excluded from cmps, the
+      reference's counter convention;
     * pools live in (n_live, L) arrays kept (dist, row)-sorted and
-      COMPACTED to live queries (a finished query's row is emitted and
-      dropped), so no per-round full-width gathers;
+      COMPACTED to live queries, so no per-round full-width gathers;
     * frontier selection: strict best-first (width 1) is a row argmin
       over the expanded flags; wider is a masked cumsum — padding slots
       carry expanded=True so no validity mask is needed;
+    * an expansion applies the ragged CSR gather ``n_hops`` times; the
+      visited and exclusion checks see the last hop's rows only;
     * candidates that cannot beat their pool's current worst are dropped
-      up front (the scalar insertion test), and the survivors merge via
-      sort-free batched scatter (``_merge_pools``);
-    * visited tracking is an LSM of sorted (query, row) composite-key
-      arrays (``_VisitedLSM``) — membership and marking are vectorized
-      over the whole round's candidates at once;
-    * within-round first-occurrence dedup is one np.unique over the same
-      composite keys, preserving the scalar loop's mark-as-you-go order.
+      up front (the scalar insertion test); survivors merge via the
+      sort-free batched scatter ``_merge_pools``;
+    * visited tracking is an LSM of sorted (query, row) composite keys
+      (``_VisitedLSM``); within-round first-occurrence dedup is one
+      np.unique over the same keys, keeping mark-as-you-go order.
+
+    Returns ``(out_d, out_r, cmps, hops)``: the final (n_q, L) pools,
+    padded with (inf, ``len(indptr) - 1``) past their live entries.
 
     SCALE.md's r6 finding motivates this: at 1k queries the per-round
     Python loop was the wall (threads 16->32 bought nothing); the
@@ -343,45 +350,36 @@ def _beam_search_batch(
     loop across (L, width) in {100,400,1600} x {1,4,8}.
     """
     n_q, L = qmat.shape[0], l_search
-    n_rows = bmat.shape[0]
-    sent = n_rows  # sentinel row id: sorts after every real row
-    d0 = np_pair_distances(metric, qmat, np.broadcast_to(bmat[ep_row], qmat.shape))
+    sent = len(indptr) - 1  # sentinel row id: sorts after every graph node
     # pools are compacted to live queries; padding slots are (inf, sent)
     # and PRE-MARKED expanded so frontier scans need no validity mask
     pool_d = np.full((n_q, L), np.inf)
     pool_r = np.full((n_q, L), sent, dtype=np.int64)
     pool_e = np.ones((n_q, L), dtype=bool)
-    pool_d[:, 0] = d0
-    pool_r[:, 0] = ep_row
-    pool_e[:, 0] = False
     cmps = np.zeros(n_q, dtype=np.int64)
     hops = np.zeros(n_q, dtype=np.int64)
     out_d = np.empty((n_q, L))
     out_r = np.empty((n_q, L), dtype=np.int64)
 
-    nr64 = np.int64(n_rows)
-    visited = _VisitedLSM(
-        np.arange(n_q, dtype=np.int64) * nr64 + np.int64(ep_row)
+    s_counts = np.fromiter(map(len, seed_rows), dtype=np.int64, count=n_q)
+    s_qidx = np.repeat(np.arange(n_q, dtype=np.int64), s_counts)
+    s_rows = np.fromiter(
+        (r for s in seed_rows for r in s), dtype=np.int64, count=int(s_counts.sum())
     )
+    skey, first = np.unique(s_qidx * sent + s_rows, return_index=True)
+    first.sort()
+    s_qidx, s_rows = s_qidx[first], s_rows[first]
+    visited = _VisitedLSM(skey)
+    s_d = np_pair_distances(metric, qmat[s_qidx], bmat[s_rows])
+    _merge_pools(pool_d, pool_r, pool_e, n_q, s_qidx, s_d, s_rows, L)
+
     live = np.arange(n_q, dtype=np.int64)  # global qid of each pool row
     row_of = np.arange(n_q, dtype=np.int64)  # global qid -> pool row
     while len(live):
-        lq = len(live)
-        if expand_width == 1:
-            # strict best-first: first unexpanded column per row
-            col = np.argmin(pool_e, axis=1)
-            has = ~pool_e[np.arange(lq), col]
-            qi_l = np.nonzero(has)[0]
-            col = col[qi_l]
-        else:
-            unexp = ~pool_e
-            pick = unexp & (np.cumsum(unexp, axis=1) <= expand_width)
-            has = pick.any(axis=1)
-            qi_l, col = np.nonzero(pick)
+        has = ~pool_e.all(axis=1)  # rows with an unexpanded entry left
         if not has.all():
-            # emit finished queries and compact the pool arrays; picks
-            # are re-derived against the compacted rows (compaction is
-            # rare — once per finished query)
+            # emit finished queries and compact the pool arrays
+            # (compaction is rare — once per finished query)
             done = np.nonzero(~has)[0]
             out_d[live[done]] = pool_d[done]
             out_r[live[done]] = pool_r[done]
@@ -391,45 +389,47 @@ def _beam_search_batch(
             if not len(live):
                 break
             row_of[live] = np.arange(len(live))
-            if expand_width == 1:
-                qi_l = np.arange(len(live))
-                col = np.argmin(pool_e, axis=1)
-            else:
-                unexp = ~pool_e
-                pick = unexp & (np.cumsum(unexp, axis=1) <= expand_width)
-                qi_l, col = np.nonzero(pick)
+        if expand_width == 1:
+            # strict best-first: first unexpanded column per row
+            qi_l = np.arange(len(live))
+            col = np.argmin(pool_e, axis=1)
+        else:
+            unexp = ~pool_e
+            qi_l, col = np.nonzero(unexp & (np.cumsum(unexp, axis=1) <= expand_width))
         qi = live[qi_l]  # global qids, one per expansion
         pool_e[qi_l, col] = True
         hops += np.bincount(qi, minlength=n_q)
-        rows = pool_r[qi_l, col]
 
-        # gather the expanded rows' neighbor lists (ragged -> flat)
-        starts = indptr[rows]
-        lens = indptr[rows + 1] - starts
-        total = int(lens.sum())
-        if total == 0:
-            continue
-        ends = np.cumsum(lens)
-        flat_pos = (
-            np.arange(total, dtype=np.int64)
-            - np.repeat(ends - lens, lens)
-            + np.repeat(starts, lens)
-        )
-        nbr = indices[flat_pos]
-        owner = np.repeat(qi, lens)
-
-        # visited / self-exclusion filter + within-round first-occurrence
-        # dedup, both preserving the scalar loop's mark-as-you-go order
-        key = owner * nr64 + nbr
-        fresh = ~visited.contains(key) & (nbr != exclude_rows[owner])
-        nbr, owner, key = nbr[fresh], owner[fresh], key[fresh]
-        if len(nbr):
-            ukey, first = np.unique(key, return_index=True)
-            first.sort()
-            nbr, owner = nbr[first], owner[first]
-            visited.add_sorted(ukey)
+        # gather the expanded rows' neighbor lists (ragged -> flat), once
+        # per hop, in the scalar loop's nested CSR iteration order
+        nbr, owner = pool_r[qi_l, col], qi
+        for _ in range(n_hops):
+            starts = indptr[nbr]
+            lens = indptr[nbr + 1] - starts
+            ends = np.cumsum(lens)
+            flat_pos = (
+                np.arange(int(lens.sum()), dtype=np.int64)
+                - np.repeat(ends - lens, lens)
+                + np.repeat(starts, lens)
+            )
+            nbr = indices[flat_pos]
+            owner = np.repeat(owner, lens)
         if not len(nbr):
             continue
+
+        # visited / exclusion filter + within-round first-occurrence
+        # dedup, both preserving the scalar loop's mark-as-you-go order
+        key = owner * sent + nbr
+        fresh = ~visited.contains(key)
+        if exclude_rows is not None:
+            fresh &= nbr != exclude_rows[owner]
+        nbr, owner, key = nbr[fresh], owner[fresh], key[fresh]
+        if not len(nbr):
+            continue
+        ukey, first = np.unique(key, return_index=True)
+        first.sort()
+        nbr, owner = nbr[first], owner[first]
+        visited.add_sorted(ukey)
         dists = np_pair_distances(metric, qmat[owner], bmat[nbr])
         cmps += np.bincount(owner, minlength=n_q)
 
@@ -446,22 +446,7 @@ def _beam_search_batch(
             pool_d, pool_r, pool_e, len(live),
             orow[beat], dists[beat], nbr[beat], L,
         )
-
-    if return_arrays:
-        # the raw (dist, row) pool arrays, sentinel-padded — the
-        # mapInPandas wrappers consume these directly and build their
-        # output columns with whole-batch numpy instead of the O(n_q x L)
-        # per-entry tuple conversion below (same values, same order)
-        return out_d, out_r, cmps, hops
-    pools = [
-        [
-            (float(out_d[i, j]), int(out_r[i, j]))
-            for j in range(L)
-            if out_r[i, j] != sent
-        ]
-        for i in range(n_q)
-    ]
-    return pools, cmps, hops
+    return out_d, out_r, cmps, hops
 
 
 def _beam_search_bipartite_batch_ref(
@@ -554,137 +539,69 @@ def _beam_search_bipartite_batch_ref(
     return pools, cmps, hops
 
 
-def _beam_search_bipartite_batch(
-    qmat: np.ndarray,
-    seed_rows_list: list[list[int]],
-    indptr: np.ndarray,
-    indices: np.ndarray,
-    bmat: np.ndarray,
+def _search(
+    queries_df: DataFrame,
+    load: Callable[[], tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]],
+    seeds: Callable[[np.ndarray, np.ndarray], list[list[int]]],
+    k: int,
     l_search: int,
     metric: str,
-    return_arrays: bool = False,
-) -> tuple[list[list[tuple[float, int]]], np.ndarray, np.ndarray]:
-    """Vectorized rendering of ``_beam_search_bipartite_batch_ref`` —
-    bit-identical state evolution (parity-gated in tests/test_graph.py),
-    built from the same parts as the projection-graph kernel: compacted
-    (n_live, L) sorted pools, sort-free scatter merges (_merge_pools),
-    an LSM visited set, and strict best-first frontier selection. The
-    only structural difference is the 2-hop expansion (base ->
-    query-node -> base: two chained CSR gathers) and multi-seed pool
-    initialization (seeds merge into an empty pool; their scoring is
-    excluded from cmps, the reference's counter convention)."""
-    n_q, L = qmat.shape[0], l_search
-    total = len(indptr) - 1  # base + query nodes; pool rows are base-only
-    sent = total
-    pool_d = np.full((n_q, L), np.inf)
-    pool_r = np.full((n_q, L), sent, dtype=np.int64)
-    pool_e = np.ones((n_q, L), dtype=bool)
-    cmps = np.zeros(n_q, dtype=np.int64)
-    hops = np.zeros(n_q, dtype=np.int64)
-    out_d = np.empty((n_q, L))
-    out_r = np.empty((n_q, L), dtype=np.int64)
+    query_id: str,
+    vec_col: str,
+    exclude_self: bool = False,
+    expand_width: int = 1,
+    n_hops: int = 1,
+) -> DataFrame:
+    """The ``mapInPandas`` search both graph shapes share. Worker-side,
+    ``load()`` returns the index ``(ids, bmat, indptr, indices)`` (sorted
+    base ids, row i of ``bmat`` holding ``ids[i]``; CSR over graph rows)
+    and ``seeds(ids, qids)`` each query's seed rows; queries run through
+    ``_beam_search_batch`` in lockstep chunks."""
 
-    t64 = np.int64(total)
-    s_counts = np.fromiter(
-        (len(s) for s in seed_rows_list), dtype=np.int64, count=n_q
-    )
-    s_qidx = np.repeat(np.arange(n_q, dtype=np.int64), s_counts)
-    s_rows = np.fromiter(
-        (r for s in seed_rows_list for r in s), dtype=np.int64,
-        count=int(s_counts.sum()),
-    )
-    skey, first = np.unique(s_qidx * t64 + s_rows, return_index=True)
-    first.sort()
-    s_qidx, s_rows = s_qidx[first], s_rows[first]
-    visited = _VisitedLSM(skey)
-    s_d = np_pair_distances(metric, qmat[s_qidx], bmat[s_rows])
-    _merge_pools(pool_d, pool_r, pool_e, n_q, s_qidx, s_d, s_rows, L)
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        ids, bmat, indptr, indices = load()
+        sent = len(indptr) - 1  # the kernel's sentinel row id
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            cols: dict[str, list] = {
+                c: [] for c in ("qid", "nn_id", "dist", "rank", "cmps", "hops")
+            }
+            # lockstep chunks bound per-round state while keeping the
+            # shared distance call large enough to amortize
+            for s in range(0, len(pdf), _BATCH_CHUNK):
+                sub = pdf.iloc[s : s + _BATCH_CHUNK]
+                qids = sub[query_id].to_numpy()
+                qmat = np.stack([np.asarray(v, dtype=bmat.dtype) for v in sub[vec_col]])
+                excl = None
+                if exclude_self:  # each query's own base row, or -1
+                    pos = np.searchsorted(ids, qids)
+                    excl = np.where(ids[np.minimum(pos, len(ids) - 1)] == qids, pos, -1)
+                od, orr, cmps, hops = _beam_search_batch(
+                    qmat, seeds(ids, qids), indptr, indices, bmat, l_search,
+                    metric, excl, expand_width=expand_width, n_hops=n_hops,
+                )
+                # whole-batch output assembly — no per-row Python on the
+                # hot path (guide §4.2). The entry point always seeds the
+                # pool, so when the query IS the medoid its row still
+                # drops here via the excl mask.
+                valid = orr != sent
+                if excl is not None:
+                    valid &= orr != excl[:, None]
+                rnk = np.cumsum(valid, axis=1)
+                keep = valid & (rnk <= k)
+                qi, ci = np.nonzero(keep)
+                cols["qid"].append(qids[qi])
+                cols["nn_id"].append(ids[orr[qi, ci]])
+                cols["dist"].append(od[qi, ci])
+                cols["rank"].append(rnk[qi, ci].astype(np.int32))
+                cols["cmps"].append(cmps[qi].astype(np.int32))
+                cols["hops"].append(hops[qi].astype(np.int32))
+            yield pd.DataFrame(
+                {c: np.concatenate(v) if v else np.empty(0) for c, v in cols.items()}
+            )
 
-    live = np.arange(n_q, dtype=np.int64)
-    row_of = np.arange(n_q, dtype=np.int64)
-    while len(live):
-        col = np.argmin(pool_e, axis=1)
-        has = ~pool_e[np.arange(len(live)), col]
-        qi_l = np.nonzero(has)[0]
-        col = col[qi_l]
-        if not has.all():
-            done = np.nonzero(~has)[0]
-            out_d[live[done]] = pool_d[done]
-            out_r[live[done]] = pool_r[done]
-            keep = np.nonzero(has)[0]
-            pool_d, pool_r, pool_e = pool_d[keep], pool_r[keep], pool_e[keep]
-            live = live[keep]
-            if not len(live):
-                break
-            row_of[live] = np.arange(len(live))
-            qi_l = np.arange(len(live))
-            col = np.argmin(pool_e, axis=1)
-        qi = live[qi_l]
-        pool_e[qi_l, col] = True
-        hops += np.bincount(qi, minlength=n_q)
-        rows = pool_r[qi_l, col]
-
-        # 2-hop gather: base -> query-node (hop 1) -> base (hop 2), flat
-        # order matching the scalar loop's nested CSR iteration exactly
-        st1 = indptr[rows]
-        l1 = indptr[rows + 1] - st1
-        tot1 = int(l1.sum())
-        if tot1 == 0:
-            continue
-        e1 = np.cumsum(l1)
-        h1 = indices[
-            np.arange(tot1, dtype=np.int64)
-            - np.repeat(e1 - l1, l1)
-            + np.repeat(st1, l1)
-        ]
-        own1 = np.repeat(qi, l1)
-        st2 = indptr[h1]
-        l2 = indptr[h1 + 1] - st2
-        tot2 = int(l2.sum())
-        if tot2 == 0:
-            continue
-        e2 = np.cumsum(l2)
-        nbr = indices[
-            np.arange(tot2, dtype=np.int64)
-            - np.repeat(e2 - l2, l2)
-            + np.repeat(st2, l2)
-        ]
-        owner = np.repeat(own1, l2)
-
-        key = owner * t64 + nbr
-        fresh = ~visited.contains(key)
-        nbr, owner, key = nbr[fresh], owner[fresh], key[fresh]
-        if len(nbr):
-            ukey, first2 = np.unique(key, return_index=True)
-            first2.sort()
-            nbr, owner = nbr[first2], owner[first2]
-            visited.add_sorted(ukey)
-        if not len(nbr):
-            continue
-        dists = np_pair_distances(metric, qmat[owner], bmat[nbr])
-        cmps += np.bincount(owner, minlength=n_q)
-
-        orow = row_of[owner]
-        wd, wr = pool_d[orow, L - 1], pool_r[orow, L - 1]
-        beat = (dists < wd) | ((dists == wd) & (nbr < wr)) | (wr == sent)
-        if not beat.any():
-            continue
-        _merge_pools(
-            pool_d, pool_r, pool_e, len(live),
-            orow[beat], dists[beat], nbr[beat], L,
-        )
-
-    if return_arrays:
-        return out_d, out_r, cmps, hops
-    pools = [
-        [
-            (float(out_d[i, j]), int(out_r[i, j]))
-            for j in range(L)
-            if out_r[i, j] != sent
-        ]
-        for i in range(n_q)
-    ]
-    return pools, cmps, hops
+    return queries_df.select(query_id, vec_col).mapInPandas(run, _RESULT_SCHEMA)
 
 
 def search_bipartite(
@@ -707,8 +624,9 @@ def search_bipartite(
     design; here they're drawn from a (seed, qid)-keyed generator so runs
     are reproducible (SURVEY.md §5 determinism stance). The index stages
     to Parquet and loads executor-side (sources/staging.py)."""
-    base_path = stage_parquet(base_df.select(base_id, vec_col))
-    adj_path = stage_parquet(adj_df)
+    base_path, adj_path = stage_graph_index(
+        base_df, adj_df, base_id=base_id, vec_col=vec_col
+    )
 
     def _build():
         ids, bmat = table_matrix(read_staged(base_path), base_id, vec_col)
@@ -720,48 +638,18 @@ def search_bipartite(
         # the bipartite graph's id space is dense [0, total): align the CSR
         # to the identity id vector (vectorized — no per-node Python loop)
         indptr, indices = table_csr(adj_tbl, np.arange(total, dtype=np.int64))
-        return bmat, indptr, indices
+        return ids, bmat, indptr, indices
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        b_mat, b_indptr, b_indices = load_staged(base_path + "|" + adj_path, _build)
-        sent = len(b_indptr) - 1  # the kernel's sentinel row id
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            cols: dict[str, list] = {
-                c: [] for c in ("qid", "nn_id", "dist", "rank", "cmps", "hops")
-            }
-            for s in range(0, len(pdf), _BATCH_CHUNK):
-                sub = pdf.iloc[s : s + _BATCH_CHUNK]
-                qids = sub[query_id].to_numpy()
-                qmat = np.stack([np.asarray(v, dtype=b_mat.dtype) for v in sub[vec_col]])
-                seeds = [
-                    [int(x) for x in np.random.default_rng([seed, int(qid)]).integers(
-                        0, base_count, size=n_seeds)]
-                    for qid in qids
-                ]
-                od, orr, cmps, hops = _beam_search_bipartite_batch(
-                    qmat, seeds, b_indptr, b_indices, b_mat, l_search, metric,
-                    return_arrays=True,
-                )
-                # whole-batch output assembly (same rows, same order as
-                # the per-entry loop this replaces — guide §4.2: no
-                # per-row Python on the hot path)
-                valid = orr != sent
-                rnk = np.cumsum(valid, axis=1)
-                keep = valid & (rnk <= k)
-                qi, ci = np.nonzero(keep)
-                cols["qid"].append(qids[qi])
-                cols["nn_id"].append(orr[qi, ci])
-                cols["dist"].append(od[qi, ci])
-                cols["rank"].append(rnk[qi, ci].astype(np.int32))
-                cols["cmps"].append(cmps[qi].astype(np.int32))
-                cols["hops"].append(hops[qi].astype(np.int32))
-            yield pd.DataFrame(
-                {c: np.concatenate(v) if v else np.empty(0) for c, v in cols.items()}
-            )
+    def seeds(ids: np.ndarray, qids: np.ndarray) -> list[list[int]]:
+        return [
+            np.random.default_rng([seed, int(q)]).integers(0, base_count, size=n_seeds).tolist()
+            for q in qids
+        ]
 
-    return queries_df.select(query_id, vec_col).mapInPandas(run, _RESULT_SCHEMA)
+    return _search(
+        queries_df, lambda: load_staged(base_path + "|" + adj_path, _build), seeds,
+        k, l_search, metric, query_id, vec_col, n_hops=2,
+    )
 
 
 def search_graph(
@@ -792,66 +680,28 @@ def search_graph(
     full graph stages once, each batch appends only its changed rows
     (``read_staged_multi`` merges worker-side). ``expand_width``: beam
     entries expanded per lockstep round (1 = reference-strict
-    best-first; see _beam_search_batch).
+    best-first; see _beam_search_batch). ``entry_point`` must be a
+    staged base id (``ValueError`` at the first query otherwise).
     """
+    if expand_width < 1:
+        raise ValueError(f"search_graph: expand_width must be >= 1, got {expand_width}")
     if staged is None:
         staged = stage_graph_index(base_df, adj_df, base_id=base_id, vec_col=vec_col)
     base_path, adj_path = staged
     base_paths = [base_path] if isinstance(base_path, str) else list(base_path)
     adj_paths = [adj_path] if isinstance(adj_path, str) else list(adj_path)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # incremental worker artifact: a previously-built chain prefix is
-        # PATCHED with the suffix deltas instead of re-reading the whole
-        # chain from parquet (sources/staging.load_staged_graph) — the
-        # per-batch maintenance refresh follows the batch, not the graph
-        b_ids, b_mat, b_indptr, b_indices = load_staged_graph(
-            base_paths, adj_paths, base_id, vec_col
-        )
-        b_ep = int(np.searchsorted(b_ids, entry_point))
-        sent = b_mat.shape[0]  # the kernel's sentinel row id
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            cols: dict[str, list] = {
-                c: [] for c in ("qid", "nn_id", "dist", "rank", "cmps", "hops")
-            }
-            # lockstep chunks bound per-round state while keeping the
-            # shared distance call large enough to amortize
-            for s in range(0, len(pdf), _BATCH_CHUNK):
-                sub = pdf.iloc[s : s + _BATCH_CHUNK]
-                qids = sub[query_id].to_numpy()
-                qmat = np.stack([np.asarray(v, dtype=b_mat.dtype) for v in sub[vec_col]])
-                if exclude_self:
-                    excl = np.searchsorted(b_ids, qids)
-                    in_range = excl < len(b_ids)
-                    excl = np.where(
-                        in_range & (b_ids[np.minimum(excl, len(b_ids) - 1)] == qids),
-                        excl,
-                        -1,
-                    )
-                else:
-                    excl = np.full(len(sub), -1, dtype=np.int64)
-                od, orr, cmps, hops = _beam_search_batch(
-                    qmat, b_ep, b_indptr, b_indices, b_mat, l_search, metric, excl,
-                    expand_width=expand_width, return_arrays=True,
-                )
-                # whole-batch output assembly — same rows, same order as
-                # the per-entry loop this replaces (guide §4.2). The
-                # entry point always seeds the pool, so when the query IS
-                # the medoid its row still drops here via the excl mask.
-                valid = (orr != sent) & (orr != excl[:, None])
-                rnk = np.cumsum(valid, axis=1)
-                keep = valid & (rnk <= k)
-                qi, ci = np.nonzero(keep)
-                cols["qid"].append(qids[qi])
-                cols["nn_id"].append(b_ids[orr[qi, ci]])
-                cols["dist"].append(od[qi, ci])
-                cols["rank"].append(rnk[qi, ci].astype(np.int32))
-                cols["cmps"].append(cmps[qi].astype(np.int32))
-                cols["hops"].append(hops[qi].astype(np.int32))
-            yield pd.DataFrame(
-                {c: np.concatenate(v) if v else np.empty(0) for c, v in cols.items()}
-            )
+    def seeds(ids: np.ndarray, qids: np.ndarray) -> list[list[int]]:
+        ep = int(np.searchsorted(ids, entry_point))
+        if ep == len(ids) or ids[ep] != entry_point:
+            raise ValueError(f"search_graph: entry_point {entry_point} is not a staged base id")
+        return [[ep]] * len(qids)
 
-    return queries_df.select(query_id, vec_col).mapInPandas(run, _RESULT_SCHEMA)
+    # load_staged_graph PATCHES a previously-built chain prefix with the
+    # suffix deltas: a maintenance refresh follows the batch, not the graph
+    return _search(
+        queries_df,
+        lambda: load_staged_graph(base_paths, adj_paths, base_id, vec_col),
+        seeds, k, l_search, metric, query_id, vec_col,
+        exclude_self=exclude_self, expand_width=expand_width,
+    )

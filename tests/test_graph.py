@@ -357,6 +357,31 @@ def test_broadcast_if_under_gates_on_estimate(spark):
     assert "broadcast" in plan.lower()
 
 
+def test_search_graph_rejects_unstaged_entry_point_and_zero_width(spark):
+    """An ``entry_point`` that is not a staged base id must fail with an
+    error naming it — not seed from the next id's row (an id between
+    staged ids) or fail opaquely (an id past the last one). A beam that
+    expands no entry per round is rejected up front."""
+    from mysteryann_spark.operators.search import stage_graph_index
+
+    ids = list(range(0, 20, 2))
+    base = spark.createDataFrame(
+        [(i, [float(i), 1.0]) for i in ids], "vec_id bigint, embedding array<double>"
+    )
+    adj = spark.createDataFrame(
+        [(a, [b]) for a, b in zip(ids, ids[1:] + ids[:1])], "node bigint, nbrs array<bigint>"
+    )
+    q = base.limit(3).select(F.col("vec_id").alias("qid"), "embedding")
+    staged = stage_graph_index(base, adj)
+    ok = search_graph(q, base, adj, 4, k=3, l_search=5, staged=staged)
+    assert ok.count() == 9
+    for ep in (3, 100):
+        with pytest.raises(Exception, match=f"entry_point {ep} is not a staged base id"):
+            search_graph(q, base, adj, ep, k=3, l_search=5, staged=staged).collect()
+    with pytest.raises(ValueError, match="expand_width must be >= 1"):
+        search_graph(q, base, adj, 4, k=3, l_search=5, staged=staged, expand_width=0)
+
+
 def test_bipartite_two_hop_search_recall(spark, emb):
     """Q2: 2-hop beam search over the bipartite graph (10 seeded random
     entry points) must recover most exact neighbors on the self-query
@@ -1192,6 +1217,29 @@ def test_delete_with_ensure_reachable_bridges_orphaned_component(spark):
     assert survivors <= reached(fixed, ep)
 
 
+def test_delete_rejects_delta_with_repair_before_any_work(spark, monkeypatch):
+    """``return_delta`` with ``ensure_reachable`` is an invalid
+    combination; it must raise on entry, before the reachability repair
+    (and the splice jobs ahead of it) spend any Spark work."""
+    from mysteryann_spark.operators import projection
+
+    def _no_repair(*a, **k):
+        raise AssertionError("repair_reachability ran before the flag check")
+
+    monkeypatch.setattr(projection, "repair_reachability", _no_repair)
+    base = spark.createDataFrame(
+        [(i, [float(i), 0.0]) for i in range(4)], "vec_id bigint, embedding array<double>"
+    )
+    adj = spark.createDataFrame(
+        [(i, [(i + 1) % 4]) for i in range(4)], "node bigint, nbrs array<bigint>"
+    )
+    dels = spark.createDataFrame([(2,)], "vec_id bigint")
+    with pytest.raises(ValueError, match="return_delta cannot be combined"):
+        projection.delete_from_roargraph(
+            base, adj, 0, dels, PARAMS, ensure_reachable=True, return_delta=True
+        )
+
+
 def test_delete_from_roargraph_splices_and_respects_cap(spark, emb, index):
     """Post-delete graph: no tombstoned id anywhere (nodes or neighbor
     lists), every survivor keeps a row, degree cap held, and survivors
@@ -1252,13 +1300,28 @@ def test_delete_entry_point_reseeds_medoid(spark, emb, index):
     assert ep not in {r["nn_id"] for r in res.select("nn_id").collect()}
 
 
+def _pools(out_d, out_r, indptr):
+    """The kernel's sentinel-padded pool arrays as the scalar refs'
+    per-query lists of (dist, row) tuples."""
+    sent = len(indptr) - 1
+    return [
+        [(float(d), int(r)) for d, r in zip(ds, rs) if r != sent]
+        for ds, rs in zip(out_d, out_r)
+    ]
+
+
+# every parity trial also runs on float32 operands: the opt-in
+# SPARK_GRAFT_STAGE_DTYPE=float32 staging regime scores in float32
+_DTYPES = ("float64", "float32")
+
+
 def test_vectorized_beam_kernel_bit_parity_with_scalar_reference():
     """The production beam kernel (_beam_search_batch: compacted pools,
     sort-free scatter merge, LSM visited set) must evolve bit-identically
     to the plain scalar loop (_beam_search_batch_ref) — pools, cmps and
-    hops all equal — across metrics, widths, pool sizes, exclusions and
-    graph shapes. This is the gate that lets the pinned search oracles
-    keep certifying the fast kernel."""
+    hops all equal — across metrics, widths, pool sizes, exclusions,
+    graph shapes and operand dtypes. This is the gate that lets the
+    pinned search oracles keep certifying the fast kernel."""
     import numpy as np
 
     from mysteryann_spark.operators.search import (
@@ -1286,24 +1349,26 @@ def test_vectorized_beam_kernel_bit_parity_with_scalar_reference():
             rng.random(nq) < 0.3, rng.integers(0, n, size=nq), -1
         ).astype(np.int64)
         ep = int(rng.integers(0, n))
-        p1, c1, h1 = _beam_search_batch_ref(
-            qmat, ep, indptr, indices, bmat, L, metric, excl, expand_width=w)
-        p2, c2, h2 = _beam_search_batch(
-            qmat, ep, indptr, indices, bmat, L, metric, excl, expand_width=w)
-        assert np.array_equal(c1, c2), (trial, metric, w)
-        assert np.array_equal(h1, h2), (trial, metric, w)
-        assert p1 == p2, (trial, metric, w)
+        for dt in _DTYPES:
+            q, b = qmat.astype(dt), bmat.astype(dt)
+            p1, c1, h1 = _beam_search_batch_ref(
+                q, ep, indptr, indices, b, L, metric, excl, expand_width=w)
+            od, orr, c2, h2 = _beam_search_batch(
+                q, [[ep]] * nq, indptr, indices, b, L, metric, excl, expand_width=w)
+            assert np.array_equal(c1, c2), (trial, metric, w, dt)
+            assert np.array_equal(h1, h2), (trial, metric, w, dt)
+            assert p1 == _pools(od, orr, indptr), (trial, metric, w, dt)
 
 
 def test_vectorized_bipartite_kernel_bit_parity_with_scalar_reference():
     """Same gate as the projection-graph kernel, for the 2-hop bipartite
-    search: the vectorized kernel must match the scalar loop exactly —
-    pools, cmps, hops — across metrics, seed multisets (duplicates
-    included) and graph shapes."""
+    search: the kernel at ``n_hops=2`` must match the scalar loop exactly
+    — pools, cmps, hops — across metrics, seed multisets (duplicates
+    included), graph shapes and operand dtypes."""
     import numpy as np
 
     from mysteryann_spark.operators.search import (
-        _beam_search_bipartite_batch,
+        _beam_search_batch,
         _beam_search_bipartite_batch_ref,
     )
 
@@ -1333,12 +1398,14 @@ def test_vectorized_bipartite_kernel_bit_parity_with_scalar_reference():
             for _ in range(nq)
         ]
         metric = str(rng.choice(["l2", "ip", "cosine"]))
-        p1, c1, h1 = _beam_search_bipartite_batch_ref(
-            qmat, seeds, indptr, indices, bmat, L, metric)
-        p2, c2, h2 = _beam_search_bipartite_batch(
-            qmat, seeds, indptr, indices, bmat, L, metric)
-        assert np.array_equal(c1, c2) and np.array_equal(h1, h2), (trial, metric)
-        assert p1 == p2, (trial, metric)
+        for dt in _DTYPES:
+            q, b = qmat.astype(dt), bmat.astype(dt)
+            p1, c1, h1 = _beam_search_bipartite_batch_ref(
+                q, seeds, indptr, indices, b, L, metric)
+            od, orr, c2, h2 = _beam_search_batch(
+                q, seeds, indptr, indices, b, L, metric, n_hops=2)
+            assert np.array_equal(c1, c2) and np.array_equal(h1, h2), (trial, metric, dt)
+            assert p1 == _pools(od, orr, indptr), (trial, metric, dt)
 
 
 def test_beam_kernel_parity_on_tied_distances():
@@ -1380,13 +1447,15 @@ def test_beam_kernel_parity_on_tied_distances():
             rng.random(nq) < 0.3, rng.integers(0, n, size=nq), -1
         ).astype(np.int64)
         ep = int(rng.integers(0, n))
-        p1, c1, h1 = _beam_search_batch_ref(
-            qmat, ep, indptr, indices, bmat, L, metric, excl, expand_width=w)
-        p2, c2, h2 = _beam_search_batch(
-            qmat, ep, indptr, indices, bmat, L, metric, excl, expand_width=w)
-        assert np.array_equal(c1, c2), (trial, metric, w)
-        assert np.array_equal(h1, h2), (trial, metric, w)
-        assert p1 == p2, (trial, metric, w)
+        for dt in _DTYPES:
+            q, b = qmat.astype(dt), bmat.astype(dt)
+            p1, c1, h1 = _beam_search_batch_ref(
+                q, ep, indptr, indices, b, L, metric, excl, expand_width=w)
+            od, orr, c2, h2 = _beam_search_batch(
+                q, [[ep]] * nq, indptr, indices, b, L, metric, excl, expand_width=w)
+            assert np.array_equal(c1, c2), (trial, metric, w, dt)
+            assert np.array_equal(h1, h2), (trial, metric, w, dt)
+            assert p1 == _pools(od, orr, indptr), (trial, metric, w, dt)
 
 
 def test_bipartite_kernel_parity_on_tied_distances():
@@ -1396,7 +1465,7 @@ def test_bipartite_kernel_parity_on_tied_distances():
     import numpy as np
 
     from mysteryann_spark.operators.search import (
-        _beam_search_bipartite_batch,
+        _beam_search_batch,
         _beam_search_bipartite_batch_ref,
     )
 
@@ -1426,12 +1495,14 @@ def test_bipartite_kernel_parity_on_tied_distances():
             for _ in range(nq)
         ]
         metric = str(rng.choice(["l2", "ip", "cosine"]))
-        p1, c1, h1 = _beam_search_bipartite_batch_ref(
-            qmat, seeds, indptr, indices, bmat, L, metric)
-        p2, c2, h2 = _beam_search_bipartite_batch(
-            qmat, seeds, indptr, indices, bmat, L, metric)
-        assert np.array_equal(c1, c2) and np.array_equal(h1, h2), (trial, metric)
-        assert p1 == p2, (trial, metric)
+        for dt in _DTYPES:
+            q, b = qmat.astype(dt), bmat.astype(dt)
+            p1, c1, h1 = _beam_search_bipartite_batch_ref(
+                q, seeds, indptr, indices, b, L, metric)
+            od, orr, c2, h2 = _beam_search_batch(
+                q, seeds, indptr, indices, b, L, metric, n_hops=2)
+            assert np.array_equal(c1, c2) and np.array_equal(h1, h2), (trial, metric, dt)
+            assert p1 == _pools(od, orr, indptr), (trial, metric, dt)
 
 
 def test_bipartite_kernel_empty_seed_lists():
@@ -1442,7 +1513,7 @@ def test_bipartite_kernel_empty_seed_lists():
     import numpy as np
 
     from mysteryann_spark.operators.search import (
-        _beam_search_bipartite_batch,
+        _beam_search_batch,
         _beam_search_bipartite_batch_ref,
     )
 
@@ -1459,15 +1530,18 @@ def test_bipartite_kernel_empty_seed_lists():
         [[], [], []],                      # every seed list empty
         [[], [0, 5, 5], []],               # mixed, with duplicate seeds
     ):
-        p1, c1, h1 = _beam_search_bipartite_batch_ref(
-            qmat, seeds, indptr, indices, bmat, 8, "l2")
-        p2, c2, h2 = _beam_search_bipartite_batch(
-            qmat, seeds, indptr, indices, bmat, 8, "l2")
-        assert np.array_equal(c1, c2) and np.array_equal(h1, h2)
-        assert p1 == p2
-        for s, pool in zip(seeds, p2):
-            if not s:
-                assert pool == []
+        for dt in _DTYPES:
+            q, b = qmat.astype(dt), bmat.astype(dt)
+            p1, c1, h1 = _beam_search_bipartite_batch_ref(
+                q, seeds, indptr, indices, b, 8, "l2")
+            od, orr, c2, h2 = _beam_search_batch(
+                q, seeds, indptr, indices, b, 8, "l2", n_hops=2)
+            p2 = _pools(od, orr, indptr)
+            assert np.array_equal(c1, c2) and np.array_equal(h1, h2)
+            assert p1 == p2
+            for s, pool in zip(seeds, p2):
+                if not s:
+                    assert pool == []
 
 
 def test_precomputed_knn_df_build_matches_inline_phase0(spark, emb):

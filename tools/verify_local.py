@@ -24,6 +24,7 @@ import math
 import sys
 import time
 import traceback
+from pathlib import Path
 
 import duckdb
 
@@ -65,7 +66,7 @@ def main() -> int:
     args = sys.argv[1:]
     bare = "--bare" in args
     filters = [a for a in args if not a.startswith("--")]
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
     import __spark_entry__ as entrymod
 
     qs = entrymod.queries()
