@@ -1268,12 +1268,13 @@ def semantic_dedup(
     """
     from mysteryann_spark.operators.similarity import (
         nearest_centroids_udf,
-        train_centroids,
+        train_coarse,
     )
 
-    bc = train_centroids(
+    cmat, _route = train_coarse(
         emb, n_clusters, max_iter, seed, train_sample, base_id, vec_col
     )
+    bc = emb.sparkSession.sparkContext.broadcast(cmat)
     assigned = emb.select(
         F.col(base_id).alias("id"),
         F.col(vec_col).alias("vec"),

@@ -109,6 +109,69 @@ def _read_query_block(
     return ids, mat, vals[order].astype(np.int64)
 
 
+def _block_topk(
+    qids: np.ndarray,
+    qmat: np.ndarray,
+    bids: np.ndarray,
+    bmat: np.ndarray,
+    k: int,
+    metric: str,
+    exclude_self: bool,
+    qrows: np.ndarray | None = None,
+    qmatch: np.ndarray | None = None,
+    bmatch: np.ndarray | None = None,
+) -> Iterator[pd.DataFrame]:
+    """Local top-k of one base block: yields ``(qid, nn_id, dist)``
+    frames holding each query's ``min(k, len(bids))`` nearest rows of
+    ``bmat`` (unordered; ``rank_topk`` merges the blocks). ``qrows``
+    picks the query rows to score (default: all). Rows whose
+    ``qmatch`` differs from ``bmatch``, and with ``exclude_self`` a
+    query's own id, get distance inf so the caller can drop them.
+
+    The query axis is chunked under ``dmat_chunk_rows``. An unchunked
+    (n_staged_q x n_batch) float64 matrix scales with the staged-query
+    count: at 60k queries x ~5k-row batches that is ~2.3 GB per
+    in-flight batch, and cores x workers of those OOM-killed the 300k
+    scale rehearsal. Per-query top-k is row-independent, so chunking
+    is exact — only the transient block size changes."""
+    n_q = len(qids) if qrows is None else len(qrows)
+    q_chunk = dmat_chunk_rows(len(bids))
+    for s in range(0, n_q, q_chunk):
+        sel = slice(s, s + q_chunk) if qrows is None else qrows[s : s + q_chunk]
+        qids_c = qids[sel]
+        dmat = np_distances(metric, qmat[sel], bmat)
+        if bmatch is not None:
+            dmat[qmatch[sel][:, None] != bmatch[None, :]] = np.inf
+        if exclude_self:
+            # mask before the local top-k, or a block owning the
+            # query's own row would surrender a slot
+            dmat[qids_c[:, None] == bids[None, :]] = np.inf
+        m = min(k, dmat.shape[1])
+        # local top-m per query: argpartition, exact sort in rank_topk
+        part = np.argpartition(dmat, m - 1, axis=1)[:, :m]
+        rows_q = np.repeat(np.arange(dmat.shape[0]), m)
+        yield pd.DataFrame(
+            {
+                "qid": qids_c[rows_q],
+                "nn_id": bids[part.ravel()],
+                "dist": dmat[rows_q, part.ravel()],
+            }
+        )
+
+
+def rank_topk(cand: DataFrame, k: int) -> DataFrame:
+    """Global merge of local top-k candidates ``(qid, nn_id, dist, ...)``:
+    rank each query's rows by (dist, nn_id) — the reference's
+    deterministic tiebreak (neighbor.h:29-31) — and keep ranks 1..k as
+    ``(qid, nn_id, dist, rank)``."""
+    w = Window.partitionBy("qid").orderBy(F.col("dist").asc(), F.col("nn_id").asc())
+    return (
+        cand.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select("qid", "nn_id", "dist", "rank")
+    )
+
+
 def knn_join(
     queries_df: DataFrame,
     base_df: DataFrame,
@@ -201,32 +264,10 @@ def knn_join(
                     if b_qmatch is not None
                     else None
                 )
-                # Bound the worker-resident distance block. An unchunked
-                # (n_staged_q x n_batch) float64 matrix scales with the
-                # staged-query count: at 60k queries x ~5k-row batches
-                # that is ~2.3 GB per in-flight batch, and cores x workers
-                # of those OOM-killed the 300k scale rehearsal. Per-query
-                # top-k is row-independent, so chunking the query axis is
-                # exact — only the transient block size changes.
-                q_chunk = dmat_chunk_rows(len(bids))
-                for s in range(0, len(b_qids), q_chunk):
-                    qids_c = b_qids[s : s + q_chunk]
-                    dmat = np_distances(metric, b_qmat[s : s + q_chunk], bmat)
-                    if bm is not None:
-                        dmat[b_qmatch[s : s + q_chunk, None] != bm[None, :]] = np.inf
-                    if exclude_self:
-                        # mask before the local top-k, or a batch owning
-                        # the query's own row would surrender a slot
-                        dmat[qids_c[:, None] == bids[None, :]] = np.inf
-                    m = min(k, dmat.shape[1])
-                    # local top-m per query: argpartition, exact sort later
-                    part = np.argpartition(dmat, m - 1, axis=1)[:, :m]
-                    rows_q = np.repeat(np.arange(dmat.shape[0]), m)
-                    cand_ids = bids[part.ravel()]
-                    cand_d = dmat[rows_q, part.ravel()]
-                    yield pd.DataFrame(
-                        {"qid": qids_c[rows_q], "nn_id": cand_ids, "dist": cand_d}
-                    )
+                yield from _block_topk(
+                    b_qids, b_qmat, bids, bmat, k, metric, exclude_self,
+                    qmatch=b_qmatch, bmatch=bm,
+                )
 
         b_cols = [base_id, vec_col] + ([match_col] if match_col else [])
         return base_df.select(*b_cols).mapInPandas(local_topk, _CAND_SCHEMA)
@@ -236,12 +277,7 @@ def knn_join(
         candidates = candidates.unionByName(block_candidates(blk))
     if exclude_self or match_col is not None:
         candidates = candidates.where(F.col("dist") != float("inf"))
-    w = Window.partitionBy("qid").orderBy(F.col("dist").asc(), F.col("nn_id").asc())
-    return (
-        candidates.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("qid", "nn_id", "dist", "rank")
-    )
+    return rank_topk(candidates, k)
 
 
 def flat_to_arrays(flat: DataFrame) -> DataFrame:

@@ -13,9 +13,9 @@ FRACTION of the base, feeding the same ``(qid, nn[], dists[])`` table.
 
 Shape (designed for the 100 TB regime):
 
-- coarse centroids: seeded k-means on a bounded hash-sample (the FAISS
-  IVF training protocol, same as operators/similarity.py) — the model is
-  kilobytes, broadcast once.
+- coarse centroids: ``similarity.train_coarse``, the seeded k-means on
+  a bounded hash-sample that every IVF operator trains with (the FAISS
+  IVF training protocol) — the model is kilobytes, broadcast once.
 - base side: one shuffle on centroid id (the same partitioning the
   persisted IVF index uses — at scale this shuffle IS the index build and
   is amortized by persisting it), then streamed through ``mapInPandas``.
@@ -29,7 +29,8 @@ Shape (designed for the 100 TB regime):
   ~(n_probe / n_centroids) of the exact join's flops. The full-distance
   masked form (knn_join's match_col) would compute the whole matrix and
   throw most of it away; this kernel never materializes skipped pairs.
-- global merge: the same tiny (qid)-window top-k as the exact join.
+- global merge: the same per-list local top-k kernel and (qid)-window
+  merge (``knn._block_topk`` / ``knn.rank_topk``) as the exact join.
 
 Routing: base rows are assigned to their L2-nearest centroid in routing
 space (raw vectors; L2-normalized first for metric=cosine — spherical
@@ -46,14 +47,22 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import IntegerType
+from pyspark.sql.types import ArrayType, IntegerType, LongType
+
 from mysteryann_spark.functions.vector import np_distances, np_normalize
 from mysteryann_spark.operators.knn import (
     _CAND_SCHEMA,
-    _DMAT_BUDGET_BYTES,
     _RANKED_SCHEMA,
+    _block_topk,
+    rank_topk,
+)
+from mysteryann_spark.operators.similarity import (
+    _f32_memo,
+    _routed_nearest,
+    count_and_dim,
+    train_coarse,
 )
 from mysteryann_spark.sources.staging import (
     list_staged_files,
@@ -61,74 +70,6 @@ from mysteryann_spark.sources.staging import (
     stage_parquet,
     table_matrix,
 )
-
-
-def train_routing_centroids(
-    base_df: DataFrame,
-    n_centroids: int,
-    metric: str,
-    max_iter: int = 5,
-    seed: int = 42,
-    train_sample: int | None = None,
-    base_id: str = "vec_id",
-    vec_col: str = "embedding",
-    hierarchical: bool | None = None,
-    branch: int | None = None,
-    n_base: int | None = None,
-    dim: int | None = None,
-) -> tuple[np.ndarray, tuple[np.ndarray, np.ndarray] | None]:
-    """Seeded k-means centroids over a bounded deterministic hash-sample,
-    in ROUTING space: raw vectors for l2/ip, L2-normalized for cosine
-    (spherical k-means). Same sampling protocol as
-    similarity.train_centroids; the sample cap defaults to ~256 points
-    per centroid — past that k-means stops moving.
-
-    Returns ``(cmat, route | None)``. Above ``_FLAT_KMEANS_MAX``
-    centroids (override with ``hierarchical``) training runs the same
-    two-level Lloyd the IVF-PQ builder uses (``_hierarchical_kmeans``)
-    and returns the ``(l1_float32, indptr)`` routing structure, so the
-    graph build's phase-0 assignment pays O(branch + R*k/branch) per row
-    instead of rediscovering the measured ~2.4 h flat-assignment wall at
-    the 163,840-list 10^8 geometry (SCALE.md r11)."""
-    from mysteryann_spark.operators.similarity import (
-        _FLAT_KMEANS_MAX,
-        _guard_train_collect,
-        _hierarchical_kmeans,
-        _parse_size_bytes,
-        _sample_kmeans,
-        hash_sample_vectors,
-    )
-
-    if train_sample is None:
-        train_sample = max(4096, 256 * n_centroids)
-    if n_base is None:
-        # callers that already counted the base pass it in — at 10^8
-        # rows this duplicate count() was a full extra pass per build
-        n_base = base_df.count()
-    rate = max(1, int(np.ceil(n_base / float(train_sample))))
-    if dim is None:
-        # no dim witness threaded in: one head() job remains
-        head = base_df.select(vec_col).head()
-        dim = len(head[0]) if head is not None and head[0] is not None else 0
-    _guard_train_collect(
-        -(-n_base // rate),
-        dim,
-        _parse_size_bytes(
-            base_df.sparkSession.conf.get("spark.driver.maxResultSize", "1g") or "0"
-        ),
-    )
-    sample = hash_sample_vectors(base_df, base_id, vec_col, rate)
-    mat = np.stack([np.asarray(v, dtype=np.float64) for v in sample])
-    if metric == "cosine":
-        mat = np_normalize(mat)
-    if hierarchical is None:
-        hierarchical = n_centroids > _FLAT_KMEANS_MAX
-    if hierarchical:
-        cmat, l1, indptr = _hierarchical_kmeans(
-            mat, n_centroids, max_iter, seed, branch=branch
-        )
-        return cmat, (np.ascontiguousarray(l1, dtype=np.float32), indptr)
-    return _sample_kmeans(mat, n_centroids, max_iter, seed), None
 
 
 def _route(metric: str, mat: np.ndarray) -> np.ndarray:
@@ -174,28 +115,27 @@ def ivf_knn_join(
     two-level L2 route does not order by.
     """
     spark = base_df.sparkSession
-    # count + dim witness in ONE aggregate job (the trainer's separate
-    # head() was one more driver job + gap per build)
-    stat = base_df.agg(
-        F.count(F.lit(1)).alias("n"), F.first(vec_col).alias("v")
-    ).head()
-    n_base = int(stat["n"])
-    dim = len(stat["v"]) if stat is not None and stat["v"] is not None else 0
+    n_base, dim = count_and_dim(base_df, vec_col)
     if n_base == 0:
         return spark.createDataFrame([], _RANKED_SCHEMA)
     if n_centroids is None:
         n_centroids = max(4, min(4096, int(math.isqrt(n_base))))
     n_probe = min(n_probe, n_centroids)
+    if train_sample is None:
+        # ~256 points per centroid: past that k-means stops moving
+        train_sample = max(4096, 256 * n_centroids)
 
-    cmat, route = train_routing_centroids(
+    # routing space: raw vectors for l2/ip, L2-normalized for cosine
+    # (spherical k-means)
+    cmat, route = train_coarse(
         base_df,
         n_centroids,
-        metric,
         max_iter,
         seed,
         train_sample,
         base_id,
         vec_col,
+        normalize=(metric == "cosine"),
         hierarchical=hierarchical,
         branch=branch,
         n_base=n_base,
@@ -204,19 +144,9 @@ def ivf_knn_join(
     bc_cent = spark.sparkContext.broadcast(cmat)
     bc_route = spark.sparkContext.broadcast(route) if route is not None else None
     npr = min(n_probe, len(cmat))
+    _cent32 = _f32_memo(bc_cent)
 
     from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import ArrayType
-
-    # executor-side memo: float32 recast of the broadcast centroid matrix,
-    # built once per python worker, not per Arrow batch (similarity.py's
-    # `_cent32` convention)
-    _f32_slot: list = []
-
-    def _cent32() -> np.ndarray:
-        if not _f32_slot:
-            _f32_slot.append(np.ascontiguousarray(bc_cent.value, dtype=np.float32))
-        return _f32_slot[0]
 
     @pandas_udf(ArrayType(IntegerType()))
     def probe_cids(vecs: pd.Series) -> pd.Series:
@@ -233,8 +163,6 @@ def ivf_knn_join(
             return pd.Series([], dtype=object)
         m = _route(metric, np.stack([np.asarray(v, dtype=np.float64) for v in vecs]))
         if bc_route is not None and metric == "l2":
-            from mysteryann_spark.operators.similarity import _routed_nearest
-
             l1_32, indptr = bc_route.value
             p = _routed_nearest(m, _cent32(), l1_32, indptr, npr)
             return pd.Series(list(p))
@@ -295,9 +223,6 @@ def ivf_knn_join(
     # contiguous runs of the same inverted list (big GEMMs, not
     # fragments). This is the cid-partitioning the persisted IVF index
     # (sources/ann_index_io.py) stores on disk.
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import LongType
-
     @pandas_udf(IntegerType())
     def assign_cid(vecs: pd.Series) -> pd.Series:
         m = _route(metric, np.stack([np.asarray(v, dtype=np.float64) for v in vecs]))
@@ -306,8 +231,6 @@ def ivf_knn_join(
             # metric), so the two-level route applies unconditionally —
             # this is the pass that was a measured ~2.4 h flat wall at
             # the 163,840-list 10^8 geometry
-            from mysteryann_spark.operators.similarity import _routed_nearest
-
             l1_32, indptr = bc_route.value
             out = _routed_nearest(m, _cent32(), l1_32, indptr, 1)[:, 0]
             return pd.Series(out.astype(np.int32))
@@ -343,35 +266,15 @@ def ivf_knn_join(
                 j = int(np.searchsorted(inv_cids, bcids[lo]))
                 if j >= len(inv_cids) or inv_cids[j] != bcids[lo]:
                     continue
-                qrows = inv_rows[inv_bounds[j] : inv_bounds[j + 1]]
-                sub_bids = bids[lo:hi]
-                sub_bmat = bmat[lo:hi]
-                q_chunk = max(1, int(_DMAT_BUDGET_BYTES // max(1, 8 * len(sub_bids))))
-                for s in range(0, len(qrows), q_chunk):
-                    rows_c = qrows[s : s + q_chunk]
-                    dmat = np_distances(metric, qmat[rows_c], sub_bmat)
-                    if exclude_self:
-                        dmat[qids[rows_c][:, None] == sub_bids[None, :]] = np.inf
-                    m = min(k, dmat.shape[1])
-                    part = np.argpartition(dmat, m - 1, axis=1)[:, :m]
-                    rows_q = np.repeat(np.arange(dmat.shape[0]), m)
-                    yield pd.DataFrame(
-                        {
-                            "qid": qids[rows_c][rows_q],
-                            "nn_id": sub_bids[part.ravel()],
-                            "dist": dmat[rows_q, part.ravel()],
-                        }
-                    )
+                yield from _block_topk(
+                    qids, qmat, bids[lo:hi], bmat[lo:hi], k, metric, exclude_self,
+                    qrows=inv_rows[inv_bounds[j] : inv_bounds[j + 1]],
+                )
 
     candidates = assigned.mapInPandas(probe_topk, _CAND_SCHEMA)
     if exclude_self:
         candidates = candidates.where(F.col("dist") != float("inf"))
-    w = Window.partitionBy("qid").orderBy(F.col("dist").asc(), F.col("nn_id").asc())
-    return (
-        candidates.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("qid", "nn_id", "dist", "rank")
-    )
+    return rank_topk(candidates, k)
 
 
 def ivf_knn_join_arrays(

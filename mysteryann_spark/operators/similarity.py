@@ -18,7 +18,8 @@ from pyspark.sql import functions as F
 
 from pyspark.sql.types import ArrayType, IntegerType
 
-from mysteryann_spark.operators.knn import knn_join
+from mysteryann_spark.functions.vector import np_normalize
+from mysteryann_spark.operators.knn import knn_join, rank_topk
 
 
 def cosine_topk(
@@ -269,8 +270,6 @@ def _routed_nearest(
 
 
 def _unit(vecs: pd.Series) -> np.ndarray:
-    from mysteryann_spark.functions.vector import np_normalize
-
     m = np.stack([np.asarray(v, dtype=np.float64) for v in vecs])
     # np_normalize guards zero-norm rows (norm treated as 1.0) so an
     # all-zero embedding yields zeros, not NaNs that poison k-means
@@ -345,73 +344,32 @@ def hash_sample_vectors(
     return pdf["v"]
 
 
-def train_centroids(
+def count_and_dim(df: DataFrame, vec_col: str) -> tuple[int, int]:
+    """Row count and vector width from ONE aggregate job — a separate
+    ``count()`` + ``head()`` is two driver jobs and a gap per call, and
+    a repeat count per trainer was one full extra pass per index build
+    at 10^8 rows. ``first()`` without ordering is an arbitrary row,
+    which is all a width witness needs; 0 when that row has no vector."""
+    stat = df.agg(F.count(F.lit(1)).alias("n"), F.first(vec_col).alias("v")).head()
+    n = int(stat["n"])
+    dim = len(stat["v"]) if stat["v"] is not None else 0
+    return n, dim
+
+
+def _sample_matrix(
     base_df: DataFrame,
-    n_centroids: int,
-    max_iter: int,
-    seed: int,
     train_sample: int,
     base_id: str,
     vec_col: str,
-):
-    """Broadcast of a seeded k-means centroid matrix trained on a BOUNDED
-    deterministic sample (the FAISS IVF training protocol — centroids are
-    a tiny model; training beyond a few thousand points per centroid buys
-    nothing). The hash-sample keeps ids whose xxhash64 lands in the
-    smallest 1/rate buckets — no sort, no shuffle, stable under retry;
-    the one driver collect is bounded by ``train_sample``, not the data
-    size. Vectors are normalized driver-side in numpy."""
-    bc, _route = train_centroids_routed(
-        base_df, n_centroids, max_iter, seed, train_sample, base_id, vec_col
-    )
-    return bc
-
-
-def train_centroids_routed(
-    base_df: DataFrame,
-    n_centroids: int,
-    max_iter: int,
-    seed: int,
-    train_sample: int,
-    base_id: str,
-    vec_col: str,
-    hierarchical: bool | None = None,
-    branch: int | None = None,
-    n_base: int | None = None,
-    dim: int | None = None,
-):
-    """Like ``train_centroids`` but also returns the two-level routing
-    structure when one exists: ``(bc_centroids, bc_route | None)`` where
-    ``bc_route.value == (l1_float32, indptr)``. Above ``_FLAT_KMEANS_MAX``
-    centroids, training runs the hierarchical k-means (the flat Lloyd
-    pass is O(sample x k) per iteration — measured ~1 ms/row at the
-    163,840-list 10^8 geometry, i.e. days at the 64-pts/centroid
-    protocol) and the route lets ``nearest_centroids_udf`` assign base
-    rows in O(branch + R*k/branch) instead of O(k). The broadcast
-    centroid matrix itself is flat either way — persistence, search-time
-    probing and ADC are unchanged.
-
-    ``hierarchical`` overrides the threshold auto-pick (None): True
-    forces two-level at any centroid count (the registry entry exercises
-    it at sf scale, where no table reaches the threshold), False forces
-    flat. ``branch`` overrides the ~2*sqrt(k) level-1 width."""
-    sc = base_df.sparkSession.sparkContext
-    if n_base is None:
-        # callers that already counted the base pass it in — the repeat
-        # count() was one full extra pass per index build at 10^8 rows.
-        # Count and the dim witness come from ONE aggregate job (a
-        # separate head() was a second driver job + gap per train call;
-        # first() without ordering is an arbitrary row, which is all the
-        # dim estimate needs — head() was equally arbitrary).
-        stat = base_df.agg(
-            F.count(F.lit(1)).alias("n"), F.first(vec_col).alias("v")
-        ).head()
-        n_base = int(stat["n"])
-        dim = len(stat["v"]) if stat is not None and stat["v"] is not None else 0
-    elif dim is None:
-        # n_base given but no dim witness: one head() job remains
-        head = base_df.select(vec_col).head()
-        dim = len(head[0]) if head is not None and head[0] is not None else 0
+    n_base: int,
+    dim: int,
+) -> np.ndarray:
+    """Float64 (rows, dim) stack of the bounded deterministic hash-sample
+    every trainer fits on: ids whose xxhash64 lands in the smallest
+    1/rate buckets, rate sized so ~``train_sample`` rows survive — no
+    sort, no shuffle, stable under retry. The one driver collect is
+    bounded by ``train_sample``, not the data size, and is refused up
+    front when it would exceed ``spark.driver.maxResultSize``."""
     rate = max(1, int(np.ceil(n_base / float(train_sample))))
     _guard_train_collect(
         -(-n_base // rate),
@@ -420,18 +378,105 @@ def train_centroids_routed(
             base_df.sparkSession.conf.get("spark.driver.maxResultSize", "1g") or "0"
         ),
     )
-    sample = _unit(hash_sample_vectors(base_df, base_id, vec_col, rate))
+    sample = hash_sample_vectors(base_df, base_id, vec_col, rate)
+    return np.stack([np.asarray(v, dtype=np.float64) for v in sample])
+
+
+def train_coarse(
+    base_df: DataFrame,
+    n_centroids: int,
+    max_iter: int,
+    seed: int,
+    train_sample: int,
+    base_id: str,
+    vec_col: str,
+    normalize: bool = True,
+    hierarchical: bool | None = None,
+    branch: int | None = None,
+    n_base: int | None = None,
+    dim: int | None = None,
+) -> tuple[np.ndarray, tuple[np.ndarray, np.ndarray] | None]:
+    """The IVF coarse quantizer every IVF-family operator trains: seeded
+    k-means over a bounded hash-sample (``_sample_matrix``; the FAISS IVF
+    training protocol — centroids are a tiny model, and training on more
+    than a few thousand points per centroid buys nothing). ``normalize``
+    L2-normalizes the sample first (spherical k-means, for cosine
+    routing). Callers that already ran ``count_and_dim`` pass ``n_base``
+    and ``dim``.
+
+    Returns ``(cmat, route | None)`` with ``route == (l1 float32,
+    indptr)``, the two-level routing structure ``nearest_centroids_udf``
+    and ``ivf_knn_join`` assign through. Above ``_FLAT_KMEANS_MAX``
+    centroids, training runs the hierarchical k-means (the flat Lloyd
+    pass is O(sample x k) per iteration — measured ~1 ms/row at the
+    163,840-list 10^8 geometry, i.e. days at the 64-pts/centroid
+    protocol) and the route assigns base rows in O(branch + R*k/branch)
+    instead of O(k). ``cmat`` itself is flat either way — persistence,
+    search-time probing and ADC are unchanged.
+
+    ``hierarchical`` overrides the threshold auto-pick (None): True
+    forces two-level at any centroid count (the registry entry exercises
+    it at sf scale, where no table reaches the threshold), False forces
+    flat. ``branch`` overrides the ~2*sqrt(k) level-1 width."""
+    if n_base is None or dim is None:
+        n_base, dim = count_and_dim(base_df, vec_col)
+    mat = _sample_matrix(base_df, train_sample, base_id, vec_col, n_base, dim)
+    if normalize:
+        # np_normalize guards zero-norm rows, so an all-zero embedding
+        # yields zeros, not NaNs that poison k-means
+        mat = np_normalize(mat)
     if hierarchical is None:
         hierarchical = n_centroids > _FLAT_KMEANS_MAX
     if hierarchical:
         cmat, l1, indptr = _hierarchical_kmeans(
-            sample, n_centroids, max_iter, seed, branch=branch
+            mat, n_centroids, max_iter, seed, branch=branch
         )
-        return sc.broadcast(cmat), sc.broadcast(
-            (np.ascontiguousarray(l1, dtype=np.float32), indptr)
-        )
-    cmat = _sample_kmeans(sample, n_centroids, max_iter, seed)
-    return sc.broadcast(cmat), None
+        return cmat, (np.ascontiguousarray(l1, dtype=np.float32), indptr)
+    return _sample_kmeans(mat, n_centroids, max_iter, seed), None
+
+
+def _f32_memo(bc):
+    """Executor-side memo for the float32 recast of a broadcast matrix:
+    the cast is ~42 MB PER ARROW BATCH at 163,840 lists x 64 dims, and a
+    10^8 assignment pass runs thousands of batches per worker. The
+    returned closure, slot included, is deserialized once per Python
+    worker and reused across batches, so the cast runs once per worker."""
+    slot: list = []
+
+    def get() -> np.ndarray:
+        if not slot:
+            slot.append(np.ascontiguousarray(bc.value, dtype=np.float32))
+        return slot[0]
+
+    return get
+
+
+def _flat_nearest(m: np.ndarray, c: np.ndarray, n: int) -> np.ndarray:
+    """Top-``n`` centroid rows per row of ``m``, by |m|^2 - 2m.c + |c|^2
+    in float64 and argsort order — the exact flat assignment the
+    sf-scale pinned oracles certify. GEMM expansion, not the (batch, k,
+    dim) cube: at 1024 centroids the cube is ~5 GB per 10k-row Arrow
+    batch per worker."""
+    d = (m * m).sum(axis=1)[:, None] - 2.0 * (m @ c.T) + (c * c).sum(axis=1)[None, :]
+    return np.argsort(d, axis=1)[:, :n]
+
+
+def _cosine_dist_udf():
+    """Arrow-batched exact cosine distance of two raw-vector columns
+    (zero-norm pairs score 1.0) — the refine step of the PQ paths."""
+    from pyspark.sql.functions import pandas_udf
+    from pyspark.sql.types import DoubleType
+
+    @pandas_udf(DoubleType())
+    def cosine_dist(qv: pd.Series, nv: pd.Series) -> pd.Series:
+        a = np.stack([np.asarray(v, dtype=np.float64) for v in qv])
+        bm = np.stack([np.asarray(v, dtype=np.float64) for v in nv])
+        num = np.einsum("ij,ij->i", a, bm)
+        den = np.linalg.norm(a, axis=1) * np.linalg.norm(bm, axis=1)
+        den[den == 0] = 1.0
+        return pd.Series(1.0 - num / den)
+
+    return cosine_dist
 
 
 # above this many (rows x n_centroids) distance cells per Arrow batch the
@@ -452,7 +497,7 @@ def nearest_centroids_udf(bc, n: int, route_bc=None):
     no full sort; assignment quality is recall-gated, not pinned, at
     that scale.
 
-    ``route_bc`` (from ``train_centroids_routed``) switches to the
+    ``route_bc`` (the broadcast route of ``train_coarse``) switches to the
     TWO-LEVEL scorer: top-R level-1 cells per row, exact argmin over only
     those cells' children — O(branch + R*k/branch) per row instead of
     O(k), the difference between ~2.4 h and ~minutes for the 10^8
@@ -461,17 +506,7 @@ def nearest_centroids_udf(bc, n: int, route_bc=None):
     hierarchical centroid counts, never on the pinned flat path."""
     from pyspark.sql.functions import pandas_udf
 
-    # executor-side memo for the float32 recast of the broadcast centroid
-    # matrix: the cast is ~42 MB PER ARROW BATCH at 163,840 lists x 64
-    # dims, and a 10^8 assignment pass runs thousands of batches per
-    # worker — cast once per python worker (the closure, including this
-    # slot, is deserialized once per worker and reused across batches).
-    _f32_slot: list = []
-
-    def _cent32() -> np.ndarray:
-        if not _f32_slot:
-            _f32_slot.append(np.ascontiguousarray(bc.value, dtype=np.float32))
-        return _f32_slot[0]
+    _cent32 = _f32_memo(bc)
 
     if route_bc is not None:
 
@@ -512,15 +547,7 @@ def nearest_centroids_udf(bc, n: int, route_bc=None):
                     sel = np.take_along_axis(part, o, axis=1)
                 outs.append(sel.astype(np.int32))
             return pd.Series(list(np.concatenate(outs)))
-        # GEMM expansion, not the (batch, k, dim) cube — at 1024 centroids
-        # the cube is ~5 GB per 10k-row Arrow batch per worker
-        d = (
-            (m * m).sum(axis=1)[:, None]
-            - 2.0 * (m @ c.T)
-            + (c * c).sum(axis=1)[None, :]
-        )
-        order = np.argsort(d, axis=1)[:, :n]
-        return pd.Series(list(order.astype(np.int32)))
+        return pd.Series(list(_flat_nearest(m, c, n).astype(np.int32)))
 
     return nearest
 
@@ -562,9 +589,12 @@ def ivf_cosine_topk(
     # centroid scoring, and the candidate dot product. The earlier
     # Catalyst renderings (nested aggregate(zip_with(...)) lambdas) are
     # interpreted per element, not codegen'd, and dominated runtime.
-    bc, bc_route = train_centroids_routed(
+    cmat, route = train_coarse(
         base_df, n_centroids, max_iter, seed, train_sample, base_id, vec_col
     )
+    sc = base_df.sparkSession.sparkContext
+    bc = sc.broadcast(cmat)
+    bc_route = sc.broadcast(route) if route is not None else None
     _nearest = lambda n: nearest_centroids_udf(bc, n, route_bc=bc_route)  # noqa: E731
     l2norm = l2norm_udf()
 
@@ -594,12 +624,7 @@ def ivf_cosine_topk(
         return pd.Series(1.0 - np.einsum("ij,ij->i", a, bm))
 
     scored = cand.select("qid", "nn_id", cos_dist("qvec", "nvec").alias("dist"))
-    w = Window.partitionBy("qid").orderBy(F.col("dist").asc(), F.col("nn_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("qid", "nn_id", "dist", "rank")
-    )
+    return rank_topk(scored, k)
 
 
 def quantized_cosine_topk(
@@ -727,12 +752,12 @@ def lsh_cosine_topk(
         .join(base_df.select(F.col(base_id).alias("nn_id"), F.col(vec_col).alias("nv")), "nn_id")
         .select("qid", "nn_id", cos_dist("qv", "nv").alias("dist"))
     )
-    w = Window.partitionBy("qid").orderBy(F.col("dist").asc(), F.col("nn_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("qid", "nn_id", "dist", "rank")
-    )
+    return rank_topk(scored, k)
+
+
+def _check_subspaces(dim: int, m: int) -> None:
+    if dim % m:
+        raise ValueError(f"dim {dim} not divisible by m={m} subspaces")
 
 
 def train_pq_codebooks(
@@ -752,32 +777,14 @@ def train_pq_codebooks(
     vectors (the FAISS ``ProductQuantizer::train`` protocol). Like IVF
     centroids, the codebooks are a tiny model — the one driver collect is
     bounded by ``train_sample``, never the data size."""
-    if n_base is None:
-        # one aggregate job for count + dim witness (see
-        # train_centroids_routed — same two-jobs-into-one fusion)
-        stat = base_df.agg(
-            F.count(F.lit(1)).alias("n"), F.first(vec_col).alias("v")
-        ).head()
-        n_base = int(stat["n"])
-        head_dim = len(stat["v"]) if stat is not None and stat["v"] is not None else 0
-    elif dim is None:
-        head = base_df.select(vec_col).head()
-        head_dim = len(head[0]) if head is not None and head[0] is not None else 0
-    else:
-        head_dim = dim
-    rate = max(1, int(np.ceil(n_base / float(train_sample))))
-    _guard_train_collect(
-        -(-n_base // rate),
-        head_dim,
-        _parse_size_bytes(
-            base_df.sparkSession.conf.get("spark.driver.maxResultSize", "1g") or "0"
-        ),
-    )
-    mat = _unit(hash_sample_vectors(base_df, base_id, vec_col, rate))
-    dim = mat.shape[1]
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m={m} subspaces")
-    dsub = dim // m
+    if n_base is None or dim is None:
+        n_base, dim = count_and_dim(base_df, vec_col)
+    _check_subspaces(dim, m)
+    mat = _sample_matrix(base_df, train_sample, base_id, vec_col, n_base, dim)
+    mat = np_normalize(mat)
+    # the witness row may carry no vector (dim 0): check the real width
+    _check_subspaces(mat.shape[1], m)
+    dsub = mat.shape[1] // m
     books = np.stack(
         [
             _sample_kmeans(mat[:, j * dsub : (j + 1) * dsub], n_codes, max_iter, seed + j)
@@ -887,19 +894,6 @@ def pq_cosine_topk(
         vec_col=vec_col,
         exclude_self=exclude_self,
     ).select("qid", "nn_id")
-
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import DoubleType
-
-    @pandas_udf(DoubleType())
-    def pq_cos_dist(qv: pd.Series, nv: pd.Series) -> pd.Series:
-        a = np.stack([np.asarray(v, dtype=np.float64) for v in qv])
-        bm = np.stack([np.asarray(v, dtype=np.float64) for v in nv])
-        num = np.einsum("ij,ij->i", a, bm)
-        den = np.linalg.norm(a, axis=1) * np.linalg.norm(bm, axis=1)
-        den[den == 0] = 1.0
-        return pd.Series(1.0 - num / den)
-
     scored = (
         cand.join(
             queries_df.select(F.col(query_id).alias("qid"), F.col(vec_col).alias("qv")),
@@ -909,14 +903,9 @@ def pq_cosine_topk(
             base_df.select(F.col(base_id).alias("nn_id"), F.col(vec_col).alias("nv")),
             "nn_id",
         )
-        .select("qid", "nn_id", pq_cos_dist("qv", "nv").alias("dist"))
+        .select("qid", "nn_id", _cosine_dist_udf()("qv", "nv").alias("dist"))
     )
-    w = Window.partitionBy("qid").orderBy(F.col("dist").asc(), F.col("nn_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("qid", "nn_id", "dist", "rank")
-    )
+    return rank_topk(scored, k)
 
 
 def build_ivfpq_index(
@@ -944,17 +933,17 @@ def build_ivfpq_index(
     - ``centroids`` (n_centroids, dim) / ``books`` (m, n_codes, dim/m):
       the trained model, kilobytes — broadcast at search time.
     """
-    # one aggregate shared by both trainers: count (one pass, not two)
-    # plus the dim witness (saves each trainer's separate head() job)
-    stat = base_df.agg(
-        F.count(F.lit(1)).alias("n"), F.first(vec_col).alias("v")
-    ).head()
-    n_base = int(stat["n"])
-    dim = len(stat["v"]) if stat is not None and stat["v"] is not None else 0
-    bc_cent, bc_route = train_centroids_routed(
+    # one aggregate shared by both trainers; an m that cannot split the
+    # vector fails here, before the coarse k-means
+    n_base, dim = count_and_dim(base_df, vec_col)
+    _check_subspaces(dim, m)
+    cent, route = train_coarse(
         base_df, n_centroids, max_iter, seed, train_sample, base_id, vec_col,
         hierarchical=hierarchical, branch=branch, n_base=n_base, dim=dim,
     )
+    sc = base_df.sparkSession.sparkContext
+    bc_cent = sc.broadcast(cent)
+    bc_route = sc.broadcast(route) if route is not None else None
     # PQ codebooks are m independent (n_codes x dim/m) models — their
     # sample need only cover n_codes clusters per subspace, NOT the
     # coarse quantizer's points-per-centroid budget. Tying both to
@@ -979,23 +968,23 @@ def build_ivfpq_index(
     )
     out = {
         "lists": lists,
-        "centroids": np.asarray(bc_cent.value, dtype=np.float64),
+        "centroids": np.asarray(cent, dtype=np.float64),
         "books": np.asarray(bc_books.value, dtype=np.float64),
         "meta": {
             "metric": "cosine",
-            "dim": int(bc_cent.value.shape[1]),
-            "n_centroids": int(bc_cent.value.shape[0]),
+            "dim": int(cent.shape[1]),
+            "n_centroids": int(cent.shape[0]),
             "m": int(bc_books.value.shape[0]),
             "n_codes": int(bc_books.value.shape[1]),
         },
     }
-    if bc_route is not None:
+    if route is not None:
         # two-level routing structure: save_ivfpq persists it so later
         # vector backfills re-derive cid IDENTICALLY to the lists write
         # (routed and flat assignment disagree at cell boundaries)
         out["route"] = (
-            np.asarray(bc_route.value[0], dtype=np.float64),
-            np.asarray(bc_route.value[1], dtype=np.int64),
+            np.asarray(route[0], dtype=np.float64),
+            np.asarray(route[1], dtype=np.int64),
         )
     return out
 
@@ -1061,7 +1050,6 @@ def search_ivfpq_index(
     n_centroids = int(index["centroids"].shape[0])
     n_codes = int(index["books"].shape[1])
 
-    w = Window.partitionBy("qid").orderBy(F.col("dist").asc(), F.col("nn_id").asc())
     if not staged:
         l2norm = l2norm_udf()
         probes = queries_df.select(
@@ -1093,11 +1081,8 @@ def search_ivfpq_index(
         )
         vectors = index.get("vectors")
         if base_df is None and vectors is None:
-            return (
-                pq_scored.withColumn("rank", F.row_number().over(w))
-                .where(F.col("rank") <= k)
-                .select("qid", "nn_id", "dist", "rank")
-            )
+            return rank_topk(pq_scored, k)
+        w = Window.partitionBy("qid").orderBy(F.col("dist").asc(), F.col("nn_id").asc())
         pq_top = (
             pq_scored.withColumn("rank", F.row_number().over(w))
             .where(F.col("rank") <= k * refine)
@@ -1107,13 +1092,13 @@ def search_ivfpq_index(
         if base_df is not None:
             return _ivfpq_refine(
                 queries_df, _refine_base(base_df, base_id, vec_col),
-                pq_top.select("qid", "nn_id"), k, w, query_id, vec_col,
+                pq_top.select("qid", "nn_id"), k, query_id, vec_col,
                 surv_bytes=sb, q_bytes=qb,
             )
         return _ivfpq_refine(
             queries_df,
             vectors.select("cid", "nn_id", F.col("vec").alias("nv")),
-            pq_top, k, w, query_id, vec_col,
+            pq_top, k, query_id, vec_col,
             join_on=("cid", "nn_id"), surv_bytes=sb, q_bytes=qb,
         )
 
@@ -1157,7 +1142,6 @@ def search_ivfpq_index(
         books = bc_books.value  # (m, n_codes, dsub)
         cents = bc_cent.value
         m_sub, _, dsub = books.shape
-        c_sq = (cents * cents).sum(axis=1)[None, :]
         for pdf in batches:
             if pdf.empty:
                 continue
@@ -1166,10 +1150,9 @@ def search_ivfpq_index(
                 sub = pdf.iloc[s : s + 256]
                 qids = sub["qid"].to_numpy()
                 qm = _unit(sub["qvec"])
-                # probe selection: same formula + argsort order as
-                # nearest_centroids_udf (assignment parity)
-                d2c = (qm * qm).sum(axis=1)[:, None] - 2.0 * (qm @ cents.T) + c_sq
-                probes = np.argsort(d2c, axis=1)[:, :n_probe]
+                # probe selection: nearest_centroids_udf's flat scorer
+                # (assignment parity)
+                probes = _flat_nearest(qm, cents, n_probe)
                 # per-query ADC lookup tables in one einsum
                 luts = np.einsum(
                     "qmd,mcd->qmc", qm.reshape(len(sub), m_sub, dsub), books
@@ -1223,7 +1206,7 @@ def search_ivfpq_index(
         sb, qb = _refine_estimates(queries_df, index, k, refine)
         return _ivfpq_refine(
             queries_df, _refine_base(base_df, base_id, vec_col),
-            pq_scored.select("qid", "nn_id"), k, w, query_id, vec_col,
+            pq_scored.select("qid", "nn_id"), k, query_id, vec_col,
             surv_bytes=sb, q_bytes=qb,
         )
     vectors = index.get("vectors")
@@ -1235,7 +1218,7 @@ def search_ivfpq_index(
         return _ivfpq_refine(
             queries_df,
             vectors.select("cid", "nn_id", F.col("vec").alias("nv")),
-            pq_scored.select("qid", "cid", "nn_id"), k, w, query_id, vec_col,
+            pq_scored.select("qid", "cid", "nn_id"), k, query_id, vec_col,
             join_on=("cid", "nn_id"), surv_bytes=sb, q_bytes=qb,
         )
     return pq_scored.select("qid", "nn_id", "dist", "rank")
@@ -1263,7 +1246,6 @@ def _ivfpq_refine(
     refine_base: DataFrame,
     pq_top: DataFrame,
     k: int,
-    w,
     query_id: str,
     vec_col: str,
     join_on: tuple[str, ...] = ("nn_id",),
@@ -1286,19 +1268,7 @@ def _ivfpq_refine(
     ``surv_bytes``/``q_bytes`` are the callers' upper-bound size
     estimates — a giant query batch falls back to the planner's exchange
     instead of hard-failing Spark's 8 GB broadcast ceiling."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import DoubleType
-
     from mysteryann_spark.session import broadcast_if_under
-
-    @pandas_udf(DoubleType())
-    def exact_cos(qv: pd.Series, nv: pd.Series) -> pd.Series:
-        a = np.stack([np.asarray(v, dtype=np.float64) for v in qv])
-        bm = np.stack([np.asarray(v, dtype=np.float64) for v in nv])
-        num = np.einsum("ij,ij->i", a, bm)
-        den = np.linalg.norm(a, axis=1) * np.linalg.norm(bm, axis=1)
-        den[den == 0] = 1.0
-        return pd.Series(1.0 - num / den)
 
     q_side = queries_df.select(
         F.col(query_id).alias("qid"), F.col(vec_col).alias("qv")
@@ -1307,13 +1277,9 @@ def _ivfpq_refine(
         broadcast_if_under(pq_top, surv_bytes)
         .join(refine_base, list(join_on))
         .join(broadcast_if_under(q_side, q_bytes), "qid")
-        .select("qid", "nn_id", exact_cos("qv", "nv").alias("dist"))
+        .select("qid", "nn_id", _cosine_dist_udf()("qv", "nv").alias("dist"))
     )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("qid", "nn_id", "dist", "rank")
-    )
+    return rank_topk(scored, k)
 
 
 def ivfpq_cosine_topk(

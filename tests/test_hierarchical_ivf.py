@@ -246,3 +246,75 @@ def test_train_collect_guard_uses_double_width():
     # limit must now refuse it
     with pytest.raises(RuntimeError, match="maxResultSize"):
         _guard_train_collect(1_000_000, 64, 400 << 20)
+
+
+def _jobs_in(sc, group: str, fn) -> int:
+    """Driver jobs ``fn`` runs, counted under its own job group."""
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # the status tracker is fed by the asynchronous listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_ivf_builds_job_count(spark, emb):
+    """The IVF builds run a fixed handful of driver jobs: one fused
+    count + dim aggregate, the bounded training-sample collects and the
+    query staging write. A split count()/head() or a repeat count per
+    trainer shows up here as an extra job."""
+    from mysteryann_spark.operators.knn_approx import ivf_knn_join
+
+    sc = spark.sparkContext
+    emb.count()  # materialize the cached fixture outside the groups
+    q = emb.where("vec_id < 50").select(F.col("vec_id").alias("qid"), "embedding")
+    flat = _jobs_in(sc, "ivf-jobs-flat", lambda: build_ivfpq_index(emb))
+    hier = _jobs_in(
+        sc,
+        "ivf-jobs-hier",
+        lambda: build_ivfpq_index(emb, hierarchical=True, branch=8),
+    )
+    join = _jobs_in(
+        sc, "ivf-jobs-join", lambda: ivf_knn_join(q, emb, 5, "l2", n_centroids=16)
+    )
+    assert (flat, hier, join) == (4, 4, 4)
+
+
+def test_ivfpq_rejects_indivisible_m_before_training(spark, emb, monkeypatch):
+    """``m`` must divide the vector width. Both entry points check it
+    right after the count + dim aggregate: no job beyond that aggregate
+    (no sample collect) and no coarse k-means (hours at the 10^8
+    geometry) before the error."""
+    from mysteryann_spark.operators.similarity import train_pq_codebooks
+
+    calls = []
+    real = similarity._sample_kmeans
+    monkeypatch.setattr(
+        similarity,
+        "_sample_kmeans",
+        lambda *a, **kw: calls.append(1) or real(*a, **kw),
+    )
+    sc = spark.sparkContext
+    emb.count()
+    # the count + dim aggregate's own jobs (AQE runs its exchange as one)
+    agg = _jobs_in(
+        sc,
+        "ivfpq-m7-agg",
+        lambda: emb.agg(F.count(F.lit(1)), F.first("embedding")).head(),
+    )
+    for name, fn in (
+        ("ivfpq-m7-build", lambda: build_ivfpq_index(emb, m=7)),
+        (
+            "ivfpq-m7-books",
+            lambda: train_pq_codebooks(emb, 7, 64, 8, 42, 4096, "vec_id", "embedding"),
+        ),
+    ):
+
+        def rejected(fn=fn):
+            with pytest.raises(ValueError, match="not divisible by m=7"):
+                fn()
+
+        assert _jobs_in(sc, name, rejected) == agg, name
+    assert calls == []

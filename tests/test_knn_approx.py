@@ -124,22 +124,29 @@ def test_empty_path_does_not_mutate_shared_schema(spark, emb, q):
 
 
 def test_routing_trainer_goes_hierarchical_above_threshold(emb, monkeypatch):
-    """Above _FLAT_KMEANS_MAX the routing trainer must return the
+    """Above _FLAT_KMEANS_MAX the coarse trainer must return the
     two-level route (the flat Lloyd pass is the measured ~23 h / ~2.4 h
     wall at the 163,840-list 10^8 geometry — SCALE.md r11); below it the
-    flat path and its None route are unchanged."""
+    flat path and its None route are unchanged. Routing space as
+    ivf_knn_join trains it for l2: raw vectors."""
     from mysteryann_spark.operators import similarity
-    from mysteryann_spark.operators.knn_approx import train_routing_centroids
+    from mysteryann_spark.operators.similarity import train_coarse
+
+    def train(n_centroids, **kw):
+        return train_coarse(
+            emb, n_centroids, 5, 42, 4096, "vec_id", "embedding",
+            normalize=False, **kw,
+        )
 
     monkeypatch.setattr(similarity, "_FLAT_KMEANS_MAX", 8)
-    cmat, route = train_routing_centroids(emb, 16, "l2", branch=4)
+    cmat, route = train(16, branch=4)
     assert route is not None
     l1_32, indptr = route
     assert len(cmat) == 16
     assert indptr[0] == 0 and indptr[-1] == len(cmat)
     assert len(indptr) == len(l1_32) + 1
 
-    cmat_flat, route_flat = train_routing_centroids(emb, 8, "l2")
+    cmat_flat, route_flat = train(8)
     assert route_flat is None and len(cmat_flat) == 8
 
 

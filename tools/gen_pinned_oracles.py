@@ -26,6 +26,7 @@ preserving pins for entries not named on the command line.
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
 OUT = "mysteryann_spark/queries/_pinned_oracles.py"
 HEADER = '''"""Pinned VALUES oracles — generated by tools/gen_pinned_oracles.py.
@@ -140,7 +141,7 @@ def _pin_sql(df) -> str:
 
 
 def main() -> int:
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
     only = set(sys.argv[1:]) or set(PINNABLE)
 
     from mysteryann_spark.queries.registry import all_queries

@@ -22,8 +22,9 @@ import os
 import sys
 import tempfile
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 
 def synth_adjacency(spark, n: int, avg_deg: int, parts: int = 64):

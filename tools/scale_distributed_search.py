@@ -29,8 +29,9 @@ import json
 import os
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from scale_rehearsal import DIM, N_CENTERS, synth_embeddings  # noqa: E402

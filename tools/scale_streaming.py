@@ -33,8 +33,9 @@ import os
 import shutil
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 TYPES = ["click", "error", "purchase", "signup", "view"]
 GAP_US = 1_800_000_000  # 30 min — same gap as the production sessionizer
