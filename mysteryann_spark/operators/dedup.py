@@ -1050,82 +1050,66 @@ def ann_neardup_pairs(
 # ---------------------------------------------------------------------------
 
 
-def connected_components(
-    edges: DataFrame,
-    nodes: DataFrame,
-    max_iters: int = 30,
-) -> DataFrame:
-    """Undirected connected components by min-label propagation: every
-    node's label starts as its own id and each round takes the min over
-    its neighborhood; fixpoint = per-component min id.
+def _component_roots(src: np.ndarray, dst: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(sorted distinct endpoints, each one's component min id) by
+    vectorized hook-and-compress: hook every edge's larger root onto its
+    smaller root, then pointer-jump to the roots; repeat until no edge
+    spans two roots. Parents never exceed their index, so roots are minima."""
+    ids = np.unique(np.concatenate([src, dst]).astype(np.int64, copy=False))
+    a, b = np.searchsorted(ids, src), np.searchsorted(ids, dst)
+    parent = np.arange(len(ids))
+    while True:
+        ra, rb = parent[a], parent[b]
+        live = ra != rb
+        if not live.any():
+            return ids, ids[parent]
+        np.minimum.at(parent, np.maximum(ra, rb)[live], np.minimum(ra, rb)[live])
+        while not np.array_equal(jumped := parent[parent], parent):
+            parent = jumped
 
-    This is the canonical dedup-grouping step (near-dup PAIRS -> disjoint
-    GROUPS with one canonical representative). edges: ``(src, dst)``;
-    nodes: ``(id)``. Returns ``(id, component)``.
 
-    Scale: each round is one shuffle on node id over the (label) state —
-    rounds = graph diameter, and near-dup graphs are unions of small
-    dense clusters, so diameter stays tiny even at 100 TB. (For adversarial
-    long-chain graphs the two-phase large-star/small-star variant
-    [Kiveris et al., "Connected Components in MapReduce"] halves diameter
-    per round; not needed for dedup-shaped graphs.) State is cut per round
-    with localCheckpoint, convergence is one count per round.
+# peak task bytes per edge: _component_roots peaks at 97 B/edge under
+# tracemalloc when every endpoint is distinct (71 B on random graphs, at 10^6
+# and 4*10^6 edges); the Arrow read of (src, dst) adds 16 B
+_EDGE_BYTES = 97 + 16
+
+
+def connected_components(edges: DataFrame, nodes: DataFrame) -> DataFrame:
+    """Undirected connected components — the canonical dedup-grouping
+    step (near-dup PAIRS -> disjoint GROUPS). edges: ``(src, dst)`` over
+    node ids; nodes: ``(id)``. Returns ``(id, comp)``, one row per
+    ``nodes`` row, comp = the min id of the node's component.
+
+    One staged write of the edges, then ONE task labels every endpoint
+    (``_component_roots``; the reference's connectivity pass is one DFS,
+    src/index_bipartite.cpp:2521-2604), so the job count does not depend
+    on the graph's diameter. A left join gives edgeless nodes their own
+    id. Task memory grows with the pair count: above the Python workers'
+    half of host RAM at ``_EDGE_BYTES`` per edge (pair count read from
+    the staged footers, no job) it raises ValueError before the task runs.
     """
-    # Catalyst's Union constraint propagation can throw
-    # `NoSuchElementException: key not found: <attr>` when a child's
-    # lineage carries equality constraints (e.g. least/greatest aliases
-    # from an upstream pair generator) through a localCheckpoint whose
-    # LogicalRDD preserves origin constraints with stale expression ids
-    # (UnionBase.rewriteConstraints maps child constraints through child
-    # outputs and misses). Constraints buy nothing in this loop — every
-    # round is join + union + agg with no inferable filters — so switch
-    # propagation off for the duration and restore the caller's setting.
-    spark = edges.sparkSession
-    _CONSTRAINT_CONF = "spark.sql.constraintPropagation.enabled"
-    prev = spark.conf.get(_CONSTRAINT_CONF, "true")
-    spark.conf.set(_CONSTRAINT_CONF, "false")
-    try:
-        # materialize the symmetric edge set once — it's referenced by every
-        # propagation round, and recomputing an expensive upstream pair
-        # generator (all-pairs jaccard, LSH verify) per round would dominate
-        sym = (
-            edges.select(F.col("src").alias("id"), F.col("dst").alias("nbr"))
-            .unionByName(edges.select(F.col("dst").alias("id"), F.col("src").alias("nbr")))
-            .localCheckpoint(eager=True)
+    from mysteryann_spark.session import host_mem_mb
+    from mysteryann_spark.sources.staging import stage_parquet, staged_row_count, staged_task
+
+    path = stage_parquet(edges.select("src", "dst"))
+    mem_mb = host_mem_mb()  # None off Linux: no ceiling
+    limit = mem_mb and (mem_mb // 2 << 20) // _EDGE_BYTES
+    if limit is not None and (n_edges := staged_row_count([path])) > limit:
+        raise ValueError(
+            f"connected_components: {n_edges} pair edges exceed the limit of "
+            f"{limit} ({mem_mb // 2} MB of worker memory / {_EDGE_BYTES} B per edge)"
         )
-        lab = nodes.select(F.col("id"), F.col("id").alias("comp")).localCheckpoint(eager=True)
-        changed = -1
-        for _ in range(max_iters):
-            prop = (
-                lab.join(sym, "id")
-                .select(F.col("nbr").alias("id"), "comp")
-                .unionByName(lab.select("id", "comp"))
-                .groupBy("id")
-                .agg(F.min("comp").alias("comp"))
-            )
-            new = prop.localCheckpoint(eager=True)
-            changed = (
-                new.alias("n")
-                .join(lab.alias("o"), "id")
-                .where(F.col("n.comp") != F.col("o.comp"))
-                .count()
-            )
-            lab = new
-            if changed == 0:
-                break
-    finally:
-        spark.conf.set(_CONSTRAINT_CONF, prev)
-    if changed != 0:
-        # silently returning partial labels would hand dedup_groups
-        # multiple "canonical survivors" for one true group — refuse
-        # (dedup-shaped graphs converge in a handful of rounds; hitting
-        # this means the input is not one, or max_iters is mis-set)
-        raise RuntimeError(
-            f"connected_components did not converge within {max_iters} rounds "
-            f"({changed} labels still changing); raise max_iters for "
-            f"long-chain graphs (diameter > max_iters)"
-        )
-    return lab
+
+    def label(tbl) -> Iterator[pd.DataFrame]:
+        src, dst = tbl["src"].to_numpy(), tbl["dst"].to_numpy()
+        del tbl  # a multi-chunk read was copied: free it before the kernel peaks
+        ids, comp = _component_roots(src, dst)
+        yield pd.DataFrame({"id": ids, "comp": comp})
+
+    labels = staged_task(edges.sparkSession, path, label, "id bigint, comp bigint")
+    return nodes.join(labels, "id", "left_outer").select(
+        "id", F.coalesce("comp", "id").alias("comp")
+    )
 
 
 def lsh_params_for(
@@ -1261,10 +1245,10 @@ def semantic_dedup(
     Scale shape: the clustering bounds the pairwise work — candidate
     pairs come from ONE equi-shuffle on centroid id and a per-cluster
     GEMM (cluster size ~ N/k rows), never a global cross product; the
-    grouping is the same min-label-propagation connected components the
-    text dedup path uses. At 100 TB you'd raise n_clusters so clusters
-    stay executor-sized — the partitioning key is the model, the plan is
-    unchanged.
+    grouping is the same one-task connected components the text dedup
+    path uses (its memory grows with the pair count). At 100 TB you'd
+    raise n_clusters so clusters stay executor-sized — the partitioning
+    key is the model, the plan is unchanged.
     """
     from mysteryann_spark.operators.similarity import (
         nearest_centroids_udf,

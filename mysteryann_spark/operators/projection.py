@@ -40,9 +40,6 @@ from mysteryann_spark.operators.prune import prune_candidates
 from mysteryann_spark.params import IndexParams
 from mysteryann_spark.sources.staging import table_csr
 
-# rows per frame the single-task BFS emits (bounds each Arrow batch)
-_EMIT_ROWS = 1 << 20
-
 
 def _edges(adj: DataFrame) -> DataFrame:
     return adj.select("node", F.explode("nbrs").alias("cand_id"))
@@ -94,24 +91,18 @@ def _reach_marks(adj_df: DataFrame, ep: int) -> DataFrame:
     row per adjacency row whose node is not reached (False). One staged
     write of the adjacency, then ONE single-partition task runs the
     whole BFS (``_reached_mask``) over it."""
-    from mysteryann_spark.sources.staging import read_staged, stage_parquet
+    from mysteryann_spark.sources.staging import stage_parquet, staged_task
 
     path = stage_parquet(adj_df.select("node", "nbrs"))
     ep = int(ep)
 
-    def bfs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for _ in batches:  # the one-row driver frame only triggers the task
-            pass
-        tbl = read_staged(path)
+    def bfs(tbl) -> Iterator[pd.DataFrame]:
         ids, seen = _reached_mask(tbl, ep)
         nodes = tbl["node"].to_numpy().astype(np.int64)
-        missed = nodes[~seen[np.searchsorted(ids, nodes)]]
-        for vals, flag in ((ids[seen], True), (missed, False)):
-            for s in range(0, len(vals), _EMIT_ROWS):
-                yield pd.DataFrame({"node": vals[s : s + _EMIT_ROWS], "reached": flag})
+        yield pd.DataFrame({"node": ids[seen], "reached": True})
+        yield pd.DataFrame({"node": nodes[~seen[np.searchsorted(ids, nodes)]], "reached": False})
 
-    spark = adj_df.sparkSession
-    return spark.range(0, 1, 1, 1).mapInPandas(bfs, "node bigint, reached boolean")
+    return staged_task(adj_df.sparkSession, path, bfs, "node bigint, reached boolean")
 
 
 def reachable_from(adj_df: DataFrame, ep: int) -> DataFrame:

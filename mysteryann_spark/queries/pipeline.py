@@ -305,8 +305,8 @@ def dedup_ann_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup GROUPS: MinHash-LSH candidates -> exact unigram Jaccard
-    >= 0.9 pair graph (doc_id < 300) -> min-label-propagation connected
-    components; component id = min doc_id of the group. Oracle: DuckDB
+    >= 0.9 pair graph (doc_id < 300) -> connected components in one numpy
+    task; component id = min doc_id of the group. Oracle: DuckDB
     recursive CTE reachability over the all-pairs graph (the LSH banding
     provably recovers it; see dedup_groups)."""
     from mysteryann_spark.operators.dedup import dedup_groups

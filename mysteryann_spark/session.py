@@ -15,6 +15,16 @@ from pyspark.sql import SparkSession
 _DRIVER_MEM_CAP_MB = 24 * 1024
 
 
+def host_mem_mb(meminfo: str = "/proc/meminfo") -> int | None:
+    """The host's ``MemTotal`` in MB; None when ``meminfo`` is unreadable
+    (non-Linux hosts)."""
+    try:
+        with open(meminfo) as f:
+            return next(int(ln.split()[1]) // 1024 for ln in f if ln.startswith("MemTotal:"))
+    except (OSError, ValueError, IndexError, StopIteration):
+        return None
+
+
 def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
     """``spark.driver.memory`` default derived from the host: half of
     ``MemTotal`` (local mode runs every task inside the driver JVM, and
@@ -23,16 +33,7 @@ def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
     memory, so the kernel OOM-kills the process instead of Spark raising
     a legible error. Falls back to 24g when ``meminfo`` is unreadable
     (non-Linux hosts). ``SPARK_DRIVER_MEM`` overrides it in ``get_spark``."""
-    try:
-        with open(meminfo) as f:
-            for line in f:
-                if line.startswith("MemTotal:"):
-                    total_mb = int(line.split()[1]) // 1024  # reported in kB
-                    break
-            else:
-                raise ValueError("no MemTotal line")
-    except (OSError, ValueError, IndexError):
-        return f"{_DRIVER_MEM_CAP_MB}m"
+    total_mb = host_mem_mb(meminfo) or 2 * _DRIVER_MEM_CAP_MB
     return f"{min(_DRIVER_MEM_CAP_MB, max(1024, total_mb // 2))}m"
 
 

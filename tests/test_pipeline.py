@@ -379,6 +379,11 @@ def test_connected_components_known_graph(spark):
     nodes = spark.createDataFrame([(i,) for i in (1, 2, 3, 10, 11, 12, 20, 21, 99)], "id long")
     got = {r["id"]: r["comp"] for r in connected_components(edges, nodes).collect()}
     assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 12: 10, 20: 20, 21: 20, 99: 99}
+    # a 400-node path (diameter 399) is one component labelled by its min id
+    path_edges = spark.createDataFrame([(i + 1, i) for i in range(399)], "src long, dst long")
+    path_nodes = spark.createDataFrame([(i,) for i in range(400)], "id long")
+    rows = connected_components(path_edges, path_nodes).collect()
+    assert len(rows) == 400 and {r["comp"] for r in rows} == {0}
 
 
 def test_dedup_groups_full_corpus_matches_all_pairs(spark):
@@ -397,19 +402,124 @@ def test_dedup_groups_full_corpus_matches_all_pairs(spark):
     assert len(set(got.values())) < len(got)  # corpus really has dup groups
 
 
-def test_connected_components_raises_when_not_converged(spark):
-    """A chain longer than max_iters must refuse rather than silently
-    return split components."""
-    import pytest as _pytest
+def _union_find(src, dst):
+    """Pure-Python reference: {id: min id of its component} over the
+    edge endpoints."""
+    parent = {}
 
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in zip(src, dst):
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in list(parent)}
+
+
+def _check_roots(src, dst):
+    import numpy as np
+
+    from mysteryann_spark.operators.dedup import _component_roots
+
+    src, dst = np.asarray(src, dtype=np.int64), np.asarray(dst, dtype=np.int64)
+    ids, comp = _component_roots(src, dst)
+    ref = _union_find(src.tolist(), dst.tolist())
+    assert ids.tolist() == sorted(ref)
+    assert dict(zip(ids.tolist(), comp.tolist())) == ref
+
+
+def test_component_roots_match_union_find():
+    """The hook-and-compress kernel labels every endpoint with its
+    component's min id, like a pure-Python union-find: seeded random
+    graphs over dense and sparse 64-bit ids (self-loops and duplicate
+    edges arise at random), long shuffled chains, and edge cases."""
+    import numpy as np
+
+    rng = np.random.default_rng(7)
+    for trial in range(200):
+        n = int(rng.integers(1, 120))
+        m = int(rng.integers(0, 2 * n))
+        pool = (
+            np.sort(rng.choice(np.iinfo(np.int64).max, n, replace=False))
+            if trial % 2
+            else np.arange(n)
+        )
+        src, dst = pool[rng.integers(0, n, m)], pool[rng.integers(0, n, m)]
+        if trial % 3 == 0:  # force duplicate edges and self-loops
+            src, dst = np.concatenate([src, src, pool[:3]]), np.concatenate([dst, dst, pool[:3]])
+        _check_roots(src, dst)
+    for n in (2, 50, 3000):  # shuffled chains: diameter n - 1
+        perm = rng.permutation(n) * 1_000_003 + (1 << 40)
+        _check_roots(perm[:-1], perm[1:])
+    _check_roots([], [])
+    _check_roots([5, 5], [5, 5])  # self-loop only
+    _check_roots([-3, 2**62], [2**62, 7])  # negative and large ids
+
+
+def test_connected_components_job_count_independent_of_diameter(spark):
+    """Labelling a 20-node and a 400-node path costs the same, small,
+    number of Spark jobs: a per-round propagation loop would scale with
+    the diameter."""
     from mysteryann_spark.operators.dedup import connected_components
 
-    edges = spark.createDataFrame([(i, i + 1) for i in range(12)], "src long, dst long")
-    nodes = spark.createDataFrame([(i,) for i in range(13)], "id long")
-    with _pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(edges, nodes, max_iters=3)
-    got = {r["id"]: r["comp"] for r in connected_components(edges, nodes, max_iters=15).collect()}
-    assert set(got.values()) == {0}
+    sc = spark.sparkContext
+
+    def path_jobs(n: int) -> int:
+        edges = spark.createDataFrame([(i, i + 1) for i in range(n - 1)], "src long, dst long")
+        nodes = spark.createDataFrame([(i,) for i in range(n)], "id long")
+        group = f"components-path-{n}"
+        sc.setJobGroup(group, "connected-components job-count guard")
+        try:
+            rows = connected_components(edges, nodes).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        # the status tracker is fed by the asynchronous listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        assert len(rows) == n and {r["comp"] for r in rows} == {0}
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    near, far = path_jobs(20), path_jobs(400)
+    assert near == far <= 3, (near, far)
+
+
+def test_connected_components_rejects_pairs_above_host_ceiling(spark, monkeypatch):
+    """Above the host-derived pair ceiling the operator raises a
+    ValueError naming the pair count, and runs no job after the staged
+    write of the edges."""
+    from mysteryann_spark.operators import dedup
+    from mysteryann_spark.sources import staging
+
+    sc = spark.sparkContext
+    group = "components-ceiling"
+
+    def jobs() -> int:
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    after_write = []
+    real_stage = staging.stage_parquet
+
+    def stage_and_count(df, *args, **kwargs):
+        path = real_stage(df, *args, **kwargs)
+        after_write.append(jobs())
+        return path
+
+    monkeypatch.setattr(staging, "stage_parquet", stage_and_count)
+    monkeypatch.setattr(dedup, "_EDGE_BYTES", 1 << 40)  # the limit rounds to 0 edges
+    edges = spark.createDataFrame([(1, 2), (2, 3), (7, 8)], "src long, dst long")
+    nodes = spark.createDataFrame([(i,) for i in range(10)], "id long")
+    sc.setJobGroup(group, "connected-components ceiling")
+    try:
+        with pytest.raises(ValueError, match=r"\b3 pair edges exceed the limit of 0 "):
+            dedup.connected_components(edges, nodes)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(after_write) == 1 and jobs() == after_write[0] >= 1, (after_write, jobs())
 
 
 def test_salted_join_rejects_right_preserving_types(spark):
