@@ -9,10 +9,12 @@ product.
 Scale notes per operator:
 - exact/fingerprint dedup: one hash-groupBy — the canonical 100 TB dedup
   pass (map-side md5, shuffle only (hash, doc_id) pairs).
-- MinHash-LSH: signatures are per-row expressions (no shuffle); banding
-  shuffles (band_id, band_hash, doc_id) tuples; only same-bucket pairs are
-  verified. Hot buckets (boilerplate docs) would skew — cap bucket size /
-  salt in a production run; here bucket sizes are logged by the caller.
+- MinHash-LSH: identical token sets collapse to one rep; signatures and
+  band buckets are computed in numpy while the per-rep table is staged;
+  banding shuffles (band, bucket, rep) triples; only same-bucket pairs are
+  verified, against a host-resident artifact whose size is checked
+  against worker memory before the verify job. Hot buckets fan out over
+  the spread probe side of a broadcast self-join.
 - SimHash: signatures fully per-row (one 64-bit signature per doc, no
   shuffle); pair generation is exact pigeonhole banding — equi-join on
   (band, chunk), XOR-popcount verify, never a cartesian.
@@ -71,23 +73,6 @@ def exact_dedup(docs: DataFrame, key_expr=None) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def minhash_signatures(
-    docs: DataFrame, num_perm: int = 16, seed: int = 42
-) -> DataFrame:
-    """Per-doc MinHash signature over the distinct-token (unigram shingle)
-    set. Each permutation is xxhash64(perm_seed, xxhash64(token)) minimized
-    over the shingle set — a pure Catalyst expression, zero shuffle, and
-    the same signature family ``minhash_lsh_pairs`` bands over."""
-    htok = F.array_distinct(F.transform(tokens_col("text"), lambda t: F.xxhash64(t)))
-    sig = F.array(
-        *[
-            F.array_min(F.transform(htok, lambda h: F.xxhash64(F.lit(seed + i), h)))
-            for i in range(num_perm)
-        ]
-    )
-    return docs.select("doc_id", sig.alias("sig"))
-
-
 _VERIFY_SCHEMA = StructType(
     [
         StructField("id_a", LongType(), False),
@@ -135,8 +120,7 @@ def _minhash_mat(
 
 def _band_buckets(sigmat: np.ndarray, bands: int, rows_per_band: int) -> np.ndarray:
     """(n_reps, bands) int64 bucket ids: iterated splitmix combine of the
-    band's signature rows (the numpy twin of the SQL xxhash64(rows...)
-    bucket key)."""
+    band's signature rows."""
     n = sigmat.shape[0]
     out = np.empty((n, bands), dtype=np.uint64)
     for b in range(bands):
@@ -193,6 +177,81 @@ def _expand_member_pairs(
         )
 
 
+def _verify_artifact(staged: str, num_perm: int, seed: int) -> tuple:
+    """The verify kernel's host-shared artifact, built from the staged
+    per-rep table: (reps, htok CSR indptr, sigmat, member CSR indptr,
+    member ids, token ranks, packed (rep, token-rank) keys, [vocab size]).
+    ``_VERIFY_BYTES`` sizes its build peak."""
+    import pyarrow.parquet as pq
+
+    from mysteryann_spark.sources.staging import table_ragged
+
+    tbl = pq.read_table(staged, columns=["rep", "htok", "members"])
+    reps, indptr, flat = table_ragged(tbl, "rep", "htok")
+    flat = np.ascontiguousarray(flat)
+    # member lists in the SAME rep order (table_ragged id-sorts both)
+    _, mind, mflat = table_ragged(tbl, "rep", "members")
+    # recompute the splitmix64 MinHash matrix once per worker from the
+    # CSR token sets (cheaper than shipping num_perm longs per rep)
+    sigmat = _minhash_mat(indptr, flat, num_perm, seed)
+    # Global (rep_index, token_rank) key table for the intersection
+    # kernel: token values are full-range int64 hashes, so they are
+    # RANKED against the worker's token vocabulary and packed with
+    # the rep index into one int64 key. Each rep's htok segment is
+    # sorted and distinct, so the packed keys are globally ascending
+    # — membership of (rep b, token t) is ONE searchsorted, and a
+    # whole chunk of pairs intersects in a single vectorized call
+    # (the per-distinct-rep Python loop this replaces measured ~10x
+    # the kernel's single-thread cost in per-group numpy-call
+    # overhead once the pair set was split over 32 tasks).
+    vocab = np.unique(flat)
+    v = max(1, len(vocab))
+    if len(reps) and v > (2**62) // max(1, len(reps)):
+        raise ValueError(
+            "minhash verify key space overflow: "
+            f"{len(reps)} reps x {v} distinct tokens"
+        )
+    frank = np.searchsorted(vocab, flat)
+    rep_of = np.repeat(np.arange(len(reps), dtype=np.int64), np.diff(indptr))
+    keys_b = rep_of * v + frank
+    # v rides as an int64 array: an all-ndarray artifact is mapped
+    # host-shared, a Python int would force private per-worker builds
+    return reps, indptr, sigmat, mind, mflat, frank, keys_b, np.array([v])
+
+
+# Peak build bytes of _verify_artifact per distinct token set (beyond the
+# 8 B per permutation of its sigmat row), per token and per member id:
+# numpy peaks at 40 / 40 / 8 B under tracemalloc (100k-200k reps of 25-100
+# all-distinct tokens, 1-5 members, 16 and 128 perms; linear to <1%), and
+# the Arrow read, alive for the whole build, adds 16 / 26 / 16 B.
+_VERIFY_BYTES = (40 + 16, 40 + 26, 8 + 16)
+
+
+def _check_verify_ceiling(staged: str, num_perm: int) -> None:
+    """Raise ValueError before the verify job when the host-shared verify
+    artifact would outgrow the Python workers' half of host memory. Sizes
+    come from the staged per-rep table's footers (no Spark job)."""
+    from mysteryann_spark.session import worker_mem_mb
+    from mysteryann_spark.sources.staging import staged_leaf_counts
+
+    mem_mb = worker_mem_mb()
+    if mem_mb is None:
+        return
+    n_reps, leaves = staged_leaf_counts(staged)
+    per_rep, per_token, per_member = _VERIFY_BYTES
+    need = (
+        n_reps * (per_rep + 8 * num_perm)
+        + leaves.get("htok", 0) * per_token
+        + leaves.get("members", 0) * per_member
+    )
+    if need > mem_mb << 20:
+        raise ValueError(
+            f"minhash_lsh_pairs: the verify artifact for {n_reps} distinct "
+            f"token sets needs {need >> 20} MB, above the limit of {mem_mb} MB "
+            f"of worker memory (half of host RAM)"
+        )
+
+
 def _verify_pairs_staged(
     cand: DataFrame, staged: str, num_perm: int, threshold: float, seed: int
 ) -> DataFrame:
@@ -202,69 +261,27 @@ def _verify_pairs_staged(
 
     ``staged`` is the Parquet artifact written by ``minhash_lsh_pairs``
     (one row per distinct token set: rep, htok, members, buckets); it is
-    loaded per worker process as CSR numpy arrays — no driver collect,
-    no per-pair array shipping (only the columns the kernel uses are
-    decoded; the buckets column never leaves the parquet). The kernel
-    computes the signature estimate as one vectorized matrix compare and
-    the exact intersection per pair via searchsorted over the two sorted
-    token arrays — the exact-Jaccard arithmetic (inter / (na + nb -
-    inter)) is identical double math to the SQL join path, so the
-    jaccard VALUES and the >=threshold verdicts agree bit-for-bit for
-    any pair both paths consider. The CANDIDATE sets and est_jaccard may
-    differ between the two paths: this path signs/bands with the
-    splitmix64 family while the SQL path uses xxhash64, so band buckets
-    (and thus which sub-threshold pairs get examined at all) are drawn
-    from different hash families. tests/test_pipeline.py compares the
-    two paths' final outputs on the test corpus.
+    loaded once per host as CSR numpy arrays (``_verify_artifact``) — no
+    driver collect, no per-pair array shipping (the buckets column never
+    leaves the parquet). The kernel computes the signature estimate as
+    one vectorized matrix compare over the splitmix64 signatures the
+    staging pass banded with, and the exact intersection per pair via one
+    searchsorted over packed (rep, token-rank) keys; jaccard is
+    inter / (na + nb - inter) in double math.
 
     Surviving rep pairs expand to (id_a, id_b) doc pairs HERE — a
     vectorized members_a x members_b cross product over the worker's CSR
-    member lists — instead of through two broadcast member joins plus
-    two JVM explodes: the member lists already sit next to the kernel,
-    so the expansion costs zero broadcast builds, zero join stages, and
-    two fewer driver jobs per query (measured r13; values identical —
-    same pairs, least/greatest orientation, est/jaccard constant across
-    a rep pair's expansion). Intra-group (jaccard = 1.0) pairs remain
-    the caller's separate JVM leg.
+    member lists, in frames of at most ``_PAIR_ROWS`` rows — with no
+    member join and no JVM explode (est/jaccard are constant across a
+    rep pair's expansion). Intra-group (jaccard = 1.0) pairs remain the
+    caller's separate JVM leg.
     """
-    from mysteryann_spark.sources.staging import load_staged, table_ragged
+    from functools import partial
+
+    from mysteryann_spark.sources.staging import load_staged
 
     pair_rows = _PAIR_ROWS  # read driver-side; the kernel closure carries it
-
-    def build():
-        import pyarrow.parquet as pq
-
-        tbl = pq.read_table(staged, columns=["rep", "htok", "members"])
-        reps, indptr, flat = table_ragged(tbl, "rep", "htok")
-        flat = np.ascontiguousarray(flat)
-        # member lists in the SAME rep order (table_ragged id-sorts both)
-        _, mind, mflat = table_ragged(tbl, "rep", "members")
-        # recompute the splitmix64 MinHash matrix once per worker from the
-        # CSR token sets (cheaper than shipping num_perm longs per rep)
-        sigmat = _minhash_mat(indptr, flat, num_perm, seed)
-        # Global (rep_index, token_rank) key table for the intersection
-        # kernel: token values are full-range int64 hashes, so they are
-        # RANKED against the worker's token vocabulary and packed with
-        # the rep index into one int64 key. Each rep's htok segment is
-        # sorted and distinct, so the packed keys are globally ascending
-        # — membership of (rep b, token t) is ONE searchsorted, and a
-        # whole chunk of pairs intersects in a single vectorized call
-        # (the per-distinct-rep Python loop this replaces measured ~10x
-        # the kernel's single-thread cost in per-group numpy-call
-        # overhead once the pair set was split over 32 tasks).
-        vocab = np.unique(flat)
-        v = max(1, len(vocab))
-        if len(reps) and v > (2**62) // max(1, len(reps)):
-            raise ValueError(
-                "minhash verify key space overflow: "
-                f"{len(reps)} reps x {v} distinct tokens"
-            )
-        frank = np.searchsorted(vocab, flat)
-        rep_of = np.repeat(np.arange(len(reps), dtype=np.int64), np.diff(indptr))
-        keys_b = rep_of * v + frank
-        # v rides as an int64 array: an all-ndarray artifact is mapped
-        # host-shared, a Python int would force private per-worker builds
-        return reps, indptr, sigmat, mind, mflat, frank, keys_b, np.array([v])
+    build = partial(_verify_artifact, staged, num_perm, seed)
 
     def verify(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         reps, indptr, sigmat, mind, mflat, frank, keys_b, v_arr = load_staged(
@@ -377,8 +394,6 @@ def minhash_lsh_pairs(
     bands: int = 4,
     threshold: float = 0.5,
     seed: int = 42,
-    bucket_cap: int | None = None,
-    assume_broadcastable: bool = True,
 ) -> DataFrame:
     """Candidate near-dup pairs via LSH banding, with both the signature
     estimate and the exact token-set Jaccard for verification.
@@ -391,33 +406,25 @@ def minhash_lsh_pairs(
     are collapsed to one representative before signatures are computed:
     LSH banding, candidate dedup, and exact verification all run over
     distinct sets only, then verified rep pairs expand back to doc pairs
-    with an id-equi join (members_a x members_b carries the rep pair's
-    jaccard; intra-group pairs are exactly 1.0). On boilerplate-heavy
-    corpora this cuts per-pair verification work by the mean squared
-    duplicate-group size while producing the IDENTICAL pair set — same
-    buckets, same candidates, same verdicts (tests/test_pipeline.py).
+    (members_a x members_b carries the rep pair's jaccard; intra-group
+    pairs are exactly 1.0). On boilerplate-heavy corpora this cuts
+    per-pair verification work by the mean squared duplicate-group size
+    while producing the IDENTICAL pair set.
 
-    ``bucket_cap`` (optional) drops band buckets holding more than that
-    many DISTINCT sets — the standard guard against adversarially hot
-    buckets (a boilerplate shingle-set shared by millions of docs). It
-    trades completeness for a hard bound on candidate fan-out, so it is
-    off by default and the registry entry runs exact.
-
-    ``assume_broadcastable`` (default True) selects the plan for when
-    distinct token sets fit executor RAM (~10^7 reps): the per-rep table
-    is staged once with numpy signatures and band buckets, the bucket
-    self-join's build side is broadcast, and a staged-Arrow kernel
-    verifies candidate pairs and expands them to doc pairs (no member
-    joins). ``False`` runs a DIFFERENT plan for beyond that scale, with
-    no broadcast hints (they bypass ``autoBroadcastJoinThreshold``):
-    Catalyst xxhash64 signatures and banding over a checkpointed per-rep
-    table, then a SQL verify (``array_intersect`` per pair over shuffled
-    joins of the per-rep payloads) and member joins back to doc pairs.
-    The two plans band with different hash families, so candidates and
-    ``est_jaccard`` differ; verified pairs carry the same exact
-    ``jaccard`` (tests/test_pipeline.py).
+    One plan: the per-rep table is staged once with numpy (splitmix64)
+    signatures and band buckets, the bucket self-join broadcasts its
+    build side, and a staged-Arrow kernel (``_verify_pairs_staged``)
+    verifies candidate pairs and expands them to doc pairs. The verify
+    artifact is host-resident; when its size, read from the staged
+    table's footers at ``_VERIFY_BYTES``, exceeds the Python workers'
+    half of host memory, a ValueError naming both numbers is raised
+    before the verify job runs.
     """
-    maybe_bc = F.broadcast if assume_broadcastable else (lambda df: df)
+    import pyarrow as pa
+
+    from mysteryann_spark.session import spread
+    from mysteryann_spark.sources.staging import stage_parquet
+
     rows_per_band = num_perm // bands
     htok = F.array_sort(
         F.array_distinct(F.transform(tokens_col("text"), lambda t: F.xxhash64(t)))
@@ -431,156 +438,85 @@ def minhash_lsh_pairs(
         F.min("doc_id").alias("rep"),
         F.sort_array(F.collect_list("doc_id")).alias("members"),
     )
-    # MinHash over the hashed token set: permutation i is
-    # min(xxhash64(seed + i, token_hash)) — a pure Catalyst expression.
-    sig = F.array(
-        *[
-            F.array_min(
-                F.transform("htok", lambda h: F.xxhash64(F.lit(seed + i), h))
+    # Tokenize + group + BAND exactly ONCE: the per-rep table (a few
+    # hundred bytes per distinct token set) is staged as Parquet by a
+    # single job, and every consumer — banding, the verify kernel, the
+    # intra-group expansion — reads the staged copy instead of
+    # re-deriving the lineage. Signing and banding happen in numpy
+    # (splitmix64 family) inside one Arrow kernel fused into the write
+    # job, and the buckets are stored as a per-rep array column, so
+    # downstream banding is a pure-JVM posexplode.
+
+    def band_stage_kernel(batches: "Iterator[pa.RecordBatch]") -> "Iterator[pa.RecordBatch]":
+        for rb in batches:
+            n = rb.num_rows
+            if n == 0:
+                continue
+            htok_arr = rb.column(rb.schema.get_field_index("htok"))
+            # raw list offsets index the child values buffer even for
+            # sliced arrays; normalize to a batch-local CSR
+            off = htok_arr.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
+            vals = htok_arr.values.to_numpy(zero_copy_only=False)
+            indptr = off - off[0]
+            flat = np.ascontiguousarray(vals[off[0] : off[-1]]).astype(
+                np.int64, copy=False
             )
-            for i in range(num_perm)
-        ]
+            sigmat = _minhash_mat(indptr, flat, num_perm, seed)
+            buckets = _band_buckets(sigmat, bands, rows_per_band)
+            # int32 list offsets cap one batch at 2^31 bucket cells;
+            # reachable only if arrow.maxRecordsPerBatch is raised/
+            # disabled — fail loudly instead of silently wrapping
+            if (n + 1) * bands >= 2**31:
+                raise ValueError(
+                    f"band-bucket batch too large for int32 list "
+                    f"offsets: {n} rows x {bands} bands; lower "
+                    "spark.sql.execution.arrow.maxRecordsPerBatch"
+                )
+            bucket_col = pa.ListArray.from_arrays(
+                pa.array(np.arange(0, (n + 1) * bands, bands, dtype=np.int32)),
+                pa.array(buckets.reshape(-1)),
+            )
+            yield pa.RecordBatch.from_arrays(
+                [
+                    rb.column(rb.schema.get_field_index("rep")),
+                    htok_arr,
+                    rb.column(rb.schema.get_field_index("members")),
+                    bucket_col,
+                ],
+                names=["rep", "htok", "members", "buckets"],
+            )
+
+    staged_schema = (
+        "rep bigint, htok array<bigint>, members array<bigint>, "
+        "buckets array<bigint>"
     )
-    if assume_broadcastable:
-        # Tokenize + group + BAND exactly ONCE: the per-rep table (a few
-        # hundred bytes per distinct token set) is staged as Parquet by a
-        # single job, and every consumer — banding, the verify kernel,
-        # both member-expansion joins — reads the staged copy instead of
-        # re-deriving the lineage. Signing and banding happen in numpy
-        # (splitmix64 family) inside Arrow kernels: the Catalyst
-        # num_perm-pass xxhash64 expression cost more in codegen compile
-        # than the whole query's execution. Band buckets are computed IN
-        # the staging pass (one Arrow kernel fused into the write job)
-        # and stored as a per-rep array column, so downstream banding is
-        # a pure-JVM posexplode — previously the band kernel ran as a
-        # separate Python stage on BOTH sides of the bucket self-join
-        # (probe + broadcast build), re-shipping every token set through
-        # Arrow twice and paying the fixed Python-stage floor twice.
-        import pyarrow as pa
-
-        from mysteryann_spark.sources.staging import stage_parquet
-
-        def band_stage_kernel(batches: "Iterator[pa.RecordBatch]") -> "Iterator[pa.RecordBatch]":
-            for rb in batches:
-                n = rb.num_rows
-                if n == 0:
-                    continue
-                htok_arr = rb.column(rb.schema.get_field_index("htok"))
-                # raw list offsets index the child values buffer even for
-                # sliced arrays; normalize to a batch-local CSR
-                off = htok_arr.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
-                vals = htok_arr.values.to_numpy(zero_copy_only=False)
-                indptr = off - off[0]
-                flat = np.ascontiguousarray(vals[off[0] : off[-1]]).astype(
-                    np.int64, copy=False
-                )
-                sigmat = _minhash_mat(indptr, flat, num_perm, seed)
-                buckets = _band_buckets(sigmat, bands, rows_per_band)
-                # int32 list offsets cap one batch at 2^31 bucket cells;
-                # reachable only if arrow.maxRecordsPerBatch is raised/
-                # disabled — fail loudly instead of silently wrapping
-                # (r12 ADVICE)
-                if (n + 1) * bands >= 2**31:
-                    raise ValueError(
-                        f"band-bucket batch too large for int32 list "
-                        f"offsets: {n} rows x {bands} bands; lower "
-                        "spark.sql.execution.arrow.maxRecordsPerBatch"
-                    )
-                bucket_col = pa.ListArray.from_arrays(
-                    pa.array(
-                        np.arange(0, (n + 1) * bands, bands, dtype=np.int32)
-                    ),
-                    pa.array(buckets.reshape(-1)),
-                )
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        rb.column(rb.schema.get_field_index("rep")),
-                        htok_arr,
-                        rb.column(rb.schema.get_field_index("members")),
-                        bucket_col,
-                    ],
-                    names=["rep", "htok", "members", "buckets"],
-                )
-
-        staged_schema = (
-            "rep bigint, htok array<bigint>, members array<bigint>, "
-            "buckets array<bigint>"
+    staged = stage_parquet(
+        grouped.select("rep", "htok", "members").mapInArrow(
+            band_stage_kernel, staged_schema
         )
-        staged = stage_parquet(
-            grouped.select("rep", "htok", "members").mapInArrow(
-                band_stage_kernel, staged_schema
-            )
-        )
-        # explicit schema: the staged layout is statically known, so the
-        # read skips the schema-inference footer job (one driver job per
-        # query invocation; at scale, a footer read per staged part file)
-        groups = docs.sparkSession.read.schema(staged_schema).parquet(staged)
-        sigs = None
-    else:
-        staged = None
-        groups = grouped.withColumn("sig", sig).localCheckpoint(eager=True)
-        sigs = groups.select("rep", "htok", F.size("htok").alias("ntok"), "sig")
-    # Band the signatures but shuffle ONLY (band, bucket, rep) triples —
-    # carrying the sig arrays through the bucket self-join and the pair
-    # dedup would multiply shuffle volume by num_perm; the per-rep payload
-    # (signature + token-hash set) re-attaches after the candidate pair
-    # set is deduplicated (and so minimal).
-    if assume_broadcastable:
-        # Buckets were computed in the staging pass; posexplode's position
-        # column IS the band index (the fused kernel emits buckets in band
-        # order), so the (rep, band, bucket) triples are identical to the
-        # ones the standalone band kernel produced.
-        banded = groups.select(
-            "rep", F.posexplode("buckets").alias("band", "bucket")
-        )
-    else:
-        banded = sigs.select(
-            "rep",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(b).cast("long").alias("band"),
-                            F.xxhash64(
-                                *[
-                                    F.element_at("sig", b * rows_per_band + r + 1)
-                                    for r in range(rows_per_band)
-                                ]
-                            ).alias("bucket"),
-                        )
-                        for b in range(bands)
-                    ]
-                )
-            ).alias("bb"),
-        ).select("rep", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
-    if bucket_cap is not None:
-        w = Window.partitionBy("band", "bucket")
-        banded = (
-            banded.withColumn("bsz", F.count("*").over(w))
-            .where(F.col("bsz") <= bucket_cap)
-            .drop("bsz")
-        )
+    )
+    _check_verify_ceiling(staged, num_perm)
+    # explicit schema: the staged layout is statically known, so the
+    # read skips the schema-inference footer job (one driver job per
+    # query invocation; at scale, a footer read per staged part file)
+    groups = docs.sparkSession.read.schema(staged_schema).parquet(staged)
+    # Shuffle ONLY (band, bucket, rep) triples; posexplode's position
+    # column IS the band index (the staging kernel emits buckets in band
+    # order).
+    banded = groups.select("rep", F.posexplode("buckets").alias("band", "bucket"))
 
     # The bucket self-join fans out quadratically inside hot buckets while
     # its INPUT is tiny (one row per rep per band) — AQE sizes partitions
     # by input bytes and would run the explosion nearly serial. Spread the
     # PROBE side across the cluster first; the pair dedup below re-hashes.
-    # The build side stays unspread: under the broadcast hint a
-    # repartition there is a pure extra exchange (the broadcast flattens
-    # partitioning anyway), and under the shuffled fallback the join's own
-    # exchange supersedes it.
-    from mysteryann_spark.session import spread
-
-    a = spread(banded).select("band", "bucket", F.col("rep").alias("rep_a"))
-    b = banded.select("band", "bucket", F.col("rep").alias("rep_b"))
     # Broadcasting the build side keeps the probe side's spread
     # partitioning, so a hot bucket's pair explosion parallelizes over
     # every core instead of landing on the one task that owns its join
     # key (AQE's skew split keys on shuffle BYTES and never fires here —
-    # the input is KBs, the blowup is in the output). The build side is
-    # one (band, bucket) row per distinct token set; beyond broadcast
-    # range (~10^7 sets) drop the hint and the same plan runs as a
-    # shuffled equi-join.
+    # the input is KBs, the blowup is in the output). A repartition of
+    # the build side would be a pure extra exchange.
+    a = spread(banded).select("band", "bucket", F.col("rep").alias("rep_a"))
+    b = banded.select("band", "bucket", F.col("rep").alias("rep_b"))
     # One explicit hash shuffle serves BOTH the pair dedup and the verify
     # kernel's parallelism: repartition-by-num on the pair key satisfies
     # dropDuplicates' distribution requirement (no second shuffle) and is
@@ -589,93 +525,15 @@ def minhash_lsh_pairs(
     # verify.
     target = docs.sparkSession.sparkContext.defaultParallelism
     cand = (
-        a.join(maybe_bc(b), ["band", "bucket"])
+        a.join(F.broadcast(b), ["band", "bucket"])
         .where(F.col("rep_a") < F.col("rep_b"))
         .select("rep_a", "rep_b")
         .repartition(target, "rep_a", "rep_b")
         .dropDuplicates(["rep_a", "rep_b"])
     )
-    if assume_broadcastable:
-        # Staged Arrow verify: each rep's token set crosses the wire ONCE
-        # (one staged-Parquet read per worker process), instead of once
-        # per candidate pair. The SQL join form below ships every token
-        # array ~pair-degree times through the verify projection — on a
-        # template-heavy corpus (sf0.1: 1.6M candidate pairs over 3.9k
-        # distinct sets, mean pair degree ~420) that is GBs of array
-        # movement plus an interpreted array_intersect per pair; the
-        # staged kernel moves 16 B/pair and intersects with vectorized
-        # searchsorted over worker-cached CSR arrays. Same regime gate as
-        # the broadcast hints: per-rep payloads fit worker RAM. The
-        # kernel also expands surviving rep pairs to doc pairs in place
-        # (member lists are already worker-resident), so this path has
-        # NO member joins at all — two broadcast builds and two driver
-        # jobs fewer per query than the join form below.
-        cross = _verify_pairs_staged(cand, staged, num_perm, threshold, seed)
-    else:
-        est = (
-            F.size(
-                F.filter(
-                    F.zip_with("sig_a", "sig_b", lambda x, y: (x == y).cast("int")),
-                    lambda v: v == 1,
-                )
-            ).cast("double")
-            / F.lit(float(num_perm))
-        )
-        # |A ∪ B| = |A| + |B| - |A ∩ B| — one array_intersect per pair, no
-        # materialized union array (the per-pair verify is the cost center)
-        inter = F.size(F.array_intersect("tok_a", "tok_b")).cast("double")
-        jac = inter / (F.col("na") + F.col("nb") - inter)
-        verified = (
-            cand.join(
-                sigs.select(
-                    F.col("rep").alias("rep_a"),
-                    F.col("htok").alias("tok_a"),
-                    F.col("ntok").cast("double").alias("na"),
-                    F.col("sig").alias("sig_a"),
-                ),
-                "rep_a",
-            )
-            .join(
-                sigs.select(
-                    F.col("rep").alias("rep_b"),
-                    F.col("htok").alias("tok_b"),
-                    F.col("ntok").cast("double").alias("nb"),
-                    F.col("sig").alias("sig_b"),
-                ),
-                "rep_b",
-            )
-            .withColumn("est_jaccard", est)
-            .withColumn("jaccard", jac)
-            .where(F.col("jaccard") >= threshold)
-            .select("rep_a", "rep_b", "est_jaccard", "jaccard")
-        )
-        # Expand verified rep pairs to doc pairs (join form: the staged
-        # path expands inside the verify kernel instead). est/jaccard are
-        # constant across a group pair (identical token sets => identical
-        # signatures).
-        mem = groups.select("rep", "members")
-        cross = (
-            verified.join(
-                maybe_bc(
-                    mem.select(F.col("rep").alias("rep_a"), F.col("members").alias("ma"))
-                ),
-                "rep_a",
-            )
-            .join(
-                maybe_bc(
-                    mem.select(F.col("rep").alias("rep_b"), F.col("members").alias("mb"))
-                ),
-                "rep_b",
-            )
-            .select(F.explode("ma").alias("x"), "mb", "est_jaccard", "jaccard")
-            .select("x", F.explode("mb").alias("y"), "est_jaccard", "jaccard")
-            .select(
-                F.least("x", "y").alias("id_a"),
-                F.greatest("x", "y").alias("id_b"),
-                "est_jaccard",
-                "jaccard",
-            )
-        )
+    # Each rep's token set crosses the wire ONCE (one host-shared load)
+    # instead of once per candidate pair, and the kernel moves 16 B/pair.
+    cross = _verify_pairs_staged(cand, staged, num_perm, threshold, seed)
     members = groups.select("rep", "members")
     intra = (
         members.where(F.size("members") >= 2)
@@ -854,7 +712,6 @@ def simhash_pigeonhole_pairs(
     docs: DataFrame,
     max_hamming: int = 3,
     bands: int | None = None,
-    assume_broadcastable: bool = True,
     hash_fn: str = "xxhash64",
 ) -> DataFrame:
     """All (id_a < id_b, hamming) pairs within ``max_hamming`` via
@@ -870,12 +727,10 @@ def simhash_pigeonhole_pairs(
     verified rep pairs expand back through a members join — intra-group
     pairs are Hamming 0 by construction.
 
-    ``assume_broadcastable`` (default True) places broadcast hints on
-    the per-rep side tables (banded chunks, signature payloads, member
-    lists) — right while distinct signatures fit executor RAM. Hints
-    bypass ``autoBroadcastJoinThreshold``, so beyond that scale pass
-    False and every one of those joins degrades to a shuffled equi-join
-    instead of OOMing (same opt-out as minhash_lsh_pairs).
+    Every per-rep side table (banded chunks, signature payloads, member
+    lists) is broadcast: one row per distinct signature, the same
+    executor-RAM residency minhash_lsh_pairs assumes for its verify
+    artifact.
     """
     bands = bands if bands is not None else max_hamming + 1
     if bands <= max_hamming:
@@ -883,8 +738,6 @@ def simhash_pigeonhole_pairs(
             f"pigeonhole needs bands > max_hamming, got {bands} <= {max_hamming}"
         )
     from mysteryann_spark.session import spread
-
-    maybe_bc = F.broadcast if assume_broadcastable else (lambda df: df)
 
     groups = (
         simhash_chunks(docs, bands=bands, hash_fn=hash_fn)
@@ -916,7 +769,7 @@ def simhash_pigeonhole_pairs(
     # broadcast keeps the hot-chunk pair explosion on the spread probe
     # side (see minhash_lsh_pairs for the AQE-bytes rationale)
     cand = (
-        a.join(maybe_bc(b), ["band", "chunk"])
+        a.join(F.broadcast(b), ["band", "chunk"])
         .where(F.col("rep_a") < F.col("rep_b"))
         .select("rep_a", "rep_b")
         .dropDuplicates(["rep_a", "rep_b"])
@@ -929,11 +782,11 @@ def simhash_pigeonhole_pairs(
     sides = groups.select("rep", "chunks")
     verified = (
         cand.join(
-            maybe_bc(sides.select(F.col("rep").alias("rep_a"), F.col("chunks").alias("ca"))),
+            F.broadcast(sides.select(F.col("rep").alias("rep_a"), F.col("chunks").alias("ca"))),
             "rep_a",
         )
         .join(
-            maybe_bc(sides.select(F.col("rep").alias("rep_b"), F.col("chunks").alias("cb"))),
+            F.broadcast(sides.select(F.col("rep").alias("rep_b"), F.col("chunks").alias("cb"))),
             "rep_b",
         )
         .withColumn("hamming", ham)
@@ -943,11 +796,11 @@ def simhash_pigeonhole_pairs(
     members = groups.select("rep", "members")
     cross = (
         verified.join(
-            maybe_bc(members.select(F.col("rep").alias("rep_a"), F.col("members").alias("ma"))),
+            F.broadcast(members.select(F.col("rep").alias("rep_a"), F.col("members").alias("ma"))),
             "rep_a",
         )
         .join(
-            maybe_bc(members.select(F.col("rep").alias("rep_b"), F.col("members").alias("mb"))),
+            F.broadcast(members.select(F.col("rep").alias("rep_b"), F.col("members").alias("mb"))),
             "rep_b",
         )
         .select(F.explode("ma").alias("x"), "mb", "hamming")
@@ -1088,16 +941,16 @@ def connected_components(edges: DataFrame, nodes: DataFrame) -> DataFrame:
     half of host RAM at ``_EDGE_BYTES`` per edge (pair count read from
     the staged footers, no job) it raises ValueError before the task runs.
     """
-    from mysteryann_spark.session import host_mem_mb
+    from mysteryann_spark.session import worker_mem_mb
     from mysteryann_spark.sources.staging import stage_parquet, staged_row_count, staged_task
 
     path = stage_parquet(edges.select("src", "dst"))
-    mem_mb = host_mem_mb()  # None off Linux: no ceiling
-    limit = mem_mb and (mem_mb // 2 << 20) // _EDGE_BYTES
+    mem_mb = worker_mem_mb()
+    limit = mem_mb and (mem_mb << 20) // _EDGE_BYTES
     if limit is not None and (n_edges := staged_row_count([path])) > limit:
         raise ValueError(
             f"connected_components: {n_edges} pair edges exceed the limit of "
-            f"{limit} ({mem_mb // 2} MB of worker memory / {_EDGE_BYTES} B per edge)"
+            f"{limit} ({mem_mb} MB of worker memory / {_EDGE_BYTES} B per edge)"
         )
 
     def label(tbl) -> Iterator[pd.DataFrame]:

@@ -13,7 +13,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pyspark.sql.types import ArrayType, IntegerType
@@ -927,9 +927,11 @@ def build_ivfpq_index(
     retraining:
 
     - ``lists``: DataFrame (cid, nn_id, code ARRAY<INT>) — the inverted
-      lists, m bytes of PQ code per vector. At 100 TB this is what you
-      write out partitioned by cid: a probe then reads n_probe/n_centroids
-      of the files and nothing else (partition pruning does the routing).
+      lists, m bytes of PQ code per vector, persisted partitioned by cid.
+      A search stages them whole into one worker-resident code matrix and
+      scores only the probed lists; what a probe reads partition-pruned
+      is the optional persisted full-precision ``vectors`` (also
+      cid-partitioned) behind the rerank.
     - ``centroids`` (n_centroids, dim) / ``books`` (m, n_codes, dim/m):
       the trained model, kilobytes — broadcast at search time.
     """
@@ -1000,7 +1002,6 @@ def search_ivfpq_index(
     base_id: str = "vec_id",
     vec_col: str = "embedding",
     exclude_self: bool = True,
-    staged: bool = True,
 ) -> DataFrame:
     """Search a built (or loaded) IVF-PQ index: probe n_probe inverted
     lists, ADC-score the PQ codes via per-query lookup tables, keep
@@ -1012,32 +1013,18 @@ def search_ivfpq_index(
     pure-ADC distances are returned, the regime where only the index
     survives.
 
-    ``staged=True`` (default): the probe+ADC stage runs as ONE
-    ``mapInPandas`` over the queries with the inverted lists STAGED
-    worker-side (ids + (n, m) uint8 code matrix + per-centroid CSR
-    offsets — 17 B/vector at m=16, the FAISS ``IndexIVFPQ`` memory
-    layout): per Arrow chunk it computes the (m, n_codes) ADC lookup
-    tables with one einsum, gathers the probed lists' code blocks, and
-    scores every candidate with LUT gathers — no per-candidate shuffle
-    rows. The old plan joined queries to the lists ON cid, which
-    materialized a 64-float ``qvec`` per (query, candidate) row: ~40 GB
-    of shuffle at 10^7 ~1k-vector lists, the measured 3 QPS wall
-    (SCALE.md r6). Assumes the code matrix fits worker memory —
+    The probe+ADC stage runs as ONE ``mapInPandas`` over the queries with
+    the inverted lists STAGED worker-side (ids + (n, m) uint8 code matrix
+    + per-centroid CSR offsets — 17 B/vector at m=16, the FAISS
+    ``IndexIVFPQ`` memory layout): per Arrow chunk it computes the
+    (m, n_codes) ADC lookup tables with one einsum, gathers the probed
+    lists' code blocks, and scores every candidate with LUT gathers — no
+    per-candidate shuffle rows. The lists are staged whole once per index
+    dict, so the lists scan is not partition-pruned; only the rerank's
+    vectors scan is. Assumes the code matrix fits worker memory —
     17 GB/host at 10^9 vectors, the same residency class as the graph
-    index and far below it per vector.
-
-    ``staged=False``: the cid-equi-join plan — Catalyst partition-prunes
-    the persisted cid-partitioned lists (dynamic pruning, plan-gated in
-    tests/test_plans.py), so a probe reads only its n_probe directories.
-    The beyond-worker-memory fallback, exactly like the graph search's
-    distributed path. The two paths agree within 1e-9 on ADC distances
-    (test-gated), NOT bit-identically: the staged path sums per-subspace
-    LUT partials while the join path does one full-dim einsum — a
-    different FP summation order, so near-tied candidates can in
-    principle rank differently between the paths."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import DoubleType
-
+    index and far below it per vector. Each query's candidates are
+    ordered by (dist, nn_id)."""
     from mysteryann_spark.sources.staging import (
         load_staged,
         read_staged,
@@ -1049,58 +1036,6 @@ def search_ivfpq_index(
     bc_books = spark_sc.broadcast(index["books"])
     n_centroids = int(index["centroids"].shape[0])
     n_codes = int(index["books"].shape[1])
-
-    if not staged:
-        l2norm = l2norm_udf()
-        probes = queries_df.select(
-            F.col(query_id).alias("qid"),
-            l2norm(F.col(vec_col)).alias("qvec"),
-            F.explode(
-                nearest_centroids_udf(bc_cent, n_probe)(F.col(vec_col))
-            ).alias("cid"),
-        )
-        cand = probes.join(index["lists"], "cid").select(
-            "qid", "nn_id", "cid", "qvec", "code"
-        )
-        if exclude_self:
-            cand = cand.where(F.col("qid") != F.col("nn_id"))
-
-        @pandas_udf(DoubleType())
-        def adc_dist(qv: pd.Series, codes: pd.Series) -> pd.Series:
-            books = bc_books.value
-            a = np.stack([np.asarray(v, dtype=np.float64) for v in qv])
-            c = np.stack([np.asarray(v, dtype=np.int64) for v in codes])
-            m_sub = c.shape[1]
-            r = np.concatenate([books[j][c[:, j]] for j in range(m_sub)], axis=1)
-            # query is unit, reconstruction approximates a unit vector:
-            # ADC inner product stands in for cosine
-            return pd.Series(1.0 - np.einsum("ij,ij->i", a, r))
-
-        pq_scored = cand.select(
-            "qid", "nn_id", "cid", adc_dist("qvec", "code").alias("dist")
-        )
-        vectors = index.get("vectors")
-        if base_df is None and vectors is None:
-            return rank_topk(pq_scored, k)
-        w = Window.partitionBy("qid").orderBy(F.col("dist").asc(), F.col("nn_id").asc())
-        pq_top = (
-            pq_scored.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k * refine)
-            .select("qid", "nn_id", "cid")
-        )
-        sb, qb = _refine_estimates(queries_df, index, k, refine)
-        if base_df is not None:
-            return _ivfpq_refine(
-                queries_df, _refine_base(base_df, base_id, vec_col),
-                pq_top.select("qid", "nn_id"), k, query_id, vec_col,
-                surv_bytes=sb, q_bytes=qb,
-            )
-        return _ivfpq_refine(
-            queries_df,
-            vectors.select("cid", "nn_id", F.col("vec").alias("nv")),
-            pq_top, k, query_id, vec_col,
-            join_on=("cid", "nn_id"), surv_bytes=sb, q_bytes=qb,
-        )
 
     # stage the lists once per index dict (cached across searches)
     lists_path = index.get("_staged_lists")
@@ -1192,10 +1127,8 @@ def search_ivfpq_index(
                     out["rank"].extend(range(1, t + 1))
             yield pd.DataFrame(out)
 
-    # raw vectors cross into the worker once; _unit there reproduces both
-    # the probe-assignment floats (nearest_centroids_udf normalizes raw
-    # input) and the ADC query floats (the old plan's l2norm_udf wraps
-    # the same _unit)
+    # raw vectors cross into the worker once; _unit there reproduces the
+    # probe-assignment floats (nearest_centroids_udf normalizes raw input)
     q_in = queries_df.select(
         F.col(query_id).alias("qid"), F.col(vec_col).alias("qvec")
     )

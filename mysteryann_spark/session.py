@@ -25,6 +25,16 @@ def host_mem_mb(meminfo: str = "/proc/meminfo") -> int | None:
         return None
 
 
+def worker_mem_mb() -> int | None:
+    """The Python workers' share of host memory in MB: half of
+    ``MemTotal`` (the driver JVM takes the other half, see
+    ``default_driver_memory``). Operators that build a host-resident
+    artifact refuse inputs whose artifact would exceed it; None off
+    Linux (no ceiling)."""
+    mem_mb = host_mem_mb()
+    return mem_mb and mem_mb // 2
+
+
 def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
     """``spark.driver.memory`` default derived from the host: half of
     ``MemTotal`` (local mode runs every task inside the driver JVM, and

@@ -407,16 +407,30 @@ def staged_row_count(paths: list[str]) -> int:
     incremental sets count overridden duplicate ids twice — callers use
     this as a SIZING ESTIMATE (e.g. kernel-stage partition counts), not
     as an exact row count."""
+    return sum(staged_leaf_counts(p)[0] for p in paths)
+
+
+def staged_leaf_counts(path: str) -> tuple[int, dict[str, int]]:
+    """(row count, leaf-value count per top-level column) of one staged
+    artifact, summed over its parquet footers' column-chunk metadata — no
+    Spark job, no data read. A list column's count is its element count
+    (plus one slot per empty or null list)."""
     import pyarrow.fs as pafs
     import pyarrow.parquet as pq
 
-    total = 0
-    for p in paths:
-        for uri in list_staged_files(p):
-            fs, rel = pafs.FileSystem.from_uri(uri)
-            with fs.open_input_file(rel) as f:
-                total += pq.ParquetFile(f).metadata.num_rows
-    return total
+    rows, leaves = 0, {}
+    for uri in list_staged_files(path):
+        fs, rel = pafs.FileSystem.from_uri(uri)
+        with fs.open_input_file(rel) as f:
+            md = pq.ParquetFile(f).metadata
+        rows += md.num_rows
+        for g in range(md.num_row_groups):
+            rg = md.row_group(g)
+            for c in range(rg.num_columns):
+                col = rg.column(c)
+                top = col.path_in_schema.split(".", 1)[0]
+                leaves[top] = leaves.get(top, 0) + col.num_values
+    return rows, leaves
 
 
 class StagedBase:

@@ -9,9 +9,9 @@ admitted or suppressed at arrival, against everything admitted so far.
 Shape (same family as the batch path, re-cut for unbounded state):
 
 1. Stateless per-row: MinHash signature over the distinct-token set and
-   per-band bucket ids — pure Catalyst expressions (the xxhash64 family
-   of ``minhash_signatures``), zero shuffle, works unchanged on a
-   streaming frame.
+   per-band bucket ids — pure Catalyst expressions (this module's own
+   xxhash64 family; the batch operator signs with splitmix64 in numpy),
+   zero shuffle, works unchanged on a streaming frame.
 2. Stateful per (band, bucket): ``applyInPandasWithState`` keeps the
    bucket's REPRESENTATIVE documents (id + distinct-token-hash set,
    capacity-capped). Each arriving doc exact-Jaccard-verifies against
@@ -74,9 +74,10 @@ def banded_minhash(
 ) -> DataFrame:
     """(doc_id, band, bucket, toks) — one row per (doc, band), stateless.
 
-    Signature/bucket family identical to the batch operator's Catalyst
-    path (xxhash64 min over hashed shingles; variadic xxhash64 over the
-    band's rows as the bucket id)."""
+    Its own signature/bucket family, a pure Catalyst expression: xxhash64
+    min over hashed shingles, variadic xxhash64 over the band's rows as
+    the bucket id. The batch ``minhash_lsh_pairs`` uses a numpy splitmix64
+    family, so the two place documents in different buckets."""
     if num_perm % bands:
         raise ValueError(f"bands={bands} must divide num_perm={num_perm}")
     rows = num_perm // bands

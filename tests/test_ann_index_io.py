@@ -133,29 +133,71 @@ def test_persisted_vectors_refine_matches_base_df(spark, built_with_vectors):
     assert got == run(base)
 
 
-def test_persisted_vectors_refine_join_path_parity(spark, built_with_vectors):
-    """staged=False (the cid equi-join fallback) must agree with the
-    staged kernel on the persisted-vectors rerank within fp tolerance."""
-    base, path = built_with_vectors
-    loaded = load_ivfpq(spark, path)
-    q = base.where(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("qid"), "embedding"
-    )
-    a = sorted(
-        (r["qid"], r["rank"], r["nn_id"], r["dist"])
-        for r in search_ivfpq_index(
-            q, loaded, 3, n_probe=4, refine=10, base_df=None, staged=False
-        ).collect()
-    )
-    b = sorted(
-        (r["qid"], r["rank"], r["nn_id"], r["dist"])
-        for r in search_ivfpq_index(
-            q, loaded, 3, n_probe=4, refine=10, base_df=None, staged=True
-        ).collect()
-    )
-    assert len(a) > 0 and [x[:3] for x in a] == [x[:3] for x in b]
-    for (_, _, _, da), (_, _, _, db) in zip(a, b):
-        assert abs(da - db) < 1e-9
+def _ivfpq_reference(index, lists, base, queries, k, n_probe, refine=None):
+    """numpy reference search: unit queries probe their n_probe nearest
+    centroids, candidates are scored 1 - q.r against their codes'
+    reconstructions from ``books`` (self excluded), ordered by
+    (dist, nn_id); with ``refine`` the top k*refine are re-scored by
+    exact cosine distance against ``base``. Returns {qid: [(nn_id, dist)]}."""
+    cents, books = index["centroids"], index["books"]
+    out = {}
+    for qid, qv in queries.items():
+        qu = qv / np.linalg.norm(qv)
+        probes = np.argsort(((cents - qu) ** 2).sum(axis=1))[:n_probe]
+        cand = [(nid, code) for cid, nid, code in lists if cid in probes and nid != qid]
+        ids = np.array([nid for nid, _ in cand])
+        recon = np.stack(
+            [np.concatenate([books[j][c] for j, c in enumerate(code)]) for _, code in cand]
+        )
+        dist = 1.0 - recon @ qu
+        order = np.lexsort((ids, dist))
+        if refine is not None:
+            ids = ids[order[: k * refine]]
+            vecs = np.stack([base[i] for i in ids])
+            dist = 1.0 - vecs @ qv / (np.linalg.norm(vecs, axis=1) * np.linalg.norm(qv))
+            order = np.lexsort((ids, dist))
+        out[qid] = [(int(ids[i]), float(dist[i])) for i in order[:k]]
+    return out
+
+
+def test_ivfpq_search_matches_numpy_reference(spark, built, built_with_vectors):
+    """The staged ADC kernel against a from-scratch numpy search, on a
+    loaded index with no vectors (pure ADC) and on one with persisted
+    vectors (ADC then exact rerank): same neighbors, same ranks, same
+    distances to 1e-9 (the kernel sums per-subspace LUT partials)."""
+    for fixture, refine in (((built[0], built[2]), None), (built_with_vectors, 10)):
+        base_df, path = fixture
+        loaded = load_ivfpq(spark, path)
+        assert ("vectors" in loaded) == (refine is not None)
+        base = {
+            r["vec_id"]: np.asarray(r["embedding"], dtype=np.float64)
+            for r in base_df.collect()
+        }
+        lists = [
+            (r["cid"], r["nn_id"], np.asarray(r["code"]))
+            for r in loaded["lists"].collect()
+        ]
+        qids = sorted(base)[:8]
+        q = base_df.where(F.col("vec_id").isin(qids)).select(
+            F.col("vec_id").alias("qid"), "embedding"
+        )
+        want = _ivfpq_reference(
+            loaded, lists, base, {i: base[i] for i in qids}, 3, 4, refine
+        )
+        got = {}
+        for r in sorted(
+            search_ivfpq_index(
+                q, loaded, 3, n_probe=4, refine=refine or 20, base_df=None
+            ).collect(),
+            key=lambda r: (r["qid"], r["rank"]),
+        ):
+            got.setdefault(r["qid"], []).append((r["nn_id"], r["dist"]))
+        assert set(got) == set(qids)
+        for qid in qids:
+            assert [n for n, _ in got[qid]] == [n for n, _ in want[qid]], qid
+            np.testing.assert_allclose(
+                [d for _, d in got[qid]], [d for _, d in want[qid]], atol=1e-9
+            )
 
 
 def test_persisted_vectors_float_dtype(spark, tmp_path):

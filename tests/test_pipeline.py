@@ -118,29 +118,6 @@ def test_minhash_pairs_independent_of_frame_cap(spark, docs, monkeypatch):
     assert pairs() == full
 
 
-def test_minhash_broadcastable_paths_agree(spark, docs):
-    """assume_broadcastable=True (staged-Arrow, splitmix64 banding) and
-    =False (SQL joins, xxhash64 banding) draw candidate buckets from
-    different hash families, so only the VERIFIED output is comparable:
-    surviving pairs carry identical exact-jaccard values, and with
-    generous banding (32 bands of 2) both recall the same pair set."""
-    on = {
-        (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in minhash_lsh_pairs(
-            docs, num_perm=64, bands=32, threshold=0.9, assume_broadcastable=True
-        ).collect()
-    }
-    off = {
-        (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in minhash_lsh_pairs(
-            docs, num_perm=64, bands=32, threshold=0.9, assume_broadcastable=False
-        ).collect()
-    }
-    assert on and set(on) == set(off)
-    for p, j in on.items():
-        assert abs(j - off[p]) < 1e-9, p
-
-
 def test_minhash_single_python_stage_downstream_of_staging(spark, docs):
     """r12 plan-shape lock: banding is fused into the staging write (one
     Arrow kernel in the out-of-plan staging job), so the returned pairs
@@ -519,6 +496,49 @@ def test_connected_components_rejects_pairs_above_host_ceiling(spark, monkeypatc
             dedup.connected_components(edges, nodes)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(after_write) == 1 and jobs() == after_write[0] >= 1, (after_write, jobs())
+
+
+def test_minhash_rejects_verify_artifact_above_host_ceiling(spark, docs, monkeypatch):
+    """Above the host-derived ceiling the MinHash operator raises a
+    ValueError naming the artifact size and the limit, and runs no job
+    after the staged write of the per-rep table."""
+    from mysteryann_spark.functions.text import tokens_col
+    from mysteryann_spark.operators import dedup
+    from mysteryann_spark.session import worker_mem_mb
+    from mysteryann_spark.sources import staging
+
+    sc = spark.sparkContext
+    group = "minhash-ceiling"
+
+    def jobs() -> int:
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    after_write = []
+    real_stage = staging.stage_parquet
+
+    def stage_and_count(df, *args, **kwargs):
+        path = real_stage(df, *args, **kwargs)
+        after_write.append(jobs())
+        return path
+
+    monkeypatch.setattr(staging, "stage_parquet", stage_and_count)
+    # 1 GB per rep, token and member: every count the footers give shows
+    # in the size, and the limit is below one rep
+    monkeypatch.setattr(dedup, "_VERIFY_BYTES", (1 << 30, 1 << 30, 1 << 30))
+    sets = docs.select(F.array_sort(F.array_distinct(tokens_col("text"))).alias("s")).distinct()
+    n_reps, n_tokens = sets.agg(F.count("*"), F.sum(F.size("s"))).first()
+    need_mb = (n_reps + n_tokens + docs.count()) << 10  # + 8 B x 32 perms per rep, < 1 MB
+    sc.setJobGroup(group, "minhash verify ceiling")
+    try:
+        with pytest.raises(ValueError) as err:
+            minhash_lsh_pairs(docs, num_perm=32, bands=8, threshold=0.5)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    msg = str(err.value)
+    assert f" {n_reps} distinct token sets needs {need_mb} MB" in msg, msg
+    assert f"limit of {worker_mem_mb()} MB" in msg, msg
     assert len(after_write) == 1 and jobs() == after_write[0] >= 1, (after_write, jobs())
 
 

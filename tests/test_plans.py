@@ -133,51 +133,6 @@ def test_round4_retrieval_entries_plan_shape(spark):
     assert "CartesianProduct" not in rplan
 
 
-def test_persisted_ivfpq_search_partition_prunes(spark, tmp_path):
-    """The persisted index's promise is physical: searching through a
-    loaded index must carry a dynamic-partition-pruning expression on the
-    cid partition column, so a probe reads only its n_probe inverted-list
-    directories (verified executed-plan property, not a docstring)."""
-    from pyspark.sql import functions as F
-
-    from mysteryann_spark.operators.similarity import (
-        build_ivfpq_index,
-        search_ivfpq_index,
-    )
-    from mysteryann_spark.sources.ann_index_io import load_ivfpq, save_ivfpq
-    from mysteryann_spark.sources.tables import load_table
-    from tests.conftest import SF_TINY
-
-    base = load_table(spark, "embeddings", SF_TINY)
-    path = str(tmp_path / "idx")
-    save_ivfpq(build_ivfpq_index(base, n_centroids=8, m=8, n_codes=32), path)
-    loaded = load_ivfpq(spark, path)
-    q = base.where(F.col("vec_id") < 5).select(F.col("vec_id").alias("qid"), "embedding")
-    # staged=False is the beyond-worker-memory fallback: the cid equi-join
-    # plan whose scan must partition-prune to the probed lists
-    res = search_ivfpq_index(q, loaded, 3, n_probe=2, base_df=None, staged=False)
-    plan = res._jdf.queryExecution().executedPlan().toString()
-    assert "dynamicpruning" in plan.lower(), "lists scan not partition-pruned"
-
-    # the default staged path must agree with the join plan bit-for-bit
-    # (same probes, same ADC floats, same (dist, nn_id) tie order)
-    a = sorted(
-        (r["qid"], r["rank"], r["nn_id"], r["dist"])
-        for r in search_ivfpq_index(
-            q, loaded, 3, n_probe=2, base_df=None, staged=False
-        ).collect()
-    )
-    b = sorted(
-        (r["qid"], r["rank"], r["nn_id"], r["dist"])
-        for r in search_ivfpq_index(
-            q, loaded, 3, n_probe=2, base_df=None, staged=True
-        ).collect()
-    )
-    assert len(a) > 0 and [x[:3] for x in a] == [x[:3] for x in b]
-    for (_, _, _, da), (_, _, _, db) in zip(a, b):
-        assert abs(da - db) < 1e-9
-
-
 def test_round4_sink_and_outlier_plan_shape(spark):
     """Shard manifest reads only (doc_id, text); outlier scoring reads
     only (vec_id, embedding); neither plan contains a cartesian product,

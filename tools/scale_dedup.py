@@ -112,7 +112,7 @@ def main() -> None:
     t0 = time.time()
     pairs = minhash_lsh_pairs(
         docs.select("doc_id", "text"),
-        num_perm=128, bands=32, threshold=threshold, assume_broadcastable=False,
+        num_perm=128, bands=32, threshold=threshold,
     ).localCheckpoint()
     n_pairs = pairs.count()
     t_pairs = time.time() - t0
