@@ -160,44 +160,51 @@ def _ivfpq_reference(index, lists, base, queries, k, n_probe, refine=None):
     return out
 
 
-def test_ivfpq_search_matches_numpy_reference(spark, built, built_with_vectors):
-    """The staged ADC kernel against a from-scratch numpy search, on a
-    loaded index with no vectors (pure ADC) and on one with persisted
-    vectors (ADC then exact rerank): same neighbors, same ranks, same
-    distances to 1e-9 (the kernel sums per-subspace LUT partials)."""
-    for fixture, refine in (((built[0], built[2]), None), (built_with_vectors, 10)):
-        base_df, path = fixture
-        loaded = load_ivfpq(spark, path)
-        assert ("vectors" in loaded) == (refine is not None)
-        base = {
-            r["vec_id"]: np.asarray(r["embedding"], dtype=np.float64)
-            for r in base_df.collect()
-        }
-        lists = [
-            (r["cid"], r["nn_id"], np.asarray(r["code"]))
-            for r in loaded["lists"].collect()
-        ]
-        qids = sorted(base)[:8]
-        q = base_df.where(F.col("vec_id").isin(qids)).select(
-            F.col("vec_id").alias("qid"), "embedding"
+def check_search_against_reference(spark, base_df, path, n_probe, refine=None):
+    """Search the index saved at ``path`` through ``load_ivfpq`` for the
+    first 8 base vectors and compare with ``_ivfpq_reference``: same
+    neighbors, same ranks, same distances to 1e-9 (the kernel sums
+    per-subspace LUT partials). ``refine`` is None exactly when the
+    index was saved without vectors (pure ADC)."""
+    loaded = load_ivfpq(spark, path)
+    assert ("vectors" in loaded) == (refine is not None)
+    base = {
+        r["vec_id"]: np.asarray(r["embedding"], dtype=np.float64)
+        for r in base_df.collect()
+    }
+    lists = [
+        (r["cid"], r["nn_id"], np.asarray(r["code"]))
+        for r in loaded["lists"].collect()
+    ]
+    qids = sorted(base)[:8]
+    q = base_df.where(F.col("vec_id").isin(qids)).select(
+        F.col("vec_id").alias("qid"), "embedding"
+    )
+    want = _ivfpq_reference(
+        loaded, lists, base, {i: base[i] for i in qids}, 3, n_probe, refine
+    )
+    got = {}
+    for r in sorted(
+        search_ivfpq_index(
+            q, loaded, 3, n_probe=n_probe, refine=refine or 20, base_df=None
+        ).collect(),
+        key=lambda r: (r["qid"], r["rank"]),
+    ):
+        got.setdefault(r["qid"], []).append((r["nn_id"], r["dist"]))
+    assert set(got) == set(qids)
+    for qid in qids:
+        assert [n for n, _ in got[qid]] == [n for n, _ in want[qid]], qid
+        np.testing.assert_allclose(
+            [d for _, d in got[qid]], [d for _, d in want[qid]], atol=1e-9
         )
-        want = _ivfpq_reference(
-            loaded, lists, base, {i: base[i] for i in qids}, 3, 4, refine
-        )
-        got = {}
-        for r in sorted(
-            search_ivfpq_index(
-                q, loaded, 3, n_probe=4, refine=refine or 20, base_df=None
-            ).collect(),
-            key=lambda r: (r["qid"], r["rank"]),
-        ):
-            got.setdefault(r["qid"], []).append((r["nn_id"], r["dist"]))
-        assert set(got) == set(qids)
-        for qid in qids:
-            assert [n for n, _ in got[qid]] == [n for n, _ in want[qid]], qid
-            np.testing.assert_allclose(
-                [d for _, d in got[qid]], [d for _, d in want[qid]], atol=1e-9
-            )
+
+
+def test_persisted_vectors_refine_join_path_parity(spark, built_with_vectors):
+    """The persisted-vectors rerank (survivors joined to the index's own
+    cid-partitioned vectors on (cid, nn_id), base_df=None) against the
+    numpy reference: ADC top k*refine, then exact cosine rerank."""
+    base_df, path = built_with_vectors
+    check_search_against_reference(spark, base_df, path, n_probe=4, refine=10)
 
 
 def test_persisted_vectors_float_dtype(spark, tmp_path):

@@ -133,6 +133,53 @@ def test_round4_retrieval_entries_plan_shape(spark):
     assert "CartesianProduct" not in rplan
 
 
+def test_persisted_ivfpq_search_partition_prunes(spark, tmp_path):
+    """A search through a loaded index reads the persisted index data
+    only where it probes: the staged ADC kernel reads the inverted lists
+    worker-side, so the search plan scans no ``lists`` files at all, and
+    the rerank's scan of the cid-partitioned ``vectors`` carries a
+    dynamic-partition-pruning expression. The pure-ADC search of an
+    index saved without vectors matches the numpy reference search."""
+    import re
+
+    from pyspark.sql import functions as F
+
+    from mysteryann_spark.operators.similarity import (
+        build_ivfpq_index,
+        search_ivfpq_index,
+    )
+    from mysteryann_spark.plans.inspect import formatted_plan
+    from mysteryann_spark.sources.ann_index_io import load_ivfpq, save_ivfpq
+    from mysteryann_spark.sources.tables import load_table
+    from tests.conftest import SF_TINY
+    from tests.test_ann_index_io import check_search_against_reference
+
+    base = load_table(spark, "embeddings", SF_TINY)
+    index = build_ivfpq_index(base, n_centroids=8, m=8, n_codes=32)
+    adc_path, vec_path = str(tmp_path / "idx"), str(tmp_path / "idx_vec")
+    save_ivfpq(index, adc_path)
+    save_ivfpq(index, vec_path, base_df=base)
+
+    q = base.where(F.col("vec_id") < 5).select(F.col("vec_id").alias("qid"), "embedding")
+    res = search_ivfpq_index(
+        q, load_ivfpq(spark, vec_path), 3, n_probe=2, refine=5, base_df=None
+    )
+    assert res.count() > 0
+    # the only scan of index data is the vectors scan
+    index_scans = [
+        loc
+        for loc in re.findall(r"Location: \w+ \[([^\]]*)\]", formatted_plan(res))
+        if vec_path in loc
+    ]
+    assert index_scans and all(
+        loc.endswith(f"{vec_path}/vectors") for loc in index_scans
+    ), index_scans
+    plan = res._jdf.queryExecution().executedPlan().toString()
+    assert "dynamicpruning" in plan.lower(), "vectors scan not partition-pruned"
+
+    check_search_against_reference(spark, base, adc_path, n_probe=2)
+
+
 def test_round4_sink_and_outlier_plan_shape(spark):
     """Shard manifest reads only (doc_id, text); outlier scoring reads
     only (vec_id, embedding); neither plan contains a cartesian product,
