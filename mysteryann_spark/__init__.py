@@ -17,8 +17,10 @@ pandas UDFs (Arrow) only for numeric kernels Spark can't express; Parquet for
 all persisted artifacts; deterministic (seeded, (dist,id)-tiebroken) results.
 """
 
-from mysteryann_spark.session import get_spark
+from mysteryann_spark.session import get_spark, skip_unchanged_zip_rereads
 from mysteryann_spark.params import IndexParams
 
 __all__ = ["get_spark", "IndexParams"]
 __version__ = "0.1.0"
+
+skip_unchanged_zip_rereads()

@@ -177,11 +177,12 @@ def _expand_member_pairs(
         )
 
 
-def _verify_artifact(staged: str, num_perm: int, seed: int) -> tuple:
+def _verify_artifact(staged: str) -> tuple:
     """The verify kernel's host-shared artifact, built from the staged
-    per-rep table: (reps, htok CSR indptr, sigmat, member CSR indptr,
-    member ids, token ranks, packed (rep, token-rank) keys, [vocab size]).
-    ``_VERIFY_BYTES`` sizes its build peak."""
+    per-rep table: (reps, htok CSR indptr, member CSR indptr, member ids,
+    token ranks, packed (rep, token-rank) keys, token vocabulary).
+    ``_VERIFY_BYTES`` sizes its build peak. It holds no signature matrix:
+    the kernel signs only the surviving pairs' reps (``_est_jaccard``)."""
     import pyarrow.parquet as pq
 
     from mysteryann_spark.sources.staging import table_ragged
@@ -191,9 +192,6 @@ def _verify_artifact(staged: str, num_perm: int, seed: int) -> tuple:
     flat = np.ascontiguousarray(flat)
     # member lists in the SAME rep order (table_ragged id-sorts both)
     _, mind, mflat = table_ragged(tbl, "rep", "members")
-    # recompute the splitmix64 MinHash matrix once per worker from the
-    # CSR token sets (cheaper than shipping num_perm longs per rep)
-    sigmat = _minhash_mat(indptr, flat, num_perm, seed)
     # Global (rep_index, token_rank) key table for the intersection
     # kernel: token values are full-range int64 hashes, so they are
     # RANKED against the worker's token vocabulary and packed with
@@ -214,33 +212,81 @@ def _verify_artifact(staged: str, num_perm: int, seed: int) -> tuple:
     frank = np.searchsorted(vocab, flat)
     rep_of = np.repeat(np.arange(len(reps), dtype=np.int64), np.diff(indptr))
     keys_b = rep_of * v + frank
-    # v rides as an int64 array: an all-ndarray artifact is mapped
+    # v rides as the vocab's length: an all-ndarray artifact is mapped
     # host-shared, a Python int would force private per-worker builds
-    return reps, indptr, sigmat, mind, mflat, frank, keys_b, np.array([v])
+    return reps, indptr, mind, mflat, frank, keys_b, vocab
 
 
-# Peak build bytes of _verify_artifact per distinct token set (beyond the
-# 8 B per permutation of its sigmat row), per token and per member id:
-# numpy peaks at 40 / 40 / 8 B under tracemalloc (100k-200k reps of 25-100
-# all-distinct tokens, 1-5 members, 16 and 128 perms; linear to <1%), and
-# the Arrow read, alive for the whole build, adds 16 / 26 / 16 B.
-_VERIFY_BYTES = (40 + 16, 40 + 26, 8 + 16)
+def _est_jaccard(
+    ka: np.ndarray,
+    kb: np.ndarray,
+    indptr: np.ndarray,
+    frank: np.ndarray,
+    vocab: np.ndarray,
+    num_perm: int,
+    seed: int,
+) -> np.ndarray:
+    """MinHash estimate of each rep pair ``(ka[i], kb[i])`` (indices into
+    the CSR token sets ``indptr`` / ``vocab[frank]``): the share of equal
+    splitmix64 signature rows, signing each distinct rep once with
+    ``_minhash_mat`` — bit-identical to indexing the whole table's
+    signature matrix, since each row depends on its own token set only."""
+    u, inv = np.unique(np.r_[ka, kb], return_inverse=True)
+    lens = indptr[u + 1] - indptr[u]
+    sub = np.zeros(len(u) + 1, dtype=np.int64)
+    np.cumsum(lens, out=sub[1:])
+    pos = np.arange(sub[-1], dtype=np.int64) - np.repeat(sub[:-1] - indptr[u], lens)
+    sig = _minhash_mat(sub, vocab[frank[pos]], num_perm, seed)
+    n = len(ka)
+    return (sig[inv[:n]] == sig[inv[n:]]).mean(axis=1)
 
 
-def _check_verify_ceiling(staged: str, num_perm: int) -> None:
-    """Raise ValueError before the verify job when the host-shared verify
-    artifact would outgrow the Python workers' half of host memory. Sizes
-    come from the staged per-rep table's footers (no Spark job)."""
-    from mysteryann_spark.session import worker_mem_mb
+# Peak build bytes of _verify_artifact per distinct token set, per token
+# and per member id, measured on Spark-written 4-file per-rep tables of
+# 100k-200k reps, 25-100 all-distinct tokens and 1-5 members: numpy peaks
+# at 43 / 40 / 8 B under tracemalloc (linear to <1%), and the Arrow read,
+# alive for the whole build, adds at most 16 / 37 / 16 B (its pool peak
+# follows the read's concurrency rather than a linear fit; this bound is
+# above the measured peak on all eight tables, by 2-23%).
+_VERIFY_BYTES = (43 + 16, 40 + 37, 8 + 16)
+
+
+# Driver heap per row of the bucket self-join's broadcast build side, one
+# (band int, bucket bigint, rep bigint) row per rep and band: the rows are
+# collected to the driver and built into a hash relation there. Measured
+# by bisecting the row count at which a forced broadcast of such rows
+# fails with "Not enough memory to build and broadcast": 5.97M rows passed
+# and 6.32M failed at spark.driver.memory=1g, 12.0M passed and 12.9M
+# failed at 2g (170-180 B per row at 1g, 167-179 B at 2g).
+_BUCKET_ROW_BYTES = 176
+
+
+def _check_ceilings(spark, staged: str, bands: int) -> None:
+    """Raise ValueError before any job reads the staged per-rep table when
+    the bucket self-join's broadcast would outgrow ``spark.driver.memory``
+    (Spark's own failure there is an opaque "Not enough memory to build
+    and broadcast the table"), or the host-shared verify artifact would
+    outgrow the Python workers' half of host memory. Sizes come from the
+    staged table's footers (no Spark job)."""
+    from mysteryann_spark.session import driver_mem_mb, worker_mem_mb
     from mysteryann_spark.sources.staging import staged_leaf_counts
 
+    n_reps, leaves = staged_leaf_counts(staged)
+    rows = n_reps * bands
+    need = rows * _BUCKET_ROW_BYTES
+    mem_mb = driver_mem_mb(spark)
+    if need > mem_mb << 20:
+        raise ValueError(
+            f"minhash_lsh_pairs: the bucket self-join broadcasts {rows} rows "
+            f"({n_reps} distinct token sets x {bands} bands), {need >> 20} MB, "
+            f"above spark.driver.memory of {mem_mb} MB"
+        )
     mem_mb = worker_mem_mb()
     if mem_mb is None:
         return
-    n_reps, leaves = staged_leaf_counts(staged)
     per_rep, per_token, per_member = _VERIFY_BYTES
     need = (
-        n_reps * (per_rep + 8 * num_perm)
+        n_reps * per_rep
         + leaves.get("htok", 0) * per_token
         + leaves.get("members", 0) * per_member
     )
@@ -281,13 +327,11 @@ def _verify_pairs_staged(
     from mysteryann_spark.sources.staging import load_staged
 
     pair_rows = _PAIR_ROWS  # read driver-side; the kernel closure carries it
-    build = partial(_verify_artifact, staged, num_perm, seed)
+    build = partial(_verify_artifact, staged)
 
     def verify(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        reps, indptr, sigmat, mind, mflat, frank, keys_b, v_arr = load_staged(
-            staged, build
-        )
-        v = int(v_arr[0])
+        reps, indptr, mind, mflat, frank, keys_b, vocab = load_staged(staged, build)
+        v = max(1, len(vocab))
         n_keys = len(keys_b)
 
         def chunk_out(ra: np.ndarray, rb: np.ndarray) -> Iterator[pd.DataFrame]:
@@ -346,9 +390,11 @@ def _verify_pairs_staged(
             # is independent — computing it over all candidates cost two
             # (n_pairs x num_perm) fancy-index copies (~16 s in-process
             # over the sf0.1 pair set, the verify stage's top cost) for
-            # values that were then thrown away for >98% of pairs
+            # values that were then thrown away for >98% of pairs. Only
+            # the survivors' reps are signed, here in the task: the
+            # host-shared artifact holds no signature matrix.
             ka, kb = ia[keep], ib[keep]
-            est = (sigmat[ka] == sigmat[kb]).mean(axis=1)
+            est = _est_jaccard(ka, kb, indptr, frank, vocab, num_perm, seed)
             # expand each surviving rep pair to its members_a x members_b
             # doc pairs in frames of at most pair_rows rows
             yield from _expand_member_pairs(
@@ -414,11 +460,13 @@ def minhash_lsh_pairs(
     One plan: the per-rep table is staged once with numpy (splitmix64)
     signatures and band buckets, the bucket self-join broadcasts its
     build side, and a staged-Arrow kernel (``_verify_pairs_staged``)
-    verifies candidate pairs and expands them to doc pairs. The verify
-    artifact is host-resident; when its size, read from the staged
-    table's footers at ``_VERIFY_BYTES``, exceeds the Python workers'
-    half of host memory, a ValueError naming both numbers is raised
-    before the verify job runs.
+    verifies candidate pairs and expands them to doc pairs. Two
+    artifacts are host-resident, and both are sized from the staged
+    table's footers before any job reads it (``_check_ceilings``): the
+    broadcast build side, at ``_BUCKET_ROW_BYTES`` per rep and band,
+    against ``spark.driver.memory``, and the verify artifact, at
+    ``_VERIFY_BYTES``, against the Python workers' half of host memory.
+    Either one too large raises a ValueError naming both numbers.
     """
     import pyarrow as pa
 
@@ -495,7 +543,7 @@ def minhash_lsh_pairs(
             band_stage_kernel, staged_schema
         )
     )
-    _check_verify_ceiling(staged, num_perm)
+    _check_ceilings(docs.sparkSession, staged, bands)
     # explicit schema: the staged layout is statically known, so the
     # read skips the schema-inference footer job (one driver job per
     # query invocation; at scale, a footer read per staged part file)

@@ -529,7 +529,7 @@ def test_minhash_rejects_verify_artifact_above_host_ceiling(spark, docs, monkeyp
     monkeypatch.setattr(dedup, "_VERIFY_BYTES", (1 << 30, 1 << 30, 1 << 30))
     sets = docs.select(F.array_sort(F.array_distinct(tokens_col("text"))).alias("s")).distinct()
     n_reps, n_tokens = sets.agg(F.count("*"), F.sum(F.size("s"))).first()
-    need_mb = (n_reps + n_tokens + docs.count()) << 10  # + 8 B x 32 perms per rep, < 1 MB
+    need_mb = (n_reps + n_tokens + docs.count()) << 10
     sc.setJobGroup(group, "minhash verify ceiling")
     try:
         with pytest.raises(ValueError) as err:
@@ -540,6 +540,90 @@ def test_minhash_rejects_verify_artifact_above_host_ceiling(spark, docs, monkeyp
     assert f" {n_reps} distinct token sets needs {need_mb} MB" in msg, msg
     assert f"limit of {worker_mem_mb()} MB" in msg, msg
     assert len(after_write) == 1 and jobs() == after_write[0] >= 1, (after_write, jobs())
+
+
+def test_minhash_rejects_bucket_broadcast_above_driver_memory(spark, docs, monkeypatch):
+    """Above ``spark.driver.memory`` the MinHash operator raises a
+    ValueError naming the broadcast's row count, its size and the limit,
+    and runs no job after the staged write of the per-rep table (Spark's
+    own failure would come from inside the join job, as "Not enough
+    memory to build and broadcast the table")."""
+    from mysteryann_spark.functions.text import tokens_col
+    from mysteryann_spark.operators import dedup
+    from mysteryann_spark.session import driver_mem_mb
+    from mysteryann_spark.sources import staging
+
+    sc = spark.sparkContext
+    group = "minhash-broadcast-ceiling"
+
+    def jobs() -> int:
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    after_write = []
+    real_stage = staging.stage_parquet
+
+    def stage_and_count(df, *args, **kwargs):
+        path = real_stage(df, *args, **kwargs)
+        after_write.append(jobs())
+        return path
+
+    monkeypatch.setattr(staging, "stage_parquet", stage_and_count)
+    # 1 GB per broadcast row: the limit is below a few dozen rows
+    monkeypatch.setattr(dedup, "_BUCKET_ROW_BYTES", 1 << 30)
+    sets = docs.select(F.array_sort(F.array_distinct(tokens_col("text"))).alias("s")).distinct()
+    n_reps = sets.count()
+    rows = n_reps * 8
+    assert rows << 10 > driver_mem_mb(spark)
+    sc.setJobGroup(group, "minhash broadcast ceiling")
+    try:
+        with pytest.raises(ValueError) as err:
+            minhash_lsh_pairs(docs, num_perm=32, bands=8, threshold=0.5)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    msg = str(err.value)
+    assert f"broadcasts {rows} rows ({n_reps} distinct token sets x 8 bands), {rows << 10} MB" in msg, msg
+    assert f"spark.driver.memory of {driver_mem_mb(spark)} MB" in msg, msg
+    assert len(after_write) == 1 and jobs() == after_write[0] >= 1, (after_write, jobs())
+
+
+def test_minhash_verify_signs_only_surviving_reps(tmp_path):
+    """The host-shared verify artifact holds no (reps x num_perm)
+    signature matrix; the kernel's estimate over a subset of rep pairs
+    is bit-identical to indexing the whole table's signature matrix."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from mysteryann_spark.operators import dedup
+
+    rng = np.random.default_rng(7)
+    n, num_perm, seed = 400, 64, 42
+    sets = [np.unique(rng.integers(-(2**62), 2**62, rng.integers(0, 30))) for _ in range(n)]
+    sets += [np.unique(np.r_[s[: len(s) // 2], rng.integers(0, 50, 5)]) for s in sets[:100]]
+    staged = str(tmp_path / "reps.parquet")
+    pq.write_table(
+        pa.table(
+            {
+                "rep": pa.array(np.arange(len(sets), dtype=np.int64) * 3),
+                "htok": pa.array([s.tolist() for s in sets], pa.list_(pa.int64())),
+                "members": pa.array([[3 * i] for i in range(len(sets))], pa.list_(pa.int64())),
+            }
+        ),
+        staged,
+    )
+    art = dedup._verify_artifact(staged)
+    assert all(a.size != len(sets) * num_perm for a in art)
+    _, indptr, _, _, frank, _, vocab = art
+    flat = np.concatenate(sets).astype(np.int64)
+    full = dedup._minhash_mat(indptr, flat, num_perm, seed)
+    ka = rng.integers(0, len(sets), 300)
+    kb = rng.integers(0, len(sets), 300)
+    ka[:100], kb[:100] = np.arange(100), np.arange(n, n + 100)
+    est = dedup._est_jaccard(ka, kb, indptr, frank, vocab, num_perm, seed)
+    want = (full[ka] == full[kb]).mean(axis=1)
+    assert est.dtype == want.dtype and np.array_equal(est, want)
+    assert len(dedup._est_jaccard(ka[:0], kb[:0], indptr, frank, vocab, num_perm, seed)) == 0
 
 
 def test_salted_join_rejects_right_preserving_types(spark):
