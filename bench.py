@@ -29,7 +29,7 @@ def main() -> None:
     from mysteryann_spark.operators.search import search_graph
     from mysteryann_spark.params import IndexParams
     from mysteryann_spark.queries.registry import all_queries
-    from mysteryann_spark.session import get_spark
+    from mysteryann_spark.session import get_spark, usable_cpus
     from mysteryann_spark.sources.tables import load_table
 
     spark = get_spark(app_name="mysteryann-bench")
@@ -54,7 +54,7 @@ def main() -> None:
     # pool forks and imports numpy/pandas before timing starts — a
     # single-partition warm-up spawns one worker and the first timed
     # pandas stage then pays ~2-3 s of concurrent worker ramp.
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", usable_cpus()))
     load_table(spark, "lineitem", SF_DIR).count()
     _warm = load_table(spark, "embeddings", SF_DIR).limit(256).repartition(cpus)
 

@@ -70,9 +70,10 @@ def distance_col(metric: str, a: Column | str, b: Column | str) -> Column:
 
 
 # ---------------------------------------------------------------------------
-# numpy kernels (the pandas-UDF hot path). float64 so results agree with the
-# SQL/DuckDB double math; the reference runs float32 SIMD but at 64-dim the
-# rankings are identical and float64 keeps the oracle hash-stable.
+# numpy kernels (the pandas-UDF hot path). Operands are cast to float64,
+# the only staging dtype, so results agree with the SQL/DuckDB double math;
+# the reference runs float32 SIMD but at 64-dim the rankings are identical
+# and float64 keeps the oracle hash-stable.
 # ---------------------------------------------------------------------------
 
 
@@ -82,19 +83,6 @@ def np_normalize(mat: np.ndarray) -> np.ndarray:
     return mat / norms
 
 
-def _pair_dtype(a, b) -> np.dtype:
-    """float32 only when BOTH operands already are (the opt-in fp32
-    staging regime, SPARK_GRAFT_STAGE_DTYPE=float32 — the reference's own
-    precision, distance.h works on float*); float64 everywhere else, so
-    every existing caller's numerics are unchanged."""
-    if (
-        getattr(a, "dtype", None) == np.float32
-        and getattr(b, "dtype", None) == np.float32
-    ):
-        return np.dtype(np.float32)
-    return np.dtype(np.float64)
-
-
 def np_pair_distances(metric: str, a: np.ndarray, b: np.ndarray) -> np.ndarray:
     """Row-wise paired distances: out[i] = dist(a[i], b[i]), shape (n,).
 
@@ -102,9 +90,8 @@ def np_pair_distances(metric: str, a: np.ndarray, b: np.ndarray) -> np.ndarray:
     cross-product GEMM would waste batch_size x the flops — so this is
     the O(pairs * dim) einsum form of the same FastL2 / IP / cosine
     formulas as np_distances."""
-    dt = _pair_dtype(a, b)
-    a = np.ascontiguousarray(a, dtype=dt)
-    b = np.ascontiguousarray(b, dtype=dt)
+    a = np.ascontiguousarray(a, dtype=np.float64)
+    b = np.ascontiguousarray(b, dtype=np.float64)
     if metric == "l2":
         d = (
             np.einsum("ij,ij->i", a, a)
@@ -125,12 +112,10 @@ def np_distances(metric: str, queries: np.ndarray, base: np.ndarray) -> np.ndarr
 
     L2 uses the precomputed-norm identity |a-b|^2 = |a|^2 + |b|^2 - 2 a.b
     (reference DistanceFastL2, distance.h:227-322) so the inner loop is one
-    GEMM — the blocked/vectorized replacement for the AVX kernels. Runs
-    in float32 when both inputs are (see _pair_dtype), float64 otherwise.
+    GEMM — the blocked/vectorized replacement for the AVX kernels.
     """
-    dt = _pair_dtype(queries, base)
-    q = np.ascontiguousarray(queries, dtype=dt)
-    b = np.ascontiguousarray(base, dtype=dt)
+    q = np.ascontiguousarray(queries, dtype=np.float64)
+    b = np.ascontiguousarray(base, dtype=np.float64)
     if metric == "l2":
         qq = np.einsum("ij,ij->i", q, q)[:, None]
         bb = np.einsum("ij,ij->i", b, b)[None, :]

@@ -45,21 +45,19 @@ from mysteryann_spark.sources.staging import (
 )
 
 # Per-worker cap on the transient (query-chunk x arrow-batch) float64
-# distance block inside the GEMM kernels. 256 MB x 32 local workers = 8 GB
-# of in-flight distance blocks worst case; tune down via env on smaller
-# executors. Chunking is exact (per-query results are row-independent).
-import os as _os
-
-_DMAT_BUDGET_BYTES = int(
-    _os.environ.get("SPARK_GRAFT_DMAT_BUDGET_MB", "256")
-) * 1024 * 1024
+# distance block inside the GEMM kernels: 256 MB x 32 local workers = 8 GB
+# of in-flight distance blocks worst case. Per-query top-k is
+# row-independent, but the GEMM rounds a row differently at another chunk
+# height: distances can move in their last bits, so ids match unless two
+# candidates tie to within rounding (tests/test_knn.py checks 1-3 rows).
+_DMAT_BUDGET_BYTES = 256 * 1024 * 1024
 
 
 def dmat_chunk_rows(n_cols: int, itemsize: int = 8) -> int:
     """Rows per chunk so one transient (rows x n_cols) scratch matrix of
     ``itemsize``-byte cells stays under the shared per-worker
-    SPARK_GRAFT_DMAT_BUDGET_MB budget. Every bounded GEMM/distance block
-    in the package sizes itself through this ONE helper so the budget knob
+    ``_DMAT_BUDGET_BYTES`` budget. Every bounded GEMM/distance block
+    in the package sizes itself through this ONE helper so the budget
     means the same thing everywhere (a hand-rolled cell-count floor in the
     centroid-assignment UDF over-allocated 4x the intended bound at the
     256k-centroid 10^8 geometry)."""
@@ -133,7 +131,7 @@ def _block_topk(
     count: at 60k queries x ~5k-row batches that is ~2.3 GB per
     in-flight batch, and cores x workers of those OOM-killed the 300k
     scale rehearsal. Per-query top-k is row-independent, so chunking
-    is exact — only the transient block size changes."""
+    changes distances only by GEMM rounding (see _DMAT_BUDGET_BYTES)."""
     n_q = len(qids) if qrows is None else len(qrows)
     q_chunk = dmat_chunk_rows(len(bids))
     for s in range(0, n_q, q_chunk):

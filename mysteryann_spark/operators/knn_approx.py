@@ -256,7 +256,7 @@ def ivf_knn_join(
             if pdf.empty:
                 continue
             bids = pdf["bid"].to_numpy(dtype=np.int64)
-            bmat = np.stack([np.asarray(v, dtype=qmat.dtype) for v in pdf["bvec"]])
+            bmat = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["bvec"]])
             bcids = pdf["cid"].to_numpy(dtype=np.int64)
             # contiguous runs per cid (sorted within partitions)
             run_starts = np.flatnonzero(np.r_[True, bcids[1:] != bcids[:-1]])

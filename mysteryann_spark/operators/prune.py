@@ -16,8 +16,6 @@ makes pass 2 a no-op re-scan of pass 1's input.
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -95,7 +93,7 @@ def _batched_l2_like(metric: str, q3: np.ndarray, b3: np.ndarray) -> np.ndarray:
     b3[i])`` in a loop (verified: same-dims batched dgemm/einsum matches
     the 2-D calls bitwise; padding or dim changes would NOT — see
     tests/test_prune.py::test_batched_distances_bitwise). Inputs must be
-    C-contiguous with the scalar path's dtype already applied."""
+    C-contiguous float64, as the scalar path casts them."""
     if metric == "l2":
         qq = np.einsum("bij,bij->bi", q3, q3)[:, :, None]
         bb = np.einsum("bij,bij->bi", b3, b3)[:, None, :]
@@ -111,12 +109,6 @@ def _batched_l2_like(metric: str, q3: np.ndarray, b3: np.ndarray) -> np.ndarray:
         bn[bn == 0.0] = 1.0
         return -np.matmul(q3 / qn, (b3 / bn).transpose(0, 2, 1))
     raise ValueError(f"unknown metric {metric!r}")
-
-
-def _np_dtype_of(mat: np.ndarray) -> np.dtype:
-    from mysteryann_spark.functions.vector import _pair_dtype
-
-    return _pair_dtype(mat, mat)
 
 
 def occlusion_prune_batch(
@@ -152,7 +144,6 @@ def occlusion_prune_batch(
     if pool_cap is None:
         pool_cap = max(8 * m, 256)
     B = len(pools_ids)
-    dt = _np_dtype_of(mat)
     widths = np.fromiter((len(p) for p in pools_ids), dtype=np.int64, count=B)
     total = int(widths.sum())
     out: list = [None] * B
@@ -162,8 +153,8 @@ def occlusion_prune_batch(
     flat_ids = np.concatenate(
         [np.asarray(p, dtype=np.int64) for p in pools_ids if len(p)]
     )
-    flat_vecs = np.ascontiguousarray(mat[flat_rows], dtype=dt)
-    tgt_vecs = np.ascontiguousarray(mat[tgt_rows], dtype=dt)
+    flat_vecs = np.ascontiguousarray(mat[flat_rows], dtype=np.float64)
+    tgt_vecs = np.ascontiguousarray(mat[tgt_rows], dtype=np.float64)
     owner = np.repeat(np.arange(B, dtype=np.int64), widths)
 
     # --- target distances over the FULL pool (pre-dedup), grouped by
@@ -182,7 +173,7 @@ def occlusion_prune_batch(
         v3 = np.ascontiguousarray(flat_vecs[pos]).reshape(len(rows_g), k, -1)
         t3 = np.ascontiguousarray(tgt_vecs[rows_g])[:, None, :]
         dg = _batched_l2_like(metric, t3, v3)[:, 0, :]
-        flat_dists[pos] = dg.astype(np.float64, copy=False).ravel()
+        flat_dists[pos] = dg.ravel()
 
     # --- (dist, id) sort within each node — the scalar lexsort, global
     ord1 = np.lexsort((flat_ids, flat_dists, owner))
@@ -220,8 +211,8 @@ def occlusion_prune_batch(
         pos = (indptr2[rows_g][:, None] + np.arange(k, dtype=np.int64)).ravel()
         ids_g = si[pos].reshape(Bg, k)
         d_g = sd[pos].reshape(Bg, k)
-        v3 = np.ascontiguousarray(mat[srows[pos]], dtype=dt).reshape(Bg, k, -1)
-        pair = _batched_l2_like(metric, v3, v3).astype(np.float64, copy=False)
+        v3 = np.ascontiguousarray(mat[srows[pos]], dtype=np.float64).reshape(Bg, k, -1)
+        pair = _batched_l2_like(metric, v3, v3)
 
         kept_m = np.zeros((Bg, k), dtype=bool)
         kept_m[:, 0] = True
@@ -251,6 +242,10 @@ def occlusion_prune_batch(
             )
     return out
 
+
+# nodes per prune task: sizes the prune stage's partition count (see
+# prune_candidates); read on the driver
+_PRUNE_NODES_PER_TASK = 256
 
 _ADJ_SCHEMA = StructType(
     [
@@ -335,9 +330,8 @@ def prune_candidates(
             e,
         )
         n_staged = 0
-    per_task = int(os.environ.get("SPARK_GRAFT_PRUNE_NODES_PER_TASK", "256"))
     n_parts = min(
-        -(-n_staged // max(per_task, 1)),
+        -(-n_staged // _PRUNE_NODES_PER_TASK),
         cand_df.sparkSession.sparkContext.defaultParallelism * 4,
     )
     if n_parts > 1:

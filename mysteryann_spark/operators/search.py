@@ -572,7 +572,7 @@ def _search(
             for s in range(0, len(pdf), _BATCH_CHUNK):
                 sub = pdf.iloc[s : s + _BATCH_CHUNK]
                 qids = sub[query_id].to_numpy()
-                qmat = np.stack([np.asarray(v, dtype=bmat.dtype) for v in sub[vec_col]])
+                qmat = np.stack([np.asarray(v, dtype=np.float64) for v in sub[vec_col]])
                 excl = None
                 if exclude_self:  # each query's own base row, or -1
                     pos = np.searchsorted(ids, qids)

@@ -69,6 +69,7 @@ from pyspark.sql import functions as F
 
 from mysteryann_spark.functions.vector import distance_col
 from mysteryann_spark.session import broadcast_if_under
+from mysteryann_spark.sources.staging import scratch_dir
 
 # parquet stats-reset cadence (see module docstring): bits of estimated
 # sizeInBytes roughly double per round between resets, so 16 rounds from
@@ -203,30 +204,20 @@ def search_graph_distributed(
     # path it is reading). The dir is ALWAYS removed before returning:
     # counters and pool are re-checkpointed at exit, so the returned lazy
     # plan never references the snapshots (pre-r12 this leaked one
-    # bounded dir per call whose loop ended right after a reset).
+    # bounded dir per call whose loop ended right after a reset). It sits
+    # under the stage root, so a killed driver's snapshots are swept too.
     reset_dir: str | None = None
     seen_gen = 0
 
-    # SPARK_GRAFT_ROUND_LOG: per-round wall breakdown (one JSON line per
-    # round to stdout) for profiling the driver-sync term — measurement
-    # only, no plan change; off outside explicit profiling runs.
-    round_log = bool(os.environ.get("SPARK_GRAFT_ROUND_LOG"))
-    if round_log:
-        import json as _json
-        import time as _time
-
     try:
         for rnd in range(max_rounds):
-            t_r0 = _time.time() if round_log else 0.0
             if rnd and rnd % _STATS_RESET_EVERY == 0:
                 # stats reset: pool takes a parquet round-trip so estimated
                 # sizeInBytes restarts from the actual file size, and the
                 # seen-id frames compact into one snapshot (values
                 # unchanged — bit-parity with the broadcast path holds)
-                import tempfile
-
                 if reset_dir is None:
-                    reset_dir = tempfile.mkdtemp(prefix="mysteryann-stage-")
+                    reset_dir = scratch_dir("search-reset-")
                 pool_path = os.path.join(reset_dir, "pool")
                 # explicit schemas on the read-backs: the frames were just
                 # written from driver-known schemas, so re-inferring them
@@ -256,7 +247,6 @@ def search_graph_distributed(
             if frontier.count() == 0:
                 break
             frontier_parts.append(frontier)
-            t_front = _time.time() if round_log else 0.0
 
             # expand: frontier ⋈ adjacency → fresh candidate ids per query,
             # deduped against every id scored in ANY earlier round.
@@ -302,7 +292,6 @@ def search_graph_distributed(
             # cand leg grew 1.7 -> 4 s/round from scheduling alone).
             # coalesce is lazy — scoring itself keeps full parallelism.
             seen_parts.append(scored.select("qid", "nn_id").coalesce(1))
-            t_cand = _time.time() if round_log else 0.0
 
             # pool update: mark the expanded frontier rows, admit the new
             # scored rows, keep the per-query (dist, id) top-L. Top-L of
@@ -328,22 +317,6 @@ def search_graph_distributed(
                 .drop("rk")
                 .localCheckpoint(eager=True)
             )
-            if round_log:
-                t_end = _time.time()
-                print(
-                    _json.dumps(
-                        {
-                            "stage": "round_log",
-                            "rnd": rnd,
-                            "frontier_s": round(t_front - t_r0, 3),
-                            "probe_s": 0.0,
-                            "cand_s": round(t_cand - t_front, 3),
-                            "score_union_s": round(t_end - t_cand, 3),
-                            "total_s": round(t_end - t_r0, 3),
-                        }
-                    ),
-                    flush=True,
-                )
 
         # counters: every seen id was scored exactly once; the single seed
         # row is excluded from cmps per the reference's counter convention

@@ -23,6 +23,7 @@ from mysteryann_spark.operators.projection import build_roargraph_from_table
 from mysteryann_spark.operators.search import search_graph
 from mysteryann_spark.params import IndexParams
 from mysteryann_spark.queries.base import QuerySpec
+from mysteryann_spark.sources.staging import scratch_dir
 from mysteryann_spark.sources.tables import load_table
 
 # Registered build config (scaled-down run_roargraph_test.sh:5-10 shape).
@@ -418,8 +419,6 @@ def roargraph_stream_insert(spark: SparkSession, sf_dir: str) -> DataFrame:
     src/index_bipartite.cpp) — this is the index-freshness loop a live
     corpus needs. Rows-only; streamed-vs-bulk parity, degree-cap, and
     recall gates live in tests/test_streaming.py."""
-    import tempfile
-
     from mysteryann_spark.operators.projection import build_roargraph_from_table
     from mysteryann_spark.streaming.maintain import (
         stage_vector_stream,
@@ -431,9 +430,7 @@ def roargraph_stream_insert(spark: SparkSession, sf_dir: str) -> DataFrame:
     old = emb.where(F.col("vec_id") < cut)
     new = emb.where(F.col("vec_id") >= cut)
     adj, ep = build_roargraph_from_table(spark, old, PARAMS)
-    scratch = tempfile.mkdtemp(
-        prefix=f"roargraph_stream_{spark.sparkContext.applicationId}_"
-    )
+    scratch = scratch_dir(f"roargraph_stream_{spark.sparkContext.applicationId}_")
     stream = stage_vector_stream(
         spark, new, os.path.join(scratch, "feed"), n_batches=3
     )
@@ -456,8 +453,6 @@ def roargraph_stream_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     (src/index_bipartite.cpp has no insert or delete path). Rows-only;
     streamed-vs-batch-API parity, tombstone coverage, and recall gates
     live in tests/test_streaming.py (test_stream_maintain_churn_parity)."""
-    import tempfile
-
     from mysteryann_spark.operators.projection import build_roargraph_from_table
     from mysteryann_spark.streaming.maintain import (
         stage_op_stream,
@@ -493,9 +488,7 @@ def roargraph_stream_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ops = ins0.unionByName(del1).unionByName(ins1).unionByName(del2).unionByName(ins2)
 
-    scratch = tempfile.mkdtemp(
-        prefix=f"roargraph_maintain_{spark.sparkContext.applicationId}_"
-    )
+    scratch = scratch_dir(f"roargraph_maintain_{spark.sparkContext.applicationId}_")
     stream = stage_op_stream(spark, ops, os.path.join(scratch, "feed"))
     _, merged, _, _ = stream_maintain_roargraph(
         spark, old.select("vec_id", "embedding"), adj.localCheckpoint(), ep,
@@ -511,12 +504,10 @@ def roargraph_save_load_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     :2097-2117), and search THROUGH the loaded copy — results must equal
     searching the in-session graph (rows-only here; byte-level save/load
     equality is test-gated in tests/test_graph.py)."""
-    import tempfile
-
     from mysteryann_spark.sources.graph_io import load_index, save_index
 
     emb, adj, ep = _build(spark, sf_dir)
-    path = tempfile.mkdtemp(prefix="mysteryann-roundtrip-")
+    path = scratch_dir("mysteryann-roundtrip-")
     dim = len(emb.select("embedding").head()[0])
     save_index(adj, path, entry_point=ep, dim=dim, params=PARAMS)
     adj2, meta = load_index(spark, path)
@@ -536,9 +527,6 @@ def roargraph_binary_interop(spark: SparkSession, sf_dir: str) -> DataFrame:
     copy — a user holding C++-built RoarGraph index files can load them
     here without a rebuild. Rows-only; byte-level roundtrip equality is
     gated in tests/test_graph.py."""
-    import os
-    import tempfile
-
     from mysteryann_spark.sources.graph_io import (
         load_projection_binary,
         save_projection_binary,
@@ -546,7 +534,7 @@ def roargraph_binary_interop(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb, adj, ep = _build(spark, sf_dir)
     npts = emb.count()
-    path = os.path.join(tempfile.mkdtemp(prefix="mysteryann-binidx-"), "roar.index")
+    path = os.path.join(scratch_dir("mysteryann-binidx-"), "roar.index")
     save_projection_binary(adj, path, entry_point=ep, npts=npts)
     adj2, ep2 = load_projection_binary(spark, path)
     q = emb.where(F.col("vec_id") < 20).select(F.col("vec_id").alias("qid"), "embedding")
@@ -564,14 +552,11 @@ def roargraph_nsg_import(spark: SparkSession, sf_dir: str) -> DataFrame:
     import it back recovering npts from the stream, and search THROUGH
     the imported copy. Rows-only; byte roundtrip + hand-packed parse +
     truncation rejection are gated in tests/test_graph.py."""
-    import os as _os
-    import tempfile
-
     from mysteryann_spark.sources.graph_io import load_nsg_binary, save_nsg_binary
 
     emb, adj, ep = _build(spark, sf_dir)
     npts = emb.count()
-    path = _os.path.join(tempfile.mkdtemp(prefix="mysteryann-nsg-"), "roar.nsg")
+    path = os.path.join(scratch_dir("mysteryann-nsg-"), "roar.nsg")
     save_nsg_binary(adj, path, entry_point=ep, npts=npts)
     adj2, ep2, _w = load_nsg_binary(spark, path)
     q = emb.where(F.col("vec_id") < 20).select(F.col("vec_id").alias("qid"), "embedding")

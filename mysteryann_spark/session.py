@@ -1,7 +1,8 @@
-"""SparkSession factory tuned for the local[32] test rig but shaped for a
-multi-executor cluster: AQE on (runtime re-plan, skew-join splitting,
-partition coalescing), Arrow on (pandas-UDF hot paths), UTC session time
-(matches the DuckDB oracle's naive-UTC timestamps).
+"""SparkSession factory: ``local[N]`` over the CPUs this process may run
+on by default, but shaped for a multi-executor cluster: AQE on (runtime
+re-plan, skew-join splitting, partition coalescing), Arrow on (pandas-UDF
+hot paths), UTC session time (matches the DuckDB oracle's naive-UTC
+timestamps).
 """
 
 from __future__ import annotations
@@ -14,6 +15,17 @@ from pyspark.sql import SparkSession
 
 # Ceiling of the host-derived driver-memory default (the former fixed default).
 _DRIVER_MEM_CAP_MB = 24 * 1024
+
+
+def usable_cpus() -> int:
+    """CPUs this process may run on: its affinity mask, which a cgroup
+    cpuset or ``taskset`` narrows below the host's count (what ``nproc``
+    prints). Falls back to ``os.cpu_count()`` where the mask cannot be
+    read (non-Linux hosts), and to 4 when that is unknown too."""
+    try:
+        return len(os.sched_getaffinity(0))
+    except (AttributeError, OSError):
+        return os.cpu_count() or 4
 
 
 def host_mem_mb(meminfo: str = "/proc/meminfo") -> int | None:
@@ -102,7 +114,7 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", usable_cpus()))
     # One BLAS thread per Python worker: the numpy kernels (GEMM in the
     # kNN join, einsum in the beam search) run in ~cpus parallel workers
     # already — letting each spawn its own cpu-wide OpenBLAS pool
@@ -117,14 +129,13 @@ def get_spark(
     # (measured: a 47-min 10^8 IVF-PQ build died to a single worker crash).
     # A cluster allows 4 ATTEMPTS by default (spark.task.maxFailures=4);
     # local[N,F]'s F is that same max-attempts count, NOT a retry count —
-    # SPARK_GRAFT_TASK_RETRIES is therefore "max attempts" and defaults to
-    # 4 to match the cluster posture (F=2 would give only one retry).
+    # so F=4 matches the cluster posture (F=2 would give only one retry).
     # Retries re-run the same deterministic task, so results are unchanged;
     # a DETERMINISTIC worker crash still fails after F attempts.
-    retries = int(os.environ.get("SPARK_GRAFT_TASK_RETRIES", "4"))
+    # SPARK_MASTER replaces the whole master string, retries included.
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(os.environ.get("SPARK_MASTER", f"local[{cpus},{retries}]"))
+        .master(os.environ.get("SPARK_MASTER", f"local[{cpus},4]"))
         # At cluster scale shuffle_partitions is sized to data volume; locally
         # ~cores avoids 200-way over-parallelism on tiny inputs.
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
@@ -192,10 +203,8 @@ def spread(df, min_partitions: int | None = None):
 # Ceiling for FORCED broadcast hints sized by a caller-side estimate.
 # Spark hard-fails any broadcast over 8 GB ("Cannot broadcast the table
 # that is larger than 8GB"), and a driver/executor must also hold the
-# built hash relation — so the default stays well under the hard limit.
-_BCAST_CEILING_BYTES = int(
-    os.environ.get("SPARK_GRAFT_BCAST_CEILING_MB", "2048")
-) * 1024 * 1024
+# built hash relation — so the ceiling stays well under the hard limit.
+_BCAST_CEILING_BYTES = 2048 * 1024 * 1024
 
 
 def broadcast_if_under(df, est_bytes: float):

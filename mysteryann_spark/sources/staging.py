@@ -42,14 +42,13 @@ from pyspark.sql import DataFrame
 
 # per-Python-worker artifact cache; bounded so repeated stagings of
 # throwaway indexes (tests, sweeps with fresh builds) can't accumulate.
-# SPARK_GRAFT_WORKER_CACHE sizes it: the default 8 suits test/sf-scale
-# artifacts (MBs each); at rehearsal scale a single staged base matrix is
-# ~n*dim*8 bytes (5+ GB at 10^7 x 64), so big runs set 1-2 to keep
-# worker peak-resident memory to the live artifact instead of the LRU
-# history (phase-0 query matrix + prune base + search CSR would
-# otherwise all linger per worker).
+# Shareable artifacts are read-only maps of the host-shared store
+# (_shared_build), so an entry pins page-cache pages every worker on the
+# host shares, not a private copy: the LRU's size does not multiply
+# memory by the worker count. Only artifacts that are not a tuple of
+# arrays (NOSHARE, e.g. the None empty-input marker) are held privately.
 _CACHE: "OrderedDict[str, object]" = OrderedDict()
-_CACHE_MAX = int(os.environ.get("SPARK_GRAFT_WORKER_CACHE", "8"))
+_CACHE_MAX = 8
 
 
 # scratch budget for host-shared generations: each maintenance-chain step
@@ -313,6 +312,13 @@ def _stage_root() -> str:
     return _STAGE_ROOT
 
 
+def scratch_dir(prefix: str) -> str:
+    """A fresh dir under the stage root, for driver-side scratch (index
+    files, streaming checkpoints, snapshots): removed at exit with the
+    root, or by the next session's sweep if this process is killed."""
+    return tempfile.mkdtemp(prefix=prefix, dir=_stage_root())
+
+
 def sweep_stage_scratch(max_age_s: float = 6 * 3600.0) -> int:
     """Best-effort cross-session GC of leaked stage scratch; returns the
     number of dirs removed. Roots with an OWNER record are removed when
@@ -466,8 +472,9 @@ class StagedBase:
         chain — reclaims the delete-churn overhang (tombstoned ids keep
         rows in the chain form) and bounds the per-path parquet open cost
         of cold worker rebuilds. Call when `len(paths)` or measured
-        overhang crosses a budget (the maintenance loops use the same
-        cadence knob as their adjacency chain, SPARK_GRAFT_ADJ_COMPACT)."""
+        overhang crosses a budget (the maintenance loops compact at the
+        same chain length as their adjacency chain,
+        streaming.maintain._ADJ_COMPACT_EVERY)."""
         self.paths = [stage_parquet(live_df, storage_dir)]
         return self
 
@@ -794,22 +801,8 @@ def read_staged_multi(paths: "list[str] | str", key_col: str = "node"):
     return tbl.take(pa.array(keep))
 
 
-def stage_dtype() -> np.dtype:
-    """Element dtype of staged matrices. float64 by default (bit-parity
-    with the DuckDB oracles); ``SPARK_GRAFT_STAGE_DTYPE=float32`` opts a
-    RUN into the reference's own fp32 precision (distance.h operates on
-    float*) — halves per-worker matrix residency and doubles GEMM rate,
-    the regime the 10^7 rehearsal needs. The distance kernels follow the
-    operand dtype (functions/vector._pair_dtype)."""
-    return np.dtype(
-        np.float32
-        if os.environ.get("SPARK_GRAFT_STAGE_DTYPE") == "float32"
-        else np.float64
-    )
-
-
 def table_matrix(tbl, id_col: str, vec_col: str) -> tuple[np.ndarray, np.ndarray]:
-    """(ids, float matrix — see stage_dtype) from an Arrow table,
+    """(ids, float64 matrix) from an Arrow table,
     id-sorted. The list column is flattened through its offsets — one
     buffer copy, no per-row Python objects. Already-sorted ids (the
     common case: staged writes of range-partitioned sources) skip the
@@ -822,7 +815,7 @@ def table_matrix(tbl, id_col: str, vec_col: str) -> tuple[np.ndarray, np.ndarray
         raise ValueError("staged base table is empty")
     if not np.all(widths == widths[0]):
         raise ValueError("staged vectors are ragged; expected fixed dim")
-    flat = arr.flatten().to_numpy(zero_copy_only=False).astype(stage_dtype())
+    flat = arr.flatten().to_numpy(zero_copy_only=False).astype(np.float64)
     mat = flat.reshape(len(ids), int(widths[0]))
     if len(ids) > 1 and np.all(ids[1:] >= ids[:-1]):
         return ids.astype(np.int64), mat

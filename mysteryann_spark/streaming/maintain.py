@@ -50,7 +50,7 @@ from mysteryann_spark.params import IndexParams
 # re-stage the merged adjacency whole (and reset the delta chain) once
 # the chain reaches this many paths: bounds tombstone/override overhang
 # and the per-path parquet open cost of worker rebuilds from scratch
-_ADJ_COMPACT_EVERY = int(os.environ.get("SPARK_GRAFT_ADJ_COMPACT", "64"))
+_ADJ_COMPACT_EVERY = 64
 
 _VEC_SCHEMA = StructType(
     [

@@ -188,8 +188,14 @@ def test_distributed_search_reset_every_round_parity(spark, emb, index, monkeypa
     q = emb.where("vec_id < 8").select(F.col("vec_id").alias("qid"), "embedding")
 
     def stage_dirs():
-        root = tempfile.gettempdir()
-        return {d for d in os.listdir(root) if d.startswith("mysteryann-stage-")}
+        # top-level stage roots, and the snapshot dirs inside this
+        # session's root (where the stats reset creates them)
+        from mysteryann_spark.sources.staging import _stage_root
+
+        root, mine = tempfile.gettempdir(), _stage_root()
+        return {
+            d for d in os.listdir(root) if d.startswith("mysteryann-stage-")
+        } | {os.path.join(mine, d) for d in os.listdir(mine)}
 
     before = stage_dirs()
     res = sd.search_graph_distributed(q, emb, adj, ep, k=5, l_search=8, metric="l2")
@@ -215,10 +221,14 @@ def test_distributed_search_stats_reset_scratch_bounded(spark):
     )
 
     def stage_dirs():
-        root = tempfile.gettempdir()
+        # top-level stage roots, and the snapshot dirs inside this
+        # session's root (where the stats reset creates them)
+        from mysteryann_spark.sources.staging import _stage_root
+
+        root, mine = tempfile.gettempdir(), _stage_root()
         return {
             d for d in os.listdir(root) if d.startswith("mysteryann-stage-")
-        }
+        } | {os.path.join(mine, d) for d in os.listdir(mine)}
 
     n = 40  # chain graph -> ~n rounds -> multiple 16-round resets
     emb = spark.createDataFrame(
@@ -253,8 +263,14 @@ def test_distributed_search_scratch_cleaned_on_midround_exception(spark, monkeyp
     from mysteryann_spark.operators import search_distributed as sd
 
     def stage_dirs():
-        root = tempfile.gettempdir()
-        return {d for d in os.listdir(root) if d.startswith("mysteryann-stage-")}
+        # top-level stage roots, and the snapshot dirs inside this
+        # session's root (where the stats reset creates them)
+        from mysteryann_spark.sources.staging import _stage_root
+
+        root, mine = tempfile.gettempdir(), _stage_root()
+        return {
+            d for d in os.listdir(root) if d.startswith("mysteryann-stage-")
+        } | {os.path.join(mine, d) for d in os.listdir(mine)}
 
     n = 40
     emb = spark.createDataFrame(
@@ -1310,18 +1326,13 @@ def _pools(out_d, out_r, indptr):
     ]
 
 
-# every parity trial also runs on float32 operands: the opt-in
-# SPARK_GRAFT_STAGE_DTYPE=float32 staging regime scores in float32
-_DTYPES = ("float64", "float32")
-
-
 def test_vectorized_beam_kernel_bit_parity_with_scalar_reference():
     """The production beam kernel (_beam_search_batch: compacted pools,
     sort-free scatter merge, LSM visited set) must evolve bit-identically
     to the plain scalar loop (_beam_search_batch_ref) — pools, cmps and
-    hops all equal — across metrics, widths, pool sizes, exclusions,
-    graph shapes and operand dtypes. This is the gate that lets the
-    pinned search oracles keep certifying the fast kernel."""
+    hops all equal — across metrics, widths, pool sizes, exclusions and
+    graph shapes. This is the gate that lets the pinned search oracles
+    keep certifying the fast kernel."""
     import numpy as np
 
     from mysteryann_spark.operators.search import (
@@ -1349,22 +1360,20 @@ def test_vectorized_beam_kernel_bit_parity_with_scalar_reference():
             rng.random(nq) < 0.3, rng.integers(0, n, size=nq), -1
         ).astype(np.int64)
         ep = int(rng.integers(0, n))
-        for dt in _DTYPES:
-            q, b = qmat.astype(dt), bmat.astype(dt)
-            p1, c1, h1 = _beam_search_batch_ref(
-                q, ep, indptr, indices, b, L, metric, excl, expand_width=w)
-            od, orr, c2, h2 = _beam_search_batch(
-                q, [[ep]] * nq, indptr, indices, b, L, metric, excl, expand_width=w)
-            assert np.array_equal(c1, c2), (trial, metric, w, dt)
-            assert np.array_equal(h1, h2), (trial, metric, w, dt)
-            assert p1 == _pools(od, orr, indptr), (trial, metric, w, dt)
+        p1, c1, h1 = _beam_search_batch_ref(
+            qmat, ep, indptr, indices, bmat, L, metric, excl, expand_width=w)
+        od, orr, c2, h2 = _beam_search_batch(
+            qmat, [[ep]] * nq, indptr, indices, bmat, L, metric, excl, expand_width=w)
+        assert np.array_equal(c1, c2), (trial, metric, w)
+        assert np.array_equal(h1, h2), (trial, metric, w)
+        assert p1 == _pools(od, orr, indptr), (trial, metric, w)
 
 
 def test_vectorized_bipartite_kernel_bit_parity_with_scalar_reference():
     """Same gate as the projection-graph kernel, for the 2-hop bipartite
     search: the kernel at ``n_hops=2`` must match the scalar loop exactly
     — pools, cmps, hops — across metrics, seed multisets (duplicates
-    included), graph shapes and operand dtypes."""
+    included) and graph shapes."""
     import numpy as np
 
     from mysteryann_spark.operators.search import (
@@ -1398,14 +1407,12 @@ def test_vectorized_bipartite_kernel_bit_parity_with_scalar_reference():
             for _ in range(nq)
         ]
         metric = str(rng.choice(["l2", "ip", "cosine"]))
-        for dt in _DTYPES:
-            q, b = qmat.astype(dt), bmat.astype(dt)
-            p1, c1, h1 = _beam_search_bipartite_batch_ref(
-                q, seeds, indptr, indices, b, L, metric)
-            od, orr, c2, h2 = _beam_search_batch(
-                q, seeds, indptr, indices, b, L, metric, n_hops=2)
-            assert np.array_equal(c1, c2) and np.array_equal(h1, h2), (trial, metric, dt)
-            assert p1 == _pools(od, orr, indptr), (trial, metric, dt)
+        p1, c1, h1 = _beam_search_bipartite_batch_ref(
+            qmat, seeds, indptr, indices, bmat, L, metric)
+        od, orr, c2, h2 = _beam_search_batch(
+            qmat, seeds, indptr, indices, bmat, L, metric, n_hops=2)
+        assert np.array_equal(c1, c2) and np.array_equal(h1, h2), (trial, metric)
+        assert p1 == _pools(od, orr, indptr), (trial, metric)
 
 
 def test_beam_kernel_parity_on_tied_distances():
@@ -1447,15 +1454,13 @@ def test_beam_kernel_parity_on_tied_distances():
             rng.random(nq) < 0.3, rng.integers(0, n, size=nq), -1
         ).astype(np.int64)
         ep = int(rng.integers(0, n))
-        for dt in _DTYPES:
-            q, b = qmat.astype(dt), bmat.astype(dt)
-            p1, c1, h1 = _beam_search_batch_ref(
-                q, ep, indptr, indices, b, L, metric, excl, expand_width=w)
-            od, orr, c2, h2 = _beam_search_batch(
-                q, [[ep]] * nq, indptr, indices, b, L, metric, excl, expand_width=w)
-            assert np.array_equal(c1, c2), (trial, metric, w, dt)
-            assert np.array_equal(h1, h2), (trial, metric, w, dt)
-            assert p1 == _pools(od, orr, indptr), (trial, metric, w, dt)
+        p1, c1, h1 = _beam_search_batch_ref(
+            qmat, ep, indptr, indices, bmat, L, metric, excl, expand_width=w)
+        od, orr, c2, h2 = _beam_search_batch(
+            qmat, [[ep]] * nq, indptr, indices, bmat, L, metric, excl, expand_width=w)
+        assert np.array_equal(c1, c2), (trial, metric, w)
+        assert np.array_equal(h1, h2), (trial, metric, w)
+        assert p1 == _pools(od, orr, indptr), (trial, metric, w)
 
 
 def test_bipartite_kernel_parity_on_tied_distances():
@@ -1495,14 +1500,12 @@ def test_bipartite_kernel_parity_on_tied_distances():
             for _ in range(nq)
         ]
         metric = str(rng.choice(["l2", "ip", "cosine"]))
-        for dt in _DTYPES:
-            q, b = qmat.astype(dt), bmat.astype(dt)
-            p1, c1, h1 = _beam_search_bipartite_batch_ref(
-                q, seeds, indptr, indices, b, L, metric)
-            od, orr, c2, h2 = _beam_search_batch(
-                q, seeds, indptr, indices, b, L, metric, n_hops=2)
-            assert np.array_equal(c1, c2) and np.array_equal(h1, h2), (trial, metric, dt)
-            assert p1 == _pools(od, orr, indptr), (trial, metric, dt)
+        p1, c1, h1 = _beam_search_bipartite_batch_ref(
+            qmat, seeds, indptr, indices, bmat, L, metric)
+        od, orr, c2, h2 = _beam_search_batch(
+            qmat, seeds, indptr, indices, bmat, L, metric, n_hops=2)
+        assert np.array_equal(c1, c2) and np.array_equal(h1, h2), (trial, metric)
+        assert p1 == _pools(od, orr, indptr), (trial, metric)
 
 
 def test_bipartite_kernel_empty_seed_lists():
@@ -1530,18 +1533,16 @@ def test_bipartite_kernel_empty_seed_lists():
         [[], [], []],                      # every seed list empty
         [[], [0, 5, 5], []],               # mixed, with duplicate seeds
     ):
-        for dt in _DTYPES:
-            q, b = qmat.astype(dt), bmat.astype(dt)
-            p1, c1, h1 = _beam_search_bipartite_batch_ref(
-                q, seeds, indptr, indices, b, 8, "l2")
-            od, orr, c2, h2 = _beam_search_batch(
-                q, seeds, indptr, indices, b, 8, "l2", n_hops=2)
-            p2 = _pools(od, orr, indptr)
-            assert np.array_equal(c1, c2) and np.array_equal(h1, h2)
-            assert p1 == p2
-            for s, pool in zip(seeds, p2):
-                if not s:
-                    assert pool == []
+        p1, c1, h1 = _beam_search_bipartite_batch_ref(
+            qmat, seeds, indptr, indices, bmat, 8, "l2")
+        od, orr, c2, h2 = _beam_search_batch(
+            qmat, seeds, indptr, indices, bmat, 8, "l2", n_hops=2)
+        p2 = _pools(od, orr, indptr)
+        assert np.array_equal(c1, c2) and np.array_equal(h1, h2)
+        assert p1 == p2
+        for s, pool in zip(seeds, p2):
+            if not s:
+                assert pool == []
 
 
 def test_precomputed_knn_df_build_matches_inline_phase0(spark, emb):

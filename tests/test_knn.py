@@ -76,7 +76,7 @@ def test_knn_join_blocked_equals_single_broadcast(spark, emb):
 
 def test_dmat_chunk_rows_bounds_every_geometry():
     """The shared chunk sizer keeps one scratch matrix under the
-    SPARK_GRAFT_DMAT_BUDGET_MB budget at every geometry — including the
+    ``_DMAT_BUDGET_BYTES`` budget at every geometry — including the
     256k-centroid float32 10^8 assignment the old cell-count floor
     over-allocated 4x on."""
     from mysteryann_spark.operators.knn import _DMAT_BUDGET_BYTES, dmat_chunk_rows
@@ -85,3 +85,51 @@ def test_dmat_chunk_rows_bounds_every_geometry():
         rows = dmat_chunk_rows(n_cols, itemsize)
         assert rows >= 1
         assert rows == 1 or rows * n_cols * itemsize <= _DMAT_BUDGET_BYTES
+
+
+def test_block_topk_chunking_is_exact_at_any_budget(monkeypatch):
+    """``_block_topk`` chunks the query axis under ``_DMAT_BUDGET_BYTES``;
+    at a budget of 1-3 rows per chunk (with a partial last chunk) it must
+    yield the unchunked frames row for row — with ``exclude_self``, with
+    ``qmatch``/``bmatch`` and with a ``qrows`` subset. In-process, no
+    Spark: the budget is read inside the Python worker, where a
+    driver-side patch would not reach. GEMM float noise differs by
+    chunk shape (OpenBLAS rounds a row differently at another row
+    count), so ids must match exactly and dists to 1e-12 relative."""
+    import pandas as pd
+
+    from mysteryann_spark.operators import knn
+
+    rng = np.random.default_rng(5)
+    nq, nb, dim, k = 11, 37, 8, 5
+    qids = np.arange(nq, dtype=np.int64) * 3  # some qids are base ids
+    qmat = rng.standard_normal((nq, dim))
+    bids = np.arange(nb, dtype=np.int64)
+    bmat = rng.standard_normal((nb, dim))
+    qmatch = rng.integers(0, 3, size=nq)
+    bmatch = rng.integers(0, 3, size=nb)
+    cases = [
+        dict(exclude_self=False),
+        dict(exclude_self=True),
+        dict(exclude_self=True, qmatch=qmatch, bmatch=bmatch),
+        dict(exclude_self=False, qrows=np.array([0, 2, 3, 7, 10])),
+    ]
+
+    def frames(kw):
+        out = list(knn._block_topk(qids, qmat, bids, bmat, k, "l2", **kw))
+        return len(out), pd.concat(out, ignore_index=True)
+
+    for kw in cases:
+        n_whole, whole = frames(kw)
+        assert n_whole == 1
+        for rows in (1, 2, 3):
+            monkeypatch.setattr(knn, "_DMAT_BUDGET_BYTES", rows * 8 * nb)
+            assert knn.dmat_chunk_rows(nb) == rows
+            n_chunks, chunked = frames(kw)
+            n_sel = nq if "qrows" not in kw else len(kw["qrows"])
+            assert n_chunks == -(-n_sel // rows)
+            assert len(chunked) == len(whole) == n_sel * k, (rows, kw.keys())
+            assert np.array_equal(chunked["qid"], whole["qid"]), (rows, kw.keys())
+            assert np.array_equal(chunked["nn_id"], whole["nn_id"]), (rows, kw.keys())
+            np.testing.assert_allclose(chunked["dist"], whole["dist"], rtol=1e-12, atol=0)
+            monkeypatch.undo()

@@ -126,42 +126,41 @@ def test_batched_distances_bitwise():
 
 def test_batch_matches_scalar_kernel():
     """occlusion_prune_batch == the occlusion_prune_np loop, element for
-    element and in output ORDER, across metrics, dtypes, duplicate
-    candidates, empty pools and the pool_cap truncation."""
+    element and in output ORDER, across metrics, duplicate candidates,
+    empty pools and the pool_cap truncation."""
     from mysteryann_spark.operators.prune import occlusion_prune_batch
 
     rng = np.random.default_rng(11)
     n = 300
     for metric in ("l2", "ip", "cosine"):
-        for dtype in (np.float64, np.float32):
-            mat = rng.normal(size=(n, 32)).astype(dtype)
-            pools, tgt_rows = [], []
-            for _ in range(120):
-                k = int(rng.integers(0, 50))
-                ids = rng.integers(0, n, size=k)  # duplicates allowed
-                node = int(rng.integers(0, n))
-                pools.append(ids[ids != node].astype(np.int64))
-                tgt_rows.append(node)
-            tgt_rows = np.asarray(tgt_rows, dtype=np.int64)
-            flat = (
-                np.concatenate(pools) if pools else np.empty(0, dtype=np.int64)
+        mat = rng.normal(size=(n, 32))
+        pools, tgt_rows = [], []
+        for _ in range(120):
+            k = int(rng.integers(0, 50))
+            ids = rng.integers(0, n, size=k)  # duplicates allowed
+            node = int(rng.integers(0, n))
+            pools.append(ids[ids != node].astype(np.int64))
+            tgt_rows.append(node)
+        tgt_rows = np.asarray(tgt_rows, dtype=np.int64)
+        flat = (
+            np.concatenate(pools) if pools else np.empty(0, dtype=np.int64)
+        )
+        m = int(rng.integers(1, 10))
+        got = occlusion_prune_batch(
+            pools, tgt_rows, flat, mat, m, metric, pool_cap=24
+        )
+        for b, ids in enumerate(pools):
+            vecs = mat[ids]
+            tgt = mat[tgt_rows[b]][None, :]
+            dists = (
+                np_distances(metric, tgt, vecs)[0]
+                if len(ids)
+                else np.empty(0)
             )
-            m = int(rng.integers(1, 10))
-            got = occlusion_prune_batch(
-                pools, tgt_rows, flat, mat, m, metric, pool_cap=24
+            want = occlusion_prune_np(ids, dists, vecs, m, metric, pool_cap=24)
+            assert [int(x) for x in got[b]] == [int(x) for x in want], (
+                metric, b,
             )
-            for b, ids in enumerate(pools):
-                vecs = mat[ids]
-                tgt = mat[tgt_rows[b]][None, :]
-                dists = (
-                    np_distances(metric, tgt, vecs)[0]
-                    if len(ids)
-                    else np.empty(0)
-                )
-                want = occlusion_prune_np(ids, dists, vecs, m, metric, pool_cap=24)
-                assert [int(x) for x in got[b]] == [int(x) for x in want], (
-                    metric, dtype, b,
-                )
 
 
 def test_prune_candidates_partition_invariant(spark, emb, monkeypatch):
@@ -172,6 +171,7 @@ def test_prune_candidates_partition_invariant(spark, emb, monkeypatch):
     across partitionings, and the kernel's (dist,id) sort must erase it."""
     from pyspark.sql import functions as F
 
+    from mysteryann_spark.operators import prune
     from mysteryann_spark.operators.prune import prune_candidates
 
     cands = (
@@ -184,9 +184,9 @@ def test_prune_candidates_partition_invariant(spark, emb, monkeypatch):
         rows = prune_candidates(cands, emb, m=8, metric="l2").collect()
         return {r["node"]: list(r["nbrs"]) for r in rows}
 
-    monkeypatch.setenv("SPARK_GRAFT_PRUNE_NODES_PER_TASK", "1000000000")
+    monkeypatch.setattr(prune, "_PRUNE_NODES_PER_TASK", 1000000000)
     one_task = run()
-    monkeypatch.setenv("SPARK_GRAFT_PRUNE_NODES_PER_TASK", "16")
+    monkeypatch.setattr(prune, "_PRUNE_NODES_PER_TASK", 16)
     many_tasks = run()
     assert one_task == many_tasks
     assert len(one_task) > 0

@@ -1,6 +1,8 @@
 """Host-derived session defaults — pure functions, no Spark session."""
 
-from mysteryann_spark.session import default_driver_memory
+import os
+
+from mysteryann_spark.session import default_driver_memory, usable_cpus
 
 
 def _meminfo(tmp_path, kb):
@@ -23,3 +25,22 @@ def test_driver_memory_falls_back_to_24g_without_meminfo(tmp_path):
     junk = tmp_path / "junk"
     junk.write_text("MemFree: 12 kB\n")
     assert default_driver_memory(str(junk)) == "24576m"
+
+
+def test_usable_cpus_follows_the_affinity_mask(monkeypatch):
+    monkeypatch.setattr(os, "cpu_count", lambda: 32)
+    monkeypatch.setattr(os, "sched_getaffinity", lambda pid: {0, 2, 5}, raising=False)
+    assert usable_cpus() == 3
+
+
+def test_usable_cpus_falls_back_to_cpu_count(monkeypatch):
+    def unreadable(pid):
+        raise OSError("no affinity mask")
+
+    monkeypatch.setattr(os, "cpu_count", lambda: 32)
+    monkeypatch.setattr(os, "sched_getaffinity", unreadable, raising=False)
+    assert usable_cpus() == 32
+    monkeypatch.delattr(os, "sched_getaffinity")
+    assert usable_cpus() == 32
+    monkeypatch.setattr(os, "cpu_count", lambda: None)
+    assert usable_cpus() == 4

@@ -410,7 +410,7 @@ def test_stream_maintain_churn_parity(spark, emb, tmp_path):
 
 def test_stream_insert_chain_compaction_is_transparent(spark, emb, tmp_path, monkeypatch):
     """The adjacency/vector chain COMPACTION branch (len(chain) >=
-    SPARK_GRAFT_ADJ_COMPACT re-stages the merged state whole and resets
+    _ADJ_COMPACT_EVERY re-stages the merged state whole and resets
     both chains) must be invisible in the result: forcing compaction on
     every batch yields exactly the adjacency the default long-chain run
     produces."""

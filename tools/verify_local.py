@@ -79,7 +79,9 @@ def main() -> int:
 
         from pyspark.sql import SparkSession
 
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
+        from mysteryann_spark.session import usable_cpus
+
+        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", usable_cpus()))
         # deliberately NO repo configs — this must be the driver's session
         spark = SparkSession.builder.master(f"local[{cpus}]").appName(
             "verify-bare"
