@@ -1156,14 +1156,18 @@ def semantic_dedup(
         train_coarse,
     )
 
-    cmat, _route = train_coarse(
+    cmat, route = train_coarse(
         emb, n_clusters, max_iter, seed, train_sample, base_id, vec_col
     )
-    bc = emb.sparkSession.sparkContext.broadcast(cmat)
+    sc = emb.sparkSession.sparkContext
+    bc = sc.broadcast(cmat)
+    bc_route = sc.broadcast(route) if route is not None else None
     assigned = emb.select(
         F.col(base_id).alias("id"),
         F.col(vec_col).alias("vec"),
-        F.element_at(nearest_centroids_udf(bc, 1)(F.col(vec_col)), 1).alias("cid"),
+        F.element_at(
+            nearest_centroids_udf(bc, 1, route_bc=bc_route)(F.col(vec_col)), 1
+        ).alias("cid"),
     )
 
     pair_schema = StructType(

@@ -34,10 +34,13 @@ Shape (designed for the 100 TB regime):
 
 Routing: base rows are assigned to their L2-nearest centroid in routing
 space (raw vectors; L2-normalized first for metric=cosine — spherical
-k-means). Queries probe centroids under the SEARCH metric, so ip queries
-chase high-dot centroids (the FAISS MIPS-IVF convention). Approximation
-is recall-gated in tests/test_knn_approx.py and at build level by the
-phase-0 swap gate in tests/test_graph.py.
+k-means), and l2 and cosine queries probe their L2-nearest centroids in
+the same space — one rule, one scorer (``similarity.centroid_scorer``),
+so a query always probes the list its own vector lands in. ip queries
+probe by dot product instead, chasing high-dot centroids (the FAISS
+MIPS-IVF convention). Approximation is recall-gated in
+tests/test_knn_approx.py and at build level by the phase-0 swap gate in
+tests/test_graph.py.
 """
 
 from __future__ import annotations
@@ -59,8 +62,7 @@ from mysteryann_spark.operators.knn import (
     rank_topk,
 )
 from mysteryann_spark.operators.similarity import (
-    _f32_memo,
-    _routed_nearest,
+    centroid_scorer,
     count_and_dim,
     train_coarse,
 )
@@ -109,10 +111,10 @@ def ivf_knn_join(
     training and base assignment go through the two-level route — the
     same O(branch + R*k/branch) structure the IVF-PQ builder uses, so a
     10^8-order build never pays the flat O(k)-per-row assignment wall.
-    Query PROBING also routes for metric=l2 (``_routed_nearest`` is an
-    L2 scorer); cosine/ip probing keeps the exact chunked GEMM — their
-    centroid ranking depends on centroid norms / dot products the
-    two-level L2 route does not order by.
+    Query PROBING routes the same way for l2 and cosine: both probe by
+    L2 in routing space through the assignment scorer. ip probing keeps
+    the exact dot-product GEMM — its centroid ranking depends on dot
+    products the L2 route does not order by.
     """
     spark = base_df.sparkSession
     n_base, dim = count_and_dim(base_df, vec_col)
@@ -144,29 +146,27 @@ def ivf_knn_join(
     bc_cent = spark.sparkContext.broadcast(cmat)
     bc_route = spark.sparkContext.broadcast(route) if route is not None else None
     npr = min(n_probe, len(cmat))
-    _cent32 = _f32_memo(bc_cent)
+    score = centroid_scorer(bc_cent, bc_route)
 
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf(ArrayType(IntegerType()))
     def probe_cids(vecs: pd.Series) -> pd.Series:
-        """Per-query n_probe nearest centroids under the SEARCH metric.
-        Computed as a DISTRIBUTED stage and persisted with the staged
-        query set: the previous design ran this GEMM inside the
-        executor-side artifact build, i.e. single-threaded in ONE worker
-        per host — a serial wall that grows with the training set
-        (~4e12 flops at the 10^7 full-training scale, tens of minutes
-        while every other core idles). Row-independent math (the GEMM
-        identity and per-row argpartition), so batching does not change
-        any query's probe set."""
+        """Per-query n_probe nearest centroids: L2 in routing space for
+        l2/cosine (the assignment rule), dot product for ip. Computed as
+        a DISTRIBUTED stage and persisted with the staged query set, not
+        in the executor-side artifact build: there it runs in ONE worker
+        per host, a serial wall that grows with the training set (~4e12
+        flops at the 10^7 full-training scale, tens of minutes while
+        every other core idles). Row-independent math (the GEMM identity
+        and per-row selection), so batching does not change any query's
+        probe set."""
         if len(vecs) == 0:
             return pd.Series([], dtype=object)
         m = _route(metric, np.stack([np.asarray(v, dtype=np.float64) for v in vecs]))
-        if bc_route is not None and metric == "l2":
-            l1_32, indptr = bc_route.value
-            p = _routed_nearest(m, _cent32(), l1_32, indptr, npr)
-            return pd.Series(list(p))
-        d = np_distances(metric, m, bc_cent.value)
+        if metric != "ip":
+            return pd.Series(list(score(m, npr)))
+        d = np_distances("ip", m, bc_cent.value)
         p = np.argpartition(d, npr - 1, axis=1)[:, :npr].astype(np.int32)
         return pd.Series(list(p))
 
@@ -226,16 +226,7 @@ def ivf_knn_join(
     @pandas_udf(IntegerType())
     def assign_cid(vecs: pd.Series) -> pd.Series:
         m = _route(metric, np.stack([np.asarray(v, dtype=np.float64) for v in vecs]))
-        if bc_route is not None:
-            # assignment is ALWAYS L2-nearest in routing space (any
-            # metric), so the two-level route applies unconditionally —
-            # this is the pass that was a measured ~2.4 h flat wall at
-            # the 163,840-list 10^8 geometry
-            l1_32, indptr = bc_route.value
-            out = _routed_nearest(m, _cent32(), l1_32, indptr, 1)[:, 0]
-            return pd.Series(out.astype(np.int32))
-        d = np_distances("l2", m, bc_cent.value)
-        return pd.Series(d.argmin(axis=1).astype(np.int32))
+        return pd.Series(score(m, 1)[:, 0])
 
     assigned = (
         base_df.select(

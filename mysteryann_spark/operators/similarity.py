@@ -276,18 +276,6 @@ def _unit(vecs: pd.Series) -> np.ndarray:
     return np_normalize(m)
 
 
-def l2norm_udf():
-    """Arrow-batched L2 normalization: ARRAY<numeric> -> unit ARRAY<DOUBLE>."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import DoubleType
-
-    @pandas_udf(ArrayType(DoubleType()))
-    def l2norm(vecs: pd.Series) -> pd.Series:
-        return pd.Series(list(_unit(vecs)))
-
-    return l2norm
-
-
 def _parse_size_bytes(s: str) -> int:
     """Spark size-string ("1g", "512m", "1024k", "123" = bytes) → bytes."""
     s = s.strip().lower()
@@ -405,8 +393,8 @@ def train_coarse(
     and ``dim``.
 
     Returns ``(cmat, route | None)`` with ``route == (l1 float32,
-    indptr)``, the two-level routing structure ``nearest_centroids_udf``
-    and ``ivf_knn_join`` assign through. Above ``_FLAT_KMEANS_MAX``
+    indptr)``, the two-level routing structure ``centroid_scorer``
+    assigns and probes through. Above ``_FLAT_KMEANS_MAX``
     centroids, training runs the hierarchical k-means (the flat Lloyd
     pass is O(sample x k) per iteration — measured ~1 ms/row at the
     163,840-list 10^8 geometry, i.e. days at the 64-pts/centroid
@@ -433,22 +421,6 @@ def train_coarse(
         )
         return cmat, (np.ascontiguousarray(l1, dtype=np.float32), indptr)
     return _sample_kmeans(mat, n_centroids, max_iter, seed), None
-
-
-def _f32_memo(bc):
-    """Executor-side memo for the float32 recast of a broadcast matrix:
-    the cast is ~42 MB PER ARROW BATCH at 163,840 lists x 64 dims, and a
-    10^8 assignment pass runs thousands of batches per worker. The
-    returned closure, slot included, is deserialized once per Python
-    worker and reused across batches, so the cast runs once per worker."""
-    slot: list = []
-
-    def get() -> np.ndarray:
-        if not slot:
-            slot.append(np.ascontiguousarray(bc.value, dtype=np.float32))
-        return slot[0]
-
-    return get
 
 
 def _flat_nearest(m: np.ndarray, c: np.ndarray, n: int) -> np.ndarray:
@@ -479,152 +451,92 @@ def _cosine_dist_udf():
     return cosine_dist
 
 
-# above this many (rows x n_centroids) distance cells per Arrow batch the
-# assignment UDF switches to the chunked float32 path: the full float64
-# matrix at 10k rows x 10k+ centroids is ~0.8 GB PER WORKER per batch
-# (the 10^8-rehearsal residency hazard), while below it the original
-# exact-float64 math is kept bit-identical — the sf-scale pinned oracles
-# certify that path and must not drift on a dtype change
+# above this many (rows x n_centroids) distance cells per call the scorer
+# switches to the chunked float32 path: the full float64 matrix at 10k
+# rows x 10k+ centroids is ~0.8 GB PER WORKER per batch (the
+# 10^8-rehearsal residency hazard), while below it the exact-float64
+# math is kept bit-identical — the sf-scale pinned oracles certify that
+# path and must not drift on a dtype change
 _CENT_F32_CELLS = 1 << 25
 
 
-def nearest_centroids_udf(bc, n: int, route_bc=None):
-    """Arrow-batched centroid scoring: one GEMM per batch against the
-    broadcast (n_centroids x dim) matrix; input is the RAW vector
-    (normalized inline) so assignment needs no second normalization
-    pass. Large batch x centroid products (rehearsal scale) run the
-    chunked float32 GEMM with argmin/argpartition — bounded memory and
-    no full sort; assignment quality is recall-gated, not pinned, at
-    that scale.
+def centroid_scorer(bc, route_bc=None):
+    """The one coarse-centroid scorer: every IVF base assignment and
+    every l2/cosine query probe goes through it. ``score(m, n)`` returns
+    the ``n`` L2-nearest rows of the broadcast (n_centroids x dim)
+    matrix ``bc`` for each row of ``m``, nearest first, as int32 — ``m``
+    already in routing space (unit rows for cosine), so assignment and
+    probing share one rule. Three regimes:
 
-    ``route_bc`` (the broadcast route of ``train_coarse``) switches to the
-    TWO-LEVEL scorer: top-R level-1 cells per row, exact argmin over only
-    those cells' children — O(branch + R*k/branch) per row instead of
-    O(k), the difference between ~2.4 h and ~minutes for the 10^8
-    assignment pass at 163,840 lists. Routing is approximate at cell
-    boundaries (agreement + recall test-gated); only engaged at
-    hierarchical centroid counts, never on the pinned flat path."""
+    - ``route_bc`` (the broadcast route of ``train_coarse``): the
+      TWO-LEVEL ``_routed_nearest`` — O(branch + R*k/branch) per row
+      instead of O(k), the difference between ~2.4 h and ~minutes for
+      the 10^8 assignment pass at 163,840 lists. Approximate at cell
+      boundaries (agreement + recall test-gated); only engaged at
+      hierarchical centroid counts, never on the pinned flat path.
+    - above ``_CENT_F32_CELLS`` distance cells: chunked float32 GEMM
+      with argmin/argpartition — bounded memory and no full sort;
+      quality is recall-gated, not pinned, at that scale.
+    - otherwise ``_flat_nearest``, the exact float64 assignment.
+
+    The float32 recast of the centroids is memoized in the returned
+    closure: it is ~42 MB per Arrow batch at 163,840 lists x 64 dims,
+    and a 10^8 assignment pass runs thousands of batches per worker."""
+    slot: list = []
+
+    def cent32() -> np.ndarray:
+        if not slot:
+            slot.append(np.ascontiguousarray(bc.value, dtype=np.float32))
+        return slot[0]
+
+    def score(m: np.ndarray, n: int) -> np.ndarray:
+        if route_bc is not None:
+            l1_32, indptr = route_bc.value
+            return _routed_nearest(m, cent32(), l1_32, indptr, n)
+        c = bc.value
+        if len(m) * len(c) <= _CENT_F32_CELLS:
+            return _flat_nearest(m, c, n).astype(np.int32)
+        from mysteryann_spark.operators.knn import dmat_chunk_rows
+
+        c32 = cent32()
+        cc = (c32 * c32).sum(axis=1)[None, :]
+        # sized from the SAME per-worker budget every other distance
+        # block obeys (the old max(256, 2^24-cell) floor over-allocated
+        # 4x its intended ~64 MB bound at the 256k-centroid 10^8
+        # geometry: 256 rows x 256k cents x 4 B = 262 MB per chunk)
+        chunk = dmat_chunk_rows(len(c), itemsize=4)
+        outs = []
+        for s in range(0, len(m), chunk):
+            mb = np.ascontiguousarray(m[s : s + chunk], dtype=np.float32)
+            # ||x||^2 is constant per row — argmin/argpartition drop it
+            d = cc - 2.0 * (mb @ c32.T)
+            if n == 1:
+                sel = d.argmin(axis=1)[:, None]
+            else:
+                part = np.argpartition(d, n - 1, axis=1)[:, :n]
+                o = np.take_along_axis(d, part, axis=1).argsort(axis=1)
+                sel = np.take_along_axis(part, o, axis=1)
+            outs.append(sel.astype(np.int32))
+        return np.concatenate(outs)
+
+    return score
+
+
+def nearest_centroids_udf(bc, n: int, route_bc=None):
+    """Arrow-batched centroid assignment: each RAW vector is normalized
+    inline (so assignment needs no second normalization pass) and
+    scored by ``centroid_scorer`` — two-level when ``route_bc`` (the
+    broadcast route of ``train_coarse``) is given, flat otherwise.
+    Returns each row's ``n`` nearest centroid ids, nearest first."""
     from pyspark.sql.functions import pandas_udf
 
-    _cent32 = _f32_memo(bc)
-
-    if route_bc is not None:
-
-        @pandas_udf(ArrayType(IntegerType()))
-        def nearest_routed(vecs: pd.Series) -> pd.Series:
-            c32 = _cent32()
-            l1_32, indptr = route_bc.value
-            m = _unit(vecs)
-            out = _routed_nearest(m, c32, l1_32, indptr, n)
-            return pd.Series(list(out))
-
-        return nearest_routed
+    score = centroid_scorer(bc, route_bc)
 
     @pandas_udf(ArrayType(IntegerType()))
     def nearest(vecs: pd.Series) -> pd.Series:
-        c = bc.value
-        m = _unit(vecs)
-        if len(m) * len(c) > _CENT_F32_CELLS:
-            from mysteryann_spark.operators.knn import dmat_chunk_rows
-
-            c32 = _cent32()
-            cc = (c32 * c32).sum(axis=1)[None, :]
-            # sized from the SAME per-worker budget every other distance
-            # block obeys (the old max(256, 2^24-cell) floor over-allocated
-            # 4x its intended ~64 MB bound at the 256k-centroid 10^8
-            # geometry: 256 rows x 256k cents x 4 B = 262 MB per chunk)
-            chunk = dmat_chunk_rows(len(c), itemsize=4)
-            outs = []
-            for s in range(0, len(m), chunk):
-                mb = np.ascontiguousarray(m[s : s + chunk], dtype=np.float32)
-                # ||x||^2 is constant per row — argmin/argpartition drop it
-                d = cc - 2.0 * (mb @ c32.T)
-                if n == 1:
-                    sel = d.argmin(axis=1)[:, None]
-                else:
-                    part = np.argpartition(d, n - 1, axis=1)[:, :n]
-                    o = np.take_along_axis(d, part, axis=1).argsort(axis=1)
-                    sel = np.take_along_axis(part, o, axis=1)
-                outs.append(sel.astype(np.int32))
-            return pd.Series(list(np.concatenate(outs)))
-        return pd.Series(list(_flat_nearest(m, c, n).astype(np.int32)))
+        return pd.Series(list(score(_unit(vecs), n)))
 
     return nearest
-
-
-def ivf_cosine_topk(
-    queries_df: DataFrame,
-    base_df: DataFrame,
-    k: int,
-    n_centroids: int = 16,
-    n_probe: int = 4,
-    max_iter: int = 5,
-    seed: int = 42,
-    train_sample: int = 4096,
-    query_id: str = "qid",
-    base_id: str = "vec_id",
-    vec_col: str = "embedding",
-    exclude_self: bool = True,
-) -> DataFrame:
-    """IVF (inverted-file) approximate cosine top-k.
-
-    Build: seeded k-means over a BOUNDED sample of L2-normalized base
-    vectors (the FAISS IVF training protocol — centroids are a tiny
-    model, and training on more than a few thousand points per centroid
-    buys nothing); every base vector lands in one centroid's inverted
-    list. Search: each query probes its ``n_probe`` nearest centroids
-    and exact-reranks only those lists — per-query work drops to
-    ~n_probe/n_centroids of the base, and the candidate join is a plain
-    equi-join on the centroid id.
-
-    Scale shape: the base side is shuffled ONCE on centroid id (at 100 TB
-    this is the partitioning you'd persist/bucket the index by); queries
-    explode x n_probe and join on the same key, so Catalyst co-partitions
-    both sides. The training sample is a deterministic hash-slice of at
-    most ``train_sample`` rows — the one collect here is bounded by the
-    model size, not the data size. Returns (qid, nn_id, dist, rank) like
-    knn_join.
-    """
-    # Every numeric kernel below is Arrow-batched numpy — normalization,
-    # centroid scoring, and the candidate dot product. The earlier
-    # Catalyst renderings (nested aggregate(zip_with(...)) lambdas) are
-    # interpreted per element, not codegen'd, and dominated runtime.
-    cmat, route = train_coarse(
-        base_df, n_centroids, max_iter, seed, train_sample, base_id, vec_col
-    )
-    sc = base_df.sparkSession.sparkContext
-    bc = sc.broadcast(cmat)
-    bc_route = sc.broadcast(route) if route is not None else None
-    _nearest = lambda n: nearest_centroids_udf(bc, n, route_bc=bc_route)  # noqa: E731
-    l2norm = l2norm_udf()
-
-    assigned = base_df.select(
-        F.col(base_id).alias("nn_id"),
-        l2norm(F.col(vec_col)).alias("nvec"),
-        F.element_at(_nearest(1)(F.col(vec_col)), 1).alias("cid"),
-    )
-    probes = queries_df.select(
-        F.col(query_id).alias("qid"),
-        l2norm(F.col(vec_col)).alias("qvec"),
-        F.explode(_nearest(n_probe)(F.col(vec_col))).alias("cid"),
-    )
-
-    cand = probes.join(assigned, "cid").select("qid", "nn_id", "qvec", "nvec")
-    if exclude_self:
-        cand = cand.where(F.col("qid") != F.col("nn_id"))
-
-    # unit vectors: cosine distance = 1 - dot; row-wise einsum per batch
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import DoubleType
-
-    @pandas_udf(DoubleType())
-    def cos_dist(qv: pd.Series, nv: pd.Series) -> pd.Series:
-        a = np.stack([np.asarray(v, dtype=np.float64) for v in qv])
-        bm = np.stack([np.asarray(v, dtype=np.float64) for v in nv])
-        return pd.Series(1.0 - np.einsum("ij,ij->i", a, bm))
-
-    scored = cand.select("qid", "nn_id", cos_dist("qvec", "nvec").alias("dist"))
-    return rank_topk(scored, k)
 
 
 def quantized_cosine_topk(
@@ -1032,7 +944,7 @@ def search_ivfpq_index(
     )
 
     spark_sc = queries_df.sparkSession.sparkContext
-    bc_cent = spark_sc.broadcast(index["centroids"])
+    score = centroid_scorer(spark_sc.broadcast(index["centroids"]))
     bc_books = spark_sc.broadcast(index["books"])
     n_centroids = int(index["centroids"].shape[0])
     n_codes = int(index["books"].shape[1])
@@ -1075,7 +987,6 @@ def search_ivfpq_index(
     def run(batches):
         ids, codes, indptr = load_staged("ivfpqlists|" + lists_path, _build)
         books = bc_books.value  # (m, n_codes, dsub)
-        cents = bc_cent.value
         m_sub, _, dsub = books.shape
         for pdf in batches:
             if pdf.empty:
@@ -1085,9 +996,9 @@ def search_ivfpq_index(
                 sub = pdf.iloc[s : s + 256]
                 qids = sub["qid"].to_numpy()
                 qm = _unit(sub["qvec"])
-                # probe selection: nearest_centroids_udf's flat scorer
-                # (assignment parity)
-                probes = _flat_nearest(qm, cents, n_probe)
+                # probe selection: the flat assignment scorer (parity
+                # with the lists' cids)
+                probes = score(qm, n_probe)
                 # per-query ADC lookup tables in one einsum
                 luts = np.einsum(
                     "qmd,mcd->qmc", qm.reshape(len(sub), m_sub, dsub), books
@@ -1128,7 +1039,7 @@ def search_ivfpq_index(
             yield pd.DataFrame(out)
 
     # raw vectors cross into the worker once; _unit there reproduces the
-    # probe-assignment floats (nearest_centroids_udf normalizes raw input)
+    # assignment floats (nearest_centroids_udf normalizes raw input)
     q_in = queries_df.select(
         F.col(query_id).alias("qid"), F.col(vec_col).alias("qvec")
     )

@@ -7,6 +7,8 @@ equivalent) are rows-only with property gates in tests/test_pipeline.py.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -514,16 +516,18 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF (KMeans inverted-file) approximate cosine top-k: probe the 6
-    nearest of 16 centroid lists, exact-rerank inside them (rows-only;
-    recall vs the exact baseline gated in tests)."""
-    from mysteryann_spark.operators.similarity import ivf_cosine_topk
+    """IVF (KMeans inverted-file) approximate cosine top-k through the
+    IVF join (operators/knn_approx.py): probe the 6 nearest of 16
+    centroid lists, exact-rerank inside them (recall vs the exact
+    baseline gated in tests). Reports the cosine DISTANCE 1 - cos, not
+    the engine's -cos: the pinned oracle reads this convention."""
+    from mysteryann_spark.operators.knn_approx import ivf_knn_join
 
     e = _emb(spark, sf_dir)
     q = e.where(F.col("vec_id") < 20).select(F.col("vec_id").alias("qid"), "embedding")
-    return ivf_cosine_topk(q, e, 5, n_centroids=16, n_probe=6).select(
-        "qid", "nn_id", F.round("dist", 6).alias("dist"), "rank"
-    )
+    return ivf_knn_join(
+        q, e, 5, "cosine", n_centroids=16, n_probe=6, exclude_self=True
+    ).select("qid", "nn_id", F.round(F.col("dist") + 1.0, 6).alias("dist"), "rank")
 
 
 def doc_tfidf_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1585,22 +1589,18 @@ def ann_ivfpq_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet (sources/ann_index_io.py) -> load -> search through the
     LOADED index with exact refine. Rows-only; bit-parity with the
     in-memory ann_ivfpq_topk path is gated in tests/test_ann_index_io.py."""
-    import atexit
-    import shutil
-
     from mysteryann_spark.operators.similarity import (
         build_ivfpq_index,
         search_ivfpq_index,
     )
     from mysteryann_spark.sources.ann_index_io import load_ivfpq, save_ivfpq
+    from mysteryann_spark.sources.staging import scratch_dir
 
     e = _emb(spark, sf_dir)
-    # Keyed by applicationId: two drivers verifying the same SF must not
-    # overwrite each other's lists mid-scan. The search is lazy (the caller
-    # collects after we return), so cleanup is deferred to process exit
-    # instead of deleting the files the returned plan still has to read.
-    path = f"/tmp/mysteryann_ivfpq_{spark.sparkContext.applicationId}"
-    atexit.register(shutil.rmtree, path, ignore_errors=True)
+    # A fresh dir per call, so two drivers never overwrite each other's
+    # lists mid-scan. The search is lazy (the caller collects after we
+    # return), so the index lives until the stage root is removed at exit.
+    path = os.path.join(scratch_dir("mysteryann-ivfpq-"), "index")
     save_ivfpq(build_ivfpq_index(e, n_centroids=16, m=8, n_codes=64), path)
     loaded = load_ivfpq(spark, path)
     q = e.where(F.col("vec_id") < 20).select(F.col("vec_id").alias("qid"), "embedding")
@@ -1618,18 +1618,15 @@ def ann_ivfpq_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     property is asserted in tests/test_plans.py). At double dtype this
     is value-identical to the base_df rerank (tests/test_ann_index_io.py),
     so the pinned oracle locks both paths."""
-    import atexit
-    import shutil
-
     from mysteryann_spark.operators.similarity import (
         build_ivfpq_index,
         search_ivfpq_index,
     )
     from mysteryann_spark.sources.ann_index_io import load_ivfpq, save_ivfpq
+    from mysteryann_spark.sources.staging import scratch_dir
 
     e = _emb(spark, sf_dir)
-    path = f"/tmp/mysteryann_ivfpqv_{spark.sparkContext.applicationId}"
-    atexit.register(shutil.rmtree, path, ignore_errors=True)
+    path = os.path.join(scratch_dir("mysteryann-ivfpqv-"), "index")
     save_ivfpq(
         build_ivfpq_index(e, n_centroids=16, m=8, n_codes=64), path, base_df=e
     )

@@ -279,7 +279,12 @@ def test_ivf_builds_job_count(spark, emb):
     join = _jobs_in(
         sc, "ivf-jobs-join", lambda: ivf_knn_join(q, emb, 5, "l2", n_centroids=16)
     )
-    assert (flat, hier, join) == (4, 4, 4)
+    cos = _jobs_in(
+        sc,
+        "ivf-jobs-cos",
+        lambda: ivf_knn_join(q, emb, 5, "cosine", n_centroids=16, exclude_self=True),
+    )
+    assert (flat, hier, join, cos) == (4, 4, 4, 4)
 
 
 def test_ivfpq_rejects_indivisible_m_before_training(spark, emb, monkeypatch):

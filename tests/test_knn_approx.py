@@ -153,9 +153,10 @@ def test_routing_trainer_goes_hierarchical_above_threshold(emb, monkeypatch):
 @pytest.mark.parametrize("metric", ["l2", "ip", "cosine"])
 def test_ivf_join_routed_recall(spark, emb, q, metric):
     """hierarchical=True must keep the recall floor for every metric:
-    assignment routes two-level always, probing routes for l2 and stays
-    exact-GEMM for ip/cosine (their centroid ranking depends on norms
-    the L2 route does not order by)."""
+    assignment routes two-level always, probing routes for l2 and cosine
+    (L2 in routing space, the assignment rule) and stays an exact
+    dot-product GEMM for ip (its centroid ranking depends on dot
+    products the L2 route does not order by)."""
     from mysteryann_spark.operators.knn import knn_join
 
     n = emb.count()
@@ -164,3 +165,16 @@ def test_ivf_join_routed_recall(spark, emb, q, metric):
         q, emb, 10, metric, n_probe=8, hierarchical=True, branch=4
     )
     assert _recall(approx, exact, 10, n) >= 0.70
+
+
+@pytest.mark.parametrize(
+    "kw", [{}, {"hierarchical": True, "branch": 4}], ids=["flat", "hierarchical"]
+)
+def test_cosine_self_probe_finds_itself(spark, emb, q, kw):
+    """A cosine query probes by the same rule its own vector was assigned
+    by (L2 in routing space), so with one probe every base vector finds
+    itself at rank 1. Ranking centroids by angle instead sends a query
+    near a list boundary to a neighbouring list."""
+    res = ivf_knn_join(q, emb, 1, "cosine", n_probe=1, **kw)
+    missed = res.where(F.col("qid") != F.col("nn_id")).count()
+    assert res.count() == emb.count() and missed == 0

@@ -284,19 +284,22 @@ def test_quantized_ann_recall_vs_bruteforce(spark, emb):
 
 
 def test_ivf_ann_recall_and_determinism(spark, emb):
-    from mysteryann_spark.operators.similarity import ivf_cosine_topk
+    """The ann_ivf_topk geometry: cosine IVF join, 6 of 16 lists."""
+    from mysteryann_spark.operators.knn_approx import ivf_knn_join
+
+    def ivf():
+        return ivf_knn_join(
+            q, emb, 5, "cosine", n_centroids=16, n_probe=6, exclude_self=True
+        )
 
     q = emb.where("vec_id < 50").select(F.col("vec_id").alias("qid"), "embedding")
     exact = knn_join(q, emb, 5, "cosine", exclude_self=True)
-    approx = ivf_cosine_topk(q, emb, 5, n_centroids=16, n_probe=6)
     e = {(r["qid"], r["nn_id"]) for r in exact.collect()}
-    rows = approx.collect()
-    a = {(r["qid"], r["nn_id"]) for r in rows}
+    a = {(r["qid"], r["nn_id"]) for r in ivf().collect()}
     recall = len(e & a) / len(e)
     assert recall >= 0.7, f"IVF recall {recall}"
     # seeded KMeans -> identical rerun
-    again = {(r["qid"], r["nn_id"]) for r in ivf_cosine_topk(
-        q, emb, 5, n_centroids=16, n_probe=6).collect()}
+    again = {(r["qid"], r["nn_id"]) for r in ivf().collect()}
     assert a == again
 
 

@@ -20,6 +20,8 @@ ENTRIES = [
     "roargraph_save_load_search",
     "roargraph_binary_interop",
     "roargraph_nsg_import",
+    "ann_ivfpq_persisted",
+    "ann_ivfpq_vectors",
 ]
 
 # every prefix these entries (and the staging they call) create dirs under
@@ -32,7 +34,11 @@ PREFIXES = (
     "mysteryann-stage-",
 )
 
+# the saved IVF-PQ indexes once went to fixed per-application /tmp paths
+# that ignored TMPDIR and outlived a killed driver; checked while the
+# session is still up, before any exit hook could remove them
 _RUN = """
+import glob
 import sys
 from mysteryann_spark.queries.registry import all_queries
 from mysteryann_spark.session import get_spark
@@ -41,6 +47,9 @@ spark = get_spark(app_name="scratch-leaks", shuffle_partitions=4)
 queries = all_queries()
 for name in sys.argv[2:]:
     print(name, queries[name].fn(spark, sys.argv[1]).count(), flush=True)
+app = spark.sparkContext.applicationId
+fixed = glob.glob("/tmp/mysteryann_ivfpq*_" + app)
+assert not fixed, f"index saved outside TMPDIR: {fixed}"
 spark.stop()
 """
 
