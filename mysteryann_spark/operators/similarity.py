@@ -434,8 +434,10 @@ def _flat_nearest(m: np.ndarray, c: np.ndarray, n: int) -> np.ndarray:
 
 
 def _cosine_dist_udf():
-    """Arrow-batched exact cosine distance of two raw-vector columns
-    (zero-norm pairs score 1.0) — the refine step of the PQ paths."""
+    """Arrow-batched exact cosine distance of two raw-vector columns as
+    -cos, the engine's one cosine convention (the reference's, and
+    knn_join's). A zero-norm pair scores 0 instead of 0/0 = NaN.
+    ``exact_rerank`` is its only caller."""
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import DoubleType
 
@@ -446,7 +448,7 @@ def _cosine_dist_udf():
         num = np.einsum("ij,ij->i", a, bm)
         den = np.linalg.norm(a, axis=1) * np.linalg.norm(bm, axis=1)
         den[den == 0] = 1.0
-        return pd.Series(1.0 - num / den)
+        return pd.Series(-(num / den))
 
     return cosine_dist
 
@@ -607,21 +609,29 @@ def lsh_cosine_topk(
     """Approximate cosine top-k: equi-join query/base on (table, bucket),
     exact re-rank within the candidate set.
 
-    Returns (qid, nn_id, dist, rank) like knn_join; recall vs cosine_topk
-    is gated in tests (the driver records rows-only — hyperplane draws are
-    seeded numpy, not SQL-expressible).
+    Returns (qid, nn_id, dist, rank) like knn_join, dist = -cos; recall
+    vs cosine_topk is gated in tests (the driver records rows-only —
+    hyperplane draws are seeded numpy, not SQL-expressible).
 
     Kernel shape: bucket signatures are one (batch x dim) @ (dim x
     tables*bits) GEMM per Arrow batch plus a sign-bit pack — the literal-
     array Catalyst expression it replaces codegen'd thousands of plane
-    constants and dominated runtime. The bucket join carries bare
-    (tbl, bkt, id) triples; vectors re-attach by id AFTER the candidate
-    dedup (payload-light shuffle), and the re-rank dot is an einsum.
+    constants and dominated runtime. The base is never exchanged: the
+    query side's (tbl, bkt, qid) table is broadcast (n_q x tables rows),
+    so the base's bucket tags are scanned in place, and the deduplicated
+    (qid, nn_id) candidates go through ``exact_rerank``, which broadcasts
+    them and the query vectors against the streamed base. The only
+    shuffles are the candidate dedup and the final per-query ranking.
+    The candidate side's size bound is n_q x n_base rows (one count of
+    the base); past the broadcast ceiling the planner's exchange takes
+    over.
     """
     from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import DoubleType, LongType
+    from pyspark.sql.types import LongType
 
-    dim = len(queries_df.select(vec_col).head()[0])
+    from mysteryann_spark.session import broadcast_if_under
+
+    n_q, dim = count_and_dim(queries_df, vec_col)
     pmat = np.asarray(
         _hyperplanes(dim, bits, tables, seed), dtype=np.float64
     ).reshape(tables * bits, dim)
@@ -641,7 +651,7 @@ def lsh_cosine_topk(
             F.posexplode(buckets(F.col(vec_col))).alias("tbl", "bkt"),
         )
 
-    q = tagged(queries_df, query_id, "qid")
+    q = broadcast_if_under(tagged(queries_df, query_id, "qid"), n_q * tables * 24.0)
     b = tagged(base_df, base_id, "nn_id")
     cand = (
         q.join(b, ["tbl", "bkt"])
@@ -650,21 +660,12 @@ def lsh_cosine_topk(
     )
     if exclude_self:
         cand = cand.where(F.col("qid") != F.col("nn_id"))
-
-    @pandas_udf(DoubleType())
-    def cos_dist(qv: pd.Series, nv: pd.Series) -> pd.Series:
-        a = np.stack([np.asarray(v, dtype=np.float64) for v in qv])
-        bm = np.stack([np.asarray(v, dtype=np.float64) for v in nv])
-        num = np.einsum("ij,ij->i", a, bm)
-        den = np.linalg.norm(a, axis=1) * np.linalg.norm(bm, axis=1)
-        return pd.Series(-(num / den))
-
-    scored = (
-        cand.join(queries_df.select(F.col(query_id).alias("qid"), F.col(vec_col).alias("qv")), "qid")
-        .join(base_df.select(F.col(base_id).alias("nn_id"), F.col(vec_col).alias("nv")), "nn_id")
-        .select("qid", "nn_id", cos_dist("qv", "nv").alias("dist"))
+    # a query's candidates are at most the whole base
+    return exact_rerank(
+        queries_df, _refine_base(base_df, base_id, vec_col), cand, k, query_id,
+        vec_col, surv_bytes=n_q * base_df.count() * 24.0,
+        q_bytes=n_q * (dim * 8 + 24.0),
     )
-    return rank_topk(scored, k)
 
 
 def _check_subspaces(dim: int, m: int) -> None:
@@ -781,10 +782,11 @@ def pq_cosine_topk(
 
     Scale shape: codes are the persisted index (32x smaller at 64-d,
     m=8); the PQ scan is the same no-base-shuffle blocked GEMM as
-    knn_exact; the refine join touches k*refine true vectors per query —
-    the full-precision side is read once for encoding and once for the
-    (tiny) refine, never scanned per query. Returns (qid, nn_id, dist,
-    rank) like knn_join; recall vs cosine_topk is gated in tests.
+    knn_exact; ``exact_rerank`` broadcasts the k*refine survivors per
+    query and the query vectors, so the full-precision side is read once
+    for encoding and once, streamed in place, for the refine — never
+    shuffled. Returns (qid, nn_id, dist, rank) like knn_join, dist =
+    -cos; recall vs cosine_topk is gated in tests.
     """
     bc = train_pq_codebooks(
         base_df, m, n_codes, max_iter, seed, train_sample, base_id, vec_col
@@ -806,18 +808,12 @@ def pq_cosine_topk(
         vec_col=vec_col,
         exclude_self=exclude_self,
     ).select("qid", "nn_id")
-    scored = (
-        cand.join(
-            queries_df.select(F.col(query_id).alias("qid"), F.col(vec_col).alias("qv")),
-            "qid",
-        )
-        .join(
-            base_df.select(F.col(base_id).alias("nn_id"), F.col(vec_col).alias("nv")),
-            "nn_id",
-        )
-        .select("qid", "nn_id", _cosine_dist_udf()("qv", "nv").alias("dist"))
+    m_sub, _, dsub = bc.value.shape
+    sb, qb = _refine_estimates(queries_df, m_sub * dsub, k, refine)
+    return exact_rerank(
+        queries_df, _refine_base(base_df, base_id, vec_col), cand, k, query_id,
+        vec_col, surv_bytes=sb, q_bytes=qb,
     )
-    return rank_topk(scored, k)
 
 
 def build_ivfpq_index(
@@ -922,8 +918,9 @@ def search_ivfpq_index(
     one was saved (``save_ivfpq(..., base_df=...)``: cid-partitioned, so
     the rerank scan is partition-pruned to the probed lists instead of
     re-reading — or worse, re-shuffling — the corpus). With neither,
-    pure-ADC distances are returned, the regime where only the index
-    survives.
+    pure-ADC distances -q.r (r the code's reconstruction, q the unit
+    query) are returned, the regime where only the index survives; the
+    rerank returns -cos, the same convention.
 
     The probe+ADC stage runs as ONE ``mapInPandas`` over the queries with
     the inverted lists STAGED worker-side (ids + (n, m) uint8 code matrix
@@ -1028,7 +1025,7 @@ def search_ivfpq_index(
                         if not len(rows):
                             continue
                     lut = luts[qi]
-                    dists = 1.0 - lut[jj, codes[rows].astype(np.int64)].sum(axis=1)
+                    dists = -lut[jj, codes[rows].astype(np.int64)].sum(axis=1)
                     t = min(top_n, len(dists))
                     sel = np.lexsort((c_ids, dists))[:t]
                     out["qid"].extend([qids[qi]] * t)
@@ -1046,26 +1043,25 @@ def search_ivfpq_index(
     pq_scored = q_in.mapInPandas(
         run, "qid bigint, nn_id bigint, cid int, dist double, rank int"
     )
+    vectors = index.get("vectors")
+    if base_df is None and vectors is None:
+        return pq_scored.select("qid", "nn_id", "dist", "rank")
+    sb, qb = _refine_estimates(queries_df, int(index["meta"]["dim"]), k, refine)
     if base_df is not None:
-        sb, qb = _refine_estimates(queries_df, index, k, refine)
-        return _ivfpq_refine(
+        return exact_rerank(
             queries_df, _refine_base(base_df, base_id, vec_col),
             pq_scored.select("qid", "nn_id"), k, query_id, vec_col,
             surv_bytes=sb, q_bytes=qb,
         )
-    vectors = index.get("vectors")
-    if vectors is not None:
-        # persisted full-precision base: rerank reads ONLY the probed
-        # lists' vector partitions (the survivors side carries cid, and
-        # the broadcast join's dynamic partition pruning routes the scan)
-        sb, qb = _refine_estimates(queries_df, index, k, refine)
-        return _ivfpq_refine(
-            queries_df,
-            vectors.select("cid", "nn_id", F.col("vec").alias("nv")),
-            pq_scored.select("qid", "cid", "nn_id"), k, query_id, vec_col,
-            join_on=("cid", "nn_id"), surv_bytes=sb, q_bytes=qb,
-        )
-    return pq_scored.select("qid", "nn_id", "dist", "rank")
+    # persisted full-precision base: rerank reads ONLY the probed
+    # lists' vector partitions (the survivors side carries cid, and
+    # the broadcast join's dynamic partition pruning routes the scan)
+    return exact_rerank(
+        queries_df,
+        vectors.select("cid", "nn_id", F.col("vec").alias("nv")),
+        pq_scored.select("qid", "cid", "nn_id"), k, query_id, vec_col,
+        join_on=("cid", "nn_id"), surv_bytes=sb, q_bytes=qb,
+    )
 
 
 def _refine_base(base_df: DataFrame, base_id: str, vec_col: str) -> DataFrame:
@@ -1075,50 +1071,53 @@ def _refine_base(base_df: DataFrame, base_id: str, vec_col: str) -> DataFrame:
 
 
 def _refine_estimates(
-    queries_df: DataFrame, index: dict, k: int, refine: int
+    queries_df: DataFrame, dim: int, k: int, refine: int
 ) -> tuple[float, float]:
-    """Upper-bound byte estimates for the refine join's two broadcast
-    sides: (survivor id rows, query vectors). One count() over the query
-    set per search call — noise next to the ADC scan it precedes."""
+    """Upper-bound byte estimates for ``exact_rerank``'s two broadcast
+    sides when each query keeps k*refine survivors: (survivor id rows,
+    query vectors). One count() over the query set per search call —
+    noise next to the scan it precedes."""
     n_q = queries_df.count()
-    dim = int(index["meta"]["dim"])
     return n_q * k * refine * 24.0, n_q * (dim * 8 + 24.0)
 
 
-def _ivfpq_refine(
+def exact_rerank(
     queries_df: DataFrame,
     refine_base: DataFrame,
-    pq_top: DataFrame,
+    survivors: DataFrame,
     k: int,
     query_id: str,
     vec_col: str,
+    surv_bytes: float,
+    q_bytes: float,
     join_on: tuple[str, ...] = ("nn_id",),
-    surv_bytes: float = 0.0,
-    q_bytes: float = 0.0,
 ) -> DataFrame:
-    """Exact-cosine rerank of the k*refine ADC survivors against the
-    full-precision base (``refine_base``: join_on columns + ``nv``).
+    """The engine's one exact rerank: score each approximate survivor
+    ``(qid, join_on...)`` by exact cosine against the full-precision base
+    (``refine_base``: join_on columns + ``nv``) and keep the top k per
+    query as (qid, nn_id, dist, rank), dist = -cos. LSH, PQ and IVF-PQ
+    all finish here.
 
-    Both joins BROADCAST the survivors-derived side — it is
-    k*refine*|queries| rows, never the corpus — so the full-precision
-    base is STREAMED in place (scanned, never shuffled). The unhinted
-    plan's sort-merge pick shuffled the WHOLE base per search call:
-    measured ~26 GB of shuffle at the 10^8 rehearsal, the local-scratch
-    exhaustion that killed its probe-64 point (SCALE.md r8) — on a
-    cluster, the entire corpus crossing the network per query batch.
-    When ``join_on`` includes ``cid`` the broadcast additionally drives
-    dynamic partition pruning on a cid-partitioned persisted base, so
-    the rerank scan reads only the probed lists' vector partitions.
+    Both joins BROADCAST the survivors-derived side — survivor ids and
+    query vectors, never the corpus — so the full-precision base is
+    STREAMED in place (scanned, never shuffled). An unhinted sort-merge
+    join shuffled the WHOLE base per search call: measured ~26 GB of
+    shuffle at the 10^8 rehearsal, the local-scratch exhaustion that
+    killed its probe-64 point (SCALE.md r8) — on a cluster, the entire
+    corpus crossing the network per query batch. When ``join_on``
+    includes ``cid`` the broadcast additionally drives dynamic partition
+    pruning on a cid-partitioned persisted base, so the rerank scan
+    reads only the probed lists' vector partitions.
     ``surv_bytes``/``q_bytes`` are the callers' upper-bound size
-    estimates — a giant query batch falls back to the planner's exchange
-    instead of hard-failing Spark's 8 GB broadcast ceiling."""
+    estimates — a giant survivor set falls back to the planner's
+    exchange instead of hard-failing Spark's 8 GB broadcast ceiling."""
     from mysteryann_spark.session import broadcast_if_under
 
     q_side = queries_df.select(
         F.col(query_id).alias("qid"), F.col(vec_col).alias("qv")
     )
     scored = (
-        broadcast_if_under(pq_top, surv_bytes)
+        broadcast_if_under(survivors, surv_bytes)
         .join(refine_base, list(join_on))
         .join(broadcast_if_under(q_side, q_bytes), "qid")
         .select("qid", "nn_id", _cosine_dist_udf()("qv", "nv").alias("dist"))

@@ -1317,13 +1317,14 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     refine) — the reference's reserved-but-unimplemented PQ metric
     (distance.h:15) realized as the 32x-memory-cut scale path. Rows-only
     (seeded k-means codebooks aren't SQL-expressible); recall vs the
-    exact baseline gated in tests."""
+    exact baseline gated in tests. Like every PQ-family entry it reports
+    1 - cos (the operator's -cos plus 1), the convention its pin reads."""
     from mysteryann_spark.operators.similarity import pq_cosine_topk
 
     e = _emb(spark, sf_dir)
     q = e.where(F.col("vec_id") < 20).select(F.col("vec_id").alias("qid"), "embedding")
     return pq_cosine_topk(q, e, 5).select(
-        "qid", "nn_id", F.round("dist", 6).alias("dist"), "rank"
+        "qid", "nn_id", F.round(F.col("dist") + 1.0, 6).alias("dist"), "rank"
     )
 
 
@@ -1429,7 +1430,7 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _emb(spark, sf_dir)
     q = e.where(F.col("vec_id") < 20).select(F.col("vec_id").alias("qid"), "embedding")
     return ivfpq_cosine_topk(q, e, 5, n_centroids=16, n_probe=6).select(
-        "qid", "nn_id", F.round("dist", 6).alias("dist"), "rank"
+        "qid", "nn_id", F.round(F.col("dist") + 1.0, 6).alias("dist"), "rank"
     )
 
 
@@ -1452,7 +1453,7 @@ def ann_ivfpq_hier_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = e.where(F.col("vec_id") < 20).select(F.col("vec_id").alias("qid"), "embedding")
     return ivfpq_cosine_topk(
         q, e, 5, n_centroids=64, n_probe=16, hierarchical=True, branch=8
-    ).select("qid", "nn_id", F.round("dist", 6).alias("dist"), "rank")
+    ).select("qid", "nn_id", F.round(F.col("dist") + 1.0, 6).alias("dist"), "rank")
 
 
 # --- round-4 multimodal extensions: feature-extract, resize, audio ----------
@@ -1605,7 +1606,7 @@ def ann_ivfpq_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     loaded = load_ivfpq(spark, path)
     q = e.where(F.col("vec_id") < 20).select(F.col("vec_id").alias("qid"), "embedding")
     return search_ivfpq_index(q, loaded, 5, n_probe=6, refine=20, base_df=e).select(
-        "qid", "nn_id", F.round("dist", 6).alias("dist"), "rank"
+        "qid", "nn_id", F.round(F.col("dist") + 1.0, 6).alias("dist"), "rank"
     )
 
 
@@ -1634,7 +1635,7 @@ def ann_ivfpq_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = e.where(F.col("vec_id") < 20).select(F.col("vec_id").alias("qid"), "embedding")
     return search_ivfpq_index(
         q, loaded, 5, n_probe=6, refine=20, base_df=None
-    ).select("qid", "nn_id", F.round("dist", 6).alias("dist"), "rank")
+    ).select("qid", "nn_id", F.round(F.col("dist") + 1.0, 6).alias("dist"), "rank")
 
 
 def emb_outlier_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:

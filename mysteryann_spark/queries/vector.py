@@ -66,11 +66,11 @@ def fbin_roundtrip_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     from mysteryann_spark.sources.fbin import read_fbin, write_fbin
+    from mysteryann_spark.sources.staging import scratch_dir
 
-    path = os.path.join(
-        "/tmp/mysteryann_fbin", sf_dir.strip("/").replace("/", "_") + ".fbin"
-    )
-    os.makedirs(os.path.dirname(path), exist_ok=True)
+    # a fresh file per call: the read is lazy, and no other driver can
+    # rewrite it underneath; the stage root's exit cleanup removes it
+    path = os.path.join(scratch_dir("mysteryann-fbin-"), "embeddings.fbin")
     write_fbin(_emb(spark, sf_dir), path)
     return read_fbin(spark, path).select(
         "vec_id", F.round(l2_norm("embedding"), 6).alias("norm")

@@ -208,19 +208,13 @@ def read_documents_stream(spark, sf_dir: str) -> DataFrame:
     the dedup path needs; the file source prunes the rest at scan."""
     import os
 
-    # abspath: a relative sf_dir would otherwise be stored relative to the
-    # stage dir (a broken link); lexists: a broken link still exists on
-    # disk, so an exists() check would retry the symlink and raise
-    src = os.path.abspath(os.path.join(sf_dir, "documents.parquet"))
-    stage = os.path.join(
-        "/tmp/mysteryann_stream", src.strip("/").replace("/", "_"), "documents"
+    from mysteryann_spark.sources.staging import scratch_dir
+
+    stage = scratch_dir("mysteryann-stream-")
+    os.symlink(
+        os.path.abspath(os.path.join(sf_dir, "documents.parquet")),
+        os.path.join(stage, "documents.parquet"),
     )
-    os.makedirs(stage, exist_ok=True)
-    link = os.path.join(stage, "documents.parquet")
-    if os.path.lexists(link) and os.readlink(link) != src:
-        os.remove(link)  # stale stage pointing at a different target
-    if not os.path.lexists(link):
-        os.symlink(src, link)
     return (
         spark.readStream.format("parquet")
         .schema("doc_id bigint, text string")

@@ -41,14 +41,13 @@ _EMB_SCHEMA = StructType(
 def read_embeddings_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """embeddings.parquet as an unbounded query stream (file source —
     the local stand-in for a Kafka topic of incoming queries)."""
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    stage = os.path.join(
-        "/tmp/mysteryann_stream", sf_dir.strip("/").replace("/", "_"), "embeddings"
+    from mysteryann_spark.sources.staging import scratch_dir
+
+    stage = scratch_dir("mysteryann-stream-")
+    os.symlink(
+        os.path.abspath(os.path.join(sf_dir, "embeddings.parquet")),
+        os.path.join(stage, "embeddings.parquet"),
     )
-    os.makedirs(stage, exist_ok=True)
-    link = os.path.join(stage, "embeddings.parquet")
-    if not os.path.exists(link):
-        os.symlink(src, link)
     return spark.readStream.format("parquet").schema(_EMB_SCHEMA).load(stage)
 
 

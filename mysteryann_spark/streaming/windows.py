@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
+from mysteryann_spark.sources.staging import scratch_dir
 from mysteryann_spark.sources.tables import normalize_event_ts
 
 # Raw parquet schema for events: the driver has shipped ts both as INT64
@@ -41,19 +42,15 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events.parquet as an unbounded stream (file source: each file is a
     micro-batch — the local stand-in for a Kafka topic).
 
-    The file source requires a directory, and /root/testdata is read-only,
-    so the single parquet file is staged (symlinked) into a temp dir.
+    The file source requires a directory, and the source dir may be
+    read-only, so the single parquet file is symlinked into a fresh
+    scratch dir per call.
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     src = os.path.join(sf_dir, "events.parquet")
     schema = _raw_events_schema(spark, src)
-    stage = os.path.join(
-        "/tmp/mysteryann_stream", sf_dir.strip("/").replace("/", "_"), "events"
-    )
-    os.makedirs(stage, exist_ok=True)
-    link = os.path.join(stage, "events.parquet")
-    if not os.path.exists(link):
-        os.symlink(src, link)
+    stage = scratch_dir("mysteryann-stream-")
+    os.symlink(os.path.abspath(src), os.path.join(stage, "events.parquet"))
     raw = spark.readStream.format("parquet").schema(schema).load(stage)
     return normalize_event_ts(raw)
 
@@ -193,14 +190,9 @@ def read_events_stream_duplicated(spark: SparkSession, sf_dir: str) -> DataFrame
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     src = os.path.join(sf_dir, "events.parquet")
     schema = _raw_events_schema(spark, src)
-    stage = os.path.join(
-        "/tmp/mysteryann_stream", sf_dir.strip("/").replace("/", "_"), "events_dup"
-    )
-    os.makedirs(stage, exist_ok=True)
+    stage = scratch_dir("mysteryann-stream-")
     for name in ("events_a.parquet", "events_b.parquet"):
-        link = os.path.join(stage, name)
-        if not os.path.exists(link):
-            os.symlink(src, link)
+        os.symlink(os.path.abspath(src), os.path.join(stage, name))
     raw = (
         spark.readStream.format("parquet")
         .schema(schema)

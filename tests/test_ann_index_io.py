@@ -135,10 +135,10 @@ def test_persisted_vectors_refine_matches_base_df(spark, built_with_vectors):
 
 def _ivfpq_reference(index, lists, base, queries, k, n_probe, refine=None):
     """numpy reference search: unit queries probe their n_probe nearest
-    centroids, candidates are scored 1 - q.r against their codes'
+    centroids, candidates are scored -q.r against their codes'
     reconstructions from ``books`` (self excluded), ordered by
     (dist, nn_id); with ``refine`` the top k*refine are re-scored by
-    exact cosine distance against ``base``. Returns {qid: [(nn_id, dist)]}."""
+    exact cosine distance -cos against ``base``. Returns {qid: [(nn_id, dist)]}."""
     cents, books = index["centroids"], index["books"]
     out = {}
     for qid, qv in queries.items():
@@ -149,12 +149,12 @@ def _ivfpq_reference(index, lists, base, queries, k, n_probe, refine=None):
         recon = np.stack(
             [np.concatenate([books[j][c] for j, c in enumerate(code)]) for _, code in cand]
         )
-        dist = 1.0 - recon @ qu
+        dist = -(recon @ qu)
         order = np.lexsort((ids, dist))
         if refine is not None:
             ids = ids[order[: k * refine]]
             vecs = np.stack([base[i] for i in ids])
-            dist = 1.0 - vecs @ qv / (np.linalg.norm(vecs, axis=1) * np.linalg.norm(qv))
+            dist = -(vecs @ qv / (np.linalg.norm(vecs, axis=1) * np.linalg.norm(qv)))
             order = np.lexsort((ids, dist))
         out[qid] = [(int(ids[i]), float(dist[i])) for i in order[:k]]
     return out

@@ -246,6 +246,23 @@ def test_lsh_ann_recall_vs_bruteforce(spark, emb):
     assert recall >= 0.6, f"LSH recall {recall}"  # cheap-path bar; graph ANN is the quality path
 
 
+def test_lsh_ann_zero_norm_query_scores_zero(spark):
+    """An all-zero query has no direction: the exact rerank scores each of
+    its candidates 0 (-cos with the zero-norm guard), never 0/0 = null."""
+    import numpy as np
+
+    vecs = np.random.default_rng(7).normal(size=(60, 8))
+    vecs[0] = 0.0
+    base = spark.createDataFrame(
+        [(i, v.tolist()) for i, v in enumerate(vecs)],
+        "vec_id long, embedding array<double>",
+    )
+    q = base.where("vec_id = 0").select(F.col("vec_id").alias("qid"), "embedding")
+    rows = lsh_cosine_topk(q, base, 5, bits=4, tables=8).collect()
+    assert rows
+    assert all(r["dist"] is not None and r["dist"] == 0.0 for r in rows), rows
+
+
 def test_multimodal_decode_shapes(spark):
     docs_full = load_table(spark, "documents", SF_DIR)
     media = synth_media_from_documents(docs_full)

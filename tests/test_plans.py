@@ -310,25 +310,54 @@ def test_round6_entries_plan_shape(spark):
 
 
 def test_ivfpq_refine_broadcasts_survivors(spark):
-    """The exact-refine join must broadcast the k*refine*|q| survivors
-    side so the full-precision base is scanned in place — an unhinted
-    sort-merge pick here shuffles the WHOLE corpus per search call (the
-    measured 10^8 probe-64 scratch-exhaustion, SCALE.md r8). Executed-plan
-    property: a broadcast hash join and no sort-merge join anywhere in
-    the refine search."""
+    """LSH, PQ and IVF-PQ top-k finish in the one exact rerank, which must
+    scan the full-precision base in place: with the planner's broadcast
+    threshold off (a base too large to broadcast), the executed plan has
+    no sort-merge join and no hash exchange of base rows (keyed on
+    ``nn_id`` alone, or on LSH's ``tbl``/``bkt`` bucket tags). A shuffled
+    base here moves the WHOLE corpus per search call (the measured 10^8
+    probe-64 scratch exhaustion, SCALE.md r8). The exchanges left are the
+    candidate dedup on (qid, nn_id) and the per-query ranking on qid."""
+    import re
+
     from pyspark.sql import functions as F
 
-    from mysteryann_spark.operators.similarity import ivfpq_cosine_topk
+    from mysteryann_spark.operators.similarity import (
+        ivfpq_cosine_topk,
+        lsh_cosine_topk,
+        pq_cosine_topk,
+    )
     from mysteryann_spark.sources.tables import load_table
     from tests.conftest import SF_TINY
 
     base = load_table(spark, "embeddings", SF_TINY)
     q = base.where(F.col("vec_id") < 5).select(F.col("vec_id").alias("qid"), "embedding")
-    res = ivfpq_cosine_topk(q, base, 3, n_centroids=8, n_probe=4, m=8, n_codes=32)
-    assert res.count() > 0
-    plan = res._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan, "refine join not broadcast"
-    assert "SortMergeJoin" not in plan, "refine shuffles the corpus"
+    searches = {
+        "lsh": lambda: lsh_cosine_topk(q, base, 3),
+        "pq": lambda: pq_cosine_topk(q, base, 3, m=8, n_codes=32),
+        "ivfpq": lambda: ivfpq_cosine_topk(
+            q, base, 3, n_centroids=8, n_probe=4, m=8, n_codes=32
+        ),
+    }
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        for name, search in searches.items():
+            res = search()
+            # collect, not count: the frame's own plan runs and is final
+            assert res.collect(), name
+            plan = res._jdf.queryExecution().executedPlan().toString()
+            assert "isFinalPlan=true" in plan, name
+            assert "BroadcastHashJoin" in plan, f"{name}: rerank not broadcast"
+            assert "SortMergeJoin" not in plan, f"{name}: a join shuffles the corpus"
+            for keys in re.findall(r"hashpartitioning\(([^)]*)\)", plan):
+                cols = {re.sub(r"#\d+L?$", "", c.strip()) for c in keys.split(",")[:-1]}
+                assert cols != {"nn_id"} and not cols & {"tbl", "bkt"}, (
+                    f"{name}: base rows exchanged on {sorted(cols)}"
+                )
+    finally:
+        spark.conf.set(key, old)
 
 
 def test_persisted_vectors_refine_partition_prunes(spark, tmp_path):

@@ -1,5 +1,6 @@
-"""Registry entries that write index files or streaming checkpoints must
-leave no scratch dir in the temp dir once their driver process exits.
+"""Registry entries that write index files, streaming checkpoints or
+stream-source links must leave no scratch dir in the temp dir once their
+driver process exits, and must write nothing to fixed host paths.
 
 The entries run in a fresh Python process whose ``TMPDIR`` is a new,
 empty dir, so anything they leave there is theirs alone."""
@@ -22,6 +23,10 @@ ENTRIES = [
     "roargraph_nsg_import",
     "ann_ivfpq_persisted",
     "ann_ivfpq_vectors",
+    "fbin_roundtrip_norms",
+    "stream_tumbling_oracled",
+    "stream_dedup_oracled",
+    "stream_neardup_docs",
 ]
 
 # every prefix these entries (and the staging they call) create dirs under
@@ -34,12 +39,31 @@ PREFIXES = (
     "mysteryann-stage-",
 )
 
-# the saved IVF-PQ indexes once went to fixed per-application /tmp paths
-# that ignored TMPDIR and outlived a killed driver; checked while the
-# session is still up, before any exit hook could remove them
+# the saved IVF-PQ indexes, the fbin round trip and the stream-source
+# links once went to fixed /tmp paths that ignored TMPDIR and were shared
+# by every session on the host; checked while the session is still up,
+# before any exit hook could remove them
 _RUN = """
 import glob
+import os
 import sys
+
+made = []
+_makedirs, _symlink = os.makedirs, os.symlink
+
+
+def _record_makedirs(name, *a, **kw):
+    made.append(str(name))
+    return _makedirs(name, *a, **kw)
+
+
+def _record_symlink(src, dst, *a, **kw):
+    made.append(str(dst))
+    return _symlink(src, dst, *a, **kw)
+
+
+os.makedirs, os.symlink = _record_makedirs, _record_symlink
+
 from mysteryann_spark.queries.registry import all_queries
 from mysteryann_spark.session import get_spark
 
@@ -50,6 +74,8 @@ for name in sys.argv[2:]:
 app = spark.sparkContext.applicationId
 fixed = glob.glob("/tmp/mysteryann_ivfpq*_" + app)
 assert not fixed, f"index saved outside TMPDIR: {fixed}"
+shared = [p for p in made if p.startswith("/tmp/mysteryann_")]
+assert not shared, f"written to fixed host paths: {shared}"
 spark.stop()
 """
 
