@@ -18,9 +18,10 @@ Scale notes per operator:
 - SimHash: signatures fully per-row (one 64-bit signature per doc, no
   shuffle); pair generation is exact pigeonhole banding — equi-join on
   (band, chunk), XOR-popcount verify, never a cartesian.
-- embedding near-dup: blocked GEMM against a broadcast normalized matrix —
-  one pass, no pair shuffle; for bases beyond broadcast size this becomes
-  an LSH/IVF-bucketed pair generation (similarity.py).
+- embedding near-dup and SemDeDup: ``knn.range_join``, the one bounded
+  threshold-pair kernel (staged side, streamed side, no pair shuffle);
+  SemDeDup restricts it to same-cluster pairs, and the graph-ANN path
+  (``ann_neardup_pairs``) takes over past the exact sweep's scale.
 """
 
 from __future__ import annotations
@@ -41,7 +42,6 @@ from pyspark.sql.types import (
 )
 
 from mysteryann_spark.functions.text import tokens_col
-from mysteryann_spark.functions.vector import np_normalize
 
 # ---------------------------------------------------------------------------
 # exact + fingerprint dedup
@@ -1069,13 +1069,20 @@ def dedup_groups(
 # embedding-cosine near-dup
 # ---------------------------------------------------------------------------
 
-_PAIR_SCHEMA = StructType(
-    [
-        StructField("id_a", LongType(), False),
-        StructField("id_b", LongType(), False),
-        StructField("cos_sim", DoubleType(), False),
-    ]
-)
+
+def _cosine_pairs(emb: DataFrame, threshold: float, id_col: str, vec_col: str, **kw):
+    """(id_a, id_b, cos_sim) rows, id_a < id_b, for every pair with cosine
+    similarity >= ``threshold``: ``knn.range_join`` at cosine radius
+    ``-threshold`` (its cosine distance is -cos) over ``emb`` against
+    itself; ``kw`` passes ``match_col``."""
+    from mysteryann_spark.operators.knn import range_join
+
+    pairs = range_join(
+        emb, emb, -threshold, "cosine", query_id=id_col, base_id=id_col, vec_col=vec_col, **kw
+    )
+    return pairs.where(F.col("qid") < F.col("nn_id")).select(
+        F.col("qid").alias("id_a"), F.col("nn_id").alias("id_b"), (-F.col("dist")).alias("cos_sim")
+    )
 
 
 def embedding_neardup_pairs(
@@ -1084,39 +1091,16 @@ def embedding_neardup_pairs(
     base_id: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """All (a < b) pairs with cosine similarity >= threshold.
+    """All (id_a < id_b) pairs with cosine similarity >= threshold.
 
-    Blocked GEMM: the normalized matrix stages to Parquet once (a
+    One ``knn.range_join``: the table stages to Parquet once (a
     distributed write — no driver collect; sources/staging.py) and each
-    worker loads it lazily; every partition multiplies its block against
-    it and emits only threshold-passing pairs — O(n^2) flops but
-    O(pairs_found) rows, never a pair shuffle. The flop count still caps
-    this operator at oracle-baseline scales; the 100 TB path is
-    ``ann_neardup_pairs``."""
-    from mysteryann_spark.sources.staging import load_staged, read_staged, stage_parquet, table_matrix
-
-    path = stage_parquet(emb.select(base_id, vec_col))
-
-    def _build():
-        ids, mat = table_matrix(read_staged(path), base_id, vec_col)
-        return ids, np_normalize(mat)
-
-    def block(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        all_ids, all_mat = load_staged(path, _build)
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            bids = pdf[base_id].to_numpy(dtype=np.int64)
-            bmat = np_normalize(
-                np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-            )
-            sims = bmat @ all_mat.T
-            ii, jj = np.nonzero((sims >= threshold) & (bids[:, None] < all_ids[None, :]))
-            yield pd.DataFrame(
-                {"id_a": bids[ii], "id_b": all_ids[jj], "cos_sim": sims[ii, jj]}
-            )
-
-    return emb.select(base_id, vec_col).mapInPandas(block, _PAIR_SCHEMA)
+    base batch is scored against it in distance blocks bounded by
+    ``knn.dmat_chunk_rows``, emitting only threshold-passing pairs —
+    O(n^2) flops but O(pairs_found) rows, never a pair shuffle. The flop
+    count still caps this operator at oracle-baseline scales; the 100 TB
+    path is ``ann_neardup_pairs``."""
+    return _cosine_pairs(emb, threshold, base_id, vec_col)
 
 
 # ---------------------------------------------------------------------------
@@ -1144,12 +1128,15 @@ def semantic_dedup(
     survivor of its semantic group; singleton groups survive trivially.
 
     Scale shape: the clustering bounds the pairwise work — candidate
-    pairs come from ONE equi-shuffle on centroid id and a per-cluster
-    GEMM (cluster size ~ N/k rows), never a global cross product; the
-    grouping is the same one-task connected components the text dedup
-    path uses (its memory grows with the pair count). At 100 TB you'd
-    raise n_clusters so clusters stay executor-sized — the partitioning
-    key is the model, the plan is unchanged.
+    pairs come from ``knn.range_join`` with ``match_col`` on the cluster
+    id, so each base batch's rows score only against their own
+    cluster's staged rows (cluster size ~ N/k), in distance blocks
+    bounded by ``knn.dmat_chunk_rows`` however large a cluster grows,
+    with no shuffle; the grouping is the same one-task connected
+    components the text dedup path uses (its memory grows with the pair
+    count). At 100 TB you'd raise n_clusters so the within-cluster flops
+    stay affordable — the partitioning key is the model, the plan is
+    unchanged.
     """
     from mysteryann_spark.operators.similarity import (
         nearest_centroids_udf,
@@ -1169,25 +1156,9 @@ def semantic_dedup(
             nearest_centroids_udf(bc, 1, route_bc=bc_route)(F.col(vec_col)), 1
         ).alias("cid"),
     )
-
-    pair_schema = StructType(
-        [
-            StructField("src", LongType(), False),
-            StructField("dst", LongType(), False),
-        ]
-    )
-
-    def cluster_pairs(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        ids = pdf["id"].to_numpy(dtype=np.int64)
-        mat = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["vec"]])
-        mat = np_normalize(mat)
-        sims = mat @ mat.T
-        ii, jj = np.nonzero((sims >= threshold) & (ids[:, None] < ids[None, :]))
-        return pd.DataFrame({"src": ids[ii], "dst": ids[jj]})
-
-    pairs = assigned.groupBy("cid").applyInPandas(cluster_pairs, pair_schema)
-    nodes = assigned.select("id")
-    comps = connected_components(pairs, nodes)
+    pairs = _cosine_pairs(assigned, threshold, "id", "vec", match_col="cid")
+    edges = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
+    comps = connected_components(edges, assigned.select("id"))
     return (
         assigned.select("id", "cid")
         .join(comps, "id")

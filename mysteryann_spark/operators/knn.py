@@ -81,30 +81,114 @@ _RANKED_SCHEMA = StructType(
 )
 
 
-def _read_query_block(
-    paths: list[str], query_id: str, vec_col: str, match_col: str | None = None
-):
-    """Executor-side: one query block = one or more staged part files
-    (URIs from ``DataFrame.inputFiles``). Returns (qids, qmat[, qmatch])
-    or None if the block holds no rows. pyarrow datasets don't
-    URI-resolve path *lists*, so the filesystem is resolved explicitly
-    (file:/hdfs:/s3:)."""
+def _read_files(files: list[str], cols: list[str]):
+    """Executor-side: one Arrow table over staged part files (URIs from
+    ``list_staged_files``). pyarrow datasets don't URI-resolve path
+    *lists*, so the filesystem is resolved explicitly (file:/hdfs:/s3:)."""
     import pyarrow.fs as pafs
     import pyarrow.parquet as pq
 
-    fs, first = pafs.FileSystem.from_uri(paths[0])
-    rel = [first] + [pafs.FileSystem.from_uri(p)[1] for p in paths[1:]]
-    cols = [query_id, vec_col] + ([match_col] if match_col else [])
-    tbl = pq.read_table(rel, filesystem=fs, columns=cols)
-    if tbl.num_rows == 0:
-        return None
-    ids, mat = table_matrix(tbl, query_id, vec_col)
+    fs, first = pafs.FileSystem.from_uri(files[0])
+    rel = [first] + [pafs.FileSystem.from_uri(p)[1] for p in files[1:]]
+    return pq.read_table(rel, filesystem=fs, columns=cols)
+
+
+def _inverted_lists(vals: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """``(uniq, bounds, rows)``: the positions of ``vals`` holding
+    ``uniq[j]`` are ``rows[bounds[j]:bounds[j + 1]]``, ascending. Three
+    flat arrays rather than a dict, so a staged artifact holding them
+    stays a tuple of ndarrays and is mapped host-shared."""
+    rows = np.argsort(vals, kind="stable")
+    uniq, starts = np.unique(vals[rows], return_index=True)
+    return uniq, np.append(starts, len(vals)), rows
+
+
+def _list_runs(inv: tuple, bvals: np.ndarray) -> Iterator[tuple]:
+    """``(base rows, query rows)`` for each list value present on both
+    sides: ``inv`` is the query side's ``_inverted_lists``, ``bvals`` the
+    base batch's per-row values. Base rows come as a slice when
+    ``bvals`` is already sorted (an IVF batch sorted by cid, or a single
+    list), so those runs score a view of the batch, not a copy."""
+    uniq, bounds, rows = inv
+    order = None if np.all(bvals[1:] >= bvals[:-1]) else np.argsort(bvals, kind="stable")
+    sv = bvals if order is None else bvals[order]
+    starts = np.flatnonzero(np.r_[True, sv[1:] != sv[:-1]])
+    for lo, hi in zip(starts, np.append(starts[1:], len(sv))):
+        j = int(np.searchsorted(uniq, sv[lo]))
+        if j == len(uniq) or uniq[j] != sv[lo]:
+            continue  # a value only the base holds
+        brows = slice(lo, hi) if order is None else order[lo:hi]
+        yield brows, rows[bounds[j] : bounds[j + 1]]
+
+
+def _query_lists(files: list[str], query_id: str, vec_col: str, match_col: str | None):
+    """Executor-side: the staged query block as ``(qids, qmat, uniq,
+    bounds, rows)`` — id-sorted rows and their ``_inverted_lists`` by
+    ``match_col`` (one list of every row when it is None) — built once
+    per host, or None if the block holds no rows."""
+
+    def build():
+        tbl = _read_files(files, [query_id, vec_col] + ([match_col] if match_col else []))
+        if tbl.num_rows == 0:
+            return None
+        ids, mat = table_matrix(tbl, query_id, vec_col)
+        if match_col is None:
+            vals = np.zeros(len(ids), dtype=np.int64)
+        else:
+            raw_ids = tbl[query_id].combine_chunks().to_numpy(zero_copy_only=False)
+            vals = tbl[match_col].combine_chunks().to_numpy(zero_copy_only=False)
+            # same order as table_matrix
+            vals = vals[np.argsort(raw_ids, kind="stable")].astype(np.int64)
+        return (ids, mat) + _inverted_lists(vals)
+
+    return load_staged(f"knnq|{match_col}|" + "|".join(files), build)
+
+
+def _base_batch(pdf: pd.DataFrame, base_id: str, vec_col: str, match_col: str | None):
+    """A base Arrow batch as ``(bids, bmat, bvals)``, ``bvals`` its
+    ``match_col`` values (all zero, one list, when it is None)."""
+    bids = pdf[base_id].to_numpy(dtype=np.int64)
+    bmat = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
     if match_col is None:
-        return ids, mat
-    raw_ids = tbl[query_id].combine_chunks().to_numpy(zero_copy_only=False)
-    vals = tbl[match_col].combine_chunks().to_numpy(zero_copy_only=False)
-    order = np.argsort(raw_ids, kind="stable")  # same order as table_matrix
-    return ids, mat, vals[order].astype(np.int64)
+        return bids, bmat, np.zeros(len(bids), dtype=np.int64)
+    return bids, bmat, pdf[match_col].to_numpy(dtype=np.int64)
+
+
+def _check_match_col(fn: str, match_col: str | None, queries_df, base_df) -> None:
+    """Plan-time check that ``match_col`` is an integer column on both
+    sides: the kernels compare list values as int64, so a string or
+    float label would die mid-task with an opaque cast error."""
+    if match_col is None:
+        return
+    from pyspark.sql.types import ByteType, ShortType
+
+    for side, df in (("queries_df", queries_df), ("base_df", base_df)):
+        dt = df.schema[match_col].dataType
+        if not isinstance(dt, (ByteType, ShortType, IntegerType, LongType)):
+            raise TypeError(
+                f"{fn} match_col {match_col!r} on {side} must be an integer "
+                f"type (got {dt.simpleString()}); cast labels to int/bigint "
+                "before the join"
+            )
+
+
+def _dist_blocks(qids, qmat, bids, bmat, metric, exclude_self, qrows):
+    """``(qids_c, dmat)`` distance blocks of the ``qrows`` query rows
+    (default: all) against one base block, the query axis chunked under
+    ``dmat_chunk_rows``. An unchunked (n_staged_q x n_batch) float64
+    matrix scales with the staged-query count: at 60k queries x ~5k-row
+    batches that is ~2.3 GB per in-flight batch, and cores x workers of
+    those OOM-killed the 300k scale rehearsal. With ``exclude_self`` a
+    query's own id gets distance inf."""
+    n_q = len(qids) if qrows is None else len(qrows)
+    q_chunk = dmat_chunk_rows(len(bids))
+    for s in range(0, n_q, q_chunk):
+        sel = slice(s, s + q_chunk) if qrows is None else qrows[s : s + q_chunk]
+        qids_c = qids[sel]
+        dmat = np_distances(metric, qmat[sel], bmat)
+        if exclude_self:
+            dmat[qids_c[:, None] == bids[None, :]] = np.inf
+        yield qids_c, dmat
 
 
 def _block_topk(
@@ -116,34 +200,17 @@ def _block_topk(
     metric: str,
     exclude_self: bool,
     qrows: np.ndarray | None = None,
-    qmatch: np.ndarray | None = None,
-    bmatch: np.ndarray | None = None,
 ) -> Iterator[pd.DataFrame]:
     """Local top-k of one base block: yields ``(qid, nn_id, dist)``
     frames holding each query's ``min(k, len(bids))`` nearest rows of
     ``bmat`` (unordered; ``rank_topk`` merges the blocks). ``qrows``
-    picks the query rows to score (default: all). Rows whose
-    ``qmatch`` differs from ``bmatch``, and with ``exclude_self`` a
-    query's own id, get distance inf so the caller can drop them.
-
-    The query axis is chunked under ``dmat_chunk_rows``. An unchunked
-    (n_staged_q x n_batch) float64 matrix scales with the staged-query
-    count: at 60k queries x ~5k-row batches that is ~2.3 GB per
-    in-flight batch, and cores x workers of those OOM-killed the 300k
-    scale rehearsal. Per-query top-k is row-independent, so chunking
-    changes distances only by GEMM rounding (see _DMAT_BUDGET_BYTES)."""
-    n_q = len(qids) if qrows is None else len(qrows)
-    q_chunk = dmat_chunk_rows(len(bids))
-    for s in range(0, n_q, q_chunk):
-        sel = slice(s, s + q_chunk) if qrows is None else qrows[s : s + q_chunk]
-        qids_c = qids[sel]
-        dmat = np_distances(metric, qmat[sel], bmat)
-        if bmatch is not None:
-            dmat[qmatch[sel][:, None] != bmatch[None, :]] = np.inf
-        if exclude_self:
-            # mask before the local top-k, or a block owning the
-            # query's own row would surrender a slot
-            dmat[qids_c[:, None] == bids[None, :]] = np.inf
+    picks the query rows to score (default: all). With ``exclude_self``
+    a query's own id gets distance inf — masked before the local top-k,
+    or a block owning the query's own row would surrender a slot — so
+    the caller drops it. Per-query top-k is row-independent, so the
+    query-axis chunking (``_dist_blocks``) changes distances only by
+    GEMM rounding (see _DMAT_BUDGET_BYTES)."""
+    for qids_c, dmat in _dist_blocks(qids, qmat, bids, bmat, metric, exclude_self, qrows):
         m = min(k, dmat.shape[1])
         # local top-m per query: argpartition, exact sort in rank_topk
         part = np.argpartition(dmat, m - 1, axis=1)[:, :m]
@@ -155,6 +222,26 @@ def _block_topk(
                 "dist": dmat[rows_q, part.ravel()],
             }
         )
+
+
+def _block_range(
+    qids: np.ndarray,
+    qmat: np.ndarray,
+    bids: np.ndarray,
+    bmat: np.ndarray,
+    radius: float,
+    metric: str,
+    exclude_self: bool,
+    qrows: np.ndarray | None = None,
+) -> Iterator[pd.DataFrame]:
+    """The range twin of ``_block_topk``: yields ``(qid, nn_id, dist)``
+    frames of every (query, base row) pair of one base block with
+    distance <= ``radius``, never a query's own id with ``exclude_self``.
+    The predicate is per pair, so query-axis chunking is exact."""
+    for qids_c, dmat in _dist_blocks(qids, qmat, bids, bmat, metric, exclude_self, qrows):
+        qi, bi = np.nonzero(dmat <= radius)
+        if len(qi):
+            yield pd.DataFrame({"qid": qids_c[qi], "nn_id": bids[bi], "dist": dmat[qi, bi]})
 
 
 def rank_topk(cand: DataFrame, k: int) -> DataFrame:
@@ -205,27 +292,15 @@ def knn_join(
     ``match_col`` (optional) makes the join FILTERED: both sides must
     carry the column, and a base row only competes for a query's top-k
     when the values match (the Big-ANN filtered-track semantics — e.g.
-    same-label retrieval). The filter is a distance mask inside the GEMM
-    kernel, so selectivity never costs a second scan.
+    same-label retrieval). The staged queries are grouped into one
+    inverted list per value and each base batch's same-value rows score
+    only against that list (``_list_runs``), so non-matching pairs are
+    never computed and selectivity never costs a second scan.
     """
     spark = base_df.sparkSession
-    if match_col is not None:
-        # validate up front: the Arrow kernel compares match values as
-        # int64, so a string/float label column would die mid-GEMM with an
-        # opaque cast error instead of this plan-time message
-        from pyspark.sql.types import ByteType, IntegerType, ShortType
-
-        _int_types = (ByteType, ShortType, IntegerType, LongType)
-        for side, df in (("queries_df", queries_df), ("base_df", base_df)):
-            dt = df.schema[match_col].dataType
-            if not isinstance(dt, _int_types):
-                raise TypeError(
-                    f"knn_join match_col {match_col!r} on {side} must be an "
-                    f"integer type (got {dt.simpleString()}); cast labels to "
-                    "int/bigint before the join"
-                )
-    q_cols = [query_id, vec_col] + ([match_col] if match_col else [])
-    q_sel = queries_df.select(*q_cols)
+    _check_match_col("knn_join", match_col, queries_df, base_df)
+    m_cols = [match_col] if match_col else []
+    q_sel = queries_df.select(query_id, vec_col, *m_cols)
     if query_block_rows is None:
         q_path = stage_parquet(q_sel, storage_dir)
     else:
@@ -241,39 +316,25 @@ def knn_join(
 
     def block_candidates(block_files: list[str]) -> DataFrame:
         def local_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            loaded = load_staged(
-                "knnq|" + ("m:" + match_col + "|" if match_col else "") + "|".join(block_files),
-                lambda: _read_query_block(block_files, query_id, vec_col, match_col),
-            )
+            loaded = _query_lists(block_files, query_id, vec_col, match_col)
             if loaded is None:
                 return
-            if match_col is None:
-                b_qids, b_qmat = loaded
-                b_qmatch = None
-            else:
-                b_qids, b_qmat, b_qmatch = loaded
+            qids, qmat, *inv = loaded
             for pdf in batches:
                 if pdf.empty:
                     continue
-                bids = pdf[base_id].to_numpy(dtype=np.int64)
-                bmat = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-                bm = (
-                    pdf[match_col].to_numpy(dtype=np.int64)
-                    if b_qmatch is not None
-                    else None
-                )
-                yield from _block_topk(
-                    b_qids, b_qmat, bids, bmat, k, metric, exclude_self,
-                    qmatch=b_qmatch, bmatch=bm,
-                )
+                bids, bmat, bvals = _base_batch(pdf, base_id, vec_col, match_col)
+                for br, qr in _list_runs(inv, bvals):
+                    yield from _block_topk(
+                        qids, qmat, bids[br], bmat[br], k, metric, exclude_self, qrows=qr
+                    )
 
-        b_cols = [base_id, vec_col] + ([match_col] if match_col else [])
-        return base_df.select(*b_cols).mapInPandas(local_topk, _CAND_SCHEMA)
+        return base_df.select(base_id, vec_col, *m_cols).mapInPandas(local_topk, _CAND_SCHEMA)
 
     candidates = block_candidates(blocks[0])
     for blk in blocks[1:]:
         candidates = candidates.unionByName(block_candidates(blk))
-    if exclude_self or match_col is not None:
+    if exclude_self:
         candidates = candidates.where(F.col("dist") != float("inf"))
     return rank_topk(candidates, k)
 
@@ -348,53 +409,45 @@ def range_join(
     base_id: str = "vec_id",
     vec_col: str = "embedding",
     exclude_self: bool = False,
+    match_col: str | None = None,
 ) -> DataFrame:
     """Range (radius) join: every (query, base) pair with distance
     <= ``radius`` — the fixed-threshold sibling of the top-k kNN join
     (the reference's queue-based search bounds by COUNT, neighbor.h:138;
     a range join bounds by DISTANCE, the retrieval mode used for
-    near-duplicate harvesting and recall curves).
+    near-duplicate harvesting and recall curves). The engine's one
+    threshold-pair kernel: embedding near-dup and SemDeDup call it with
+    a cosine radius of ``-threshold``.
 
     Same scale shape as knn_join: the query side is staged once
     (executor-side Parquet, no driver round-trip), the base side streams
-    through one GEMM per Arrow batch, and — unlike top-k — no global
-    merge is needed at all: the radius predicate is decided locally per
-    batch, so there is ZERO shuffle and output size is the only cost.
-    Returns (qid, nn_id, dist).
+    through ``_block_range`` per Arrow batch, every distance block under
+    ``dmat_chunk_rows`` — and, unlike top-k, no global merge is needed
+    at all: the radius predicate is decided locally per batch, so there
+    is ZERO shuffle and output size is the only cost. ``match_col``
+    restricts pairs to equal values, as in knn_join. Returns
+    (qid, nn_id, dist).
     """
     spark = base_df.sparkSession
-    q_path = stage_parquet(queries_df.select(query_id, vec_col))
-    files = list_staged_files(q_path)
+    _check_match_col("range_join", match_col, queries_df, base_df)
+    m_cols = [match_col] if match_col else []
+    files = list_staged_files(stage_parquet(queries_df.select(query_id, vec_col, *m_cols)))
     if not files:
         return spark.createDataFrame([], _CAND_SCHEMA)
     r = float(radius)
 
     def in_range(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        loaded = load_staged(
-            "rangeq|" + "|".join(files),
-            lambda: _read_query_block(files, query_id, vec_col),
-        )
+        loaded = _query_lists(files, query_id, vec_col, match_col)
         if loaded is None:
             return
-        b_qids, b_qmat = loaded
+        qids, qmat, *inv = loaded
         for pdf in batches:
             if pdf.empty:
                 continue
-            bids = pdf[base_id].to_numpy(dtype=np.int64)
-            bmat = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-            # same bounded-distance-block regime as knn_join — the radius
-            # predicate is per-pair, so query-axis chunking is exact
-            q_chunk = dmat_chunk_rows(len(bids))
-            for s in range(0, len(b_qids), q_chunk):
-                qids_c = b_qids[s : s + q_chunk]
-                dmat = np_distances(metric, b_qmat[s : s + q_chunk], bmat)
-                if exclude_self:
-                    dmat[qids_c[:, None] == bids[None, :]] = np.inf
-                qi, bi = np.nonzero(dmat <= r)
-                if len(qi) == 0:
-                    continue
-                yield pd.DataFrame(
-                    {"qid": qids_c[qi], "nn_id": bids[bi], "dist": dmat[qi, bi]}
+            bids, bmat, bvals = _base_batch(pdf, base_id, vec_col, match_col)
+            for br, qr in _list_runs(inv, bvals):
+                yield from _block_range(
+                    qids, qmat, bids[br], bmat[br], r, metric, exclude_self, qrows=qr
                 )
 
-    return base_df.select(base_id, vec_col).mapInPandas(in_range, _CAND_SCHEMA)
+    return base_df.select(base_id, vec_col, *m_cols).mapInPandas(in_range, _CAND_SCHEMA)

@@ -26,9 +26,9 @@ Shape (designed for the 100 TB regime):
 - kernel: per Arrow batch of base rows, group by centroid id and GEMM
   each centroid's rows against ONLY the queries probing that centroid —
   total work = sum over lists (probers x list length), i.e.
-  ~(n_probe / n_centroids) of the exact join's flops. The full-distance
-  masked form (knn_join's match_col) would compute the whole matrix and
-  throw most of it away; this kernel never materializes skipped pairs.
+  ~(n_probe / n_centroids) of the exact join's flops. The list runs are
+  the ones knn_join's match_col filter walks (``knn._inverted_lists`` /
+  ``knn._list_runs``); here a query sits on n_probe lists, not one.
 - global merge: the same per-list local top-k kernel and (qid)-window
   merge (``knn._block_topk`` / ``knn.rank_topk``) as the exact join.
 
@@ -59,6 +59,9 @@ from mysteryann_spark.operators.knn import (
     _CAND_SCHEMA,
     _RANKED_SCHEMA,
     _block_topk,
+    _inverted_lists,
+    _list_runs,
+    _read_files,
     rank_topk,
 )
 from mysteryann_spark.operators.similarity import (
@@ -183,40 +186,27 @@ def ivf_knn_join(
         return spark.createDataFrame([], _RANKED_SCHEMA)
 
     def _query_side():
-        """(qids, qmat, uniq_cids, bounds, flat_rows): the inverted probe
-        index as three flat arrays (cid j's query rows are
-        flat_rows[bounds[j]:bounds[j+1]]) rather than a dict — a pure
-        tuple-of-ndarrays artifact is built once per host and mapped by
+        """(qids, qmat, uniq_cids, bounds, rows): the staged queries and
+        their inverted probe lists (``_inverted_lists`` over every
+        (query, probe) entry, mapped back to query rows) — a pure
+        tuple-of-ndarrays artifact, built once per host and mapped by
         every worker (sources/staging.py), which matters here: qmat
         alone is ~2.6 GB at the 10^7 full-training scale. With the
         probe GEMM done distributed at staging time, this build is read
         + two sorts — cheap enough that the one worker per host that
         pays it no longer serializes the stage."""
-        import pyarrow.fs as pafs
-        import pyarrow.parquet as pq
-
         from mysteryann_spark.sources.staging import table_ragged
 
-        fs, first = pafs.FileSystem.from_uri(files[0])
-        rel = [first] + [pafs.FileSystem.from_uri(p)[1] for p in files[1:]]
-        tbl = pq.read_table(
-            rel, filesystem=fs, columns=[query_id, vec_col, "probes"]
-        )
+        tbl = _read_files(files, [query_id, vec_col, "probes"])
         if tbl.num_rows == 0:
             return None
         qids, qmat = table_matrix(tbl, query_id, vec_col)
         # same stable id-argsort as table_matrix, so row i of the ragged
         # view is row i of qmat
         _, indptr, flat_cids = table_ragged(tbl, query_id, "probes")
-        flat_cids = flat_cids.astype(np.int64)
-        flat_rows = np.repeat(
-            np.arange(len(qids), dtype=np.int64), np.diff(indptr)
-        )
-        order = np.argsort(flat_cids, kind="stable")
-        flat_cids, flat_rows = flat_cids[order], flat_rows[order]
-        uniq, starts = np.unique(flat_cids, return_index=True)
-        bounds = np.append(starts, len(flat_cids))
-        return qids, qmat, uniq, bounds, flat_rows
+        uniq, bounds, pos = _inverted_lists(flat_cids.astype(np.int64))
+        flat_rows = np.repeat(np.arange(len(qids), dtype=np.int64), np.diff(indptr))
+        return qids, qmat, uniq, bounds, flat_rows[pos]
 
     # base side: assign each row to its L2-nearest centroid in routing
     # space, then ONE shuffle on cid so each Arrow batch holds long
@@ -242,24 +232,16 @@ def ivf_knn_join(
         loaded = load_staged("ivfknnq|" + "|".join(files), _query_side)
         if loaded is None:
             return
-        qids, qmat, inv_cids, inv_bounds, inv_rows = loaded
+        qids, qmat, *inv = loaded
         for pdf in batches:
             if pdf.empty:
                 continue
             bids = pdf["bid"].to_numpy(dtype=np.int64)
             bmat = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["bvec"]])
-            bcids = pdf["cid"].to_numpy(dtype=np.int64)
-            # contiguous runs per cid (sorted within partitions)
-            run_starts = np.flatnonzero(np.r_[True, bcids[1:] != bcids[:-1]])
-            run_bounds = np.append(run_starts, len(bcids))
-            for ri in range(len(run_starts)):
-                lo, hi = run_bounds[ri], run_bounds[ri + 1]
-                j = int(np.searchsorted(inv_cids, bcids[lo]))
-                if j >= len(inv_cids) or inv_cids[j] != bcids[lo]:
-                    continue
+            # cid-sorted within partitions: every run is a slice
+            for br, qr in _list_runs(inv, pdf["cid"].to_numpy(dtype=np.int64)):
                 yield from _block_topk(
-                    qids, qmat, bids[lo:hi], bmat[lo:hi], k, metric, exclude_self,
-                    qrows=inv_rows[inv_bounds[j] : inv_bounds[j + 1]],
+                    qids, qmat, bids[br], bmat[br], k, metric, exclude_self, qrows=qr
                 )
 
     candidates = assigned.mapInPandas(probe_topk, _CAND_SCHEMA)

@@ -5,8 +5,8 @@ Numpy re-expression of the reference's candidate-pruning rule
 candidate pool for a target node, sorted by (distance-to-target, id), keep
 candidate c only if no already-kept r satisfies d(c, r) < d(c, target);
 then backfill nearest non-kept candidates up to M. All pools are small
-(<= a few hundred), so the kernel is a local O(M*|pool|) numpy loop inside
-``applyInPandas`` — per-group work, never a Spark shuffle.
+(<= a few hundred), so the kernel is a local O(M*|pool|) numpy loop over
+the JVM-assembled (``collect_list``) pools of each ``mapInPandas`` batch.
 
 The reference's three passes (sorted pool, original-order slack pass with
 alpha=1.0, nearest backfill) collapse to two here because our callers

@@ -285,7 +285,7 @@ def filtered_search_graph(
     construction), not a fixed guess: a query whose label covers 10% of
     the base widens 10x·slack; a 2% label widens 50x·slack. Labels below
     ``min_label_freq`` (or needing more than ``max_widen``x) skip the
-    graph entirely and run the EXACT filtered kNN (match_col GEMM mask) —
+    graph entirely and run the EXACT filtered kNN (knn_join match_col) —
     over-retrieving a rare label through a label-agnostic index silently
     loses recall, and the exact path over a rare label's scan is cheap by
     the same selectivity. One graph pass serves all graph-routed labels

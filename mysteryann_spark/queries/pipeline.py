@@ -964,9 +964,10 @@ SELECT qid, nn_id, round(dist + 1e-9, 6) AS dist FROM d WHERE dist <= {_RANGE_RA
 
 def ann_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FILTERED exact kNN (the Big-ANN filtered-track semantics): top-5
-    same-label neighbors per query. The label predicate is a distance
-    mask inside the GEMM kernel (knn_join match_col) — one scan, no
-    per-label re-partitioning, exact and fully SQL-oracled."""
+    same-label neighbors per query. knn_join's match_col groups the
+    staged queries by label and scores each base row only against its
+    own label's queries — one scan, no per-label re-partitioning, exact
+    and fully SQL-oracled."""
     from mysteryann_spark.operators.knn import knn_join
 
     e = _emb(spark, sf_dir)

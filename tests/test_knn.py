@@ -88,48 +88,88 @@ def test_dmat_chunk_rows_bounds_every_geometry():
 
 
 def test_block_topk_chunking_is_exact_at_any_budget(monkeypatch):
-    """``_block_topk`` chunks the query axis under ``_DMAT_BUDGET_BYTES``;
-    at a budget of 1-3 rows per chunk (with a partial last chunk) it must
-    yield the unchunked frames row for row — with ``exclude_self``, with
-    ``qmatch``/``bmatch`` and with a ``qrows`` subset. In-process, no
-    Spark: the budget is read inside the Python worker, where a
-    driver-side patch would not reach. GEMM float noise differs by
-    chunk shape (OpenBLAS rounds a row differently at another row
+    """``_block_topk`` and ``_block_range`` chunk the query axis under
+    ``_DMAT_BUDGET_BYTES``; at a budget of 1-3 rows per chunk (with a
+    partial last chunk) no distance block may exceed the budget, and each
+    kernel must yield the unchunked result — top-k row for row, range as
+    the same pair set — with and without ``exclude_self`` and with a
+    ``qrows`` subset. Every row sits in one list, as ``_inverted_lists``
+    and ``_list_runs`` lay it out when ``match_col`` is None.
+    In-process, no Spark: the budget is read inside the Python worker,
+    where a driver-side patch would not reach. GEMM float noise differs
+    by chunk shape (OpenBLAS rounds a row differently at another row
     count), so ids must match exactly and dists to 1e-12 relative."""
     import pandas as pd
 
     from mysteryann_spark.operators import knn
 
     rng = np.random.default_rng(5)
-    nq, nb, dim, k = 11, 37, 8, 5
+    nq, nb, dim, k, radius = 11, 37, 8, 5, 10.0
     qids = np.arange(nq, dtype=np.int64) * 3  # some qids are base ids
     qmat = rng.standard_normal((nq, dim))
     bids = np.arange(nb, dtype=np.int64)
     bmat = rng.standard_normal((nb, dim))
-    qmatch = rng.integers(0, 3, size=nq)
-    bmatch = rng.integers(0, 3, size=nb)
+    inv = knn._inverted_lists(np.zeros(nq, dtype=np.int64))
+    [(brows, one_list)] = knn._list_runs(inv, np.zeros(nb, dtype=np.int64))
+    assert brows == slice(0, nb) and np.array_equal(one_list, np.arange(nq))
     cases = [
-        dict(exclude_self=False),
-        dict(exclude_self=True),
-        dict(exclude_self=True, qmatch=qmatch, bmatch=bmatch),
+        dict(exclude_self=False, qrows=one_list),
+        dict(exclude_self=True, qrows=one_list),
         dict(exclude_self=False, qrows=np.array([0, 2, 3, 7, 10])),
     ]
+    blocks = []
+    np_distances = knn.np_distances
 
-    def frames(kw):
-        out = list(knn._block_topk(qids, qmat, bids, bmat, k, "l2", **kw))
-        return len(out), pd.concat(out, ignore_index=True)
+    def recorded(metric, q, b):
+        blocks.append(q.shape[0] * b.shape[0] * 8)
+        return np_distances(metric, q, b)
 
-    for kw in cases:
-        n_whole, whole = frames(kw)
-        assert n_whole == 1
-        for rows in (1, 2, 3):
-            monkeypatch.setattr(knn, "_DMAT_BUDGET_BYTES", rows * 8 * nb)
-            assert knn.dmat_chunk_rows(nb) == rows
-            n_chunks, chunked = frames(kw)
-            n_sel = nq if "qrows" not in kw else len(kw["qrows"])
-            assert n_chunks == -(-n_sel // rows)
-            assert len(chunked) == len(whole) == n_sel * k, (rows, kw.keys())
-            assert np.array_equal(chunked["qid"], whole["qid"]), (rows, kw.keys())
-            assert np.array_equal(chunked["nn_id"], whole["nn_id"]), (rows, kw.keys())
-            np.testing.assert_allclose(chunked["dist"], whole["dist"], rtol=1e-12, atol=0)
-            monkeypatch.undo()
+    monkeypatch.setattr(knn, "np_distances", recorded)
+
+    def frames(kernel, kw):
+        if kernel == "topk":
+            out = list(knn._block_topk(qids, qmat, bids, bmat, k, "l2", **kw))
+        else:
+            out = list(knn._block_range(qids, qmat, bids, bmat, radius, "l2", **kw))
+        df = pd.concat(out, ignore_index=True)
+        return len(out), df.sort_values(["qid", "nn_id"], ignore_index=True)
+
+    for kernel in ("topk", "range"):
+        for kw in cases:
+            n_whole, whole = frames(kernel, kw)
+            assert n_whole == 1
+            n_sel = len(kw["qrows"])
+            if kernel == "topk":
+                assert len(whole) == n_sel * k
+            else:
+                assert 0 < len(whole) < n_sel * nb
+            for rows in (1, 2, 3):
+                budget = rows * 8 * nb
+                with monkeypatch.context() as m:
+                    m.setattr(knn, "_DMAT_BUDGET_BYTES", budget)
+                    assert knn.dmat_chunk_rows(nb) == rows
+                    blocks.clear()
+                    n_chunks, chunked = frames(kernel, kw)
+                tag = (kernel, rows, kw["exclude_self"], n_sel)
+                assert len(blocks) == -(-n_sel // rows) and max(blocks) <= budget, tag
+                if kernel == "topk":
+                    assert n_chunks == len(blocks), tag
+                assert len(chunked) == len(whole), tag
+                assert np.array_equal(chunked["qid"], whole["qid"]), tag
+                assert np.array_equal(chunked["nn_id"], whole["nn_id"]), tag
+                np.testing.assert_allclose(chunked["dist"], whole["dist"], rtol=1e-12, atol=0)
+
+
+def test_match_col_must_be_integer(spark, emb):
+    """knn_join and range_join both reject a non-integer ``match_col``
+    at plan time, before any job runs."""
+    import pytest
+
+    from mysteryann_spark.operators.knn import range_join
+
+    e = emb.select("vec_id", "embedding", F.col("vec_id").cast("string").alias("label"))
+    q = e.where("vec_id < 5").withColumnRenamed("vec_id", "qid")
+    with pytest.raises(TypeError, match="must be an integer type"):
+        knn_join(q, e, 3, match_col="label")
+    with pytest.raises(TypeError, match="must be an integer type"):
+        range_join(q, e, 1.0, match_col="label")

@@ -701,34 +701,42 @@ def test_ann_neardup_covers_exact_pairs(spark, emb):
     th = 0.35  # this corpus has no high-cosine pairs; 0.35 yields a real pair set
     exact = {(r["id_a"], r["id_b"]) for r in embedding_neardup_pairs(emb, th).collect()}
     assert len(exact) > 20
-    approx = {(r["id_a"], r["id_b"]) for r in ann_neardup_pairs(emb, th, k=10).collect()}
-    covered = len(exact & approx) / len(exact)
+    approx = {
+        (r["id_a"], r["id_b"]): r["cos_sim"] for r in ann_neardup_pairs(emb, th, k=10).collect()
+    }
+    covered = len(exact & approx.keys()) / len(exact)
     assert covered >= 0.9, f"ann near-dup pair recall {covered} ({len(exact)} exact)"
-    # no false positives: every reported pair really clears the threshold
-    assert approx <= exact or all(
-        p in exact for p in list(approx - exact)[:0]
-    )  # sim values checked below
+    # no false positives: every reported pair really clears the threshold,
+    # with the exact sweep's similarity
     sims = {(r["id_a"], r["id_b"]): r["cos_sim"] for r in embedding_neardup_pairs(emb, 0.0).collect()}
-    for p in approx:
+    for p, sim in approx.items():
         assert sims.get(p, 0.0) >= th - 1e-9, p
+        assert abs(sim - sims[p]) <= 1e-9, (p, sim, sims[p])
 
 
 def test_range_join_matches_bruteforce(spark, emb):
     """Every (query, base) pair within the radius — no more, no fewer —
-    against an independent numpy recomputation."""
+    against an independent numpy recomputation; with ``match_col``,
+    every such pair whose labels match. Label 98 is held only by
+    queries and label 99 only by the base, so both find no pair."""
     import numpy as np
 
     from mysteryann_spark.operators.knn import range_join
 
-    q = emb.where("vec_id < 20").selectExpr("vec_id as qid", "embedding")
-    got = {
-        (r["qid"], r["nn_id"]): r["dist"]
-        for r in range_join(q, emb, radius=1.4, metric="l2", exclude_self=True).collect()
-    }
-    rows = emb.select("vec_id", "embedding").collect()
+    base = emb.withColumn(
+        "lab", F.when(F.col("vec_id") % 7 == 0, 99).otherwise(F.col("vec_id") % 3)
+    )
+    q = base.where("vec_id < 20").select(
+        F.col("vec_id").alias("qid"),
+        "embedding",
+        F.when(F.col("vec_id") < 3, 98).otherwise(F.col("vec_id") % 3).alias("lab"),
+    )
+    rows = base.select("vec_id", "embedding", "lab").collect()
     ids = np.array([r["vec_id"] for r in rows])
+    blabs = {r["vec_id"]: r["lab"] for r in rows}
     mat = np.stack([np.asarray(r["embedding"], dtype=np.float64) for r in rows])
     qmask = ids < 20
+    qlabs = {r["qid"]: r["lab"] for r in q.collect()}
     qq = (mat[qmask] ** 2).sum(1)[:, None]
     bb = (mat**2).sum(1)[None, :]
     d = np.maximum(qq + bb - 2.0 * mat[qmask] @ mat.T, 0.0)
@@ -737,9 +745,19 @@ def test_range_join_matches_bruteforce(spark, emb):
         for bi, bid in enumerate(ids):
             if bid != qid and d[qi, bi] <= 1.4:
                 want[(int(qid), int(bid))] = d[qi, bi]
-    assert set(got) == set(want)
-    for k, v in got.items():
-        assert abs(v - want[k]) < 1e-9
+    want_matched = {p: v for p, v in want.items() if qlabs[p[0]] == blabs[p[1]]}
+    assert 0 < len(want_matched) < len(want)
+    assert any(qlabs[a] == 98 or blabs[b] == 99 for a, b in want)
+    for match_col, expect in ((None, want), ("lab", want_matched)):
+        got = {
+            (r["qid"], r["nn_id"]): r["dist"]
+            for r in range_join(
+                q, base, radius=1.4, metric="l2", exclude_self=True, match_col=match_col
+            ).collect()
+        }
+        assert set(got) == set(expect), match_col
+        for k, v in got.items():
+            assert abs(v - expect[k]) < 1e-9
 
 
 def test_semantic_dedup_properties(spark, emb):
