@@ -1074,11 +1074,14 @@ def _cosine_pairs(emb: DataFrame, threshold: float, id_col: str, vec_col: str, *
     """(id_a, id_b, cos_sim) rows, id_a < id_b, for every pair with cosine
     similarity >= ``threshold``: ``knn.range_join`` at cosine radius
     ``-threshold`` (its cosine distance is -cos) over ``emb`` against
-    itself; ``kw`` passes ``match_col``."""
+    itself; ``kw`` passes ``match_col``. ``exclude_self`` drops each
+    row's self-pair inside the kernel, so only the two orientations of
+    each pair reach Spark, where ``qid < nn_id`` keeps one."""
     from mysteryann_spark.operators.knn import range_join
 
     pairs = range_join(
-        emb, emb, -threshold, "cosine", query_id=id_col, base_id=id_col, vec_col=vec_col, **kw
+        emb, emb, -threshold, "cosine", query_id=id_col, base_id=id_col,
+        vec_col=vec_col, exclude_self=True, **kw,
     )
     return pairs.where(F.col("qid") < F.col("nn_id")).select(
         F.col("qid").alias("id_a"), F.col("nn_id").alias("id_b"), (-F.col("dist")).alias("cos_sim")
@@ -1127,16 +1130,19 @@ def semantic_dedup(
     Returns (vec_id, cluster_id, component, keep) — keep=1 marks the
     survivor of its semantic group; singleton groups survive trivially.
 
-    Scale shape: the clustering bounds the pairwise work — candidate
+    Scale shape: the clustering bounds the pairwise FLOPS — candidate
     pairs come from ``knn.range_join`` with ``match_col`` on the cluster
     id, so each base batch's rows score only against their own
     cluster's staged rows (cluster size ~ N/k), in distance blocks
     bounded by ``knn.dmat_chunk_rows`` however large a cluster grows,
-    with no shuffle; the grouping is the same one-task connected
-    components the text dedup path uses (its memory grows with the pair
-    count). At 100 TB you'd raise n_clusters so the within-cluster flops
-    stay affordable — the partitioning key is the model, the plan is
-    unchanged.
+    with no shuffle. Memory is NOT per cluster: the whole table is the
+    staged query side, so every host maps N x dim float64 (plus the
+    inverted lists) — the same cap as ``embedding_neardup_pairs``,
+    whatever ``n_clusters`` is. Raising n_clusters cuts flops (~N^2/k),
+    not that footprint. The cluster assignment runs once for the staging
+    write and once per later scan of ``assigned``. The grouping is the
+    same one-task connected components the text dedup path uses (its
+    memory grows with the pair count).
     """
     from mysteryann_spark.operators.similarity import (
         nearest_centroids_udf,

@@ -174,16 +174,15 @@ def _check_match_col(fn: str, match_col: str | None, queries_df, base_df) -> Non
 
 def _dist_blocks(qids, qmat, bids, bmat, metric, exclude_self, qrows):
     """``(qids_c, dmat)`` distance blocks of the ``qrows`` query rows
-    (default: all) against one base block, the query axis chunked under
+    against one base block, the query axis chunked under
     ``dmat_chunk_rows``. An unchunked (n_staged_q x n_batch) float64
     matrix scales with the staged-query count: at 60k queries x ~5k-row
     batches that is ~2.3 GB per in-flight batch, and cores x workers of
     those OOM-killed the 300k scale rehearsal. With ``exclude_self`` a
     query's own id gets distance inf."""
-    n_q = len(qids) if qrows is None else len(qrows)
     q_chunk = dmat_chunk_rows(len(bids))
-    for s in range(0, n_q, q_chunk):
-        sel = slice(s, s + q_chunk) if qrows is None else qrows[s : s + q_chunk]
+    for s in range(0, len(qrows), q_chunk):
+        sel = qrows[s : s + q_chunk]
         qids_c = qids[sel]
         dmat = np_distances(metric, qmat[sel], bmat)
         if exclude_self:
@@ -199,12 +198,12 @@ def _block_topk(
     k: int,
     metric: str,
     exclude_self: bool,
-    qrows: np.ndarray | None = None,
+    qrows: np.ndarray,
 ) -> Iterator[pd.DataFrame]:
     """Local top-k of one base block: yields ``(qid, nn_id, dist)``
     frames holding each query's ``min(k, len(bids))`` nearest rows of
     ``bmat`` (unordered; ``rank_topk`` merges the blocks). ``qrows``
-    picks the query rows to score (default: all). With ``exclude_self``
+    picks the query rows to score (a ``_list_runs`` query run). With ``exclude_self``
     a query's own id gets distance inf — masked before the local top-k,
     or a block owning the query's own row would surrender a slot — so
     the caller drops it. Per-query top-k is row-independent, so the
@@ -232,7 +231,7 @@ def _block_range(
     radius: float,
     metric: str,
     exclude_self: bool,
-    qrows: np.ndarray | None = None,
+    qrows: np.ndarray,
 ) -> Iterator[pd.DataFrame]:
     """The range twin of ``_block_topk``: yields ``(qid, nn_id, dist)``
     frames of every (query, base row) pair of one base block with
