@@ -3,10 +3,12 @@
 {"metric": ..., "value": total_sec, "unit": "sec", "queries": {...}, "sf": ...}
 
 Each query runs $SPARK_GRAFT_BENCH_SHOTS times (default 3); "queries"
-reports the per-query MIN and "shots" the raw times. One-shot numbers on
-this box carry ~2x run-to-run jitter (BASELINE.md) — r7's driver total
-read as a 24% regression that an idle-box re-run disproved; min-of-N
-measures the plan, not the scheduler weather.
+reports the per-query MIN, "shots" the raw times and "codegen_compiles"
+the generated classes each shot compiled (0 once its plans are cached);
+"cpus" and "default_parallelism" give the session's shape. One-shot
+numbers on this box carry ~2x run-to-run jitter (BASELINE.md) — r7's
+driver total read as a 24% regression that an idle-box re-run disproved;
+min-of-N measures the plan, not the scheduler weather.
 """
 
 from __future__ import annotations
@@ -20,6 +22,26 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+# the registry queries timed one by one (perfbench's pipeline_sf0.1 runs
+# the same list)
+HEADLINE_QUERIES = (
+    "flagship_revenue_by_nation",
+    "pricing_summary",
+    "window_rank",
+    "brand_sales",
+    "knn_exact",
+    "bipartite_edges",
+    "dedup_minhash_lsh",
+    "dedup_exact",
+    "doc_quality",
+    "ann_ivf_topk",
+    "events_interval_join",
+    # round-4 surface: real image decode + feature extract at sf0.1
+    # (5k encoded PPM/BMP payloads), and the sharding-sink manifest
+    "multimodal_image_features",
+    "pipeline_shard_manifest",
+)
 
 
 def main() -> None:
@@ -37,15 +59,21 @@ def main() -> None:
     n_shots = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_SHOTS", "3")))
     timings: dict[str, float] = {}
     shots: dict[str, list[float]] = {}
+    compiles: dict[str, list[int]] = {}
+    jvm = spark.sparkContext._jvm
+    compile_count = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount
 
     def run(name: str, fn) -> None:
         ts: list[float] = []
+        cs: list[int] = []
         for _ in range(n_shots):
-            t0 = time.time()
+            c0, t0 = compile_count(), time.time()
             fn()
             ts.append(round(time.time() - t0, 3))
+            cs.append(compile_count() - c0)
         timings[name] = min(ts)
         shots[name] = ts
+        compiles[name] = cs
 
     # warm-up: JVM + parquet footer caches + Python/Arrow worker spawn
     # (reference warms 100 queries before timing,
@@ -81,7 +109,10 @@ def main() -> None:
     # JIT/codegen warm-up for the graph-build path: a tiny sf0.001 build
     # compiles the same generated code the timed sf0.1 build runs
     # (reference warm-up runs real searches before timing for the same
-    # reason); measured build wall-time spread shrinks severalfold.
+    # reason); measured build wall-time spread shrinks severalfold. The
+    # session's codegen cache (session._CODEGEN_CACHE_ENTRIES) keeps these
+    # classes until the timed build: at Spark's default of 100 entries the
+    # 13 queries below evicted most of them first.
     try:
         # substitute the sf component generically (sf0.1 / sf0.01 / ...)
         # so the tiny warm-up dir is right at any bench scale; skip the
@@ -97,23 +128,7 @@ def main() -> None:
     except Exception:
         pass  # warm-up only; never fail the bench
 
-    for qname in (
-        "flagship_revenue_by_nation",
-        "pricing_summary",
-        "window_rank",
-        "brand_sales",
-        "knn_exact",
-        "bipartite_edges",
-        "dedup_minhash_lsh",
-        "dedup_exact",
-        "doc_quality",
-        "ann_ivf_topk",
-        "events_interval_join",
-        # round-4 surface: real image decode + feature extract at sf0.1
-        # (5k encoded PPM/BMP payloads), and the sharding-sink manifest
-        "multimodal_image_features",
-        "pipeline_shard_manifest",
-    ):
+    for qname in HEADLINE_QUERIES:
         fn = registry[qname].fn
         run(qname, lambda fn=fn: fn(spark, SF_DIR).count())
 
@@ -166,6 +181,9 @@ def main() -> None:
                 "queries": timings,
                 "shots": shots,
                 "sf": sf,
+                "cpus": cpus,
+                "default_parallelism": spark.sparkContext.defaultParallelism,
+                "codegen_compiles": compiles,
             }
         )
     )
