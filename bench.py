@@ -106,13 +106,38 @@ def main() -> None:
         yield from batches
 
     _warm.mapInPandas(_warm_fn, _warm.schema).count()
-    # JIT/codegen warm-up for the graph-build path: a tiny sf0.001 build
-    # compiles the same generated code the timed sf0.1 build runs
-    # (reference warm-up runs real searches before timing for the same
-    # reason); measured build wall-time spread shrinks severalfold. The
-    # session's codegen cache (session._CODEGEN_CACHE_ENTRIES) keeps these
-    # classes until the timed build: at Spark's default of 100 entries the
-    # 13 queries below evicted most of them first.
+
+    # graph builds + full search: warmed here, timed after the queries
+    from mysteryann_spark.queries.graph import IVF_PHASE0_OPTS
+
+    params = IndexParams(M_sq=20, M_pjbp=8, L_pjpq=40, k=10, L_pq=40, metric="l2")
+    state: dict = {}
+
+    def build(table) -> None:
+        adj, ep = build_roargraph_from_table(spark, table, params)
+        state["adj"] = adj.localCheckpoint()
+        state["ep"] = ep
+        state["adj"].count()
+
+    def build_ivf(table) -> None:
+        # the sub-quadratic phase-0 variant (operators/knn_approx.py) —
+        # timed against the exact build above; at sf0.1 the IVF overhead
+        # (centroid train + assign) roughly breaks even, the win grows
+        # with N (see SCALE.md)
+        adj, _ = build_roargraph_from_table(
+            spark, table, params, phase0="ivf", phase0_opts=IVF_PHASE0_OPTS
+        )
+        adj.count()
+
+    # JIT/codegen warm-up for the graph-build path: both timed builds,
+    # with the timed params, on the cached sf0.001 table, so they compile
+    # the generated code the timed sf0.1 builds run (reference warm-up
+    # runs real searches before timing for the same reason). Other params
+    # or an uncached table plan differently and leave the first timed
+    # shot compiling. The session's codegen cache
+    # (session._CODEGEN_CACHE_ENTRIES) keeps these classes until the
+    # timed builds: at Spark's default of 100 entries the 13 queries
+    # below evicted most of them first.
     try:
         # substitute the sf component generically (sf0.1 / sf0.01 / ...)
         # so the tiny warm-up dir is right at any bench scale; skip the
@@ -120,11 +145,10 @@ def main() -> None:
         tiny_dir = re.sub(r"sf[0-9.]+", "sf0.001", SF_DIR)
         if tiny_dir == SF_DIR or not os.path.isdir(tiny_dir):
             raise FileNotFoundError(tiny_dir)
-        _wemb = load_table(spark, "embeddings", tiny_dir)
-        _wadj, _ = build_roargraph_from_table(
-            spark, _wemb, IndexParams(M_sq=8, M_pjbp=4, L_pjpq=12, k=5, L_pq=12, metric="l2")
-        )
-        _wadj.count()
+        _wemb = load_table(spark, "embeddings", tiny_dir).cache()
+        build(_wemb)
+        build_ivf(_wemb)
+        _wemb.unpersist()
     except Exception:
         pass  # warm-up only; never fail the bench
 
@@ -132,33 +156,10 @@ def main() -> None:
         fn = registry[qname].fn
         run(qname, lambda fn=fn: fn(spark, SF_DIR).count())
 
-    # graph build + full search, timed separately
     emb = load_table(spark, "embeddings", SF_DIR).cache()
     emb.count()
-    params = IndexParams(M_sq=20, M_pjbp=8, L_pjpq=40, k=10, L_pq=40, metric="l2")
-    state: dict = {}
-
-    def build() -> None:
-        adj, ep = build_roargraph_from_table(spark, emb, params)
-        state["adj"] = adj.localCheckpoint()
-        state["ep"] = ep
-        state["adj"].count()
-
-    run("roargraph_build", build)
-
-    def build_ivf() -> None:
-        # the sub-quadratic phase-0 variant (operators/knn_approx.py) —
-        # timed against the exact build above; at sf0.1 the IVF overhead
-        # (centroid train + assign) roughly breaks even, the win grows
-        # with N (see SCALE.md)
-        from mysteryann_spark.queries.graph import IVF_PHASE0_OPTS
-
-        adj, _ = build_roargraph_from_table(
-            spark, emb, params, phase0="ivf", phase0_opts=IVF_PHASE0_OPTS
-        )
-        adj.count()
-
-    run("roargraph_build_ivf", build_ivf)
+    run("roargraph_build", lambda: build(emb))
+    run("roargraph_build_ivf", lambda: build_ivf(emb))
 
     def search() -> None:
         from mysteryann_spark.session import spread

@@ -22,6 +22,7 @@ candidate set.
 
 from __future__ import annotations
 
+from functools import partial, reduce
 from typing import Iterator
 
 import numpy as np
@@ -42,6 +43,7 @@ from mysteryann_spark.sources.staging import (
     load_staged,
     stage_parquet,
     table_matrix,
+    table_ragged,
 )
 
 # Per-worker cap on the transient (query-chunk x arrow-batch) float64
@@ -124,8 +126,11 @@ def _list_runs(inv: tuple, bvals: np.ndarray) -> Iterator[tuple]:
 def _query_lists(files: list[str], query_id: str, vec_col: str, match_col: str | None):
     """Executor-side: the staged query block as ``(qids, qmat, uniq,
     bounds, rows)`` — id-sorted rows and their ``_inverted_lists`` by
-    ``match_col`` (one list of every row when it is None) — built once
-    per host, or None if the block holds no rows."""
+    ``match_col`` — built once per host, or None if the block holds no
+    rows. Without ``match_col`` every row sits on one list; with it the
+    staged column is an integer array (``_check_match_col``) and a row
+    sits on every list its array names, so an empty array scores
+    nothing and a one-entry array is a plain label."""
 
     def build():
         tbl = _read_files(files, [query_id, vec_col] + ([match_col] if match_col else []))
@@ -133,13 +138,13 @@ def _query_lists(files: list[str], query_id: str, vec_col: str, match_col: str |
             return None
         ids, mat = table_matrix(tbl, query_id, vec_col)
         if match_col is None:
-            vals = np.zeros(len(ids), dtype=np.int64)
-        else:
-            raw_ids = tbl[query_id].combine_chunks().to_numpy(zero_copy_only=False)
-            vals = tbl[match_col].combine_chunks().to_numpy(zero_copy_only=False)
-            # same order as table_matrix
-            vals = vals[np.argsort(raw_ids, kind="stable")].astype(np.int64)
-        return (ids, mat) + _inverted_lists(vals)
+            return (ids, mat) + _inverted_lists(np.zeros(len(ids), dtype=np.int64))
+        # same stable id-argsort as table_matrix, so row i of the ragged
+        # view is row i of qmat
+        _, indptr, flat = table_ragged(tbl, query_id, match_col)
+        uniq, bounds, pos = _inverted_lists(flat.astype(np.int64))
+        owner = np.repeat(np.arange(len(ids), dtype=np.int64), np.diff(indptr))
+        return ids, mat, uniq, bounds, owner[pos]
 
     return load_staged(f"knnq|{match_col}|" + "|".join(files), build)
 
@@ -154,22 +159,31 @@ def _base_batch(pdf: pd.DataFrame, base_id: str, vec_col: str, match_col: str | 
     return bids, bmat, pdf[match_col].to_numpy(dtype=np.int64)
 
 
-def _check_match_col(fn: str, match_col: str | None, queries_df, base_df) -> None:
+def _check_match_col(fn: str, match_col: str | None, queries_df, base_df) -> list:
     """Plan-time check that ``match_col`` is an integer column on both
-    sides: the kernels compare list values as int64, so a string or
-    float label would die mid-task with an opaque cast error."""
+    sides, or an integer array on ``queries_df``: the kernels compare
+    list values as int64, so a string or float label would die mid-task
+    with an opaque cast error. Returns the query side's staged list
+    column — ``match_col`` as an array of distinct values, one entry for
+    an integer — or no column without ``match_col``."""
     if match_col is None:
-        return
-    from pyspark.sql.types import ByteType, ShortType
+        return []
+    from pyspark.sql.types import ArrayType, ByteType, ShortType
 
-    for side, df in (("queries_df", queries_df), ("base_df", base_df)):
-        dt = df.schema[match_col].dataType
+    q_dt = queries_df.schema[match_col].dataType
+    is_array = isinstance(q_dt, ArrayType)
+    for side, dt in (
+        ("queries_df", q_dt.elementType if is_array else q_dt),
+        ("base_df", base_df.schema[match_col].dataType),
+    ):
         if not isinstance(dt, (ByteType, ShortType, IntegerType, LongType)):
             raise TypeError(
                 f"{fn} match_col {match_col!r} on {side} must be an integer "
-                f"type (got {dt.simpleString()}); cast labels to int/bigint "
-                "before the join"
+                f"type or, on queries_df, an integer array (got "
+                f"{dt.simpleString()}); cast labels to int/bigint before the join"
             )
+    col = F.col(match_col)
+    return [(F.array_distinct(col) if is_array else F.array(col)).alias(match_col)]
 
 
 def _dist_blocks(qids, qmat, bids, bmat, metric, exclude_self, qrows):
@@ -256,6 +270,40 @@ def rank_topk(cand: DataFrame, k: int) -> DataFrame:
     )
 
 
+def _list_scan(
+    files: list[str],
+    base_df: DataFrame,
+    kernel,
+    query_id: str,
+    base_id: str,
+    vec_col: str,
+    match_col: str | None,
+) -> DataFrame:
+    """The one list scan under knn_join, range_join and ivf_knn_join:
+    each worker loads the staged query block ``files`` as inverted lists
+    (``_query_lists``), and every base Arrow batch's run of one list
+    value (``_base_batch``, ``_list_runs``) scores only against the
+    queries on that list through ``kernel(qids, qmat, bids, bmat,
+    qrows=...)``, a pair kernel (``_block_topk``, ``_block_range``)
+    with its other arguments bound. Returns the kernel's ``(qid, nn_id,
+    dist)`` rows, unmerged."""
+    m_cols = [match_col] if match_col else []
+
+    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        loaded = _query_lists(files, query_id, vec_col, match_col)
+        if loaded is None:
+            return
+        qids, qmat, *inv = loaded
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            bids, bmat, bvals = _base_batch(pdf, base_id, vec_col, match_col)
+            for br, qr in _list_runs(inv, bvals):
+                yield from kernel(qids, qmat, bids[br], bmat[br], qrows=qr)
+
+    return base_df.select(base_id, vec_col, *m_cols).mapInPandas(scan, _CAND_SCHEMA)
+
+
 def knn_join(
     queries_df: DataFrame,
     base_df: DataFrame,
@@ -291,15 +339,18 @@ def knn_join(
     ``match_col`` (optional) makes the join FILTERED: both sides must
     carry the column, and a base row only competes for a query's top-k
     when the values match (the Big-ANN filtered-track semantics — e.g.
-    same-label retrieval). The staged queries are grouped into one
-    inverted list per value and each base batch's same-value rows score
-    only against that list (``_list_runs``), so non-matching pairs are
-    never computed and selectivity never costs a second scan.
+    same-label retrieval). On the query side it may be an integer array
+    instead: a query then matches base rows holding ANY of its values
+    (each value counted once; an empty array matches nothing), which is
+    how ivf_knn_join probes its ``n_probe`` lists. The staged queries
+    are grouped into one inverted list per value and each base batch's
+    same-value rows score only against that list (``_list_scan``), so
+    non-matching pairs are never computed and selectivity never costs a
+    second scan.
     """
     spark = base_df.sparkSession
-    _check_match_col("knn_join", match_col, queries_df, base_df)
-    m_cols = [match_col] if match_col else []
-    q_sel = queries_df.select(query_id, vec_col, *m_cols)
+    q_lists = _check_match_col("knn_join", match_col, queries_df, base_df)
+    q_sel = queries_df.select(query_id, vec_col, *q_lists)
     if query_block_rows is None:
         q_path = stage_parquet(q_sel, storage_dir)
     else:
@@ -312,27 +363,11 @@ def knn_join(
     if not files:
         return spark.createDataFrame([], _RANKED_SCHEMA)
     blocks = [files] if query_block_rows is None else [[f] for f in files]
-
-    def block_candidates(block_files: list[str]) -> DataFrame:
-        def local_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            loaded = _query_lists(block_files, query_id, vec_col, match_col)
-            if loaded is None:
-                return
-            qids, qmat, *inv = loaded
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                bids, bmat, bvals = _base_batch(pdf, base_id, vec_col, match_col)
-                for br, qr in _list_runs(inv, bvals):
-                    yield from _block_topk(
-                        qids, qmat, bids[br], bmat[br], k, metric, exclude_self, qrows=qr
-                    )
-
-        return base_df.select(base_id, vec_col, *m_cols).mapInPandas(local_topk, _CAND_SCHEMA)
-
-    candidates = block_candidates(blocks[0])
-    for blk in blocks[1:]:
-        candidates = candidates.unionByName(block_candidates(blk))
+    kernel = partial(_block_topk, k=k, metric=metric, exclude_self=exclude_self)
+    candidates = reduce(
+        DataFrame.unionByName,
+        [_list_scan(b, base_df, kernel, query_id, base_id, vec_col, match_col) for b in blocks],
+    )
     if exclude_self:
         candidates = candidates.where(F.col("dist") != float("inf"))
     return rank_topk(candidates, k)
@@ -420,33 +455,17 @@ def range_join(
 
     Same scale shape as knn_join: the query side is staged once
     (executor-side Parquet, no driver round-trip), the base side streams
-    through ``_block_range`` per Arrow batch, every distance block under
-    ``dmat_chunk_rows`` — and, unlike top-k, no global merge is needed
-    at all: the radius predicate is decided locally per batch, so there
-    is ZERO shuffle and output size is the only cost. ``match_col``
-    restricts pairs to equal values, as in knn_join. Returns
-    (qid, nn_id, dist).
+    through the same list scan with ``_block_range`` as its kernel,
+    every distance block under ``dmat_chunk_rows`` — and, unlike top-k,
+    no global merge is needed at all: the radius predicate is decided
+    locally per batch, so there is ZERO shuffle and output size is the
+    only cost. ``match_col`` restricts pairs to equal values (any value
+    of a query's array), as in knn_join. Returns (qid, nn_id, dist).
     """
     spark = base_df.sparkSession
-    _check_match_col("range_join", match_col, queries_df, base_df)
-    m_cols = [match_col] if match_col else []
-    files = list_staged_files(stage_parquet(queries_df.select(query_id, vec_col, *m_cols)))
+    q_lists = _check_match_col("range_join", match_col, queries_df, base_df)
+    files = list_staged_files(stage_parquet(queries_df.select(query_id, vec_col, *q_lists)))
     if not files:
         return spark.createDataFrame([], _CAND_SCHEMA)
-    r = float(radius)
-
-    def in_range(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        loaded = _query_lists(files, query_id, vec_col, match_col)
-        if loaded is None:
-            return
-        qids, qmat, *inv = loaded
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            bids, bmat, bvals = _base_batch(pdf, base_id, vec_col, match_col)
-            for br, qr in _list_runs(inv, bvals):
-                yield from _block_range(
-                    qids, qmat, bids[br], bmat[br], r, metric, exclude_self, qrows=qr
-                )
-
-    return base_df.select(base_id, vec_col, *m_cols).mapInPandas(in_range, _CAND_SCHEMA)
+    kernel = partial(_block_range, radius=float(radius), metric=metric, exclude_self=exclude_self)
+    return _list_scan(files, base_df, kernel, query_id, base_id, vec_col, match_col)

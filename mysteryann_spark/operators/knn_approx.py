@@ -18,19 +18,16 @@ Shape (designed for the 100 TB regime):
   IVF training protocol) — the model is kilobytes, broadcast once.
 - base side: one shuffle on centroid id (the same partitioning the
   persisted IVF index uses — at scale this shuffle IS the index build and
-  is amortized by persisting it), then streamed through ``mapInPandas``.
-- query side: staged once to Parquet (sources/staging.py — no driver
-  round-trip) and loaded per worker; each worker computes every query's
-  ``n_probe`` nearest centroids locally from the broadcast model (one
-  (n_q x n_centroids) GEMM, cached with the staged matrix).
-- kernel: per Arrow batch of base rows, group by centroid id and GEMM
-  each centroid's rows against ONLY the queries probing that centroid —
-  total work = sum over lists (probers x list length), i.e.
-  ~(n_probe / n_centroids) of the exact join's flops. The list runs are
-  the ones knn_join's match_col filter walks (``knn._inverted_lists`` /
-  ``knn._list_runs``); here a query sits on n_probe lists, not one.
-- global merge: the same per-list local top-k kernel and (qid)-window
-  merge (``knn._block_topk`` / ``knn.rank_topk``) as the exact join.
+  is amortized by persisting it), then streamed through the list scan.
+- query side: a distributed pandas UDF computes every query's
+  ``n_probe`` nearest centroids from the broadcast model as an integer
+  array column ``cid``.
+- scan and merge: ``knn.knn_join`` with ``match_col="cid"`` — the exact
+  join's staging, list scan (``knn._list_scan``), self filter and
+  (qid)-window merge, unchanged. A query sits on every list its probe
+  array names, so each centroid's base rows GEMM against ONLY the
+  queries probing that centroid: total work = sum over lists (probers x
+  list length), i.e. ~(n_probe / n_centroids) of the exact join's flops.
 
 Routing: base rows are assigned to their L2-nearest centroid in routing
 space (raw vectors; L2-normalized first for metric=cosine — spherical
@@ -46,34 +43,19 @@ tests/test_graph.py.
 from __future__ import annotations
 
 import math
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, IntegerType, LongType
+from pyspark.sql.types import ArrayType, IntegerType
 
 from mysteryann_spark.functions.vector import np_distances, np_normalize
-from mysteryann_spark.operators.knn import (
-    _CAND_SCHEMA,
-    _RANKED_SCHEMA,
-    _block_topk,
-    _inverted_lists,
-    _list_runs,
-    _read_files,
-    rank_topk,
-)
+from mysteryann_spark.operators.knn import _RANKED_SCHEMA, flat_to_arrays, knn_join
 from mysteryann_spark.operators.similarity import (
     centroid_scorer,
     count_and_dim,
     train_coarse,
-)
-from mysteryann_spark.sources.staging import (
-    list_staged_files,
-    load_staged,
-    stage_parquet,
-    table_matrix,
 )
 
 
@@ -173,41 +155,6 @@ def ivf_knn_join(
         p = np.argpartition(d, npr - 1, axis=1)[:, :npr].astype(np.int32)
         return pd.Series(list(p))
 
-    q_path = stage_parquet(
-        queries_df.select(
-            F.col(query_id),
-            F.col(vec_col),
-            probe_cids(F.col(vec_col)).alias("probes"),
-        ),
-        storage_dir,
-    )
-    files = list_staged_files(q_path)
-    if not files:
-        return spark.createDataFrame([], _RANKED_SCHEMA)
-
-    def _query_side():
-        """(qids, qmat, uniq_cids, bounds, rows): the staged queries and
-        their inverted probe lists (``_inverted_lists`` over every
-        (query, probe) entry, mapped back to query rows) — a pure
-        tuple-of-ndarrays artifact, built once per host and mapped by
-        every worker (sources/staging.py), which matters here: qmat
-        alone is ~2.6 GB at the 10^7 full-training scale. With the
-        probe GEMM done distributed at staging time, this build is read
-        + two sorts — cheap enough that the one worker per host that
-        pays it no longer serializes the stage."""
-        from mysteryann_spark.sources.staging import table_ragged
-
-        tbl = _read_files(files, [query_id, vec_col, "probes"])
-        if tbl.num_rows == 0:
-            return None
-        qids, qmat = table_matrix(tbl, query_id, vec_col)
-        # same stable id-argsort as table_matrix, so row i of the ragged
-        # view is row i of qmat
-        _, indptr, flat_cids = table_ragged(tbl, query_id, "probes")
-        uniq, bounds, pos = _inverted_lists(flat_cids.astype(np.int64))
-        flat_rows = np.repeat(np.arange(len(qids), dtype=np.int64), np.diff(indptr))
-        return qids, qmat, uniq, bounds, flat_rows[pos]
-
     # base side: assign each row to its L2-nearest centroid in routing
     # space, then ONE shuffle on cid so each Arrow batch holds long
     # contiguous runs of the same inverted list (big GEMMs, not
@@ -219,35 +166,15 @@ def ivf_knn_join(
         return pd.Series(score(m, 1)[:, 0])
 
     assigned = (
-        base_df.select(
-            F.col(base_id).cast(LongType()).alias("bid"),
-            F.col(vec_col).alias("bvec"),
-            assign_cid(F.col(vec_col)).alias("cid"),
-        )
+        base_df.select(base_id, vec_col, assign_cid(F.col(vec_col)).alias("cid"))
         .repartition("cid")
         .sortWithinPartitions("cid")
     )
-
-    def probe_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        loaded = load_staged("ivfknnq|" + "|".join(files), _query_side)
-        if loaded is None:
-            return
-        qids, qmat, *inv = loaded
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            bids = pdf["bid"].to_numpy(dtype=np.int64)
-            bmat = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["bvec"]])
-            # cid-sorted within partitions: every run is a slice
-            for br, qr in _list_runs(inv, pdf["cid"].to_numpy(dtype=np.int64)):
-                yield from _block_topk(
-                    qids, qmat, bids[br], bmat[br], k, metric, exclude_self, qrows=qr
-                )
-
-    candidates = assigned.mapInPandas(probe_topk, _CAND_SCHEMA)
-    if exclude_self:
-        candidates = candidates.where(F.col("dist") != float("inf"))
-    return rank_topk(candidates, k)
+    probed = queries_df.select(query_id, vec_col, probe_cids(F.col(vec_col)).alias("cid"))
+    return knn_join(
+        probed, assigned, k, metric, query_id=query_id, base_id=base_id, vec_col=vec_col,
+        exclude_self=exclude_self, storage_dir=storage_dir, match_col="cid",
+    )
 
 
 def ivf_knn_join_arrays(
@@ -256,6 +183,4 @@ def ivf_knn_join_arrays(
     """IVF-routed approximate kNN in the reference's per-query list shape
     (LoadLearnBaseKNN) — the drop-in sub-quadratic feed for the graph
     build's phase 1."""
-    from mysteryann_spark.operators.knn import flat_to_arrays
-
     return flat_to_arrays(ivf_knn_join(queries_df, base_df, k, metric, **kwargs))

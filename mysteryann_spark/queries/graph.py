@@ -414,27 +414,28 @@ def roargraph_stream_insert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming index maintenance under the driver's eye: build on the
     first 90% of the base, then drain the held-out 10% as a THREE-micro-
     batch Structured Streaming feed through foreachBatch incremental
-    insertion (streaming/maintain.py), returning per-node degrees of the
-    final graph. The reference has no insert path (build-once,
-    src/index_bipartite.cpp) — this is the index-freshness loop a live
-    corpus needs. Rows-only; streamed-vs-bulk parity, degree-cap, and
+    insertion (streaming/maintain.py stream_maintain_roargraph, over a
+    change feed whose rows all say ``insert``; batch ``vec_id % 3``),
+    returning per-node degrees of the final graph. The reference has no
+    insert path (build-once, src/index_bipartite.cpp) — this is the
+    index-freshness loop a live corpus needs. Rows-only; streamed-vs-bulk parity, degree-cap, and
     recall gates live in tests/test_streaming.py."""
     from mysteryann_spark.operators.projection import build_roargraph_from_table
     from mysteryann_spark.streaming.maintain import (
-        stage_vector_stream,
-        stream_insert_roargraph,
+        stage_op_stream,
+        stream_maintain_roargraph,
     )
 
     emb = load_table(spark, "embeddings", sf_dir)
     cut = int(emb.count() * 0.9)
     old = emb.where(F.col("vec_id") < cut)
-    new = emb.where(F.col("vec_id") >= cut)
+    ops = emb.where(F.col("vec_id") >= cut).select(
+        (F.col("vec_id") % 3).alias("batch"), F.lit("insert").alias("op"), "vec_id", "embedding"
+    )
     adj, ep = build_roargraph_from_table(spark, old, PARAMS)
     scratch = scratch_dir(f"roargraph_stream_{spark.sparkContext.applicationId}_")
-    stream = stage_vector_stream(
-        spark, new, os.path.join(scratch, "feed"), n_batches=3
-    )
-    _, merged, _, _ = stream_insert_roargraph(
+    stream = stage_op_stream(spark, ops, os.path.join(scratch, "feed"))
+    _, merged, _, _ = stream_maintain_roargraph(
         spark, old.select("vec_id", "embedding"), adj.localCheckpoint(), ep,
         stream, PARAMS, os.path.join(scratch, "ckpt"),
     )

@@ -472,9 +472,11 @@ class StagedBase:
         chain — reclaims the delete-churn overhang (tombstoned ids keep
         rows in the chain form) and bounds the per-path parquet open cost
         of cold worker rebuilds. Call when `len(paths)` or measured
-        overhang crosses a budget (the maintenance loops compact at the
-        same chain length as their adjacency chain,
-        streaming.maintain._ADJ_COMPACT_EVERY)."""
+        overhang crosses a budget (the maintenance loop compacts at the
+        same chain length as its adjacency chain,
+        streaming.maintain._ADJ_COMPACT_EVERY). ``live_df`` must already
+        hold every vector the graph references, the batch just inserted
+        included: the chain it replaces is dropped."""
         self.paths = [stage_parquet(live_df, storage_dir)]
         return self
 

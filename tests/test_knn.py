@@ -169,7 +169,59 @@ def test_match_col_must_be_integer(spark, emb):
 
     e = emb.select("vec_id", "embedding", F.col("vec_id").cast("string").alias("label"))
     q = e.where("vec_id < 5").withColumnRenamed("vec_id", "qid")
-    with pytest.raises(TypeError, match="must be an integer type"):
-        knn_join(q, e, 3, match_col="label")
-    with pytest.raises(TypeError, match="must be an integer type"):
-        range_join(q, e, 1.0, match_col="label")
+    q_arr = q.withColumn("label", F.array("label"))  # array<string>
+    for queries in (q, q_arr):
+        with pytest.raises(TypeError, match="must be an integer type"):
+            knn_join(queries, e, 3, match_col="label")
+        with pytest.raises(TypeError, match="must be an integer type"):
+            range_join(queries, e, 1.0, match_col="label")
+
+
+def test_array_match_col_matches_masked_bruteforce(spark, emb):
+    """An integer-array ``match_col`` on the query side: a query competes
+    for every base row holding ANY of its labels, in knn_join and
+    range_join alike, checked against a masked numpy brute force. A
+    repeated label counts once (no duplicate neighbor or pair), an
+    empty array gets no rows back, and a label only the query holds
+    adds nothing."""
+    from mysteryann_spark.operators.knn import range_join
+
+    ids, mat = _matrix(emb)
+    base = emb.select("vec_id", "embedding", (F.col("vec_id") % 5).cast("int").alias("lab"))
+    blabs = ids % 5
+    qlabs = {0: [], 1: [1, 1], 2: [0, 2], 3: [3], 4: [4, 7], 5: [2, 2, 0, 9]}
+    qlabs.update({i: [i % 5] for i in range(6, 12)})
+    q = spark.createDataFrame(
+        [(int(ids[i]), [float(x) for x in mat[i]], qlabs[i]) for i in qlabs],
+        "qid bigint, embedding array<float>, lab array<int>",
+    )
+    D = np_distances("l2", mat[: len(qlabs)], mat)
+    D[np.arange(len(qlabs)), np.arange(len(qlabs))] = np.inf  # exclude_self
+    allowed = np.stack([np.isin(blabs, qlabs[i]) for i in range(len(qlabs))])
+    Dm = np.where(allowed, D, np.inf)
+    radius = float(np.quantile(D[np.isfinite(D)], 0.02))
+
+    got = {}
+    for r in knn_join(q, base, 5, "l2", exclude_self=True, match_col="lab").collect():
+        got.setdefault(r["qid"], []).append((r["rank"], r["nn_id"], r["dist"]))
+    assert int(ids[0]) not in got
+    for qi in range(1, len(qlabs)):
+        order = sorted(np.flatnonzero(np.isfinite(Dm[qi])), key=lambda j: (Dm[qi, j], ids[j]))[:5]
+        rows = sorted(got[int(ids[qi])])
+        assert [nn for _, nn, _ in rows] == [int(ids[j]) for j in order], qi
+        for (_, _, dist), j in zip(rows, order):
+            assert abs(dist - Dm[qi, j]) < 1e-9
+
+    pairs = [
+        (r["qid"], r["nn_id"], r["dist"])
+        for r in range_join(
+            q, base, radius, "l2", exclude_self=True, match_col="lab"
+        ).collect()
+    ]
+    want = {(int(ids[qi]), int(ids[j])): Dm[qi, j] for qi, j in zip(*np.nonzero(Dm <= radius))}
+    assert len(pairs) == len(set((a, b) for a, b, _ in pairs))
+    assert {(a, b) for a, b, _ in pairs} == set(want)
+    # the repeated-label queries are exercised
+    assert {a for a, _ in want} >= {int(ids[1]), int(ids[5])}
+    for a, b, dist in pairs:
+        assert abs(dist - want[(a, b)]) < 1e-9

@@ -164,6 +164,44 @@ def test_normalize_event_ts_handles_both_encodings(spark, tmp_path):
     assert va == vb
 
 
+def _insert_feed(emb):
+    """``(old, ops)``: the first 90% of ``emb`` and an insert-only change
+    feed of the rest in three batches, ``vec_id % 3`` (the feed of the
+    ``roargraph_stream_insert`` registry entry)."""
+    from pyspark.sql import functions as F
+
+    cut = int(emb.count() * 0.9)
+    ops = emb.where(F.col("vec_id") >= cut).select(
+        (F.col("vec_id") % 3).alias("batch"), F.lit("insert").alias("op"), "vec_id", "embedding"
+    )
+    return emb.where(F.col("vec_id") < cut), ops
+
+
+def _churn_feed(spark, emb):
+    """``(old, ops, cut, v_new, del_ids)``: ``emb`` minus its last 50
+    rows, and a three-batch change feed over it. Batch 0 inserts 20 of
+    the held-out rows; batch 1 deletes ``del_ids`` and inserts 15 more;
+    batch 2 UPDATES id ``cut`` (delete + reinsert as ``v_new``) and
+    inserts the last 14."""
+    from pyspark.sql import functions as F
+
+    n = emb.count()
+    cut = n - 50
+    old = emb.where(F.col("vec_id") < cut)
+    vec = {r["vec_id"]: r["embedding"] for r in emb.where(F.col("vec_id") >= cut).collect()}
+    v_new = [float(x) + 0.5 for x in vec[cut]]
+    del_ids = [5, 15, 25, 35, 45, 55, 65, 75, 85, 95]
+    rows = [(0, "insert", int(i), vec[i]) for i in range(cut, cut + 20)]
+    rows += [(1, "delete", int(i), None) for i in del_ids]
+    rows += [(1, "insert", int(i), vec[i]) for i in range(cut + 20, cut + 35)]
+    rows += [(2, "delete", int(cut), None), (2, "insert", int(cut), v_new)]
+    rows += [(2, "insert", int(i), vec[i]) for i in range(cut + 35, n)]
+    ops = spark.createDataFrame(
+        rows, "batch int, op string, vec_id bigint, embedding array<float>"
+    )
+    return old, ops, cut, v_new, del_ids
+
+
 def test_stream_insert_roargraph_parity(spark, emb, tmp_path):
     """Streaming incremental maintenance (3 micro-batches through
     foreachBatch) must cover every node, hold the degree cap, make the
@@ -177,23 +215,19 @@ def test_stream_insert_roargraph_parity(spark, emb, tmp_path):
     from mysteryann_spark.operators.search import search_graph
     from mysteryann_spark.params import IndexParams
     from mysteryann_spark.streaming.maintain import (
-        stage_vector_stream,
-        stream_insert_roargraph,
+        stage_op_stream,
+        stream_maintain_roargraph,
     )
 
     params = IndexParams(M_sq=20, M_pjbp=8, L_pjpq=40, k=10, L_pq=40, metric="l2")
     n = emb.count()
-    cut = int(n * 0.9)
-    old = emb.where(F.col("vec_id") < cut)
-    new = emb.where(F.col("vec_id") >= cut)
+    old, ops = _insert_feed(emb)
     adj, ep = build_roargraph_from_table(spark, old, params)
     adj = adj.localCheckpoint()
 
     def run(tag):
-        stream = stage_vector_stream(
-            spark, new, str(tmp_path / f"feed_{tag}"), n_batches=3
-        )
-        _, merged, _, n_batches = stream_insert_roargraph(
+        stream = stage_op_stream(spark, ops, str(tmp_path / f"feed_{tag}"))
+        _, merged, _, n_batches = stream_maintain_roargraph(
             spark, old.select("vec_id", "embedding"), adj, ep,
             stream, params, str(tmp_path / f"ckpt_{tag}"),
         )
@@ -325,27 +359,9 @@ def test_stream_maintain_churn_parity(spark, emb, tmp_path):
         M_sq=20, M_pjbp=8, L_pjpq=40, k=10, L_pq=40, metric="l2"
     )
     n = emb.count()
-    cut = n - 50
-    old = emb.where(F.col("vec_id") < cut)
-    hold = emb.where(F.col("vec_id") >= cut)
+    old, ops, cut, v450_new, del_ids = _churn_feed(spark, emb)
     adj, ep = build_roargraph_from_table(spark, old, params)
     adj = adj.localCheckpoint()
-
-    vec = {r["vec_id"]: r["embedding"] for r in hold.collect()}
-    v450 = vec[cut]
-    v450_new = [float(x) + 0.5 for x in v450]
-    del_ids = [5, 15, 25, 35, 45, 55, 65, 75, 85, 95]
-
-    # batch 0: 20 inserts; batch 1: 10 deletes + 15 inserts;
-    # batch 2: UPDATE of id `cut` (delete + reinsert re-embedded) + 14 inserts
-    rows = [(0, "insert", int(i), vec[i]) for i in range(cut, cut + 20)]
-    rows += [(1, "delete", int(i), None) for i in del_ids]
-    rows += [(1, "insert", int(i), vec[i]) for i in range(cut + 20, cut + 35)]
-    rows += [(2, "delete", int(cut), None), (2, "insert", int(cut), v450_new)]
-    rows += [(2, "insert", int(i), vec[i]) for i in range(cut + 35, n)]
-    ops = spark.createDataFrame(
-        rows, "batch int, op string, vec_id bigint, embedding array<float>"
-    )
 
     stream = stage_op_stream(spark, ops, str(tmp_path / "feed"))
     base_s, adj_s, ep_s, n_batches = stream_maintain_roargraph(
@@ -413,30 +429,24 @@ def test_stream_insert_chain_compaction_is_transparent(spark, emb, tmp_path, mon
     _ADJ_COMPACT_EVERY re-stages the merged state whole and resets
     both chains) must be invisible in the result: forcing compaction on
     every batch yields exactly the adjacency the default long-chain run
-    produces."""
+    produces, for an insert-only feed and for the churn feed of
+    test_stream_maintain_churn_parity. A compaction after an insert
+    re-stages the vector chain from the base, so the base must already
+    hold that insert's vectors; otherwise the next batch's prune pool
+    references ids absent from the base."""
     from pyspark.sql import functions as F
 
     from mysteryann_spark.operators.projection import build_roargraph_from_table
-    from mysteryann_spark.params import IndexParams
+    from mysteryann_spark.queries.graph import PARAMS as params
     from mysteryann_spark.streaming import maintain
     from mysteryann_spark.streaming.maintain import (
-        stage_vector_stream,
-        stream_insert_roargraph,
+        stage_op_stream,
+        stream_maintain_roargraph,
     )
 
-    params = IndexParams(M_sq=20, M_pjbp=8, L_pjpq=40, k=10, L_pq=40, metric="l2")
-    n = emb.count()
-    cut = int(n * 0.9)
-    old = emb.where(F.col("vec_id") < cut)
-    new = emb.where(F.col("vec_id") >= cut)
-    adj, ep = build_roargraph_from_table(spark, old, params)
-    adj = adj.localCheckpoint()
-
-    def run(tag):
-        stream = stage_vector_stream(
-            spark, new, str(tmp_path / f"cfeed_{tag}"), n_batches=3
-        )
-        _, merged, _, nb = stream_insert_roargraph(
+    def run(tag, old, ops, adj, ep):
+        stream = stage_op_stream(spark, ops, str(tmp_path / f"cfeed_{tag}"))
+        _, merged, _, nb = stream_maintain_roargraph(
             spark, old.select("vec_id", "embedding"), adj, ep,
             stream, params, str(tmp_path / f"cckpt_{tag}"),
         )
@@ -448,8 +458,16 @@ def test_stream_insert_chain_compaction_is_transparent(spark, emb, tmp_path, mon
             ).collect()
         }
 
-    monkeypatch.setattr(maintain, "_ADJ_COMPACT_EVERY", 1)  # compact every batch
-    compacted = run("every")
-    monkeypatch.setattr(maintain, "_ADJ_COMPACT_EVERY", 64)  # never (3 batches)
-    chained = run("never")
-    assert compacted == chained and len(chained) == n
+    n = emb.count()
+    churn_old, churn_ops, _, _, del_ids = _churn_feed(spark, emb)
+    for feed, (old, ops), n_nodes in (
+        ("insert", _insert_feed(emb), n),
+        ("churn", (churn_old, churn_ops), n - len(del_ids)),
+    ):
+        adj, ep = build_roargraph_from_table(spark, old, params)
+        adj = adj.localCheckpoint()
+        monkeypatch.setattr(maintain, "_ADJ_COMPACT_EVERY", 1)  # compact every batch
+        compacted = run(f"{feed}_every", old, ops, adj, ep)
+        monkeypatch.setattr(maintain, "_ADJ_COMPACT_EVERY", 64)  # never (3 batches)
+        chained = run(f"{feed}_never", old, ops, adj, ep)
+        assert compacted == chained and len(chained) == n_nodes, feed
