@@ -108,10 +108,13 @@ def _inverted_lists(vals: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarra
 def _list_runs(inv: tuple, bvals: np.ndarray) -> Iterator[tuple]:
     """``(base rows, query rows)`` for each list value present on both
     sides: ``inv`` is the query side's ``_inverted_lists``, ``bvals`` the
-    base batch's per-row values. Base rows come as a slice when
-    ``bvals`` is already sorted (an IVF batch sorted by cid, or a single
-    list), so those runs score a view of the batch, not a copy."""
+    base batch's list values. Base rows come as a slice when ``bvals``
+    is already sorted (an IVF batch sorted by cid, a single list, or an
+    array batch's flattened keys), so those runs score a view of the
+    batch, not a copy."""
     uniq, bounds, rows = inv
+    if not len(bvals):
+        return  # an array batch whose rows name no list
     order = None if np.all(bvals[1:] >= bvals[:-1]) else np.argsort(bvals, kind="stable")
     sv = bvals if order is None else bvals[order]
     starts = np.flatnonzero(np.r_[True, sv[1:] != sv[:-1]])
@@ -150,40 +153,53 @@ def _query_lists(files: list[str], query_id: str, vec_col: str, match_col: str |
 
 
 def _base_batch(pdf: pd.DataFrame, base_id: str, vec_col: str, match_col: str | None):
-    """A base Arrow batch as ``(bids, bmat, bvals)``, ``bvals`` its
-    ``match_col`` values (all zero, one list, when it is None)."""
+    """A base Arrow batch as ``(bids, bmat, bvals, owner)``. ``bvals``
+    are its ``match_col`` values, one per row (all zero, one list, when
+    it is None), and ``owner`` is None. With an integer-array
+    ``match_col`` a row sits on every list its array names: ``bvals``
+    holds the batch's distinct (row, value) pairs sorted by value and
+    ``owner[i]`` the row of pair ``i``."""
     bids = pdf[base_id].to_numpy(dtype=np.int64)
     bmat = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
     if match_col is None:
-        return bids, bmat, np.zeros(len(bids), dtype=np.int64)
-    return bids, bmat, pdf[match_col].to_numpy(dtype=np.int64)
+        return bids, bmat, np.zeros(len(bids), dtype=np.int64), None
+    col = pdf[match_col]
+    if col.dtype != object:
+        return bids, bmat, col.to_numpy(dtype=np.int64), None
+    arrs = [np.asarray(v, dtype=np.int64) for v in col]
+    flat = np.concatenate(arrs)
+    owner = np.repeat(np.arange(len(bids), dtype=np.int64), [len(a) for a in arrs])
+    order = np.lexsort((owner, flat))
+    flat, owner = flat[order], owner[order]
+    keep = np.ones(len(flat), dtype=bool)
+    keep[1:] = (flat[1:] != flat[:-1]) | (owner[1:] != owner[:-1])
+    return bids, bmat, flat[keep], owner[keep]
 
 
 def _check_match_col(fn: str, match_col: str | None, queries_df, base_df) -> list:
-    """Plan-time check that ``match_col`` is an integer column on both
-    sides, or an integer array on ``queries_df``: the kernels compare
-    list values as int64, so a string or float label would die mid-task
-    with an opaque cast error. Returns the query side's staged list
-    column — ``match_col`` as an array of distinct values, one entry for
-    an integer — or no column without ``match_col``."""
+    """Plan-time check that ``match_col`` is an integer column or an
+    integer array on each side: the kernels compare list values as
+    int64, so a string or float label would die mid-task with an opaque
+    cast error. Returns the query side's staged list column —
+    ``match_col`` as an array of distinct values, one entry for an
+    integer — or no column without ``match_col``."""
     if match_col is None:
         return []
     from pyspark.sql.types import ArrayType, ByteType, ShortType
 
     q_dt = queries_df.schema[match_col].dataType
-    is_array = isinstance(q_dt, ArrayType)
-    for side, dt in (
-        ("queries_df", q_dt.elementType if is_array else q_dt),
-        ("base_df", base_df.schema[match_col].dataType),
-    ):
+    for side, dt in (("queries_df", q_dt), ("base_df", base_df.schema[match_col].dataType)):
+        if isinstance(dt, ArrayType):
+            dt = dt.elementType
         if not isinstance(dt, (ByteType, ShortType, IntegerType, LongType)):
             raise TypeError(
                 f"{fn} match_col {match_col!r} on {side} must be an integer "
-                f"type or, on queries_df, an integer array (got "
-                f"{dt.simpleString()}); cast labels to int/bigint before the join"
+                f"type or an integer array (got {dt.simpleString()}); cast "
+                f"labels to int/bigint before the join"
             )
     col = F.col(match_col)
-    return [(F.array_distinct(col) if is_array else F.array(col)).alias(match_col)]
+    lists = F.array_distinct(col) if isinstance(q_dt, ArrayType) else F.array(col)
+    return [lists.alias(match_col)]
 
 
 def _dist_blocks(qids, qmat, bids, bmat, metric, exclude_self, qrows):
@@ -216,25 +232,32 @@ def _block_topk(
 ) -> Iterator[pd.DataFrame]:
     """Local top-k of one base block: yields ``(qid, nn_id, dist)``
     frames holding each query's ``min(k, len(bids))`` nearest rows of
-    ``bmat`` (unordered; ``rank_topk`` merges the blocks). ``qrows``
-    picks the query rows to score (a ``_list_runs`` query run). With ``exclude_self``
-    a query's own id gets distance inf — masked before the local top-k,
-    or a block owning the query's own row would surrender a slot — so
-    the caller drops it. Per-query top-k is row-independent, so the
-    query-axis chunking (``_dist_blocks``) changes distances only by
-    GEMM rounding (see _DMAT_BUDGET_BYTES)."""
+    ``bmat``, plus every further row tied with the last of them, so
+    ``rank_topk``'s (dist, nn_id) order decides among ties (unordered;
+    ``rank_topk`` merges the blocks). ``qrows`` picks the query rows to
+    score (a ``_list_runs`` query run). With ``exclude_self`` a query's
+    own id gets distance inf — masked before the local top-k, or a block
+    owning the query's own row would surrender a slot — so the caller
+    drops it. Per-query top-k is row-independent, so the query-axis
+    chunking (``_dist_blocks``) changes distances only by GEMM rounding
+    (see _DMAT_BUDGET_BYTES)."""
     for qids_c, dmat in _dist_blocks(qids, qmat, bids, bmat, metric, exclude_self, qrows):
-        m = min(k, dmat.shape[1])
-        # local top-m per query: argpartition, exact sort in rank_topk
-        part = np.argpartition(dmat, m - 1, axis=1)[:, :m]
-        rows_q = np.repeat(np.arange(dmat.shape[0]), m)
-        yield pd.DataFrame(
-            {
-                "qid": qids_c[rows_q],
-                "nn_id": bids[part.ravel()],
-                "dist": dmat[rows_q, part.ravel()],
-            }
-        )
+        n = dmat.shape[1]
+        m = min(k, n)
+        # argpartition at m, not m - 1: the (m+1)-th distance shows
+        # whether a tie crosses the k boundary
+        part = np.argpartition(dmat, min(m, n - 1), axis=1)
+        top = np.take_along_axis(dmat, part[:, : m + 1], axis=1)
+        kth = top[:, :m].max(axis=1)
+        qi = np.repeat(np.arange(len(dmat)), m)
+        bi = part[:, :m].ravel()
+        tied = np.flatnonzero(top[:, m] == kth) if m < n else ()
+        if len(tied):
+            tq, tb = np.nonzero(dmat[tied] <= kth[tied, None])
+            keep = np.isin(qi, tied, invert=True)
+            qi = np.concatenate([qi[keep], tied[tq]])
+            bi = np.concatenate([bi[keep], tb])
+        yield pd.DataFrame({"qid": qids_c[qi], "nn_id": bids[bi], "dist": dmat[qi, bi]})
 
 
 def _block_range(
@@ -286,7 +309,9 @@ def _list_scan(
     queries on that list through ``kernel(qids, qmat, bids, bmat,
     qrows=...)``, a pair kernel (``_block_topk``, ``_block_range``)
     with its other arguments bound. Returns the kernel's ``(qid, nn_id,
-    dist)`` rows, unmerged."""
+    dist)`` rows, unmerged. When base rows carry arrays a pair can meet
+    on several lists, so each batch's repeated (qid, nn_id) rows are
+    dropped; a base row lives in one batch, so no repeat survives."""
     m_cols = [match_col] if match_col else []
 
     def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -297,9 +322,19 @@ def _list_scan(
         for pdf in batches:
             if pdf.empty:
                 continue
-            bids, bmat, bvals = _base_batch(pdf, base_id, vec_col, match_col)
-            for br, qr in _list_runs(inv, bvals):
-                yield from kernel(qids, qmat, bids[br], bmat[br], qrows=qr)
+            bids, bmat, bvals, owner = _base_batch(pdf, base_id, vec_col, match_col)
+            runs = _list_runs(inv, bvals)
+            if owner is None:
+                for br, qr in runs:
+                    yield from kernel(qids, qmat, bids[br], bmat[br], qrows=qr)
+                continue
+            got = [
+                f
+                for br, qr in runs
+                for f in kernel(qids, qmat, bids[owner[br]], bmat[owner[br]], qrows=qr)
+            ]
+            if got:
+                yield pd.concat(got, ignore_index=True).drop_duplicates(["qid", "nn_id"])
 
     return base_df.select(base_id, vec_col, *m_cols).mapInPandas(scan, _CAND_SCHEMA)
 
@@ -339,30 +374,54 @@ def knn_join(
     ``match_col`` (optional) makes the join FILTERED: both sides must
     carry the column, and a base row only competes for a query's top-k
     when the values match (the Big-ANN filtered-track semantics — e.g.
-    same-label retrieval). On the query side it may be an integer array
-    instead: a query then matches base rows holding ANY of its values
-    (each value counted once; an empty array matches nothing), which is
-    how ivf_knn_join probes its ``n_probe`` lists. The staged queries
-    are grouped into one inverted list per value and each base batch's
-    same-value rows score only against that list (``_list_scan``), so
-    non-matching pairs are never computed and selectivity never costs a
-    second scan.
+    same-label retrieval). On either side it may be an integer array
+    instead: a pair then matches when the two rows share ANY value (each
+    value counted once; an empty array matches nothing). A query array
+    is how ivf_knn_join and search_ivfpq_index probe their ``n_probe``
+    lists; arrays on both sides are how lsh_cosine_topk meets on any of
+    its hash tables, and a pair met on several values is scored once.
+    The staged queries are grouped into one inverted list per value and
+    each base batch's same-value rows score only against that list
+    (``_list_scan``), so non-matching pairs are never computed and
+    selectivity never costs a second scan.
     """
-    spark = base_df.sparkSession
-    q_lists = _check_match_col("knn_join", match_col, queries_df, base_df)
+    q_path = _stage_queries(
+        "knn_join", queries_df, base_df, query_id, vec_col, match_col, storage_dir,
+        query_block_rows,
+    )
+    return _staged_topk(
+        q_path, base_df, k, metric, query_id, base_id, vec_col, exclude_self, match_col,
+        blocked=query_block_rows is not None,
+    )
+
+
+def _stage_queries(
+    fn, queries_df, base_df, query_id, vec_col, match_col, storage_dir=None, block_rows=None
+) -> str:
+    """The query side's one distributed write (sources/staging.py):
+    id, vector and ``_check_match_col``'s list column, split into
+    ceil(n_q / ``block_rows``) part files when given. Returns the
+    staged path; no query data reaches the driver."""
+    q_lists = _check_match_col(fn, match_col, queries_df, base_df)
     q_sel = queries_df.select(query_id, vec_col, *q_lists)
-    if query_block_rows is None:
-        q_path = stage_parquet(q_sel, storage_dir)
-    else:
+    if block_rows is not None:
         import math
 
-        n_blocks = max(1, math.ceil(q_sel.count() / query_block_rows))
-        q_path = stage_parquet(q_sel.repartition(n_blocks), storage_dir)
+        q_sel = q_sel.repartition(max(1, math.ceil(q_sel.count() / block_rows)))
+    return stage_parquet(q_sel, storage_dir)
+
+
+def _staged_topk(
+    q_path, base_df, k, metric, query_id, base_id, vec_col, exclude_self, match_col, blocked=False
+) -> DataFrame:
+    """knn_join's scan and merge over the queries staged at ``q_path``
+    (``_stage_queries``): one list scan over all part files, or one per
+    part file when ``blocked``, then the (qid)-window top-k."""
     # metadata-only file listing — no query data reaches the driver
     files = list_staged_files(q_path)
     if not files:
-        return spark.createDataFrame([], _RANKED_SCHEMA)
-    blocks = [files] if query_block_rows is None else [[f] for f in files]
+        return base_df.sparkSession.createDataFrame([], _RANKED_SCHEMA)
+    blocks = [[f] for f in files] if blocked else [files]
     kernel = partial(_block_topk, k=k, metric=metric, exclude_self=exclude_self)
     candidates = reduce(
         DataFrame.unionByName,
@@ -459,13 +518,13 @@ def range_join(
     every distance block under ``dmat_chunk_rows`` — and, unlike top-k,
     no global merge is needed at all: the radius predicate is decided
     locally per batch, so there is ZERO shuffle and output size is the
-    only cost. ``match_col`` restricts pairs to equal values (any value
-    of a query's array), as in knn_join. Returns (qid, nn_id, dist).
+    only cost. ``match_col`` restricts pairs to equal values (any shared
+    value of an array), as in knn_join. Returns (qid, nn_id, dist).
     """
-    spark = base_df.sparkSession
-    q_lists = _check_match_col("range_join", match_col, queries_df, base_df)
-    files = list_staged_files(stage_parquet(queries_df.select(query_id, vec_col, *q_lists)))
+    files = list_staged_files(
+        _stage_queries("range_join", queries_df, base_df, query_id, vec_col, match_col)
+    )
     if not files:
-        return spark.createDataFrame([], _CAND_SCHEMA)
+        return base_df.sparkSession.createDataFrame([], _CAND_SCHEMA)
     kernel = partial(_block_range, radius=float(radius), metric=metric, exclude_self=exclude_self)
     return _list_scan(files, base_df, kernel, query_id, base_id, vec_col, match_col)

@@ -2,11 +2,12 @@
 
 Baseline: exact brute-force top-k (knn_join with metric='cosine' — blocked
 GEMM, no base shuffle). Scale path: random-hyperplane LSH bucketing —
-signatures are per-row expressions; queries probe only their own bucket
-(plus multi-table repeats to recover recall), so per-query work drops from
-O(N) to O(N / 2^bits * tables). The RoarGraph index (projection.py +
-search.py) is the high-recall scale path; LSH here is the cheap
-no-index-build alternative, mirroring how a pipeline would backfill.
+signatures are per-row arrays of bucket keys; queries score only the base
+rows of their own buckets (plus multi-table repeats to recover recall), so
+per-query work drops from O(N) to O(N / 2^bits * tables). The RoarGraph
+index (projection.py + search.py) is the high-recall scale path; LSH here
+is the cheap no-index-build alternative, mirroring how a pipeline would
+backfill.
 """
 
 from __future__ import annotations
@@ -19,7 +20,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, IntegerType
 
 from mysteryann_spark.functions.vector import np_normalize
-from mysteryann_spark.operators.knn import knn_join, rank_topk
+from mysteryann_spark.operators.knn import _stage_queries, _staged_topk, knn_join, rank_topk
+from mysteryann_spark.sources.staging import staged_row_count
 
 
 def cosine_topk(
@@ -28,11 +30,6 @@ def cosine_topk(
     """Exact cosine top-k (the brute-force baseline every ANN variant is
     recall-measured against)."""
     return knn_join(queries_df, base_df, k, "cosine", exclude_self=exclude_self)
-
-
-def _hyperplanes(dim: int, bits: int, tables: int, seed: int) -> list[list[list[float]]]:
-    rng = np.random.default_rng(seed)
-    return rng.normal(size=(tables, bits, dim)).tolist()
 
 
 def _sample_kmeans(
@@ -274,6 +271,19 @@ def _unit(vecs: pd.Series) -> np.ndarray:
     # np_normalize guards zero-norm rows (norm treated as 1.0) so an
     # all-zero embedding yields zeros, not NaNs that poison k-means
     return np_normalize(m)
+
+
+def _unit_udf():
+    """Arrow-batched ``_unit``: each raw vector L2-normalized, with the
+    same floats ``nearest_centroids_udf`` probes with."""
+    from pyspark.sql.functions import pandas_udf
+    from pyspark.sql.types import DoubleType
+
+    @pandas_udf(ArrayType(DoubleType()))
+    def unit(vecs: pd.Series) -> pd.Series:
+        return pd.Series(list(_unit(vecs)))
+
+    return unit
 
 
 def _parse_size_bytes(s: str) -> int:
@@ -594,6 +604,33 @@ def quantized_cosine_topk(
     )
 
 
+def _lsh_keys_udf(bits: int, tables: int, seed: int):
+    """Arrow-batched LSH signature: each row's bucket in each of
+    ``tables`` random-hyperplane tables, as the integer array
+    ``tbl * 2^bits + bkt`` — one (batch x dim) @ (dim x tables*bits)
+    GEMM plus a sign-bit pack per batch. The seeded hyperplanes are drawn
+    for the batch's own vector width and memoised per width, so no driver
+    job has to learn the width first."""
+    from pyspark.sql.functions import pandas_udf
+    from pyspark.sql.types import LongType
+
+    planes: dict[int, np.ndarray] = {}
+    weights = 1 << np.arange(bits, dtype=np.int64)
+    offsets = np.arange(tables, dtype=np.int64) << bits
+
+    @pandas_udf(ArrayType(LongType()))
+    def keys(vecs: pd.Series) -> pd.Series:
+        m = np.stack([np.asarray(v, dtype=np.float64) for v in vecs])
+        dim = m.shape[1]
+        if dim not in planes:
+            planes[dim] = np.random.default_rng(seed).normal(size=(tables * bits, dim))
+        signs = (m @ planes[dim].T) > 0  # (n, tables*bits)
+        packed = signs.reshape(len(m), tables, bits).astype(np.int64) @ weights
+        return pd.Series(list(packed + offsets))
+
+    return keys
+
+
 def lsh_cosine_topk(
     queries_df: DataFrame,
     base_df: DataFrame,
@@ -606,65 +643,31 @@ def lsh_cosine_topk(
     vec_col: str = "embedding",
     exclude_self: bool = True,
 ) -> DataFrame:
-    """Approximate cosine top-k: equi-join query/base on (table, bucket),
-    exact re-rank within the candidate set.
+    """Approximate cosine top-k: the exact cosine top-k among the base
+    rows that share a random-hyperplane bucket with the query in at
+    least one of ``tables`` tables.
 
     Returns (qid, nn_id, dist, rank) like knn_join, dist = -cos; recall
     vs cosine_topk is gated in tests (the driver records rows-only —
     hyperplane draws are seeded numpy, not SQL-expressible).
 
-    Kernel shape: bucket signatures are one (batch x dim) @ (dim x
-    tables*bits) GEMM per Arrow batch plus a sign-bit pack — the literal-
-    array Catalyst expression it replaces codegen'd thousands of plane
-    constants and dominated runtime. The base is never exchanged: the
-    query side's (tbl, bkt, qid) table is broadcast (n_q x tables rows),
-    so the base's bucket tags are scanned in place, and the deduplicated
-    (qid, nn_id) candidates go through ``exact_rerank``, which broadcasts
-    them and the query vectors against the streamed base. The only
-    shuffles are the candidate dedup and the final per-query ranking.
-    The candidate side's size bound is n_q x n_base rows (one count of
-    the base); past the broadcast ceiling the planner's exchange takes
-    over.
+    Both sides carry their bucket keys as one integer array
+    (``_lsh_keys_udf``), and ``knn_join`` takes it as ``match_col``: the
+    list scan scores each base batch's run of one bucket against only the
+    queries in that bucket, with the exact cosine GEMM, and scores a pair
+    that meets in several tables once. So there is no join, no count job
+    and no candidate-size bound: the base streams through the list scan
+    in place, and the only shuffle is knn_join's per-query merge.
     """
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import LongType
+    keys = _lsh_keys_udf(bits, tables, seed)
 
-    from mysteryann_spark.session import broadcast_if_under
+    def tagged(df: DataFrame, id_col: str) -> DataFrame:
+        return df.select(id_col, vec_col, keys(F.col(vec_col)).alias("lsh_bucket"))
 
-    n_q, dim = count_and_dim(queries_df, vec_col)
-    pmat = np.asarray(
-        _hyperplanes(dim, bits, tables, seed), dtype=np.float64
-    ).reshape(tables * bits, dim)
-    bc = queries_df.sparkSession.sparkContext.broadcast(pmat)
-    weights = (1 << np.arange(bits, dtype=np.int64))
-
-    @pandas_udf(ArrayType(LongType()))
-    def buckets(vecs: pd.Series) -> pd.Series:
-        m = np.stack([np.asarray(v, dtype=np.float64) for v in vecs])
-        signs = (m @ bc.value.T) > 0  # (n, tables*bits)
-        packed = signs.reshape(len(m), tables, bits).astype(np.int64) @ weights
-        return pd.Series(list(packed))
-
-    def tagged(df: DataFrame, id_col: str, out_id: str) -> DataFrame:
-        return df.select(
-            F.col(id_col).alias(out_id),
-            F.posexplode(buckets(F.col(vec_col))).alias("tbl", "bkt"),
-        )
-
-    q = broadcast_if_under(tagged(queries_df, query_id, "qid"), n_q * tables * 24.0)
-    b = tagged(base_df, base_id, "nn_id")
-    cand = (
-        q.join(b, ["tbl", "bkt"])
-        .select("qid", "nn_id")
-        .dropDuplicates(["qid", "nn_id"])
-    )
-    if exclude_self:
-        cand = cand.where(F.col("qid") != F.col("nn_id"))
-    # a query's candidates are at most the whole base
-    return exact_rerank(
-        queries_df, _refine_base(base_df, base_id, vec_col), cand, k, query_id,
-        vec_col, surv_bytes=n_q * base_df.count() * 24.0,
-        q_bytes=n_q * (dim * 8 + 24.0),
+    return knn_join(
+        tagged(queries_df, query_id), tagged(base_df, base_id), k, "cosine",
+        query_id=query_id, base_id=base_id, vec_col=vec_col,
+        exclude_self=exclude_self, match_col="lsh_bucket",
     )
 
 
@@ -809,7 +812,7 @@ def pq_cosine_topk(
         exclude_self=exclude_self,
     ).select("qid", "nn_id")
     m_sub, _, dsub = bc.value.shape
-    sb, qb = _refine_estimates(queries_df, m_sub * dsub, k, refine)
+    sb, qb = _refine_estimates(queries_df.count(), m_sub * dsub, k, refine)
     return exact_rerank(
         queries_df, _refine_base(base_df, base_id, vec_col), cand, k, query_id,
         vec_col, surv_bytes=sb, q_bytes=qb,
@@ -836,8 +839,8 @@ def build_ivfpq_index(
 
     - ``lists``: DataFrame (cid, nn_id, code ARRAY<INT>) — the inverted
       lists, m bytes of PQ code per vector, persisted partitioned by cid.
-      A search stages them whole into one worker-resident code matrix and
-      scores only the probed lists; what a probe reads partition-pruned
+      A search streams them as the base of its list scan, restricted to
+      the probed cids, so a persisted index is read partition-pruned, as
       is the optional persisted full-precision ``vectors`` (also
       cid-partitioned) behind the rerank.
     - ``centroids`` (n_centroids, dim) / ``books`` (m, n_codes, dim/m):
@@ -912,155 +915,67 @@ def search_ivfpq_index(
     exclude_self: bool = True,
 ) -> DataFrame:
     """Search a built (or loaded) IVF-PQ index: probe n_probe inverted
-    lists, ADC-score the PQ codes via per-query lookup tables, keep
-    k*refine, exact-rerank against full-precision vectors — ``base_df``
-    when given, else the index's own persisted ``vectors`` dataset when
-    one was saved (``save_ivfpq(..., base_df=...)``: cid-partitioned, so
-    the rerank scan is partition-pruned to the probed lists instead of
-    re-reading — or worse, re-shuffling — the corpus). With neither,
+    lists, score the PQ codes of their rows, keep k*refine, exact-rerank
+    against full-precision vectors — ``base_df`` when given, else the
+    index's own persisted ``vectors`` dataset when one was saved
+    (``save_ivfpq(..., base_df=...)``, cid-partitioned). With neither,
     pure-ADC distances -q.r (r the code's reconstruction, q the unit
     query) are returned, the regime where only the index survives; the
     rerank returns -cos, the same convention.
 
-    The probe+ADC stage runs as ONE ``mapInPandas`` over the queries with
-    the inverted lists STAGED worker-side (ids + (n, m) uint8 code matrix
-    + per-centroid CSR offsets — 17 B/vector at m=16, the FAISS
-    ``IndexIVFPQ`` memory layout): per Arrow chunk it computes the
-    (m, n_codes) ADC lookup tables with one einsum, gathers the probed
-    lists' code blocks, and scores every candidate with LUT gathers — no
-    per-candidate shuffle rows. The lists are staged whole once per index
-    dict, so the lists scan is not partition-pruned; only the rerank's
-    vectors scan is. Assumes the code matrix fits worker memory —
-    17 GB/host at 10^9 vectors, the same residency class as the graph
-    index and far below it per vector. Each query's candidates are
-    ordered by (dist, nn_id)."""
-    from mysteryann_spark.sources.staging import (
-        load_staged,
-        read_staged,
-        stage_parquet,
+    The probe and ADC stage is ``knn_join`` with metric ``"ip"`` and
+    ``match_col="cid"``: the staged side is the unit queries with their
+    ``n_probe`` nearest centroids as an integer array, and the base is
+    ``index["lists"]`` with each code decoded to its reconstruction
+    (``pq_decode_udf``), so each list's rows GEMM against only the
+    queries probing that list. dot(q, reconstruct(x)) is the ADC
+    lookup-table sum up to rounding. Each query's candidates are ordered
+    by (dist, nn_id).
+
+    The lists, and a persisted ``vectors`` frame, are restricted by a
+    broadcast left-semi join on the probed cid set. On a cid-partitioned
+    persisted index that join drives dynamic partition pruning, so the
+    search reads only the probed lists' partitions of both datasets. The
+    set is read back from the staged probes in one task, so it is
+    exactly the lists the scan scores and costs no shuffle, and the
+    staged footers give the query count the rerank's size bounds need."""
+    spark = queries_df.sparkSession
+    probe = nearest_centroids_udf(spark.sparkContext.broadcast(index["centroids"]), n_probe)
+    decode = pq_decode_udf(spark.sparkContext.broadcast(index["books"]))
+    probed = queries_df.select(
+        query_id, _unit_udf()(F.col(vec_col)).alias(vec_col),
+        probe(F.col(vec_col)).alias("cid"),
     )
-
-    spark_sc = queries_df.sparkSession.sparkContext
-    score = centroid_scorer(spark_sc.broadcast(index["centroids"]))
-    bc_books = spark_sc.broadcast(index["books"])
-    n_centroids = int(index["centroids"].shape[0])
-    n_codes = int(index["books"].shape[1])
-
-    # stage the lists once per index dict (cached across searches)
-    lists_path = index.get("_staged_lists")
-    if lists_path is None:
-        lists_path = stage_parquet(index["lists"].select("cid", "nn_id", "code"))
-        index["_staged_lists"] = lists_path
-
-    code_dtype = np.uint8 if n_codes <= 256 else np.uint16
-
-    def _build():
-        tbl = read_staged(lists_path)
-        cid = tbl["cid"].combine_chunks().to_numpy(zero_copy_only=False).astype(np.int64)
-        ids = tbl["nn_id"].combine_chunks().to_numpy(zero_copy_only=False).astype(np.int64)
-        arr = tbl["code"].combine_chunks()
-        offsets = arr.offsets.to_numpy(zero_copy_only=False)
-        widths = np.diff(offsets)
-        if len(widths) == 0 or not np.all(widths == widths[0]):
-            raise ValueError("IVF-PQ code lists must be fixed-width and non-empty")
-        m_sub = int(widths[0])
-        codes = (
-            arr.flatten()
-            .to_numpy(zero_copy_only=False)
-            .astype(code_dtype)
-            .reshape(len(ids), m_sub)
-        )
-        order = np.argsort(cid, kind="stable")
-        cid, ids, codes = cid[order], ids[order], np.ascontiguousarray(codes[order])
-        indptr = np.searchsorted(cid, np.arange(n_centroids + 1, dtype=np.int64))
-        return ids, codes, indptr
-
-    top_n = (
-        k * refine
-        if (base_df is not None or index.get("vectors") is not None)
-        else k
+    q_path = _stage_queries(
+        "search_ivfpq_index", probed, index["lists"], query_id, vec_col, "cid"
     )
-
-    def run(batches):
-        ids, codes, indptr = load_staged("ivfpqlists|" + lists_path, _build)
-        books = bc_books.value  # (m, n_codes, dsub)
-        m_sub, _, dsub = books.shape
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            out = {c: [] for c in ("qid", "nn_id", "cid", "dist", "rank")}
-            for s in range(0, len(pdf), 256):
-                sub = pdf.iloc[s : s + 256]
-                qids = sub["qid"].to_numpy()
-                qm = _unit(sub["qvec"])
-                # probe selection: the flat assignment scorer (parity
-                # with the lists' cids)
-                probes = score(qm, n_probe)
-                # per-query ADC lookup tables in one einsum
-                luts = np.einsum(
-                    "qmd,mcd->qmc", qm.reshape(len(sub), m_sub, dsub), books
-                )
-                jj = np.arange(m_sub)
-                for qi in range(len(sub)):
-                    pr = probes[qi]
-                    st, en = indptr[pr], indptr[pr + 1]
-                    lens = en - st
-                    total = int(lens.sum())
-                    if total == 0:
-                        continue
-                    endsc = np.cumsum(lens)
-                    rows = (
-                        np.arange(total, dtype=np.int64)
-                        - np.repeat(endsc - lens, lens)
-                        + np.repeat(st, lens)
-                    )
-                    c_ids = ids[rows]
-                    # each survivor remembers its inverted list: the
-                    # persisted-base rerank joins on (cid, nn_id) so the
-                    # cid-partitioned vectors scan is partition-pruned
-                    c_cids = np.repeat(pr, lens)
-                    if exclude_self:
-                        keep = c_ids != qids[qi]
-                        rows, c_ids, c_cids = rows[keep], c_ids[keep], c_cids[keep]
-                        if not len(rows):
-                            continue
-                    lut = luts[qi]
-                    dists = -lut[jj, codes[rows].astype(np.int64)].sum(axis=1)
-                    t = min(top_n, len(dists))
-                    sel = np.lexsort((c_ids, dists))[:t]
-                    out["qid"].extend([qids[qi]] * t)
-                    out["nn_id"].extend(c_ids[sel].tolist())
-                    out["cid"].extend(c_cids[sel].tolist())
-                    out["dist"].extend(dists[sel].tolist())
-                    out["rank"].extend(range(1, t + 1))
-            yield pd.DataFrame(out)
-
-    # raw vectors cross into the worker once; _unit there reproduces the
-    # assignment floats (nearest_centroids_udf normalizes raw input)
-    q_in = queries_df.select(
-        F.col(query_id).alias("qid"), F.col(vec_col).alias("qvec")
+    cids = F.broadcast(
+        spark.read.schema("cid array<int>").parquet(q_path)
+        .select(F.explode("cid").alias("cid")).coalesce(1).distinct()
     )
-    pq_scored = q_in.mapInPandas(
-        run, "qid bigint, nn_id bigint, cid int, dist double, rank int"
+    lists = index["lists"].join(cids, "cid", "left_semi").select(
+        "cid", "nn_id", decode("code").alias(vec_col)
     )
     vectors = index.get("vectors")
-    if base_df is None and vectors is None:
-        return pq_scored.select("qid", "nn_id", "dist", "rank")
-    sb, qb = _refine_estimates(queries_df, int(index["meta"]["dim"]), k, refine)
+    rerank = base_df is not None or vectors is not None
+    scored = _staged_topk(
+        q_path, lists, k * refine if rerank else k, "ip", query_id, "nn_id", vec_col,
+        exclude_self, "cid",
+    )
+    if not rerank:
+        return scored
     if base_df is not None:
-        return exact_rerank(
-            queries_df, _refine_base(base_df, base_id, vec_col),
-            pq_scored.select("qid", "nn_id"), k, query_id, vec_col,
-            surv_bytes=sb, q_bytes=qb,
+        refine_base = _refine_base(base_df, base_id, vec_col)
+    else:
+        refine_base = vectors.join(cids, "cid", "left_semi").select(
+            "nn_id", F.col("vec").alias("nv")
         )
-    # persisted full-precision base: rerank reads ONLY the probed
-    # lists' vector partitions (the survivors side carries cid, and
-    # the broadcast join's dynamic partition pruning routes the scan)
+    sb, qb = _refine_estimates(
+        staged_row_count([q_path]), int(index["meta"]["dim"]), k, refine
+    )
     return exact_rerank(
-        queries_df,
-        vectors.select("cid", "nn_id", F.col("vec").alias("nv")),
-        pq_scored.select("qid", "cid", "nn_id"), k, query_id, vec_col,
-        join_on=("cid", "nn_id"), surv_bytes=sb, q_bytes=qb,
+        queries_df, refine_base, scored.select("qid", "nn_id"), k, query_id, vec_col,
+        surv_bytes=sb, q_bytes=qb,
     )
 
 
@@ -1070,14 +985,10 @@ def _refine_base(base_df: DataFrame, base_id: str, vec_col: str) -> DataFrame:
     )
 
 
-def _refine_estimates(
-    queries_df: DataFrame, dim: int, k: int, refine: int
-) -> tuple[float, float]:
+def _refine_estimates(n_q: int, dim: int, k: int, refine: int) -> tuple[float, float]:
     """Upper-bound byte estimates for ``exact_rerank``'s two broadcast
-    sides when each query keeps k*refine survivors: (survivor id rows,
-    query vectors). One count() over the query set per search call —
-    noise next to the scan it precedes."""
-    n_q = queries_df.count()
+    sides when each of ``n_q`` queries keeps k*refine survivors:
+    (survivor id rows, query vectors)."""
     return n_q * k * refine * 24.0, n_q * (dim * 8 + 24.0)
 
 
@@ -1090,13 +1001,11 @@ def exact_rerank(
     vec_col: str,
     surv_bytes: float,
     q_bytes: float,
-    join_on: tuple[str, ...] = ("nn_id",),
 ) -> DataFrame:
     """The engine's one exact rerank: score each approximate survivor
-    ``(qid, join_on...)`` by exact cosine against the full-precision base
-    (``refine_base``: join_on columns + ``nv``) and keep the top k per
-    query as (qid, nn_id, dist, rank), dist = -cos. LSH, PQ and IVF-PQ
-    all finish here.
+    ``(qid, nn_id)`` by exact cosine against the full-precision base
+    (``refine_base``: ``nn_id`` + ``nv``) and keep the top k per query
+    as (qid, nn_id, dist, rank), dist = -cos. PQ and IVF-PQ finish here.
 
     Both joins BROADCAST the survivors-derived side — survivor ids and
     query vectors, never the corpus — so the full-precision base is
@@ -1104,10 +1013,7 @@ def exact_rerank(
     join shuffled the WHOLE base per search call: measured ~26 GB of
     shuffle at the 10^8 rehearsal, the local-scratch exhaustion that
     killed its probe-64 point (SCALE.md r8) — on a cluster, the entire
-    corpus crossing the network per query batch. When ``join_on``
-    includes ``cid`` the broadcast additionally drives dynamic partition
-    pruning on a cid-partitioned persisted base, so the rerank scan
-    reads only the probed lists' vector partitions.
+    corpus crossing the network per query batch.
     ``surv_bytes``/``q_bytes`` are the callers' upper-bound size
     estimates — a giant survivor set falls back to the planner's
     exchange instead of hard-failing Spark's 8 GB broadcast ceiling."""
@@ -1118,7 +1024,7 @@ def exact_rerank(
     )
     scored = (
         broadcast_if_under(survivors, surv_bytes)
-        .join(refine_base, list(join_on))
+        .join(refine_base, "nn_id")
         .join(broadcast_if_under(q_side, q_bytes), "qid")
         .select("qid", "nn_id", _cosine_dist_udf()("qv", "nv").alias("dist"))
     )

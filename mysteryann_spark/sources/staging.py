@@ -74,9 +74,10 @@ def _shared_root() -> str:
     """Host scratch for shared artifacts: the first ``SPARK_LOCAL_DIRS``
     entry. Spark hands every Python worker its per-application
     ``blockmgr-*`` dir there and deletes it on ``spark.stop()``, so the
-    store lives exactly as long as the application — a reused key such
-    as ``ivfpqlists|<persisted path>`` cannot serve an earlier session's
-    artifact after that path is overwritten. Driver-side calls and tests
+    store lives exactly as long as the application — a key naming
+    staged paths, such as ``knnq|<match_col>|<part files>``, cannot serve
+    an earlier session's artifact after those paths are written again.
+    Driver-side calls and tests
     without the variable fall back to the temp dir."""
     local = os.environ.get("SPARK_LOCAL_DIRS")
     return local.split(",")[0] if local else tempfile.gettempdir()

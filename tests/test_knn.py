@@ -225,3 +225,76 @@ def test_array_match_col_matches_masked_bruteforce(spark, emb):
     assert {a for a, _ in want} >= {int(ids[1]), int(ids[5])}
     for a, b, dist in pairs:
         assert abs(dist - want[(a, b)]) < 1e-9
+
+
+def test_knn_join_ties_at_k_boundary_break_by_id(spark):
+    """Rows tied at the k-th distance are ordered by nn_id, as rank_topk
+    documents: the local top-k keeps every candidate tied with its last
+    one instead of an arbitrary subset of them."""
+    q = spark.createDataFrame([(100, [1.0, 0.0])], "qid long, embedding array<double>")
+    base = spark.createDataFrame(
+        [(i, [0.0, 1.0]) for i in range(6)], "vec_id long, embedding array<double>"
+    ).coalesce(1)
+    for metric in ("l2", "cosine"):
+        rows = sorted(knn_join(q, base, 4, metric).collect(), key=lambda r: r["rank"])
+        assert [r["nn_id"] for r in rows] == [0, 1, 2, 3], metric
+
+
+def test_array_match_col_on_base_side_matches_masked_bruteforce(spark, emb):
+    """An integer-array ``match_col`` on the base side, with a scalar or
+    an array on the query side: a pair competes when the rows share ANY
+    value, in knn_join and range_join alike, checked against a masked
+    numpy brute force. A value repeated in a base array counts once (no
+    duplicate neighbor or pair, and no top-k slot lost to a repeat), and
+    a base row with an empty array matches nothing."""
+    from mysteryann_spark.operators.knn import range_join
+
+    ids, mat = _matrix(emb)
+    vid = F.col("vec_id")
+    base = emb.select(
+        "vec_id",
+        "embedding",
+        F.when(vid % 7 == 0, F.array().cast("array<int>"))
+        .otherwise(F.array(vid % 5, vid % 5, vid % 3 + 5).cast("array<int>"))
+        .alias("lab"),
+    )
+    blabs = [set() if i % 7 == 0 else {i % 5, i % 3 + 5} for i in ids]
+    n_q = 12
+    q_scalar = {i: [i % 9] for i in range(n_q)}  # label 8 is on no base row
+    q_array = {i: [[], [1, 1], [0, 6], [3], [4, 9], [2, 2, 7]][i % 6] for i in range(n_q)}
+    D = np_distances("l2", mat[:n_q], mat)
+    D[np.arange(n_q), np.arange(n_q)] = np.inf  # exclude_self
+    radius = float(np.quantile(D[np.isfinite(D)], 0.02))
+    for qlabs, dtype in ((q_scalar, "int"), (q_array, "array<int>")):
+        q = spark.createDataFrame(
+            [
+                (int(ids[i]), [float(x) for x in mat[i]], qlabs[i] if dtype != "int" else qlabs[i][0])
+                for i in qlabs
+            ],
+            f"qid bigint, embedding array<float>, lab {dtype}",
+        )
+        allowed = np.array([[bool(set(qlabs[i]) & b) for b in blabs] for i in range(n_q)])
+        Dm = np.where(allowed, D, np.inf)
+
+        got = {}
+        for r in knn_join(q, base, 5, "l2", exclude_self=True, match_col="lab").collect():
+            got.setdefault(r["qid"], []).append((r["rank"], r["nn_id"], r["dist"]))
+        for qi in range(n_q):
+            order = sorted(np.flatnonzero(np.isfinite(Dm[qi])), key=lambda j: (Dm[qi, j], ids[j]))[:5]
+            rows = sorted(got.get(int(ids[qi]), []))
+            assert [nn for _, nn, _ in rows] == [int(ids[j]) for j in order], (dtype, qi)
+            for (_, _, dist), j in zip(rows, order):
+                assert abs(dist - Dm[qi, j]) < 1e-9
+
+        pairs = [
+            (r["qid"], r["nn_id"], r["dist"])
+            for r in range_join(
+                q, base, radius, "l2", exclude_self=True, match_col="lab"
+            ).collect()
+        ]
+        want = {(int(ids[qi]), int(ids[j])): Dm[qi, j] for qi, j in zip(*np.nonzero(Dm <= radius))}
+        assert want, dtype
+        assert len(pairs) == len({(a, b) for a, b, _ in pairs})
+        assert {(a, b) for a, b, _ in pairs} == set(want)
+        for a, b, dist in pairs:
+            assert abs(dist - want[(a, b)]) < 1e-9

@@ -263,6 +263,26 @@ def test_lsh_ann_zero_norm_query_scores_zero(spark):
     assert all(r["dist"] is not None and r["dist"] == 0.0 for r in rows), rows
 
 
+def test_lsh_ann_neighbor_met_in_several_tables_returned_once(spark):
+    """A base row identical to the query shares its bucket in every
+    table: the list scan meets the pair once per table and must return
+    that neighbour once, at rank 1, with the other ranks filled by
+    distinct rows."""
+    import numpy as np
+
+    vecs = np.random.default_rng(11).normal(size=(80, 8))
+    vecs[1] = vecs[0]
+    base = spark.createDataFrame(
+        [(i, v.tolist()) for i, v in enumerate(vecs)],
+        "vec_id long, embedding array<double>",
+    )
+    q = base.where("vec_id = 0").select(F.col("vec_id").alias("qid"), "embedding")
+    rows = sorted(lsh_cosine_topk(q, base, 5, bits=2, tables=8).collect(), key=lambda r: r["rank"])
+    assert [r["rank"] for r in rows] == [1, 2, 3, 4, 5]
+    assert rows[0]["nn_id"] == 1 and abs(rows[0]["dist"] + 1.0) < 1e-12
+    assert len({r["nn_id"] for r in rows}) == 5 and 0 not in {r["nn_id"] for r in rows}
+
+
 def test_multimodal_decode_shapes(spark):
     docs_full = load_table(spark, "documents", SF_DIR)
     media = synth_media_from_documents(docs_full)

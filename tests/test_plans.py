@@ -135,11 +135,11 @@ def test_round4_retrieval_entries_plan_shape(spark):
 
 def test_persisted_ivfpq_search_partition_prunes(spark, tmp_path):
     """A search through a loaded index reads the persisted index data
-    only where it probes: the staged ADC kernel reads the inverted lists
-    worker-side, so the search plan scans no ``lists`` files at all, and
-    the rerank's scan of the cid-partitioned ``vectors`` carries a
-    dynamic-partition-pruning expression. The pure-ADC search of an
-    index saved without vectors matches the numpy reference search."""
+    only where it probes: both its scan of the cid-partitioned ``lists``
+    (the base of the ADC list scan) and the rerank's scan of the
+    cid-partitioned ``vectors`` carry a dynamic-partition-pruning
+    expression. The pure-ADC search of an index saved without vectors
+    matches the numpy reference search."""
     import re
 
     from pyspark.sql import functions as F
@@ -165,17 +165,15 @@ def test_persisted_ivfpq_search_partition_prunes(spark, tmp_path):
         q, load_ivfpq(spark, vec_path), 3, n_probe=2, refine=5, base_df=None
     )
     assert res.count() > 0
-    # the only scan of index data is the vectors scan
-    index_scans = [
-        loc
-        for loc in re.findall(r"Location: \w+ \[([^\]]*)\]", formatted_plan(res))
-        if vec_path in loc
+    # the scans of index data read lists and vectors, each pruned by cid
+    scans = [
+        node
+        for node in formatted_plan(res).split("\n\n")
+        if re.search(rf"Location: \w+ \[[^\]]*{re.escape(vec_path)}/", node)
     ]
-    assert index_scans and all(
-        loc.endswith(f"{vec_path}/vectors") for loc in index_scans
-    ), index_scans
-    plan = res._jdf.queryExecution().executedPlan().toString()
-    assert "dynamicpruning" in plan.lower(), "vectors scan not partition-pruned"
+    assert {re.search(r"/(\w+)\]", node).group(1) for node in scans} == {"lists", "vectors"}
+    for node in scans:
+        assert re.search(r"PartitionFilters: \[.*dynamicpruning", node), node
 
     check_search_against_reference(spark, base, adc_path, n_probe=2)
 
@@ -310,14 +308,15 @@ def test_round6_entries_plan_shape(spark):
 
 
 def test_ivfpq_refine_broadcasts_survivors(spark):
-    """LSH, PQ and IVF-PQ top-k finish in the one exact rerank, which must
-    scan the full-precision base in place: with the planner's broadcast
-    threshold off (a base too large to broadcast), the executed plan has
-    no sort-merge join and no hash exchange of base rows (keyed on
-    ``nn_id`` alone, or on LSH's ``tbl``/``bkt`` bucket tags). A shuffled
-    base here moves the WHOLE corpus per search call (the measured 10^8
-    probe-64 scratch exhaustion, SCALE.md r8). The exchanges left are the
-    candidate dedup on (qid, nn_id) and the per-query ranking on qid."""
+    """LSH, PQ and IVF-PQ top-k must scan the full-precision base in
+    place: with the planner's broadcast threshold off (a base too large
+    to broadcast), the executed plan has no sort-merge join and no hash
+    exchange of base rows (keyed on ``nn_id`` alone, or on LSH's
+    ``lsh_bucket`` keys). A shuffled base here moves the WHOLE corpus per
+    search call (the measured 10^8 probe-64 scratch exhaustion, SCALE.md
+    r8). PQ and IVF-PQ finish in the one exact rerank, which broadcasts
+    the survivors; LSH runs on the list scan and joins nothing. The
+    exchanges left are the per-query rankings on qid."""
     import re
 
     from pyspark.sql import functions as F
@@ -349,11 +348,12 @@ def test_ivfpq_refine_broadcasts_survivors(spark):
             assert res.collect(), name
             plan = res._jdf.queryExecution().executedPlan().toString()
             assert "isFinalPlan=true" in plan, name
-            assert "BroadcastHashJoin" in plan, f"{name}: rerank not broadcast"
+            if name != "lsh":
+                assert "BroadcastHashJoin" in plan, f"{name}: rerank not broadcast"
             assert "SortMergeJoin" not in plan, f"{name}: a join shuffles the corpus"
             for keys in re.findall(r"hashpartitioning\(([^)]*)\)", plan):
                 cols = {re.sub(r"#\d+L?$", "", c.strip()) for c in keys.split(",")[:-1]}
-                assert cols != {"nn_id"} and not cols & {"tbl", "bkt"}, (
+                assert cols != {"nn_id"} and "lsh_bucket" not in cols, (
                     f"{name}: base rows exchanged on {sorted(cols)}"
                 )
     finally:
