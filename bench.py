@@ -3,9 +3,13 @@
 {"metric": ..., "value": total_sec, "unit": "sec", "queries": {...}, "sf": ...}
 
 Each query runs $SPARK_GRAFT_BENCH_SHOTS times (default 3); "queries"
-reports the per-query MIN, "shots" the raw times and "codegen_compiles"
-the generated classes each shot compiled (0 once its plans are cached);
-"cpus" and "default_parallelism" give the session's shape. One-shot
+reports the per-query MIN, "shots" the raw times, "codegen_compiles"
+the generated classes each shot compiled (0 once its plans are cached)
+and "jobs" the Spark jobs each shot ran (each shot runs under its own
+job group, counted by the status tracker, no event log; a job submitted
+from a helper thread, such as the build's medoid and base-staging
+threads, carries no group and is not counted); "cpus" and
+"default_parallelism" give the session's shape. One-shot
 numbers on this box carry ~2x run-to-run jitter (BASELINE.md) — r7's
 driver total read as a 24% regression that an idle-box re-run disproved;
 min-of-N measures the plan, not the scheduler weather.
@@ -60,20 +64,32 @@ def main() -> None:
     timings: dict[str, float] = {}
     shots: dict[str, list[float]] = {}
     compiles: dict[str, list[int]] = {}
-    jvm = spark.sparkContext._jvm
-    compile_count = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount
+    jobs: dict[str, list[int]] = {}
+    sc = spark.sparkContext
+    compile_count = sc._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount
 
     def run(name: str, fn) -> None:
         ts: list[float] = []
         cs: list[int] = []
-        for _ in range(n_shots):
-            c0, t0 = compile_count(), time.time()
-            fn()
-            ts.append(round(time.time() - t0, 3))
-            cs.append(compile_count() - c0)
+        js: list[int] = []
+        for i in range(n_shots):
+            group = f"bench-{name}-{i}"
+            sc.setJobGroup(group, name)
+            try:
+                c0, t0 = compile_count(), time.time()
+                fn()
+                ts.append(round(time.time() - t0, 3))
+                cs.append(compile_count() - c0)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+                sc.setLocalProperty("spark.job.description", None)
+            # the status tracker is fed by the asynchronous listener bus
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            js.append(len(sc.statusTracker().getJobIdsForGroup(group)))
         timings[name] = min(ts)
         shots[name] = ts
         compiles[name] = cs
+        jobs[name] = js
 
     # warm-up: JVM + parquet footer caches + Python/Arrow worker spawn
     # (reference warms 100 queries before timing,
@@ -185,6 +201,7 @@ def main() -> None:
                 "cpus": cpus,
                 "default_parallelism": spark.sparkContext.defaultParallelism,
                 "codegen_compiles": compiles,
+                "jobs": jobs,
             }
         )
     )

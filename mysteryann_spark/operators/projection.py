@@ -86,25 +86,6 @@ def _reached_mask(tbl, ep: int) -> tuple[np.ndarray, np.ndarray]:
     return ids, seen
 
 
-def _reach_marks(adj_df: DataFrame, ep: int) -> DataFrame:
-    """``(node, reached)``: every id reached from ``ep`` (True), plus one
-    row per adjacency row whose node is not reached (False). One staged
-    write of the adjacency, then ONE single-partition task runs the
-    whole BFS (``_reached_mask``) over it."""
-    from mysteryann_spark.sources.staging import stage_parquet, staged_task
-
-    path = stage_parquet(adj_df.select("node", "nbrs"))
-    ep = int(ep)
-
-    def bfs(tbl) -> Iterator[pd.DataFrame]:
-        ids, seen = _reached_mask(tbl, ep)
-        nodes = tbl["node"].to_numpy().astype(np.int64)
-        yield pd.DataFrame({"node": ids[seen], "reached": True})
-        yield pd.DataFrame({"node": nodes[~seen[np.searchsorted(ids, nodes)]], "reached": False})
-
-    return staged_task(adj_df.sparkSession, path, bfs, "node bigint, reached boolean")
-
-
 def reachable_from(adj_df: DataFrame, ep: int) -> DataFrame:
     """The ``(node)`` set reachable from ``ep`` over a ``(node, nbrs)``
     adjacency. Neighbour ids without a row count as reached; an ``ep``
@@ -116,7 +97,16 @@ def reachable_from(adj_df: DataFrame, ep: int) -> DataFrame:
     frontier loop). That task holds the whole-graph CSR — the same
     artifact every phase-4 search worker already loads
     (``staging.load_staged_graph``), so it adds no new memory ceiling."""
-    return _reach_marks(adj_df, ep).where("reached").select("node")
+    from mysteryann_spark.sources.staging import stage_parquet, staged_task
+
+    path = stage_parquet(adj_df.select("node", "nbrs"))
+    ep = int(ep)
+
+    def bfs(tbl) -> Iterator[pd.DataFrame]:
+        ids, seen = _reached_mask(tbl, ep)
+        yield pd.DataFrame({"node": ids[seen]})
+
+    return staged_task(adj_df.sparkSession, path, bfs, "node bigint")
 
 
 def _assign_bridges(
@@ -169,6 +159,90 @@ def _assign_bridges(
     return u[rows], r[rows]
 
 
+def _bridge_candidates(
+    qids: np.ndarray,
+    qmat: np.ndarray,
+    bids: np.ndarray,
+    bmat: np.ndarray,
+    brows: np.ndarray,
+    k: int,
+    metric: str,
+) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    """Each query's ``k`` nearest of the base rows ``brows`` as ``(u, r,
+    dist, rank)``, ranked by (dist, r) as ``knn.rank_topk`` ranks. The
+    base rows are gathered and scored in blocks of ``dmat_chunk_rows``
+    rows through ``knn._block_topk`` (which keeps every row tied at the
+    k-th distance), keeping a running top-k, so no block, gather or
+    distance matrix outgrows the per-worker budget."""
+    from mysteryann_spark.operators.knn import _block_topk, dmat_chunk_rows
+
+    top: list[pd.DataFrame] = []
+    everyone = np.arange(len(qids))
+    step = dmat_chunk_rows(bmat.shape[1])
+    for s in range(0, len(brows), step):
+        blk = brows[s : s + step]
+        cand = pd.concat(
+            top + list(_block_topk(qids, qmat, bids[blk], bmat[blk], k, metric, False, everyone)),
+            ignore_index=True,
+        ).sort_values(["qid", "dist", "nn_id"], kind="stable")
+        top = [cand[cand.groupby("qid").cumcount() < k]]
+    (cand,) = top
+    rank = cand.groupby("qid").cumcount().to_numpy() + 1
+    return cand["qid"].to_numpy(), cand["nn_id"].to_numpy(), cand["dist"].to_numpy(), rank
+
+
+def _bridge_additions(
+    tbl,
+    ep: int,
+    base_ids: np.ndarray,
+    bmat: np.ndarray,
+    metric: str,
+    bridge_candidates: int,
+    cap: int,
+) -> Iterator[pd.DataFrame]:
+    """The whole repair of one ``(node, nbrs)`` Arrow adjacency in
+    memory, over the id-sorted base ``(base_ids, bmat)``: BFS from
+    ``ep`` (``_reached_mask``), each unreached node's bridge candidates
+    among the reached nodes (``_bridge_candidates``), the capped
+    assignment (``_assign_bridges``). Yields ``(node, add_nbrs,
+    unreached)`` frames: one row per node that gains edges, then one
+    flagged row, gaining nothing, per unreached adjacency row (a row
+    without a base vector included)."""
+    import math
+
+    ids, seen = _reached_mask(tbl, ep)
+    nodes = tbl["node"].to_numpy().astype(np.int64)
+    u_rows = nodes[~seen[np.searchsorted(ids, nodes)]]
+
+    def base_rows(want: np.ndarray) -> np.ndarray:
+        return np.flatnonzero(np.isin(base_ids, want))
+
+    hosts, unreached = base_rows(ids[seen]), base_rows(u_rows)
+    bu = br = np.empty(0, dtype=np.int64)
+    if len(hosts) and len(unreached):
+        # Auto-widen the candidate pool toward the needed capacity: a far
+        # unreached cluster sees nearly the SAME nearest hosts from every
+        # node, so k candidates expose at most ~k distinct hosts — k must
+        # grow with n_unreached / cap or the cap can't be honored.
+        k = min(64, max(bridge_candidates, math.ceil(len(u_rows) / cap)))
+        cand = _bridge_candidates(
+            base_ids[unreached], bmat[unreached], base_ids, bmat, hosts, k, metric
+        )
+        bu, br = _assign_bridges(*cand, k, cap)
+    # each bridge both ways, grouped by source; no pair repeats, as every
+    # host is reached and every u is not
+    src, dst = np.concatenate([br, bu]), np.concatenate([bu, br])
+    order = np.lexsort((dst, src))
+    gainers, starts = np.unique(src[order], return_index=True)
+    if len(gainers):
+        yield pd.DataFrame(
+            {"node": gainers, "add_nbrs": np.split(dst[order], starts[1:]), "unreached": False}
+        )
+    yield pd.DataFrame(
+        {"node": u_rows, "add_nbrs": [np.empty(0, dtype=np.int64)] * len(u_rows), "unreached": True}
+    )
+
+
 def repair_reachability(
     base_df: DataFrame,
     adj_df: DataFrame,
@@ -178,6 +252,7 @@ def repair_reachability(
     vec_col: str = "embedding",
     bridge_candidates: int = 8,
     max_bridges_per_host: int = 64,
+    staged: tuple[str | list[str], str] | None = None,
 ) -> tuple[DataFrame, int]:
     """Make every base node reachable from the entry point — the LIVE
     analog of the reference's dead connectivity-repair pass
@@ -188,89 +263,80 @@ def repair_reachability(
     medoid-seeded build never bridges (training queries' kNN lists stay
     in-cluster), and an unreachable node can NEVER be returned by a
     search. Repair: (1) BFS marks the reached set; (2) each unreached
-    node finds its ``bridge_candidates`` nearest reached nodes (a
-    filtered kNN join — cost |unreached| x |reached| GEMM, zero when the
-    audit passes); (3) bridges are assigned CAPACITY-CAPPED — at most
-    ``max_bridges_per_host`` per reached host, filled closest-first
-    across candidate ranks, with an uncapped spread fallback so the
-    guarantee never fails (``_assign_bridges``). The cap exists because
-    the naive 1-NN assignment funnels a whole under-covered region
-    through the single boundary node nearest it (the 300k scale
-    rehearsal produced a 12,491-degree hub that both stalled searches —
-    every beam expansion touching it scans 12k neighbors — and
-    over-concentrated entry into the region); (4) add the bridge edges
-    r->u and u->r by array_union — append-only, no re-prune, so no
-    existing edge is evicted and the guarantee can't un-make itself.
-    Returns (repaired adjacency, n_unreached_before).
+    node finds its ``bridge_candidates`` nearest reached nodes (exact,
+    ranked by (dist, id) as ``knn_join`` ranks); (3) bridges are
+    assigned CAPACITY-CAPPED — at most ``max_bridges_per_host`` per
+    reached host, filled closest-first across candidate ranks, with an
+    uncapped spread fallback so the guarantee never fails
+    (``_assign_bridges``). The cap exists because the naive 1-NN
+    assignment funnels a whole under-covered region through the single
+    boundary node nearest it (the 300k scale rehearsal produced a
+    12,491-degree hub that both stalled searches — every beam expansion
+    touching it scans 12k neighbors — and over-concentrated entry into
+    the region); (4) add the bridge edges r->u and u->r by array_union
+    — append-only, no re-prune, so no existing edge is evicted and the
+    guarantee can't un-make itself. Returns (repaired adjacency,
+    n_unreached_before), n_unreached counting the unreached adjacency
+    rows, rows without a base vector included.
+
+    ``staged``: ``(base path(s), adjacency path)`` already written by
+    the caller — the build passes its staged base and the one staged
+    write of its final adjacency. Without it both are staged here.
 
     Job shape is fixed — it grows with neither the graph's diameter nor
-    the number of acceptance rounds: a staged write of the adjacency,
-    ONE single-partition BFS task (checkpointed) and its unreached
-    count; then, only when nodes are unreached, the bridge kNN join and
-    ONE single-partition assignment task (checkpointed). Memory bounds:
-    the BFS task holds the whole-graph CSR (what every phase-4 search
-    worker already loads) and the assignment task holds the
-    |unreached| x ``bridge_candidates`` candidate rows.
+    the number of unreached nodes or acceptance rounds: ONE
+    single-partition task runs steps 1-3 in memory (``_bridge_additions``)
+    and is checkpointed, one ``count`` reads n_unreached, and the result
+    is the staged adjacency as read, or, when nodes were unreached, that
+    read joined to the broadcast additions. The trade is the bridge kNN
+    on one core: O(|unreached| x |reached| x dim), which serves the
+    unreached nodes a build leaves (59-1,306 of 600-1,500 on the
+    benchmark's clustered builds; "few" at the 300k full-training
+    rehearsal, SCALE.md). Memory: the task holds
+    the whole-graph CSR (what every phase-4 search worker already loads),
+    the host-shared staged base (``load_staged_matrix``, the matrix the
+    prune workers map), the |unreached| x dim query copy and
+    ``dmat_chunk_rows``-bounded reached-row blocks.
     """
-    from mysteryann_spark.operators.knn import knn_join
+    from mysteryann_spark.session import broadcast_if_under
+    from mysteryann_spark.sources.staging import (
+        load_staged_matrix,
+        stage_parquet,
+        staged_task,
+    )
 
-    marks = _reach_marks(adj_df, ep).localCheckpoint(eager=True)
-    reached = marks.where("reached").select("node")
-    unreached = marks.where(~F.col("reached")).select("node")
-    n_unreached = unreached.count()
+    if staged is None:
+        staged = (
+            stage_parquet(base_df.select(base_id, vec_col)),
+            stage_parquet(adj_df.select("node", "nbrs")),
+        )
+    base_path, adj_path = staged
+    base_paths = [base_path] if isinstance(base_path, str) else list(base_path)
+    ep = int(ep)
+
+    def repair(tbl) -> Iterator[pd.DataFrame]:
+        base_ids, bmat = load_staged_matrix(base_paths, base_id, vec_col)
+        yield from _bridge_additions(
+            tbl, ep, base_ids, bmat, metric, bridge_candidates, max_bridges_per_host
+        )
+
+    spark = adj_df.sparkSession
+    adds = staged_task(
+        spark, adj_path, repair, "node bigint, add_nbrs array<bigint>, unreached boolean"
+    ).localCheckpoint(eager=True)
+    n_unreached = adds.where("unreached").count()
+    adj = spark.read.schema("node bigint, nbrs array<bigint>").parquet(adj_path)
     if n_unreached == 0:
-        return adj_df, 0
-
-    reached_vecs = base_df.join(
-        reached.select(F.col("node").alias(base_id)), base_id, "left_semi"
+        return adj, 0
+    # at most 2 * n_unreached gain rows holding 2 * n_unreached ids in all
+    gains = broadcast_if_under(
+        adds.where(F.size("add_nbrs") > 0).select("node", "add_nbrs"), n_unreached * 64.0
     )
-    u_queries = base_df.join(
-        unreached.select(F.col("node").alias(base_id)), base_id, "left_semi"
-    ).select(F.col(base_id).alias("qid"), vec_col)
-    # Auto-widen the candidate pool toward the needed capacity: a far
-    # unreached cluster sees nearly the SAME nearest hosts from every
-    # node, so k candidates expose at most ~k distinct hosts — k must
-    # grow with n_unreached / cap or the cap can't be honored.
-    import math
-
-    bridge_candidates = min(
-        64, max(bridge_candidates, math.ceil(n_unreached / max_bridges_per_host))
-    )
-    cand = knn_join(
-        u_queries, reached_vecs, k=bridge_candidates, metric=metric,
-        query_id="qid", base_id=base_id, vec_col=vec_col,
-    ).select(
-        F.col("qid").alias("u"), F.col("nn_id").alias("r"), "dist", "rank"
-    )
-
-    def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        frames = list(batches)
-        if not frames:
-            return
-        pdf = pd.concat(frames, ignore_index=True)
-        bu, br = _assign_bridges(
-            pdf["u"].to_numpy(np.int64), pdf["r"].to_numpy(np.int64),
-            pdf["dist"].to_numpy(np.float64), pdf["rank"].to_numpy(np.int64),
-            bridge_candidates, max_bridges_per_host,
-        )
-        yield pd.DataFrame({"u": bu, "r": br})
-
-    bridges = (
-        cand.coalesce(1).mapInPandas(assign, "u bigint, r bigint").localCheckpoint(eager=True)
-    )
-
-    new_edges = bridges.select(F.col("r").alias("node"), F.col("u").alias("nbr")).unionByName(
-        bridges.select(F.col("u").alias("node"), F.col("r").alias("nbr"))
-    )
-    additions = new_edges.groupBy("node").agg(F.collect_set("nbr").alias("add_nbrs"))
-    repaired = (
-        adj_df.join(additions, "node", "left_outer")
-        .select(
-            "node",
-            F.when(
-                F.col("add_nbrs").isNull(), F.col("nbrs")
-            ).otherwise(F.array_union("nbrs", "add_nbrs")).alias("nbrs"),
-        )
+    repaired = adj.join(gains, "node", "left_outer").select(
+        "node",
+        F.when(F.col("add_nbrs").isNull(), F.col("nbrs"))
+        .otherwise(F.array_union("nbrs", "add_nbrs"))
+        .alias("nbrs"),
     )
     return repaired, n_unreached
 
@@ -316,6 +382,14 @@ def build_roargraph(
     remaining phases from it (tools/scale_rehearsal.py
     SCALE_PHASE0_DIR). ``queries_df`` is unused on this path — every
     later phase reads only ``knn_df`` and ``base_df``.
+
+    ``ensure_reachable`` repairs the final adjacency
+    (``repair_reachability``). The final prune is then written once
+    (``stage_parquet``): that staged copy cuts its lineage, is the
+    repair's input beside the staged base, and is what is returned when
+    every node is reached. After the final prune the repair adds its one
+    checkpointed task and one count; only when nodes were unreached does
+    the returned frame carry a broadcast join of the additions.
     """
     metric = params.metric
 
@@ -465,14 +539,20 @@ def build_roargraph(
         staged_base=staged_base,
     )
     if ensure_reachable:
-        # post-build connectivity audit + repair (a fixed handful of jobs:
-        # one-task BFS; bridge kNN + one-task assignment only when
-        # components exist). Opt-in: testdata graphs are connected
-        # (test-asserted), and the audit costs real wall-clock on every
-        # build.
+        # post-build connectivity audit + repair. Opt-in: testdata graphs
+        # are connected (test-asserted), and the audit costs real
+        # wall-clock on every build. ONE staged write of the final
+        # adjacency both cuts its lineage and is the repair's input, as
+        # adj3_path serves phase 4; the repair's one task maps the staged
+        # base the prune workers already built.
+        merged_path = stage_parquet(merged)
         merged, _ = repair_reachability(
-            base_df, merged.localCheckpoint(), ep, metric,
-            base_id=base_id, vec_col=vec_col,
+            base_df,
+            base_df.sparkSession.read.schema("node bigint, nbrs array<bigint>").parquet(
+                merged_path
+            ),
+            ep, metric, base_id=base_id, vec_col=vec_col,
+            staged=(staged_base, merged_path),
         )
     return merged, ep
 

@@ -801,18 +801,14 @@ def pq_cosine_topk(
         F.col(base_id),
         decode(encode(F.col(vec_col))).alias(vec_col),
     )
-    cand = knn_join(
-        queries_df,
-        recon,
-        k * refine,
-        "cosine",
-        query_id=query_id,
-        base_id=base_id,
-        vec_col=vec_col,
-        exclude_self=exclude_self,
+    # knn_join's two halves, so the staged query footers give n_q for the
+    # rerank's size bounds without a count job
+    q_path = _stage_queries("pq_cosine_topk", queries_df, recon, query_id, vec_col, None)
+    cand = _staged_topk(
+        q_path, recon, k * refine, "cosine", query_id, base_id, vec_col, exclude_self, None
     ).select("qid", "nn_id")
     m_sub, _, dsub = bc.value.shape
-    sb, qb = _refine_estimates(queries_df.count(), m_sub * dsub, k, refine)
+    sb, qb = _refine_estimates(staged_row_count([q_path]), m_sub * dsub, k, refine)
     return exact_rerank(
         queries_df, _refine_base(base_df, base_id, vec_col), cand, k, query_id,
         vec_col, surv_bytes=sb, q_bytes=qb,

@@ -766,14 +766,16 @@ def staged_task(spark, path: str, kernel: Callable[..., Iterator], schema: str) 
     ``_EMIT_ROWS`` rows. The job count is fixed, whatever the kernel
     loops over in memory; each action on the result re-runs the task."""
 
-    def run(batches):
+    # not ``run``: that is the graph search UDF's name, and traces
+    # attribute UDF time to layers by the name the plan node shows
+    def staged_kernel(batches):
         for _ in batches:  # the one-row driver frame only triggers the task
             pass
         for frame in kernel(read_staged(path)):
             for s in range(0, len(frame), _EMIT_ROWS):
                 yield frame.iloc[s : s + _EMIT_ROWS]
 
-    return spark.range(0, 1, 1, 1).mapInPandas(run, schema)
+    return spark.range(0, 1, 1, 1).mapInPandas(staged_kernel, schema)
 
 
 def read_staged_multi(paths: "list[str] | str", key_col: str = "node"):

@@ -1063,11 +1063,117 @@ def test_bridge_assignment_matches_deferred_acceptance_reference():
     assert min(regimes.values()) >= 10, regimes
 
 
+@pytest.mark.parametrize("metric", ["l2", "cosine"])
+def test_repair_bridges_match_bruteforce_reference(spark, metric):
+    """The one-task repair adds exactly the edges that the plain-Python
+    deferred acceptance (``_bridges_reference``) assigns over brute-force
+    numpy candidates ranked by (dist, id): in the capped regime (a wide
+    reached cluster) and in the fallback regime (a narrow one whose
+    capacity runs out). The island carries an edge into the reached
+    cluster (a u -> r edge the bridge must not duplicate), and one
+    unreached row has no base vector: it counts in ``n_unreached`` but
+    gains no edge. A call on caller-staged inputs returns the same
+    adjacency."""
+    import math
+
+    import numpy as np
+
+    from mysteryann_spark.operators.projection import repair_reachability
+    from mysteryann_spark.sources.staging import stage_parquet
+
+    rng = np.random.default_rng(29)
+    n_b, dim = 30, 6
+    for n_a, cands, cap in ((40, 3, 2), (10, 2, 1)):
+        vecs = np.concatenate(
+            [rng.standard_normal((n_a, dim)), rng.standard_normal((n_b, dim)) + 3.0]
+        )
+        base = spark.createDataFrame(
+            [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
+            "vec_id bigint, embedding array<double>",
+        )
+        rows = [(i, [(i + 1) % n_a]) for i in range(n_a)]
+        rows += [(n_a + j, [n_a + (j + 1) % n_b]) for j in range(n_b)]
+        rows[n_a] = (n_a, [n_a + 1, 3])  # island -> reached, never reached back
+        ghost = n_a + n_b + 7  # an unreached row without a base vector
+        rows.append((ghost, [n_a]))
+        adj = spark.createDataFrame(rows, "node bigint, nbrs array<bigint>")
+
+        repaired, n_unreached = repair_reachability(
+            base, adj, 0, metric, bridge_candidates=cands, max_bridges_per_host=cap
+        )
+        assert n_unreached == n_b + 1
+
+        # reference: exact distances of each island node to every reached
+        # node, top k by (dist, id), assigned by the Python reference
+        unit = vecs / np.linalg.norm(vecs, axis=1, keepdims=True)
+        k = min(64, max(cands, math.ceil(n_unreached / cap)))
+        ref_rows = []
+        for u in range(n_a, n_a + n_b):
+            if metric == "l2":
+                d = ((vecs[:n_a] - vecs[u]) ** 2).sum(axis=1)
+            else:
+                d = -(unit[:n_a] @ unit[u])
+            order = np.lexsort((np.arange(n_a), d))[:k]
+            ref_rows += [(u, int(r), float(d[r]), rank) for rank, r in enumerate(order, 1)]
+        bridges, _ = _bridges_reference(ref_rows, k, cap)
+        want = {(n, v) for n, nb in rows for v in nb}
+        want |= {(u, r) for u, r in bridges} | {(r, u) for u, r in bridges}
+        got_rows = repaired.collect()
+        assert sorted(r["node"] for r in got_rows) == sorted(n for n, _ in rows)
+        got = {(r["node"], v) for r in got_rows for v in r["nbrs"]}
+        assert got == want, (metric, n_a, sorted(got ^ want)[:10])
+
+        pre_staged, n2 = repair_reachability(
+            base, adj, 0, metric, bridge_candidates=cands, max_bridges_per_host=cap,
+            staged=(stage_parquet(base), stage_parquet(adj)),
+        )
+        assert n2 == n_unreached
+        canon = lambda df: sorted((r["node"], sorted(r["nbrs"])) for r in df.collect())  # noqa: E731
+        assert canon(pre_staged) == canon(repaired)
+
+
+def test_bridge_candidates_blocked_rank_by_dist_then_id(monkeypatch):
+    """In-process: ``_bridge_candidates`` over reached rows split into
+    4-row blocks returns exactly the top k of a numpy brute force ranked
+    by (dist, id), as one unblocked pass does. Small integer coordinates
+    make the GEMM exact and leave many distances tied across blocks, so
+    the running merge must break ties by id."""
+    import numpy as np
+
+    from mysteryann_spark.operators import knn
+    from mysteryann_spark.operators.projection import _bridge_candidates
+
+    rng = np.random.default_rng(13)
+    bmat = rng.integers(-2, 3, (60, 5)).astype(np.float64)
+    bids = np.arange(1000, 1060)
+    brows = np.sort(rng.choice(60, 41, replace=False))
+    qids, qmat = np.array([7, 3, 9]), rng.integers(-2, 3, (3, 5)).astype(np.float64)
+    k = 6
+    want = []
+    for qi in np.argsort(qids):
+        d = ((bmat[brows] - qmat[qi]) ** 2).sum(axis=1)
+        order = np.lexsort((bids[brows], d))[:k]
+        want += [(qids[qi], bids[brows][j], d[j], rank) for rank, j in enumerate(order, 1)]
+    whole = list(zip(*_bridge_candidates(qids, qmat, bids, bmat, brows, k, "l2")))
+    monkeypatch.setattr(knn, "_DMAT_BUDGET_BYTES", 8 * 5 * 4)
+    assert knn.dmat_chunk_rows(5) == 4
+    blocked = list(zip(*_bridge_candidates(qids, qmat, bids, bmat, brows, k, "l2")))
+    assert blocked == whole == want
+
+
+# Spark jobs of an unstaged repair_reachability call with nodes
+# unreached (stage base, stage adjacency, the checkpointed task, the
+# count), and of a repaired two-cluster build plus one collect on the
+# driver thread
+REPAIR_JOBS = 4
+BUILD_JOBS = 12
+
+
 def test_repair_job_count_independent_of_diameter(spark):
     """Reachability repair runs a fixed number of Spark jobs: a ring of
     diameter ~10 and one of diameter ~200, each with an unreached
-    island, cost the same job count. A per-round BFS or assignment loop
-    would scale the second with its diameter."""
+    island, cost exactly ``REPAIR_JOBS``. A per-round BFS or assignment
+    loop would scale the second with its diameter."""
     import numpy as np
 
     from mysteryann_spark.operators.projection import (
@@ -1108,8 +1214,52 @@ def test_repair_job_count_independent_of_diameter(spark):
         return n_jobs
 
     near, far = repair_jobs(11), repair_jobs(201)
-    assert near == far, (near, far)
-    assert near <= 16, near
+    assert (near, far) == (REPAIR_JOBS, REPAIR_JOBS), (near, far)
+
+
+def test_repaired_build_job_count(spark, monkeypatch):
+    """A two-cluster ``build_roargraph(..., ensure_reachable=True)``,
+    construction plus one ``collect``, runs a bounded number of jobs on
+    the driver thread (the medoid and base-staging threads carry no job
+    group, so their jobs are not counted): the final adjacency is staged
+    once and the repair adds one task, one count and a broadcast join.
+    The fixture leaves nodes unreached, so the join path runs."""
+    import numpy as np
+
+    from mysteryann_spark.operators import projection
+
+    rng = np.random.default_rng(17)
+    n, dim = 240, 8
+    vecs = rng.standard_normal((n, dim)) * 0.3
+    vecs[n // 2 :] += 25.0
+    base = spark.createDataFrame(
+        [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
+        "vec_id bigint, embedding array<double>",
+    )
+    train = base.where(f"vec_id < {n // 2}").select(F.col("vec_id").alias("qid"), "embedding")
+    p = IndexParams(M_sq=10, M_pjbp=4, L_pjpq=12, k=5, L_pq=12, metric="l2")
+    seen = {}
+    inner = projection.repair_reachability
+
+    def keep(*a, **kw):
+        out = inner(*a, **kw)
+        seen["n"] = out[1]
+        return out
+
+    monkeypatch.setattr(projection, "repair_reachability", keep)
+    sc = spark.sparkContext
+    group = "repaired-build-job-guard"
+    sc.setJobGroup(group, "repaired build job-count guard")
+    try:
+        adj, ep = projection.build_roargraph(base, train, p, ensure_reachable=True)
+        rows = adj.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert seen["n"] > 0, "fixture must leave nodes unreached"
+    assert _python_bfs([(r["node"], r["nbrs"]) for r in rows], ep) >= set(range(n))
+    assert n_jobs <= BUILD_JOBS, n_jobs
 
 
 def test_distributed_search_frontier_batched_width(spark, emb, index):

@@ -366,6 +366,27 @@ def test_pq_ann_recall_determinism_and_code_range(spark, emb):
         assert len(r["c"]) == 8 and all(0 <= v < 64 for v in r["c"])
 
 
+def test_pq_topk_builds_without_a_count_job(spark, emb, monkeypatch):
+    """``pq_cosine_topk`` sizes its rerank broadcasts from the staged
+    query footers (``staging.staged_row_count``): building the call runs
+    no ``DataFrame.count``, and the result equals ``pq_cosine_topk`` as
+    the recall test above runs it."""
+    from pyspark.sql import DataFrame
+
+    from mysteryann_spark.operators.similarity import pq_cosine_topk
+
+    q = emb.where("vec_id < 20").select(F.col("vec_id").alias("qid"), "embedding")
+    want = sorted(tuple(r) for r in pq_cosine_topk(q, emb, 5).collect())
+
+    def no_count(self):
+        raise AssertionError("pq_cosine_topk ran a count job")
+
+    with monkeypatch.context() as m:
+        m.setattr(DataFrame, "count", no_count)
+        built = pq_cosine_topk(q, emb, 5)
+    assert sorted(tuple(r) for r in built.collect()) == want
+
+
 def test_ivfpq_ann_recall_and_determinism(spark, emb):
     """IVF routing + PQ ADC scoring + exact refine (the IndexIVFPQ
     composition) must hold recall and rerun identically."""
